@@ -30,6 +30,7 @@ deterministic at any parallelism, exactly like the renderer itself.
 from __future__ import annotations
 
 import re
+from urllib.parse import urljoin, urlsplit
 
 from .htmlparse import DomNode, parse_html
 
@@ -321,28 +322,48 @@ def _collapse_ws(s: str) -> str:
     return " ".join(s.split())
 
 
-def resolve_url(base: str | None, href: str) -> str | None:
+def resolve_url(
+    base: str | None, href: str, base_ok: bool | None = None
+) -> str | None:
     """RFC-3986 reference resolution (urllib.parse.urljoin, which
     implements §5).  Returns the absolute target, or None when `href` is
     relative and no absolute base is available — a frontier consumer must
     treat None as an unusable edge, never as a literal URL.  Absolute
     references (including non-hierarchical ones like mailto:/javascript:)
-    pass through untouched."""
-    from urllib.parse import urljoin, urlsplit
-
+    pass through untouched; malformed ones (`http://[::bad`) are None.
+    `base_ok` is the caller's precomputed `_base_ok(base)`, for resolving
+    a page's links against one base."""
     href = href.strip()
     # fast path: the overwhelmingly common absolute forms skip urlsplit
-    # (http://x and https://x have a scheme by construction)
-    if href.startswith("http://") or href.startswith("https://"):
+    # (http://x and https://x have a scheme by construction).  urlsplit
+    # rejects only brackets (IPv6 hosts) and non-ASCII netlocs that
+    # NFKC-normalize into separators, so those still take the slow path.
+    if (
+        href.startswith(("http://", "https://"))
+        and href.isascii()
+        and "[" not in href
+        and "]" not in href
+    ):
         return href
     try:
         if urlsplit(href).scheme:
             return href
-        if not base or not urlsplit(base).scheme:
+        if base_ok is None:
+            base_ok = _base_ok(base)
+        if not base_ok:
             return None
         return urljoin(base, href)
     except ValueError:
         return None
+
+
+def _base_ok(base: str | None) -> bool:
+    """Whether `base` is an absolute URL a relative href can resolve
+    against."""
+    try:
+        return bool(base) and bool(urlsplit(base).scheme)
+    except ValueError:
+        return False
 
 
 def base_href_from_dom(dom: DomNode) -> str | None:
@@ -418,30 +439,10 @@ def _resolve_links(
     hoisted out of the per-link loop (the base is one string per page;
     urllib's 20-entry parse cache thrashes once a page has more hrefs
     than that)."""
-    from urllib.parse import urljoin, urlsplit
-
-    try:
-        base_ok = bool(base) and bool(urlsplit(base).scheme)
-    except ValueError:
-        base_ok = False
-
-    def resolve(href: str) -> str | None:
-        # same per-link semantics as resolve_url: an absolute href wins
-        # regardless of the base; a relative href needs a valid base
-        href = href.strip()
-        if href.startswith("http://") or href.startswith("https://"):
-            return href
-        try:
-            if urlsplit(href).scheme:
-                return href
-            if not base_ok:
-                return None
-            return urljoin(base, href)
-        except ValueError:
-            return None
-
+    ok = _base_ok(base)
     return [
-        (o, href, anchor, nf, resolve(href)) for o, href, anchor, nf in links
+        (o, href, anchor, nf, resolve_url(base, href, ok))
+        for o, href, anchor, nf in links
     ]
 
 

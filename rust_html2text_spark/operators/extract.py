@@ -1,8 +1,9 @@
 """The main-content extraction operator, Spark-first.
 
 Same plan shape as operators/render.py (scan → optional salted
-repartition → mapInPandas), same robustness contract (a hostile page becomes an error
-row, never a task failure) — the kernel is engine/extract.extract_main_ex
+repartition → mapInPandas, all built by operators/kernel.map_kernel), same
+robustness contract (a hostile page becomes an error row, never a task
+failure) — the kernel is engine/extract.extract_main_ex
 (boilerplate strip + DOM-heuristic candidate scoring) instead of the
 whole-document render.  The winner tag and score ride along as lineage
 for crawl-QA dashboards.
@@ -10,10 +11,7 @@ for crawl-QA dashboards.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -21,6 +19,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from rust_html2text_spark.operators.kernel import map_kernel
 
 EXTRACT_SCHEMA = StructType(
     [
@@ -44,143 +44,6 @@ EXTRACT_SNIFF_SCHEMA = StructType(
         StructField("encoding_source", StringType()),
     ]
 )
-
-
-def _with_outlier_lane(
-    df: DataFrame,
-    pages: DataFrame,
-    fn,
-    schema,
-    num_partitions: int | None,
-    salt: int,
-    repartition: str,
-    outlier_bytes: int | None,
-) -> DataFrame:
-    """Shared plan tail for the extraction tier: optional oversized-page
-    routing (one giant page must never stall a task's worth of
-    siblings), optional salted url-hash repartition (default: none — the
-    scan-aligned splits feed the kernel directly), mapInPandas, union of the
-    two lanes.  The coalesce keeps NULL html in the normal lane (→ a
-    NullInput/absent row, never silently vanishing from both filter
-    branches)."""
-    if outlier_bytes is not None:
-        pages = pages.withColumn(
-            "_oversized",
-            F.coalesce(F.length("html") > outlier_bytes, F.lit(False)),
-        )
-        normal = pages.filter(~F.col("_oversized")).drop("_oversized")
-        oversized = pages.filter(F.col("_oversized")).drop("_oversized")
-    else:
-        normal = pages
-        oversized = None
-
-    n = num_partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    n = int(n)
-    key = F.xxhash64(F.col("url"), F.lit(salt))
-    if repartition == "salted":
-        normal = normal.repartition(n, key)
-    out = normal.mapInPandas(fn, schema)
-    if oversized is not None:
-        oversized = oversized.repartition(n, key)
-        out = out.unionByName(oversized.mapInPandas(fn, schema))
-    return out
-
-
-def _extract_batch_fn(
-    width: int,
-    config_kwargs: dict,
-    charset_sniff: bool = False,
-    charset_fallback: str = "utf-8",
-    charset_col: str | None = None,
-):
-    def extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import gc
-        import os
-        import sys
-
-        _repo = os.path.dirname(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        )
-        if _repo not in sys.path:
-            sys.path.insert(0, _repo)
-
-        from rust_html2text_spark.engine.api import Config, plain_config
-        from rust_html2text_spark.engine.charset import decode_html
-        from rust_html2text_spark.engine.errors import RenderError
-        from rust_html2text_spark.engine.extract import extract_main_ex
-
-        gc.set_threshold(200_000, 50, 50)
-        config = Config(**config_kwargs) if config_kwargs else plain_config()
-
-        for batch in batches:
-            out = {
-                "url": batch["url"],
-                "text": [],
-                "error": [],
-                "html_bytes": [],
-                "text_bytes": [],
-                "winner_tag": [],
-                "score": [],
-                "n_candidates": [],
-            }
-            if charset_sniff:
-                out["encoding"] = []
-                out["encoding_source"] = []
-            labels = (
-                batch[charset_col]
-                if charset_col is not None and charset_col in batch
-                else [None] * len(batch)
-            )
-            for html, label in zip(batch["html"], labels):
-                if html is None:
-                    out["text"].append(None)
-                    out["error"].append("NullInput")
-                    out["html_bytes"].append(0)
-                    out["text_bytes"].append(0)
-                    out["winner_tag"].append(None)
-                    out["score"].append(None)
-                    out["n_candidates"].append(0)
-                    if charset_sniff:
-                        out["encoding"].append(None)
-                        out["encoding_source"].append(None)
-                    continue
-                if isinstance(html, str):
-                    html = html.encode("utf-8")
-                out["html_bytes"].append(len(html))
-                if charset_sniff:
-                    if label is not None and not isinstance(label, str):
-                        label = None  # NaN from pandas for NULL cells
-                    decoded, codec, src = decode_html(
-                        html, charset_fallback, transport_label=label
-                    )
-                    out["encoding"].append(codec)
-                    out["encoding_source"].append(src)
-                    html = decoded  # engine parse path accepts str as-is
-                try:
-                    r = extract_main_ex(html, width, config)
-                    out["text"].append(r["text"])
-                    out["error"].append(None)
-                    out["text_bytes"].append(len(r["text"].encode("utf-8")))
-                    out["winner_tag"].append(r["winner_tag"])
-                    out["score"].append(float(r["score"]))
-                    out["n_candidates"].append(r["n_candidates"])
-                except RenderError as e:
-                    out["text"].append(None)
-                    out["error"].append(type(e).__name__)
-                    out["text_bytes"].append(0)
-                    out["winner_tag"].append(None)
-                    out["score"].append(None)
-                    out["n_candidates"].append(0)
-                except Exception as e:  # never kill the task
-                    out["text"].append(None)
-                    out["error"].append(f"Fail:{type(e).__name__}")
-                    out["text_bytes"].append(0)
-                    out["winner_tag"].append(None)
-                    out["score"].append(None)
-                    out["n_candidates"].append(0)
-            yield pd.DataFrame(out)
-
-    return extract_batches
 
 
 LINKS_SCHEMA = StructType(
@@ -211,64 +74,6 @@ META_SCHEMA = StructType(
 )
 
 
-def _links_batch_fn(
-    config_kwargs: dict,
-    charset_sniff: bool = False,
-    charset_fallback: str = "utf-8",
-):
-    def links_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import gc
-
-        # same rationale as the render kernel: the engine allocates
-        # heavily but produces (essentially) no cyclic garbage in the
-        # hot loop; raising the gen-0 threshold buys ~10% in the worker
-        gc.set_threshold(200_000, 50, 50)
-        import os
-        import sys
-
-        _repo = os.path.dirname(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        )
-        if _repo not in sys.path:
-            sys.path.insert(0, _repo)
-
-        from rust_html2text_spark.engine.api import Config, plain_config
-        from rust_html2text_spark.engine.charset import decode_html
-        from rust_html2text_spark.engine.extract import extract_main_links
-
-        config = Config(**config_kwargs) if config_kwargs else plain_config()
-        for batch in batches:
-            out = {
-                "url": [],
-                "ordinal": [],
-                "href": [],
-                "anchor": [],
-                "nofollow": [],
-                "target_abs": [],
-            }
-            for url, html in zip(batch["url"], batch["html"]):
-                if html is None:
-                    continue
-                if isinstance(html, str):
-                    html = html.encode("utf-8")
-                if charset_sniff:
-                    html = decode_html(html, charset_fallback)[0]
-                try:
-                    links = extract_main_links(html, config, base_url=url)
-                except Exception:
-                    continue  # unparseable page contributes no edges
-                for o, href, anchor, nofollow, target_abs in links:
-                    out["url"].append(url)
-                    out["ordinal"].append(o)
-                    out["href"].append(href)
-                    out["anchor"].append(anchor)
-                    out["nofollow"].append(nofollow)
-                    out["target_abs"].append(target_abs)
-            yield pd.DataFrame(out)
-
-    return links_batches
-
-
 def extract_links(
     df: DataFrame,
     config_kwargs: dict | None = None,
@@ -286,77 +91,36 @@ def extract_links(
     edges are exactly the noise).  Variable rows per input page; same
     url-hash partitioning and the oversized-outlier lane match the rest
     of the tier."""
-    if repartition not in ("salted", "none"):
-        raise ValueError(f"repartition must be 'salted' or 'none', got {repartition!r}")
-    return _with_outlier_lane(
-        df,
-        df.select("url", "html"),
-        _links_batch_fn(config_kwargs or {}, charset_sniff, charset_fallback),
-        LINKS_SCHEMA,
-        num_partitions,
-        salt,
-        repartition,
-        outlier_bytes,
-    )
 
-
-def _meta_batch_fn(xml_mode, charset_sniff: bool = False, charset_fallback: str = "utf-8"):
-    def meta_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import gc
-
-        # same rationale as the render kernel: the engine allocates
-        # heavily but produces (essentially) no cyclic garbage in the
-        # hot loop; raising the gen-0 threshold buys ~10% in the worker
-        gc.set_threshold(200_000, 50, 50)
-        import os
-        import sys
-
-        _repo = os.path.dirname(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        )
-        if _repo not in sys.path:
-            sys.path.insert(0, _repo)
-
+    def setup():
+        from rust_html2text_spark.engine.api import Config, plain_config
         from rust_html2text_spark.engine.charset import decode_html
-        from rust_html2text_spark.engine.metadata import page_metadata
+        from rust_html2text_spark.engine.extract import extract_main_links
 
-        for batch in batches:
-            out = {
-                "url": batch["url"],
-                "title": [],
-                "description": [],
-                "lang_attr": [],
-                "canonical": [],
-                "og_title": [],
-                "robots": [],
-                "error": [],
-            }
-            for html in batch["html"]:
-                if html is None:
-                    for k in _META_KEYS:
-                        out[k].append(None)
-                    out["error"].append("NullInput")
-                    continue
-                if isinstance(html, str):
-                    html = html.encode("utf-8")
-                if charset_sniff:
-                    html = decode_html(html, charset_fallback)[0]
-                try:
-                    m = page_metadata(html, xml_mode=xml_mode)
-                    out["title"].append(m["title"])
-                    out["description"].append(m["description"])
-                    out["lang_attr"].append(m["lang_attr"])
-                    out["canonical"].append(m["canonical"])
-                    out["og_title"].append(m["og_title"])
-                    out["robots"].append(m["robots"])
-                    out["error"].append(None)
-                except Exception as e:  # never kill the task
-                    for k in _META_KEYS:
-                        out[k].append(None)
-                    out["error"].append(f"Fail:{type(e).__name__}")
-            yield pd.DataFrame(out)
+        config = Config(**config_kwargs) if config_kwargs else plain_config()
 
-    return meta_batches
+        def links_row(html, row):
+            if charset_sniff:
+                html = decode_html(html, charset_fallback)[0]
+            for o, href, anchor, nofollow, target_abs in extract_main_links(
+                html, config, base_url=row["url"]
+            ):
+                yield dict(
+                    row, ordinal=o, href=href, anchor=anchor, nofollow=nofollow,
+                    target_abs=target_abs,
+                )
+
+        return links_row
+
+    return map_kernel(
+        df.select("url", "html"),
+        setup,
+        LINKS_SCHEMA,
+        outlier_bytes=outlier_bytes,
+        num_partitions=num_partitions,
+        salt=salt,
+        repartition=repartition,
+    )
 
 
 def page_metadata_pages(
@@ -373,17 +137,27 @@ def page_metadata_pages(
     canonical, og_title, error).  The canonical url is the dedup key a
     crawl pipeline trusts over the fetched url; lang_attr is the page's
     language *claim* to audit lang_id's measurement against."""
-    if repartition not in ("salted", "none"):
-        raise ValueError(f"repartition must be 'salted' or 'none', got {repartition!r}")
-    return _with_outlier_lane(
-        df,
+
+    def setup():
+        from rust_html2text_spark.engine.charset import decode_html
+        from rust_html2text_spark.engine.metadata import page_metadata
+
+        def meta_row(html, row):
+            if charset_sniff:
+                html = decode_html(html, charset_fallback)[0]
+            row.update(page_metadata(html, xml_mode=xml_mode))
+            yield row
+
+        return meta_row
+
+    return map_kernel(
         df.select("url", "html"),
-        _meta_batch_fn(xml_mode, charset_sniff, charset_fallback),
+        setup,
         META_SCHEMA,
-        num_partitions,
-        salt,
-        repartition,
-        outlier_bytes,
+        outlier_bytes=outlier_bytes,
+        num_partitions=num_partitions,
+        salt=salt,
+        repartition=repartition,
     )
 
 
@@ -415,104 +189,6 @@ FULL_SNIFF_SCHEMA = StructType(
     ]
 )
 
-_META_KEYS = ("title", "description", "lang_attr", "canonical", "og_title", "robots")
-
-
-def _full_batch_fn(
-    width: int,
-    config_kwargs: dict,
-    charset_sniff: bool = False,
-    charset_fallback: str = "utf-8",
-):
-    def full_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import gc
-
-        # same rationale as the render kernel: the engine allocates
-        # heavily but produces (essentially) no cyclic garbage in the
-        # hot loop; raising the gen-0 threshold buys ~10% in the worker
-        gc.set_threshold(200_000, 50, 50)
-        import json
-        import os
-        import sys
-
-        _repo = os.path.dirname(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        )
-        if _repo not in sys.path:
-            sys.path.insert(0, _repo)
-
-        from rust_html2text_spark.engine.api import Config, plain_config
-        from rust_html2text_spark.engine.charset import decode_html
-        from rust_html2text_spark.engine.errors import RenderError
-        from rust_html2text_spark.engine.extract import (
-            extract_main_full,
-            extract_main_links,
-        )
-        from rust_html2text_spark.engine.metadata import page_metadata
-
-        config = Config(**config_kwargs) if config_kwargs else plain_config()
-        schema = FULL_SNIFF_SCHEMA if charset_sniff else FULL_SCHEMA
-        cols = [f.name for f in schema.fields if f.name != "url"]
-        for batch in batches:
-            out: dict = {"url": batch["url"]}
-            for c in cols:
-                out[c] = []
-
-            def emit(text, error, n_in, info=None, links=None, meta=None):
-                out["text"].append(text)
-                out["error"].append(error)
-                out["html_bytes"].append(n_in)
-                out["text_bytes"].append(
-                    len(text.encode("utf-8")) if text is not None else 0
-                )
-                out["winner_tag"].append(info["winner_tag"] if info else None)
-                out["score"].append(float(info["score"]) if info else None)
-                out["n_candidates"].append(info["n_candidates"] if info else 0)
-                out["links_json"].append(
-                    json.dumps(links, separators=(",", ":"))
-                    if links is not None
-                    else None
-                )
-                for k in _META_KEYS:
-                    out[k].append(meta.get(k) if meta else None)
-
-            for url, html in zip(batch["url"], batch["html"]):
-                if html is None:
-                    emit(None, "NullInput", 0)
-                    if charset_sniff:
-                        out["encoding"].append(None)
-                        out["encoding_source"].append(None)
-                    continue
-                if isinstance(html, str):
-                    html = html.encode("utf-8")
-                if charset_sniff:
-                    decoded, codec, src = decode_html(html, charset_fallback)
-                    out["encoding"].append(codec)
-                    out["encoding_source"].append(src)
-                    n_raw = len(html)
-                    html = decoded
-                else:
-                    n_raw = len(html)
-                try:
-                    r = extract_main_full(html, width, config, base_url=url)
-                    emit(r["text"], None, n_raw, r, r["links"], r["meta"])
-                except RenderError as e:
-                    # links + metadata do not depend on rendering: recover
-                    # them so an unrenderable page still feeds the link
-                    # graph and metadata tables (matches the goldens,
-                    # which compute the three independently)
-                    try:
-                        links = extract_main_links(html, config, base_url=url)
-                        meta = page_metadata(html, xml_mode=config.xml)
-                    except Exception:
-                        links, meta = None, None
-                    emit(None, type(e).__name__, n_raw, None, links, meta)
-                except Exception as e:
-                    emit(None, f"Fail:{type(e).__name__}", n_raw)
-            yield pd.DataFrame(out)
-
-    return full_batches
-
 
 def extract_pages_full(
     df: DataFrame,
@@ -534,17 +210,64 @@ def extract_pages_full(
     with the oversized-outlier lane.  charset_sniff=True adds the WHATWG
     sniff + (encoding, encoding_source) lineage, same contract as
     extract_pages."""
-    if repartition not in ("salted", "none"):
-        raise ValueError(f"repartition must be 'salted' or 'none', got {repartition!r}")
-    return _with_outlier_lane(
-        df,
+
+    def setup():
+        import json
+
+        from rust_html2text_spark.engine.api import Config, plain_config
+        from rust_html2text_spark.engine.charset import decode_html
+        from rust_html2text_spark.engine.errors import RenderError
+        from rust_html2text_spark.engine.extract import (
+            extract_main_full,
+            extract_main_links,
+        )
+        from rust_html2text_spark.engine.metadata import page_metadata
+
+        config = Config(**config_kwargs) if config_kwargs else plain_config()
+
+        def links_json(links):
+            return json.dumps(links, separators=(",", ":"))
+
+        def full_row(html, row):
+            url = row["url"]
+            if charset_sniff:
+                html, row["encoding"], row["encoding_source"] = decode_html(
+                    html, charset_fallback
+                )
+            try:
+                r = extract_main_full(html, width, config, base_url=url)
+            except RenderError:
+                # links + metadata do not depend on rendering: recover
+                # them so an unrenderable page still feeds the link
+                # graph and metadata tables (matches the goldens, which
+                # compute the three independently)
+                try:
+                    links = extract_main_links(html, config, base_url=url)
+                    meta = page_metadata(html, xml_mode=config.xml)
+                    row.update(meta, links_json=links_json(links))
+                except Exception:
+                    pass  # the error row keeps NULL links and metadata
+                raise
+            row.update(
+                r["meta"],
+                text=r["text"],
+                winner_tag=r["winner_tag"],
+                score=float(r["score"]),
+                n_candidates=r["n_candidates"],
+                links_json=links_json(r["links"]),
+            )
+            yield row
+
+        return full_row
+
+    return map_kernel(
         df.select("url", "html"),
-        _full_batch_fn(width, config_kwargs or {}, charset_sniff, charset_fallback),
+        setup,
         FULL_SNIFF_SCHEMA if charset_sniff else FULL_SCHEMA,
-        num_partitions,
-        salt,
-        repartition,
-        outlier_bytes,
+        outlier_bytes=outlier_bytes,
+        num_partitions=num_partitions,
+        salt=salt,
+        repartition=repartition,
     )
 
 
@@ -578,8 +301,6 @@ def extract_pages(
     `http_charset` from the record's Content-Type header).  Off by
     default: the render path's utf-8/replace is byte-identical
     reference parity and stays that way."""
-    if repartition not in ("salted", "none"):
-        raise ValueError(f"repartition must be 'salted' or 'none', got {repartition!r}")
     cols = ["url", "html"]
     if charset_col is not None:
         if charset_col not in df.columns:
@@ -587,11 +308,38 @@ def extract_pages(
                 f"charset_col {charset_col!r} not in input columns {df.columns}"
             )
         cols.append(charset_col)
-    pages = df.select(*cols)
-    fn = _extract_batch_fn(
-        width, config_kwargs or {}, charset_sniff, charset_fallback, charset_col
-    )
-    schema = EXTRACT_SNIFF_SCHEMA if charset_sniff else EXTRACT_SCHEMA
-    return _with_outlier_lane(
-        df, pages, fn, schema, num_partitions, salt, repartition, outlier_bytes
+
+    def setup():
+        from rust_html2text_spark.engine.api import Config, plain_config
+        from rust_html2text_spark.engine.charset import decode_html
+        from rust_html2text_spark.engine.extract import extract_main_ex
+
+        config = Config(**config_kwargs) if config_kwargs else plain_config()
+
+        def extract_row(html, row, label=None):
+            if charset_sniff:
+                if label is not None and not isinstance(label, str):
+                    label = None  # NaN from pandas for NULL cells
+                html, row["encoding"], row["encoding_source"] = decode_html(
+                    html, charset_fallback, transport_label=label
+                )
+            r = extract_main_ex(html, width, config)
+            row.update(
+                text=r["text"],
+                winner_tag=r["winner_tag"],
+                score=float(r["score"]),
+                n_candidates=r["n_candidates"],
+            )
+            yield row
+
+        return extract_row
+
+    return map_kernel(
+        df.select(*cols),
+        setup,
+        EXTRACT_SNIFF_SCHEMA if charset_sniff else EXTRACT_SCHEMA,
+        outlier_bytes=outlier_bytes,
+        num_partitions=num_partitions,
+        salt=salt,
+        repartition=repartition,
     )

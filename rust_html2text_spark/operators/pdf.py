@@ -2,7 +2,8 @@
 
 Third member of the extraction-tier operator family (render_pages,
 extract_pages): same plan shape — pruned scan → optional salted url-hash
-repartition → Arrow-batched mapInPandas — and the same robustness
+repartition → Arrow-batched mapInPandas, built by
+operators/kernel.map_kernel — and the same robustness
 contract (a hostile or truncated PDF becomes an error row, never a task
 failure).  The kernel is engine/pdftext.extract_pdf_ex (document
 structure + content-stream interpretation + layout assembly); page count
@@ -11,9 +12,6 @@ and PDF version ride along as lineage.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     LongType,
@@ -21,6 +19,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from rust_html2text_spark.operators.kernel import map_kernel
 
 PDF_SCHEMA = StructType(
     [
@@ -37,67 +37,6 @@ PDF_SCHEMA = StructType(
 )
 
 
-def _pdf_batch_fn(page_sep: str):
-    def pdf_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import gc
-
-        # same rationale as the render kernel: the engine allocates
-        # heavily but produces (essentially) no cyclic garbage in the
-        # hot loop; raising the gen-0 threshold buys ~10% in the worker
-        gc.set_threshold(200_000, 50, 50)
-        import os
-        import sys
-
-        _repo = os.path.dirname(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        )
-        if _repo not in sys.path:
-            sys.path.insert(0, _repo)
-
-        from rust_html2text_spark.engine.pdftext import PdfError, extract_pdf_ex
-
-        for batch in batches:
-            out = {
-                "url": batch["url"],
-                "text": [],
-                "error": [],
-                "pdf_bytes": [],
-                "text_bytes": [],
-                "n_pages": [],
-                "pdf_version": [],
-                "title": [],
-                "author": [],
-            }
-
-            def emit(text, error, n_in, r=None):
-                out["text"].append(text)
-                out["error"].append(error)
-                out["pdf_bytes"].append(n_in)
-                out["text_bytes"].append(
-                    len(text.encode("utf-8")) if text is not None else 0
-                )
-                out["n_pages"].append(r["n_pages"] if r else 0)
-                out["pdf_version"].append(r["pdf_version"] if r else None)
-                out["title"].append(r["title"] if r else None)
-                out["author"].append(r["author"] if r else None)
-
-            for pdf in batch["pdf"]:
-                if pdf is None:
-                    emit(None, "NullInput", 0)
-                    continue
-                pdf = bytes(pdf)
-                try:
-                    r = extract_pdf_ex(pdf, page_sep)
-                    emit(r["text"], None, len(pdf), r)
-                except PdfError as e:
-                    emit(None, f"PdfError:{e}"[:200], len(pdf))
-                except Exception as e:  # never kill the task
-                    emit(None, f"Fail:{type(e).__name__}", len(pdf))
-            yield pd.DataFrame(out)
-
-    return pdf_batches
-
-
 LINKS_SCHEMA = StructType(
     [
         StructField("url", StringType()),
@@ -106,48 +45,6 @@ LINKS_SCHEMA = StructType(
         StructField("uri", StringType()),
     ]
 )
-
-
-def _pdf_links_batch_fn():
-    def links_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import gc
-
-        # same rationale as the render kernel: the engine allocates
-        # heavily but produces (essentially) no cyclic garbage in the
-        # hot loop; raising the gen-0 threshold buys ~10% in the worker
-        gc.set_threshold(200_000, 50, 50)
-        import os
-        import sys
-
-        _repo = os.path.dirname(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        )
-        if _repo not in sys.path:
-            sys.path.insert(0, _repo)
-
-        from rust_html2text_spark.engine.pdfparse import parse_pdf
-        from rust_html2text_spark.engine.pdftext import PdfError, pdf_links_from_doc
-
-        for batch in batches:
-            out = {"url": [], "page": [], "ordinal": [], "uri": []}
-            for url, pdf in zip(batch["url"], batch["pdf"]):
-                if pdf is None:
-                    continue
-                try:
-                    doc = parse_pdf(bytes(pdf))
-                    links = pdf_links_from_doc(doc, doc.pages())
-                except PdfError:
-                    continue  # unusable pdf contributes no edges
-                except Exception:
-                    continue
-                for page_idx, ordinal, uri in links:
-                    out["url"].append(url)
-                    out["page"].append(page_idx)
-                    out["ordinal"].append(ordinal)
-                    out["uri"].append(uri)
-            yield pd.DataFrame(out)
-
-    return links_batches
 
 
 def extract_pdf_links(
@@ -160,22 +57,27 @@ def extract_pdf_links(
     from /Annots Link → /A /URI actions — PDFs carry their outbound
     edges as annotations, not text.  Pairs with
     operators/extract.extract_links for HTML pages."""
-    if repartition not in ("salted", "none"):
-        raise ValueError(f"repartition must be 'salted' or 'none', got {repartition!r}")
-    pages = df.select("url", "pdf")
-    if repartition == "salted":
-        n = num_partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        pages = pages.repartition(int(n), F.xxhash64(F.col("url"), F.lit(salt)))
-    return pages.mapInPandas(_pdf_links_batch_fn(), LINKS_SCHEMA)
 
+    def setup():
+        from rust_html2text_spark.engine.pdfparse import parse_pdf
+        from rust_html2text_spark.engine.pdftext import pdf_links_from_doc
 
-def is_pdf_payload(col):
-    """Codegen-only PDF sniff on a binary payload column: the %PDF- magic
-    within the first 1024 bytes (the same window engine/pdfparse.parse_pdf
-    accepts — crawled PDFs sometimes carry server preambles).  NULL-safe
-    (NULL payload → false → routed to the HTML lane's NullInput row)."""
-    prefix = F.decode(F.substring(col, 1, 1024), "ISO-8859-1")
-    return F.coalesce(F.instr(prefix, "%PDF-") > 0, F.lit(False))
+        def pdf_links_row(pdf, row):
+            doc = parse_pdf(pdf)
+            for page, ordinal, uri in pdf_links_from_doc(doc, doc.pages()):
+                yield dict(row, page=page, ordinal=ordinal, uri=uri)
+
+        return pdf_links_row
+
+    return map_kernel(
+        df.select("url", "pdf"),
+        setup,
+        LINKS_SCHEMA,
+        payload="pdf",
+        num_partitions=num_partitions,
+        salt=salt,
+        repartition=repartition,
+    )
 
 
 MIXED_SCHEMA = StructType(
@@ -188,95 +90,6 @@ MIXED_SCHEMA = StructType(
         StructField("text_bytes", LongType()),
     ]
 )
-
-
-def _mixed_batch_fn(
-    width: int,
-    config_kwargs: dict,
-    page_sep: str,
-    charset_sniff: bool = False,
-    charset_fallback: str = "utf-8",
-):
-    def mixed_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import gc
-
-        # same rationale as the render kernel: the engine allocates
-        # heavily but produces (essentially) no cyclic garbage in the
-        # hot loop; raising the gen-0 threshold buys ~10% in the worker
-        gc.set_threshold(200_000, 50, 50)
-        import os
-        import sys
-
-        _repo = os.path.dirname(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        )
-        if _repo not in sys.path:
-            sys.path.insert(0, _repo)
-
-        from rust_html2text_spark.engine.api import (
-            Config,
-            html_to_text,
-            plain_config,
-        )
-        from rust_html2text_spark.engine.charset import decode_html
-        from rust_html2text_spark.engine.errors import RenderError
-        from rust_html2text_spark.engine.pdftext import PdfError, extract_pdf_ex
-
-        config = Config(**config_kwargs) if config_kwargs else plain_config()
-        for batch in batches:
-            out = {
-                "url": batch["url"],
-                "kind": [],
-                "text": [],
-                "error": [],
-                "input_bytes": [],
-                "text_bytes": [],
-            }
-
-            def emit(kind, text, error, n_in):
-                out["kind"].append(kind)
-                out["text"].append(text)
-                out["error"].append(error)
-                out["input_bytes"].append(n_in)
-                out["text_bytes"].append(
-                    len(text.encode("utf-8")) if text is not None else 0
-                )
-
-            for payload in batch["html"]:
-                if payload is None:
-                    emit("html", None, "NullInput", 0)
-                    continue
-                if isinstance(payload, str):
-                    payload = payload.encode("utf-8")
-                payload = bytes(payload)
-                # the same 1 KiB magic window parse_pdf accepts; crawl
-                # content-type headers lie, so they are never consulted
-                if b"%PDF-" in payload[:1024]:
-                    try:
-                        r = extract_pdf_ex(payload, page_sep)
-                        emit("pdf", r["text"], None, len(payload))
-                    except PdfError as e:
-                        emit("pdf", None, f"PdfError:{e}"[:200], len(payload))
-                    except Exception as e:
-                        emit("pdf", None, f"Fail:{type(e).__name__}", len(payload))
-                    continue
-                try:
-                    # the sniff applies to the HTML lane only — PDF bytes
-                    # are binary and the magic check above already ran
-                    doc = (
-                        decode_html(payload, charset_fallback)[0]
-                        if charset_sniff
-                        else payload
-                    )
-                    text = html_to_text(doc, width, config)
-                    emit("html", text, None, len(payload))
-                except RenderError as e:
-                    emit("html", None, type(e).__name__, len(payload))
-                except Exception as e:
-                    emit("html", None, f"Fail:{type(e).__name__}", len(payload))
-            yield pd.DataFrame(out)
-
-    return mixed_batches
 
 
 def extract_mixed_pages(
@@ -305,17 +118,38 @@ def extract_mixed_pages(
     of the payload column (a two-filtered-branches plan reads the
     100 TB table twice because the sniff predicate cannot push to
     parquet)."""
-    if repartition not in ("salted", "none"):
-        raise ValueError(f"repartition must be 'salted' or 'none', got {repartition!r}")
-    pages = df.select("url", F.col(payload_col).alias("html"))
-    if repartition == "salted":
-        n = num_partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        pages = pages.repartition(int(n), F.xxhash64(F.col("url"), F.lit(salt)))
-    return pages.mapInPandas(
-        _mixed_batch_fn(
-            width, config_kwargs or {}, page_sep, charset_sniff, charset_fallback
-        ),
+
+    def setup():
+        from rust_html2text_spark.engine.api import Config, html_to_text, plain_config
+        from rust_html2text_spark.engine.charset import decode_html
+        from rust_html2text_spark.engine.pdftext import extract_pdf_ex
+
+        config = Config(**config_kwargs) if config_kwargs else plain_config()
+
+        def mixed_row(payload, row):
+            # the same 1 KiB magic window parse_pdf accepts; crawl
+            # content-type headers lie, so they are never consulted
+            if b"%PDF-" in payload[:1024]:
+                row["kind"] = "pdf"
+                row["text"] = extract_pdf_ex(payload, page_sep)["text"]
+            else:
+                # the sniff applies to the HTML lane only — PDF bytes
+                # are binary and the magic check above already ran
+                if charset_sniff:
+                    payload = decode_html(payload, charset_fallback)[0]
+                row["text"] = html_to_text(payload, width, config)
+            yield row
+
+        return mixed_row
+
+    return map_kernel(
+        df.select("url", F.col(payload_col).alias("html")),
+        setup,
         MIXED_SCHEMA,
+        num_partitions=num_partitions,
+        salt=salt,
+        repartition=repartition,
+        defaults={"kind": "html"},
     )
 
 
@@ -334,29 +168,30 @@ def extract_pdf_pages(
     for cost-correlated file layouts), and an
     oversized-outlier lane (default 8 MiB — PDFs run larger than HTML)
     so one giant scan never stalls a task's worth of siblings."""
-    if repartition not in ("salted", "none"):
-        raise ValueError(f"repartition must be 'salted' or 'none', got {repartition!r}")
-    pages = df.select("url", "pdf")
-    if outlier_bytes is not None:
-        pages = pages.withColumn(
-            "_oversized",
-            F.coalesce(F.length("pdf") > outlier_bytes, F.lit(False)),
-        )
-        normal = pages.filter(~F.col("_oversized")).drop("_oversized")
-        oversized = pages.filter(F.col("_oversized")).drop("_oversized")
-    else:
-        normal = pages
-        oversized = None
 
-    n = num_partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    n = int(n)
-    key = F.xxhash64(F.col("url"), F.lit(salt))
-    if repartition == "salted":
-        normal = normal.repartition(n, key)
+    def setup():
+        from rust_html2text_spark.engine.pdftext import extract_pdf_ex
 
-    fn = _pdf_batch_fn(page_sep)
-    out = normal.mapInPandas(fn, PDF_SCHEMA)
-    if oversized is not None:
-        oversized = oversized.repartition(n, key)
-        out = out.unionByName(oversized.mapInPandas(fn, PDF_SCHEMA))
-    return out
+        def pdf_row(pdf, row):
+            r = extract_pdf_ex(pdf, page_sep)
+            row.update(
+                text=r["text"],
+                n_pages=r["n_pages"],
+                pdf_version=r["pdf_version"],
+                title=r["title"],
+                author=r["author"],
+            )
+            yield row
+
+        return pdf_row
+
+    return map_kernel(
+        df.select("url", "pdf"),
+        setup,
+        PDF_SCHEMA,
+        payload="pdf",
+        outlier_bytes=outlier_bytes,
+        num_partitions=num_partitions,
+        salt=salt,
+        repartition=repartition,
+    )

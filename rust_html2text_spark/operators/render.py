@@ -20,15 +20,15 @@ Scale design (10^12 docs / 1000 executors):
 - **Robustness**: per-row try/except inside the batch — a parse failure or
   TooNarrow becomes an `error` column value, never a task failure
   (reference Error enum, lib.rs:384-400).
+The partitioning, outlier lane and error map live in
+operators/kernel.map_kernel, shared by every extraction operator; this
+module supplies the render kernel's `setup()`.
 - **Metrics/lineage**: per-partition row/byte counts emitted as a second
   DataFrame for an append-only metrics table.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     LongType,
@@ -36,6 +36,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from rust_html2text_spark.operators.kernel import map_kernel
 
 RENDER_SCHEMA = StructType(
     [
@@ -48,17 +50,18 @@ RENDER_SCHEMA = StructType(
 )
 
 
-def _render_batch_fn(
+def render_setup(
     width: int,
     config_kwargs: dict,
     coloured: bool = False,
     use_css_colours: bool = True,
     no_default_colours: bool = False,
     syntax_highlight: bool = False,
-    passthrough_cols: tuple = (),
 ):
-    """Build the mapInPandas function; engine imports happen on the executor
-    so only rust_html2text_spark needs to ship via --py-files.
+    """The render kernel's `setup()` for operators/kernel.map_kernel; engine
+    imports happen on the executor so only rust_html2text_spark needs to
+    ship via --py-files.  The row function takes an optional per-row
+    width (the input's `width` column) and falls back to the job width.
 
     `coloured` renders through the ANSI colour map (reference CLI
     `--colour`, main.rs:161-180); `syntax_highlight` registers the default
@@ -66,31 +69,10 @@ def _render_batch_fn(
     booleans rather than callables so the closure stays trivially
     picklable — the actual functions are imported executor-side."""
 
-    def render_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import gc
-        import os
-        import sys
-
-        # Python workers inherit PYTHONPATH, not the driver's sys.path —
-        # make the package importable regardless of worker cwd.
-        _repo = os.path.dirname(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        )
-        if _repo not in sys.path:
-            sys.path.insert(0, _repo)
-
+    def setup():
         from rust_html2text_spark.engine.api import Config, html_to_text, plain_config
-        from rust_html2text_spark.engine.errors import RenderError
 
-        # The engine allocates heavily but (with the DOM back-pointers
-        # broken) produces no cyclic garbage; raising the gen-0 threshold
-        # buys ~10% throughput in the worker.
-        gc.set_threshold(200_000, 50, 50)
-
-        if config_kwargs:
-            config = Config(**config_kwargs)
-        else:
-            config = plain_config()
+        config = Config(**config_kwargs) if config_kwargs else plain_config()
         if syntax_highlight:
             from rust_html2text_spark.engine.highlight import DEFAULT_HIGHLIGHTERS
 
@@ -107,59 +89,19 @@ def _render_batch_fn(
                 no_default_colours=no_default_colours,
             )
 
-            def render_one(h, w):
-                return html_to_coloured(h, w, cmap, config)
+            def render_row(html, row, w=width):
+                row["text"] = html_to_coloured(html, int(w), cmap, config)
+                yield row
 
         else:
 
-            def render_one(h, w):
-                return html_to_text(h, w, config)
+            def render_row(html, row, w=width):
+                row["text"] = html_to_text(html, int(w), config)
+                yield row
 
-        for batch in batches:
-            urls = batch["url"]
-            htmls = batch["html"]
-            # optional per-row width column (falls back to the job width)
-            widths = batch["width"] if "width" in batch.columns else None
-            texts: list[str | None] = []
-            errors: list[str | None] = []
-            html_bytes: list[int] = []
-            text_bytes: list[int] = []
-            for rowno, html in enumerate(htmls):
-                row_width = int(widths.iloc[rowno]) if widths is not None else width
-                if html is None:
-                    texts.append(None)
-                    errors.append("NullInput")
-                    html_bytes.append(0)
-                    text_bytes.append(0)
-                    continue
-                if isinstance(html, str):
-                    html = html.encode("utf-8")
-                html_bytes.append(len(html))
-                try:
-                    text = render_one(html, row_width)
-                    texts.append(text)
-                    errors.append(None)
-                    text_bytes.append(len(text.encode("utf-8")))
-                except RenderError as e:
-                    texts.append(None)
-                    errors.append(type(e).__name__)
-                    text_bytes.append(0)
-                except Exception as e:  # never kill the task
-                    texts.append(None)
-                    errors.append(f"Fail:{type(e).__name__}")
-                    text_bytes.append(0)
-            out = {
-                "url": urls,
-                "text": texts,
-                "error": errors,
-                "html_bytes": html_bytes,
-                "text_bytes": text_bytes,
-            }
-            for c in passthrough_cols:
-                out[c] = batch[c]
-            yield pd.DataFrame(out)
+        return render_row
 
-    return render_batches
+    return setup
 
 
 def render_pages(
@@ -182,7 +124,7 @@ def render_pages(
     shuffling the corpus once and not).  Correct whenever the input's file
     layout is not pathologically cost-correlated: a sink-written crawl
     table is already distributed by an upstream shuffle, and the outlier
-    lane below bounds the one real per-row cost hazard (giant documents)
+    lane bounds the one real per-row cost hazard (giant documents)
     regardless of layout.  repartition="salted" shuffles on
     xxhash64(url, salt) first — the defensive choice for raw input whose
     file layout concentrates expensive pages (e.g. per-host dump files),
@@ -201,38 +143,18 @@ def render_pages(
     mixed-payload router (operators/pdf.extract_mixed_pages), whose
     routing needs no isolation, is single-scan by construction.
     """
-    if repartition not in ("salted", "none"):
-        raise ValueError(f"repartition must be 'salted' or 'none', got {repartition!r}")
     cols = ["url", "html"]
     if "width" in df.columns:
         cols.append("width")
-    pages = df.select(*cols)
-    if outlier_bytes is not None:
-        # coalesce: NULL html must land in the normal lane (→ a NullInput
-        # error row), not silently vanish from both filter branches
-        pages = pages.withColumn(
-            "_oversized",
-            F.coalesce(F.length("html") > outlier_bytes, F.lit(False)),
-        )
-        normal = pages.filter(~F.col("_oversized")).drop("_oversized")
-        oversized = pages.filter(F.col("_oversized")).drop("_oversized")
-    else:
-        normal = pages
-        oversized = None
-
-    n = num_partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    n = int(n)
-    key = F.xxhash64(F.col("url"), F.lit(salt))
-    if repartition == "salted":
-        normal = normal.repartition(n, key)
-
-    fn = _render_batch_fn(width, config_kwargs or {}, **(render_kwargs or {}))
-    out = normal.mapInPandas(fn, RENDER_SCHEMA)
-    if oversized is not None:
-        # one oversized doc per task: bound worst-case task memory/time
-        oversized = oversized.repartition(n, key)
-        out = out.unionByName(oversized.mapInPandas(fn, RENDER_SCHEMA))
-    return out
+    return map_kernel(
+        df.select(*cols),
+        render_setup(width, config_kwargs or {}, **(render_kwargs or {})),
+        RENDER_SCHEMA,
+        outlier_bytes=outlier_bytes,
+        num_partitions=num_partitions,
+        salt=salt,
+        repartition=repartition,
+    )
 
 
 def render_pages_deduped(
@@ -281,6 +203,7 @@ def render_pages_deduped(
     """
     from pyspark.sql.types import ArrayType
 
+    setup = render_setup(width, config_kwargs or {})
     hashed = df.select(
         "url", F.md5(F.col("html")).alias("content_hash"), "html"
     )
@@ -293,10 +216,9 @@ def render_pages_deduped(
             schema = StructType(
                 RENDER_SCHEMA.fields + [StructField("content_hash", StringType())]
             )
-            fn = _render_batch_fn(
-                width, config_kwargs or {}, passthrough_cols=("content_hash",)
+            return map_kernel(
+                hashed, setup, schema, passthrough=("content_hash",)
             )
-            return hashed.mapInPandas(fn, schema)
     if num_partitions:
         # same key as the groupBy below, so the aggregation reuses this
         # exchange instead of adding a second one
@@ -310,12 +232,12 @@ def render_pages_deduped(
     schema = StructType(
         RENDER_SCHEMA.fields + [StructField("urls", ArrayType(StringType()))]
     )
-    fn = _render_batch_fn(
-        width, config_kwargs or {}, passthrough_cols=("urls",)
+    rendered = map_kernel(
+        grouped.select(F.col("content_hash").alias("url"), "urls", "html"),
+        setup,
+        schema,
+        passthrough=("urls",),
     )
-    rendered = grouped.select(
-        F.col("content_hash").alias("url"), "urls", "html"
-    ).mapInPandas(fn, schema)
     return rendered.select(
         F.explode("urls").alias("url"),
         "text",

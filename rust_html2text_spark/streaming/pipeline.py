@@ -12,7 +12,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from rust_html2text_spark.operators.render import RENDER_SCHEMA, _render_batch_fn
+from rust_html2text_spark.operators.kernel import map_kernel
+from rust_html2text_spark.operators.render import (
+    RENDER_SCHEMA,
+    render_pages,
+    render_setup,
+)
 
 
 def stream_pages(
@@ -35,9 +40,9 @@ def stream_pages(
 
 
 def render_stream(pages: DataFrame, width: int = 80, config_kwargs: dict | None = None) -> DataFrame:
-    """Streaming render: same mapInPandas stage as the batch operator."""
-    fn = _render_batch_fn(width, config_kwargs or {})
-    return pages.select("url", "html").mapInPandas(fn, RENDER_SCHEMA)
+    """Streaming render: the batch operator's kernel stage, single-lane
+    (outlier_bytes=None)."""
+    return render_pages(pages, width, config_kwargs, outlier_bytes=None)
 
 
 def crawl_rate_metrics(
@@ -80,25 +85,14 @@ def render_stream_with_ts(pages: DataFrame, width: int = 80) -> DataFrame:
     schema = StructType(
         list(RENDER_SCHEMA.fields) + [StructField("warc_ts", TimestampType())]
     )
-    fn = _render_batch_fn(width, {})
-
-    def batches(it):
-        import pandas as pd
-
-        ts_by_url = {}
-
-        def inner(batch_iter):
-            for batch in batch_iter:
-                for u, t in zip(batch["url"], batch["warc_ts"]):
-                    ts_by_url[u] = t
-                yield batch[["url", "html"]]
-
-        for out in fn(inner(it)):
-            out = out.copy()
-            out["warc_ts"] = out["url"].map(ts_by_url)
-            yield out
-
-    return pages.select("url", "html", "warc_ts").mapInPandas(batches, schema)
+    # warc_ts rides through the kernel row-aligned: a url re-crawled
+    # within one Arrow batch keeps each crawl's own timestamp
+    return map_kernel(
+        pages.select("url", "html", "warc_ts"),
+        render_setup(width, {}),
+        schema,
+        passthrough=("warc_ts",),
+    )
 
 
 def start_render_stream(
@@ -128,25 +122,26 @@ def extract_stream(
     charset_sniff: bool = False,
     charset_fallback: str = "utf-8",
 ) -> DataFrame:
-    """Streaming main-content extraction: the batch extract_pages stage
-    verbatim (shared batch fn — semantics cannot drift), including the
-    opt-in WHATWG charset sniff + encoding lineage."""
-    from rust_html2text_spark.operators.extract import (
-        EXTRACT_SCHEMA,
-        EXTRACT_SNIFF_SCHEMA,
-        _extract_batch_fn,
-    )
+    """Streaming main-content extraction: the batch extract_pages
+    operator, single-lane (semantics cannot drift), including the opt-in
+    WHATWG charset sniff + encoding lineage."""
+    from rust_html2text_spark.operators.extract import extract_pages
 
-    fn = _extract_batch_fn(width, config_kwargs or {}, charset_sniff, charset_fallback)
-    schema = EXTRACT_SNIFF_SCHEMA if charset_sniff else EXTRACT_SCHEMA
-    return pages.select("url", "html").mapInPandas(fn, schema)
+    return extract_pages(
+        pages,
+        width,
+        config_kwargs,
+        outlier_bytes=None,
+        charset_sniff=charset_sniff,
+        charset_fallback=charset_fallback,
+    )
 
 
 def pdf_extract_stream(pages: DataFrame, page_sep: str = "\f") -> DataFrame:
     """Streaming PDF extraction over a (url, pdf) stream."""
-    from rust_html2text_spark.operators.pdf import PDF_SCHEMA, _pdf_batch_fn
+    from rust_html2text_spark.operators.pdf import extract_pdf_pages
 
-    return pages.select("url", "pdf").mapInPandas(_pdf_batch_fn(page_sep), PDF_SCHEMA)
+    return extract_pdf_pages(pages, page_sep, outlier_bytes=None)
 
 
 def start_extraction_stream(
@@ -172,16 +167,10 @@ def start_extraction_stream(
     elif mode == "pdf":
         out = pdf_extract_stream(pages)
     elif mode == "mixed":
-        from rust_html2text_spark.operators.pdf import (
-            MIXED_SCHEMA,
-            _mixed_batch_fn,
-        )
+        from rust_html2text_spark.operators.pdf import extract_mixed_pages
 
-        out = pages.select("url", "html").mapInPandas(
-            _mixed_batch_fn(
-                width, config_kwargs or {}, "\f", charset_sniff
-            ),
-            MIXED_SCHEMA,
+        out = extract_mixed_pages(
+            pages, width, config_kwargs, charset_sniff=charset_sniff
         )
     elif mode == "render":
         out = render_stream(pages, width=width, config_kwargs=config_kwargs)

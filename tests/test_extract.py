@@ -543,6 +543,29 @@ def test_resolve_url_abnormal_and_edge_cases():
     assert resolve_url(base, "  g  ") == "http://a/b/c/g"
 
 
+def test_resolve_url_rejects_malformed_absolute_hrefs():
+    """The absolute-URL fast path must not pass hrefs urlsplit rejects;
+    the page-at-a-time resolver (hoisted base check) agrees with the
+    one-href resolver on every case."""
+    from rust_html2text_spark.engine.extract import _resolve_links, resolve_url
+
+    base = "http://a/b/c/d;p?q"
+    assert resolve_url(base, "http://[::bad") is None
+    assert resolve_url(base, "https://a]b/") is None
+    assert resolve_url(None, "http://[::bad") is None
+    # NFKC turns U+FF0F (fullwidth solidus) into "/" inside the netloc
+    assert resolve_url(base, "http://a／b.example/") is None
+    # well-formed brackets and non-ASCII hosts still resolve
+    assert resolve_url(base, "http://[::1]/x") == "http://[::1]/x"
+    assert resolve_url(base, "http://bücher.example/") == "http://bücher.example/"
+    hrefs = ["http://[::bad", "/g", "g", "https://x/y", "http://[::1]/", "mailto:a@b"]
+    for page_base in (base, None, "not a url"):
+        links = [(i, h, "", 0) for i, h in enumerate(hrefs)]
+        assert [t[4] for t in _resolve_links(links, page_base)] == [
+            resolve_url(page_base, h) for h in hrefs
+        ]
+
+
 def test_base_href_first_wins_and_relative_base():
     from rust_html2text_spark.engine.extract import extract_main_links
 

@@ -1,0 +1,287 @@
+"""Contract of the Arrow-batch kernel boundary, pinned through the public
+operators: the error row each operator emits for a NULL payload, a
+too-narrow width and a truncated PDF; the encoding lineage and raw byte
+counts of a charset-sniffed row; and the physical plan shape (MapInPandas,
+Exchange and Union node counts) of every operator."""
+
+from __future__ import annotations
+
+import json
+import re
+from collections import Counter
+
+import pytest
+
+pytest.importorskip("pyspark")
+
+# windows-1252 bytes: the sniffed decode grows the payload, so a byte
+# count taken after the sniff would differ from the raw size
+CP1252 = (
+    b'<html><head><meta charset="windows-1252"><title>T</title></head>'
+    b"<body><article><p>caf\xe9 \x93quoted\x94 na\xefve r\xe9sum\xe9 text "
+    b'<a href="/next">more</a></p></article></body></html>'
+)
+PAGE = (
+    b'<html lang="en"><head><title>Title</title>'
+    b'<meta name="description" content="D"></head><body><article>'
+    b"<h1>Heading</h1><p>First paragraph with enough words to be content. "
+    b'<a href="/a">one</a> and <a href="https://x.example/b">two</a>.</p>'
+    b"</article></body></html>"
+)
+TRUNCATED_PDF = b"%PDF-1.4\n1 0 obj\n<< /Type /Catalog /Pages 2 0 R"
+
+
+@pytest.fixture(scope="module")
+def spark():
+    from rust_html2text_spark.plans.session import get_spark
+
+    spark = get_spark(app_name="tests", master="local[2]", shuffle_partitions=4)
+    spark.sparkContext.setLogLevel("ERROR")
+    yield spark
+    spark.stop()
+
+
+@pytest.fixture(scope="module")
+def pages(spark):
+    return spark.createDataFrame(
+        [("https://h.example/null", None), ("https://h.example/p", PAGE)],
+        "url string, html binary",
+    )
+
+
+@pytest.fixture(scope="module")
+def pdf_bytes():
+    from rust_html2text_spark.sources.pdfcorpus import build_pdf
+
+    return build_pdf(1, "a pdf page of text", "https://h.example/doc.pdf")
+
+
+def _by_url(df):
+    return {r["url"]: r.asDict() for r in df.collect()}
+
+
+def test_null_payload_rows(spark, pages):
+    from rust_html2text_spark.operators.extract import (
+        extract_links,
+        extract_pages,
+        extract_pages_full,
+        page_metadata_pages,
+    )
+    from rust_html2text_spark.operators.pdf import (
+        extract_mixed_pages,
+        extract_pdf_links,
+        extract_pdf_pages,
+    )
+    from rust_html2text_spark.operators.render import (
+        render_pages,
+        render_pages_deduped,
+    )
+
+    u = "https://h.example/null"
+    r = _by_url(render_pages(pages))[u]
+    assert r == dict(url=u, text=None, error="NullInput", html_bytes=0, text_bytes=0)
+    for threshold in (1.5, None):  # direct route, then the grouped route
+        d = render_pages_deduped(pages, dedup_ratio_threshold=threshold).collect()
+        (null_row,) = [x for x in d if x["content_hash"] is None]
+        assert null_row["error"] == "NullInput" and null_row["text"] is None
+        assert null_row["html_bytes"] == 0 and null_row["text_bytes"] == 0
+
+    base = dict(url=u, text=None, error="NullInput", html_bytes=0, text_bytes=0,
+                winner_tag=None, score=None, n_candidates=0)
+    assert _by_url(extract_pages(pages))[u] == base
+    assert _by_url(extract_pages(pages, charset_sniff=True))[u] == dict(
+        base, encoding=None, encoding_source=None
+    )
+    meta = dict(links_json=None, title=None, description=None, lang_attr=None,
+                canonical=None, og_title=None, robots=None)
+    assert _by_url(extract_pages_full(pages))[u] == dict(base, **meta)
+    assert _by_url(extract_pages_full(pages, charset_sniff=True))[u] == dict(
+        base, **meta, encoding=None, encoding_source=None
+    )
+    assert _by_url(page_metadata_pages(pages))[u] == dict(
+        url=u, title=None, description=None, lang_attr=None, canonical=None,
+        og_title=None, robots=None, error="NullInput",
+    )
+    assert _by_url(extract_mixed_pages(pages))[u] == dict(
+        url=u, kind="html", text=None, error="NullInput", input_bytes=0, text_bytes=0
+    )
+    pdfs = pages.withColumnRenamed("html", "pdf")
+    assert _by_url(extract_pdf_pages(pdfs))[u] == dict(
+        url=u, text=None, error="NullInput", pdf_bytes=0, text_bytes=0, n_pages=0,
+        pdf_version=None, title=None, author=None,
+    )
+    # the link kernels emit no row at all for a NULL payload
+    links = extract_links(pages).collect()
+    assert links and all(x["url"] != u for x in links)
+    assert extract_pdf_links(pdfs).filter(f"url = '{u}'").count() == 0
+
+
+def test_too_narrow_rows(spark, pages):
+    from rust_html2text_spark.operators.extract import extract_pages, extract_pages_full
+    from rust_html2text_spark.operators.pdf import extract_mixed_pages
+    from rust_html2text_spark.operators.render import render_pages
+
+    u, n = "https://h.example/p", len(PAGE)
+    assert _by_url(render_pages(pages, width=0))[u] == dict(
+        url=u, text=None, error="TooNarrow", html_bytes=n, text_bytes=0
+    )
+    assert _by_url(extract_pages(pages, width=0))[u] == dict(
+        url=u, text=None, error="TooNarrow", html_bytes=n, text_bytes=0,
+        winner_tag=None, score=None, n_candidates=0,
+    )
+    assert _by_url(extract_mixed_pages(pages, width=0))[u] == dict(
+        url=u, kind="html", text=None, error="TooNarrow", input_bytes=n, text_bytes=0
+    )
+    full = _by_url(extract_pages_full(pages, width=0))[u]
+    assert full["error"] == "TooNarrow" and full["text"] is None
+    assert full["html_bytes"] == n and full["text_bytes"] == 0
+    assert full["winner_tag"] is None and full["n_candidates"] == 0
+    # links and head metadata do not depend on rendering: still filled
+    links = json.loads(full["links_json"])
+    assert [x[4] for x in links] == ["https://h.example/a", "https://x.example/b"]
+    assert full["title"] == "Title" and full["description"] == "D"
+    assert full["lang_attr"] == "en"
+
+
+def test_truncated_pdf_rows(spark, pdf_bytes):
+    from rust_html2text_spark.operators.pdf import extract_mixed_pages, extract_pdf_pages
+
+    df = spark.createDataFrame(
+        [("https://h.example/bad.pdf", TRUNCATED_PDF), ("https://h.example/ok.pdf", pdf_bytes)],
+        "url string, pdf binary",
+    )
+    got = _by_url(extract_pdf_pages(df))
+    bad = got["https://h.example/bad.pdf"]
+    assert bad["error"].startswith("PdfError:") and len(bad["error"]) <= 200
+    assert bad["text"] is None and bad["n_pages"] == 0
+    assert bad["pdf_bytes"] == len(TRUNCATED_PDF) and bad["text_bytes"] == 0
+    ok = got["https://h.example/ok.pdf"]
+    assert ok["error"] is None and ok["pdf_bytes"] == len(pdf_bytes)
+    assert ok["text_bytes"] == len(ok["text"].encode("utf-8")) > 0
+
+    mixed = _by_url(extract_mixed_pages(df, payload_col="pdf"))
+    mbad = mixed["https://h.example/bad.pdf"]
+    assert mbad["kind"] == "pdf" and mbad["error"] == bad["error"]
+    assert mbad["input_bytes"] == len(TRUNCATED_PDF) and mbad["text"] is None
+    mok = mixed["https://h.example/ok.pdf"]
+    assert mok["kind"] == "pdf" and mok["text"] == ok["text"]
+
+
+def test_sniffed_rows_keep_lineage_and_raw_sizes(spark):
+    from rust_html2text_spark.operators.extract import extract_pages, extract_pages_full
+    from rust_html2text_spark.operators.pdf import extract_mixed_pages
+
+    u = "https://h.example/cp"
+    df = spark.createDataFrame([(u, CP1252)], "url string, html binary")
+    for width, error in ((80, None), (0, "TooNarrow")):
+        for op in (extract_pages, extract_pages_full):
+            r = _by_url(op(df, width=width, charset_sniff=True))[u]
+            assert r["error"] == error
+            assert (r["encoding"], r["encoding_source"]) == ("cp1252", "meta")
+            assert r["html_bytes"] == len(CP1252)
+        m = _by_url(extract_mixed_pages(df, width=width, charset_sniff=True))[u]
+        assert m["error"] == error and m["input_bytes"] == len(CP1252)
+    ok = _by_url(extract_pages(df, charset_sniff=True))[u]
+    assert "café" in ok["text"]
+    assert ok["text_bytes"] == len(ok["text"].encode("utf-8"))
+
+
+# -- physical plan shape ---------------------------------------------------
+
+
+def _plan_nodes(df) -> Counter:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    names = Counter()
+    for line in plan.splitlines():
+        m = re.match(r"^[\s:+\-|]*(?:\*\(\d+\)\s*)?(\w+)", line)
+        if m:
+            names[m.group(1)] += 1
+    return Counter({k: names[k] for k in ("MapInPandas", "Exchange", "Union")})
+
+
+def _shape(mip, exch, union):
+    return Counter({"MapInPandas": mip, "Exchange": exch, "Union": union})
+
+
+def _operators(spark):
+    from rust_html2text_spark.operators import extract, pdf, render
+
+    html = spark.createDataFrame(
+        [(f"https://h.example/{i}", PAGE + str(i).encode()) for i in range(8)],
+        "url string, html binary",
+    )
+    dup = spark.createDataFrame(
+        [(f"https://h.example/{i}", PAGE) for i in range(8)],
+        "url string, html binary",
+    )
+    pdfs = html.withColumnRenamed("html", "pdf")
+    return {
+        # name: (build, input, shape at defaults, shape at outlier_bytes=None)
+        "render_pages": (render.render_pages, html, _shape(2, 1, 1), _shape(1, 0, 0)),
+        "extract_pages": (extract.extract_pages, html, _shape(2, 1, 1), _shape(1, 0, 0)),
+        "extract_links": (extract.extract_links, html, _shape(2, 1, 1), _shape(1, 0, 0)),
+        "page_metadata_pages": (
+            extract.page_metadata_pages, html, _shape(2, 1, 1), _shape(1, 0, 0)
+        ),
+        "extract_pages_full": (
+            extract.extract_pages_full, html, _shape(2, 1, 1), _shape(1, 0, 0)
+        ),
+        "extract_pdf_pages": (pdf.extract_pdf_pages, pdfs, _shape(2, 1, 1), _shape(1, 0, 0)),
+        "extract_pdf_links": (pdf.extract_pdf_links, pdfs, _shape(1, 0, 0), None),
+        "extract_mixed_pages": (pdf.extract_mixed_pages, html, _shape(1, 0, 0), None),
+        "render_pages_deduped/direct": (
+            render.render_pages_deduped, html, _shape(1, 0, 0), None
+        ),
+        "render_pages_deduped/grouped": (
+            render.render_pages_deduped, dup, _shape(1, 1, 0), None
+        ),
+    }
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "render_pages",
+        "extract_pages",
+        "extract_links",
+        "page_metadata_pages",
+        "extract_pages_full",
+        "extract_pdf_pages",
+        "extract_pdf_links",
+        "extract_mixed_pages",
+        "render_pages_deduped/direct",
+        "render_pages_deduped/grouped",
+    ],
+)
+def test_plan_shape(spark, name):
+    build, df, default, single_scan = _operators(spark)[name]
+    assert _plan_nodes(build(df)) == default
+    if single_scan is not None:
+        assert _plan_nodes(build(df, outlier_bytes=None)) == single_scan
+
+
+def test_salted_repartition_adds_one_hash_exchange(spark):
+    """repartition="salted" is the escape hatch for cost-correlated input
+    layouts: the same rows as "none", plus one url-hash exchange in front
+    of the kernel."""
+    from rust_html2text_spark.operators.render import render_pages
+
+    df = spark.createDataFrame(
+        [(f"https://h.example/{i}", PAGE + str(i).encode()) for i in range(8)]
+        + [("https://h.example/null", None)],
+        "url string, html binary",
+    )
+    none = render_pages(df)
+    salted = render_pages(df, repartition="salted", salt=7)
+
+    def hash_exchanges(d):
+        plan = d._jdf.queryExecution().executedPlan().toString()
+        return len(re.findall(r"Exchange hashpartitioning\(xxhash64\(url", plan))
+
+    # read the plans before running them: an executed adaptive plan prints
+    # its initial plan too, which doubles every count
+    assert hash_exchanges(salted) == hash_exchanges(none) + 1
+    assert _plan_nodes(salted) == _plan_nodes(none) + _shape(0, 1, 0)
+    assert sorted(salted.collect()) == sorted(none.collect())
+    with pytest.raises(ValueError, match="repartition"):
+        render_pages(df, repartition="range")

@@ -55,6 +55,28 @@ wstats = render_pages(warc_pages, width=80).agg(
 ).collect()[0]
 assert wstats["n"] == 100 and wstats["err"] == 0, wstats
 
+# the mixed HTML+PDF router through real executors: the kernel adapter's
+# worker bootstrap must load both engines from the shipped zip, and the
+# texts must match the driver-side engine calls
+from rust_html2text_spark.engine.api import html_to_text
+from rust_html2text_spark.engine.pdftext import extract_pdf_ex
+from rust_html2text_spark.operators.pdf import extract_mixed_pages
+from rust_html2text_spark.sources.pdfcorpus import build_pdf
+payloads = [(r["url"], bytes(r["html"])) for r in rows[:6]] + [
+    (f"https://p.example/{{i}}.pdf", build_pdf(i, f"pdf body {{i}} " * 40, "srcA"))
+    for i in range(1, 7)  # doc 4 is an encrypted RC4 lane
+]
+mixed = spark.createDataFrame(payloads, "url string, html binary").repartition(3)
+got = {{r["url"]: r for r in extract_mixed_pages(mixed, width=80).collect()}}
+assert len(got) == 12, sorted(got)
+for url, data in payloads:
+    r = got[url]
+    assert r["error"] is None and r["input_bytes"] == len(data), r
+    if url.endswith(".pdf"):
+        assert r["kind"] == "pdf" and r["text"] == extract_pdf_ex(data)["text"], r
+    else:
+        assert r["kind"] == "html" and r["text"] == html_to_text(data, 80), r
+
 # the crawl loop through real executors: robots gate (mapInPandas rules
 # parse must import from the shipped zip on the workers) + sitemap parse
 from rust_html2text_spark.functions.robots import frontier_allowed, robots_rules

@@ -354,6 +354,32 @@ def test_streaming_windowed_metrics(spark, tmp_path):
     }
 
 
+def test_render_with_ts_keeps_each_recrawl_timestamp(spark):
+    """A url crawled twice within one Arrow batch keeps each crawl's own
+    warc_ts, so the windowed metrics count both crawls in their own
+    windows."""
+    from datetime import datetime
+
+    from rust_html2text_spark.streaming.pipeline import (
+        crawl_rate_metrics,
+        render_stream_with_ts,
+    )
+
+    t0, t7 = datetime(2024, 1, 1, 0, 0), datetime(2024, 1, 1, 0, 7)
+    pages = spark.createDataFrame(
+        [("u", t0, b"<p>first</p>"), ("v", t0, b"<p>v</p>"), ("u", t7, b"<p>again</p>")],
+        "url string, warc_ts timestamp, html binary",
+    ).coalesce(1)  # one partition: all three rows in one Arrow batch
+    rendered = render_stream_with_ts(pages)
+    got = sorted((r["url"], r["warc_ts"], r["text"]) for r in rendered.collect())
+    assert got == [("u", t0, "first\n"), ("u", t7, "again\n"), ("v", t0, "v\n")]
+    windows = {
+        r["window_start"].minute: r["docs"]
+        for r in crawl_rate_metrics(rendered).collect()
+    }
+    assert windows == {0: 2, 5: 1}
+
+
 def test_stateful_streaming_dedup(spark, tmp_path):
     """applyInPandasWithState first-seen dedup: duplicates arriving in a
     LATER micro-batch are suppressed by the cross-batch state."""
