@@ -24,13 +24,13 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import LongType
 
+from rust_html2text_spark.functions.textstats import normalized_text_col
 
 
 def exact_dup_groups(docs: DataFrame) -> DataFrame:
     """Groups of byte-identical (normalized) documents."""
-    normalized = F.lower(F.regexp_replace(F.trim(F.col("text")), r"\s+", " "))
     return (
-        docs.select(F.md5(normalized).alias("fingerprint"))
+        docs.select(F.md5(normalized_text_col()).alias("fingerprint"))
         .groupBy("fingerprint")
         .agg(F.count("*").alias("n_docs"))
         .filter(F.col("n_docs") > 1)

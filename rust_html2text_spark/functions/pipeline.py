@@ -28,35 +28,27 @@ def training_pipeline(
     prediction (stopword vote, same rule as textstats.lang_id) is in the
     tuple; pass None to skip language filtering."""
     from rust_html2text_spark.functions.textstats import (
-        EN_STOPWORDS,
-        _stopword_hits,
+        normalized_text_col,
         pred_lang_col,
+        quality_col,
         tokens_col,
     )
 
     rendered = render_pages(pages, width=width).filter(F.col("error").isNull())
 
-    toks = tokens_col("text")
-    n_tokens = F.size(toks)
-    n_chars = F.length("text")
-    n_alpha = F.length(F.regexp_replace("text", r"[^A-Za-z]", ""))
-    sw = _stopword_hits(EN_STOPWORDS)
-    quality = (n_alpha / n_chars) * 0.5 + (sw / n_tokens) * 0.5
-
     scored = rendered.select(
         "url",
         "text",
         "text_bytes",
-        n_tokens.alias("n_tokens"),
-        F.round(quality, 6).alias("quality"),
-        pred_lang_col("text").alias("pred_lang"),
+        F.size(tokens_col()).alias("n_tokens"),
+        F.round(quality_col(), 6).alias("quality"),
+        pred_lang_col().alias("pred_lang"),
     ).filter(F.col("quality") >= min_quality)
     if langs is not None:
         scored = scored.filter(F.col("pred_lang").isin(list(langs)))
     scored = scored.drop("pred_lang")
 
-    normalized = F.lower(F.regexp_replace(F.trim(F.col("text")), r"\s+", " "))
-    fingerprinted = scored.withColumn("fingerprint", F.md5(normalized))
+    fingerprinted = scored.withColumn("fingerprint", F.md5(normalized_text_col()))
     # keep the lexicographically-first url per identical document
     from pyspark.sql.window import Window
 

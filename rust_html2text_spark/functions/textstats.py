@@ -47,6 +47,12 @@ def tokens_col(text_col="text"):
     return F.split(F.trim(F.col(text_col)), r"\s+")
 
 
+def normalized_text_col(text_col: str = "text"):
+    """Whitespace-collapsed lowercase text: the input every exact-dup
+    fingerprint hashes."""
+    return F.lower(F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " "))
+
+
 # GPT-2-style pre-tokenizer, restricted to the RE2 ∩ Java-regex common
 # subset (no lookarounds, no \p classes): contraction suffixes, letter
 # runs, digit runs, non-space symbol runs.  Each match ≈ one BPE merge
@@ -114,10 +120,18 @@ def pred_lang_col(text_col: str = "text"):
     return expr
 
 
+def quality_col(text_col: str = "text"):
+    """Quality score: half the alphabetic-character ratio plus half the
+    English stopword ratio of the whitespace tokens."""
+    n_alpha = F.length(F.regexp_replace(text_col, r"[^A-Za-z]", ""))
+    n_tokens = F.size(tokens_col(text_col))
+    sw = _stopword_hits(EN_STOPWORDS, text_col)
+    return (n_alpha / F.length(text_col)) * 0.5 + (sw / n_tokens) * 0.5
+
+
 def quality_score(docs: DataFrame) -> DataFrame:
     """Length / punctuation / stopword-ratio quality signals."""
-    toks = tokens_col()
-    n_tokens = F.size(toks)
+    n_tokens = F.size(tokens_col())
     n_chars = F.length("text")
     n_alpha = F.length(F.regexp_replace("text", r"[^A-Za-z]", ""))
     n_punct = F.length(F.regexp_replace("text", r"[^.,;:!?]", ""))
@@ -129,10 +143,7 @@ def quality_score(docs: DataFrame) -> DataFrame:
         (n_alpha / n_chars).alias("alpha_ratio"),
         (n_punct / n_chars).alias("punct_ratio"),
         (sw / n_tokens).alias("stopword_ratio"),
-        (
-            (n_alpha / n_chars) * 0.5
-            + (sw / n_tokens) * 0.5
-        ).alias("quality"),
+        quality_col().alias("quality"),
     )
 
 
@@ -151,8 +162,7 @@ def lang_id(docs: DataFrame) -> DataFrame:
 
 def fingerprint(docs: DataFrame) -> DataFrame:
     """Document fingerprint: md5 of whitespace-normalized lowercase text."""
-    normalized = F.lower(F.regexp_replace(F.trim(F.col("text")), r"\s+", " "))
-    return docs.select("doc_id", F.md5(normalized).alias("fingerprint"))
+    return docs.select("doc_id", F.md5(normalized_text_col()).alias("fingerprint"))
 
 
 def token_rarity(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -202,8 +212,7 @@ def rolling_fingerprint(
     mod a 31-bit prime.  Entirely a higher-order-function fold — no UDF,
     no shuffle; unlike md5 it extends incrementally (h(doc+suffix) derives
     from h(doc)), the property rolling fingerprints exist for."""
-    normalized = F.lower(F.regexp_replace(F.trim(F.col("text")), r"\s+", " "))
-    chars = F.split(normalized, "")
+    chars = F.split(normalized_text_col(), "")
     h = F.aggregate(
         chars,
         F.lit(0).cast("long"),

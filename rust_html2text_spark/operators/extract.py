@@ -1,7 +1,7 @@
 """The main-content extraction operator, Spark-first.
 
-Same plan shape as operators/render.py (scan → optional salted
-repartition → mapInPandas, all built by operators/kernel.map_kernel), same
+Same plan shape as operators/render.py (scan → mapInPandas, with the
+oversized-outlier lane, all built by operators/kernel.map_kernel), same
 robustness contract (a hostile page becomes an error row, never a task
 failure) — the kernel is engine/extract.extract_main_ex
 (boilerplate strip + DOM-heuristic candidate scoring) instead of the
@@ -77,20 +77,15 @@ META_SCHEMA = StructType(
 def extract_links(
     df: DataFrame,
     config_kwargs: dict | None = None,
-    num_partitions: int | None = None,
-    salt: int = 0,
-    repartition: str = "none",
     charset_sniff: bool = False,
-    charset_fallback: str = "utf-8",
     outlier_bytes: int | None = 1 << 20,
 ) -> DataFrame:
     """Crawl-graph edges of the MAIN content: (url, ordinal, href, anchor)
     — chrome/nav/footer links are dropped by the same strip+score pass as
     extract_pages, so the edge list is content-to-content (what a link-
     graph quality signal like a PageRank-ish prior wants; boilerplate
-    edges are exactly the noise).  Variable rows per input page; same
-    url-hash partitioning and the oversized-outlier lane match the rest
-    of the tier."""
+    edges are exactly the noise).  Variable rows per input page; the
+    oversized-outlier lane matches the rest of the tier."""
 
     def setup():
         from rust_html2text_spark.engine.api import Config, plain_config
@@ -101,7 +96,7 @@ def extract_links(
 
         def links_row(html, row):
             if charset_sniff:
-                html = decode_html(html, charset_fallback)[0]
+                html = decode_html(html)[0]
             for o, href, anchor, nofollow, target_abs in extract_main_links(
                 html, config, base_url=row["url"]
             ):
@@ -117,20 +112,12 @@ def extract_links(
         setup,
         LINKS_SCHEMA,
         outlier_bytes=outlier_bytes,
-        num_partitions=num_partitions,
-        salt=salt,
-        repartition=repartition,
     )
 
 
 def page_metadata_pages(
     df: DataFrame,
-    xml_mode=None,
-    num_partitions: int | None = None,
-    salt: int = 0,
-    repartition: str = "none",
     charset_sniff: bool = False,
-    charset_fallback: str = "utf-8",
     outlier_bytes: int | None = 1 << 20,
 ) -> DataFrame:
     """Head-metadata extraction: (url, title, description, lang_attr,
@@ -144,8 +131,8 @@ def page_metadata_pages(
 
         def meta_row(html, row):
             if charset_sniff:
-                html = decode_html(html, charset_fallback)[0]
-            row.update(page_metadata(html, xml_mode=xml_mode))
+                html = decode_html(html)[0]
+            row.update(page_metadata(html))
             yield row
 
         return meta_row
@@ -155,9 +142,6 @@ def page_metadata_pages(
         setup,
         META_SCHEMA,
         outlier_bytes=outlier_bytes,
-        num_partitions=num_partitions,
-        salt=salt,
-        repartition=repartition,
     )
 
 
@@ -194,11 +178,7 @@ def extract_pages_full(
     df: DataFrame,
     width: int = 80,
     config_kwargs: dict | None = None,
-    num_partitions: int | None = None,
-    salt: int = 0,
-    repartition: str = "none",
     charset_sniff: bool = False,
-    charset_fallback: str = "utf-8",
     outlier_bytes: int | None = 1 << 20,
 ) -> DataFrame:
     """One-parse fusion of extract_pages + extract_links + page_metadata:
@@ -206,8 +186,8 @@ def extract_pages_full(
     metadata).  A curation pipeline that consumes all three must not
     parse every page three times — at crawl scale the parse is ~25% of
     the kernel, so the fusion saves ~½ of a full extra pass.  Plan shape
-    matches the tier: pruned scan → (optional salted repartition) → one mapInPandas
-    with the oversized-outlier lane.  charset_sniff=True adds the WHATWG
+    matches the tier: pruned scan → one mapInPandas with the
+    oversized-outlier lane.  charset_sniff=True adds the WHATWG
     sniff + (encoding, encoding_source) lineage, same contract as
     extract_pages."""
 
@@ -231,9 +211,7 @@ def extract_pages_full(
         def full_row(html, row):
             url = row["url"]
             if charset_sniff:
-                html, row["encoding"], row["encoding_source"] = decode_html(
-                    html, charset_fallback
-                )
+                html, row["encoding"], row["encoding_source"] = decode_html(html)
             try:
                 r = extract_main_full(html, width, config, base_url=url)
             except RenderError:
@@ -265,9 +243,6 @@ def extract_pages_full(
         setup,
         FULL_SNIFF_SCHEMA if charset_sniff else FULL_SCHEMA,
         outlier_bytes=outlier_bytes,
-        num_partitions=num_partitions,
-        salt=salt,
-        repartition=repartition,
     )
 
 
@@ -275,25 +250,19 @@ def extract_pages(
     df: DataFrame,
     width: int = 80,
     config_kwargs: dict | None = None,
-    num_partitions: int | None = None,
-    salt: int = 0,
     outlier_bytes: int | None = 1 << 20,
-    repartition: str = "none",
     charset_sniff: bool = False,
-    charset_fallback: str = "utf-8",
     charset_col: str | None = None,
 ) -> DataFrame:
     """Extract main content from a pages DataFrame (url, html, ...) →
     (url, text, error, sizes, winner_tag, score, n_candidates).  Same
     partitioning contract as operators/render.render_pages: no pre-kernel
-    shuffle by default (`repartition="salted"` opts into the url-hash
-    shuffle for cost-correlated file layouts), and an
-    oversized-outlier lane so one giant page never stalls a task's worth
-    of siblings (the lane's second-scan cost and when to disable it are
-    quantified in render_pages' docstring).
+    shuffle, and an oversized-outlier lane so one giant page never stalls
+    a task's worth of siblings (the lane's second-scan cost and when to
+    disable it are quantified in render_pages' docstring).
 
     charset_sniff=True runs the WHATWG encoding sniff (BOM → transport
-    label → meta prescan → charset_fallback) in front of the parse and
+    label → meta prescan → utf-8) in front of the parse and
     appends (encoding, encoding_source) lineage — the extraction tier
     targets real crawls where non-UTF-8 pages are a double-digit
     percentage.  `charset_col` names a per-row transport-layer label
@@ -321,7 +290,7 @@ def extract_pages(
                 if label is not None and not isinstance(label, str):
                     label = None  # NaN from pandas for NULL cells
                 html, row["encoding"], row["encoding_source"] = decode_html(
-                    html, charset_fallback, transport_label=label
+                    html, transport_label=label
                 )
             r = extract_main_ex(html, width, config)
             row.update(
@@ -339,7 +308,4 @@ def extract_pages(
         setup,
         EXTRACT_SNIFF_SCHEMA if charset_sniff else EXTRACT_SCHEMA,
         outlier_bytes=outlier_bytes,
-        num_partitions=num_partitions,
-        salt=salt,
-        repartition=repartition,
     )

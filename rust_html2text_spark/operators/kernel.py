@@ -4,7 +4,8 @@ Every Python extraction operator is `map_kernel` around a `setup()`
 closure.  The adapter owns what each operator used to repeat by hand:
 the worker bootstrap, payload coercion, the NULL-payload row, the
 exception → error-string map, column assembly, passthrough columns, and
-the plan tail (optional salted url-hash shuffle, oversized-outlier lane).
+the plan tail (the optional oversized-outlier lane).  Partitioning is the
+caller's: the kernel runs on the input's own partitions.
 
 The operator supplies only `setup()`.  It runs on the worker after the
 bootstrap, imports its engine entry point there, and returns
@@ -34,9 +35,6 @@ def map_kernel(
     *,
     payload: str = "html",
     outlier_bytes: int | None = None,
-    num_partitions: int | None = None,
-    salt: int = 0,
-    repartition: str = "none",
     passthrough: tuple = (),
     defaults: dict | None = None,
 ) -> DataFrame:
@@ -52,12 +50,9 @@ def map_kernel(
     `*_bytes` column other than `text_bytes` gets the raw payload size;
     `text_bytes` is the UTF-8 size of `text`.
 
-    repartition="salted" shuffles the normal lane on xxhash64(url, salt)
-    before the kernel.  With `outlier_bytes` set, payloads longer than
-    that are routed to a second lane that shuffles them apart so each
-    lands in its own task, and the two lanes are unioned."""
-    if repartition not in ("salted", "none"):
-        raise ValueError(f"repartition must be 'salted' or 'none', got {repartition!r}")
+    With `outlier_bytes` set, payloads longer than that are routed to a
+    second lane that shuffles them apart on xxhash64(url) so each lands in
+    its own task, and the two lanes are unioned."""
     template = {
         f.name: 0 if isinstance(f.dataType, LongType) else None
         for f in schema.fields
@@ -143,13 +138,10 @@ def map_kernel(
         oversized = pages.filter(F.col("_oversized")).drop("_oversized")
     else:
         normal, oversized = pages, None
-    n = int(num_partitions or pages.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    key = F.xxhash64(F.col("url"), F.lit(salt))
-    if repartition == "salted":
-        normal = normal.repartition(n, key)
     out = normal.mapInPandas(kernel_batches, schema)
     if oversized is not None:
         # one oversized doc per task: bound worst-case task memory/time
-        oversized = oversized.repartition(n, key)
+        n = int(pages.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        oversized = oversized.repartition(n, F.xxhash64("url"))
         out = out.unionByName(oversized.mapInPandas(kernel_batches, schema))
     return out

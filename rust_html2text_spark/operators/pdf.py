@@ -1,8 +1,8 @@
 """PDF text-extraction operator, Spark-first.
 
 Third member of the extraction-tier operator family (render_pages,
-extract_pages): same plan shape — pruned scan → optional salted url-hash
-repartition → Arrow-batched mapInPandas, built by
+extract_pages): same plan shape — pruned scan → Arrow-batched
+mapInPandas with the oversized-outlier lane, built by
 operators/kernel.map_kernel — and the same robustness
 contract (a hostile or truncated PDF becomes an error row, never a task
 failure).  The kernel is engine/pdftext.extract_pdf_ex (document
@@ -12,7 +12,7 @@ and PDF version ride along as lineage.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     LongType,
     StringType,
@@ -47,12 +47,7 @@ LINKS_SCHEMA = StructType(
 )
 
 
-def extract_pdf_links(
-    df: DataFrame,
-    num_partitions: int | None = None,
-    salt: int = 0,
-    repartition: str = "none",
-) -> DataFrame:
+def extract_pdf_links(df: DataFrame) -> DataFrame:
     """The PDF half of the crawl link graph: (url, page, ordinal, uri)
     from /Annots Link → /A /URI actions — PDFs carry their outbound
     edges as annotations, not text.  Pairs with
@@ -74,9 +69,6 @@ def extract_pdf_links(
         setup,
         LINKS_SCHEMA,
         payload="pdf",
-        num_partitions=num_partitions,
-        salt=salt,
-        repartition=repartition,
     )
 
 
@@ -96,13 +88,7 @@ def extract_mixed_pages(
     df: DataFrame,
     width: int = 80,
     config_kwargs: dict | None = None,
-    num_partitions: int | None = None,
-    salt: int = 0,
-    payload_col: str = "html",
-    page_sep: str = "\f",
-    repartition: str = "none",
     charset_sniff: bool = False,
-    charset_fallback: str = "utf-8",
 ) -> DataFrame:
     """Mixed-payload extraction: a crawl's pages table carries ONE binary
     payload column, and real Common Crawl responses are ~98% HTML with a
@@ -112,12 +98,11 @@ def extract_mixed_pages(
     pdftext kernel, everything else through the full HTML render.
     Output: (url, kind, text, error, input_bytes, text_bytes).
 
-    Scale shape: ONE pruned scan → (optional salted shuffle) → ONE mapInPandas
-    whose Python side dispatches per row — both kernels live in the same
-    worker process, so routing costs a 1 KiB memchr, not a second scan
-    of the payload column (a two-filtered-branches plan reads the
-    100 TB table twice because the sniff predicate cannot push to
-    parquet)."""
+    Scale shape: ONE pruned scan → ONE mapInPandas whose Python side
+    dispatches per row — both kernels live in the same worker process, so
+    routing costs a 1 KiB memchr, not a second scan of the payload column
+    (a two-filtered-branches plan reads the 100 TB table twice because the
+    sniff predicate cannot push to parquet)."""
 
     def setup():
         from rust_html2text_spark.engine.api import Config, html_to_text, plain_config
@@ -131,49 +116,40 @@ def extract_mixed_pages(
             # content-type headers lie, so they are never consulted
             if b"%PDF-" in payload[:1024]:
                 row["kind"] = "pdf"
-                row["text"] = extract_pdf_ex(payload, page_sep)["text"]
+                row["text"] = extract_pdf_ex(payload)["text"]
             else:
                 # the sniff applies to the HTML lane only — PDF bytes
                 # are binary and the magic check above already ran
                 if charset_sniff:
-                    payload = decode_html(payload, charset_fallback)[0]
+                    payload = decode_html(payload)[0]
                 row["text"] = html_to_text(payload, width, config)
             yield row
 
         return mixed_row
 
     return map_kernel(
-        df.select("url", F.col(payload_col).alias("html")),
+        df.select("url", "html"),
         setup,
         MIXED_SCHEMA,
-        num_partitions=num_partitions,
-        salt=salt,
-        repartition=repartition,
         defaults={"kind": "html"},
     )
 
 
 def extract_pdf_pages(
     df: DataFrame,
-    page_sep: str = "\f",
-    num_partitions: int | None = None,
-    salt: int = 0,
     outlier_bytes: int | None = 8 << 20,
-    repartition: str = "none",
 ) -> DataFrame:
     """Extract text from a PDF pages DataFrame (url, pdf, ...) →
     (url, text, error, pdf_bytes, text_bytes, n_pages, pdf_version).
-    Partitioning contract matches render_pages: no pre-kernel shuffle
-    by default (`repartition="salted"` opts into the url-hash shuffle
-    for cost-correlated file layouts), and an
-    oversized-outlier lane (default 8 MiB — PDFs run larger than HTML)
-    so one giant scan never stalls a task's worth of siblings."""
+    Partitioning contract matches render_pages: no pre-kernel shuffle,
+    and an oversized-outlier lane (default 8 MiB — PDFs run larger than
+    HTML) so one giant scan never stalls a task's worth of siblings."""
 
     def setup():
         from rust_html2text_spark.engine.pdftext import extract_pdf_ex
 
         def pdf_row(pdf, row):
-            r = extract_pdf_ex(pdf, page_sep)
+            r = extract_pdf_ex(pdf)
             row.update(
                 text=r["text"],
                 n_pages=r["n_pages"],
@@ -191,7 +167,4 @@ def extract_pdf_pages(
         PDF_SCHEMA,
         payload="pdf",
         outlier_bytes=outlier_bytes,
-        num_partitions=num_partitions,
-        salt=salt,
-        repartition=repartition,
     )

@@ -2,17 +2,16 @@
 
 The reference engine is a document-at-a-time scalar transform
 (`text = render(html, width, options)`, /root/reference/src/lib.rs:3430),
-so the Catalyst-visible plan is deliberately trivial — scan → (optional
-salted repartition) → mapInPandas → write — and every reference semantic
-lives inside the Arrow-batched Python function.
+so the Catalyst-visible plan is deliberately trivial — scan →
+mapInPandas → write — and every reference semantic lives inside the
+Arrow-batched Python function.
 
 Scale design (10^12 docs / 1000 executors):
-- **Partitioning**: the default is NO pre-kernel shuffle (scan-aligned
-  splits — r07, guide §2.4: the corpus' html bytes never cross the
-  network before the kernel); `repartition="salted"`
-  (`repartition(n, xxhash64(url, salt))`) remains available to
-  decorrelate giant hosts from partition boundaries when the input file
-  layout concentrates expensive pages.
+- **Partitioning**: NO pre-kernel shuffle (scan-aligned splits — r07,
+  guide §2.4: the corpus' html bytes never cross the network before the
+  kernel).  Partitioning is the caller's: an input whose file layout
+  concentrates expensive pages is spread with
+  `df.repartition(n, F.xxhash64("url"))` before the call.
 - **Outlier routing**: rows with `length(html) > outlier_bytes` are routed
   to a dedicated repartition sized so each oversized doc lands alone,
   keeping p99 task time bounded (one 1 GB page cannot stall a 128 MB-sized
@@ -20,9 +19,9 @@ Scale design (10^12 docs / 1000 executors):
 - **Robustness**: per-row try/except inside the batch — a parse failure or
   TooNarrow becomes an `error` column value, never a task failure
   (reference Error enum, lib.rs:384-400).
-The partitioning, outlier lane and error map live in
-operators/kernel.map_kernel, shared by every extraction operator; this
-module supplies the render kernel's `setup()`.
+The outlier lane and error map live in operators/kernel.map_kernel,
+shared by every extraction operator; this module supplies the render
+kernel's `setup()`.
 - **Metrics/lineage**: per-partition row/byte counts emitted as a second
   DataFrame for an append-only metrics table.
 """
@@ -108,27 +107,25 @@ def render_pages(
     df: DataFrame,
     width: int = 80,
     config_kwargs: dict | None = None,
-    num_partitions: int | None = None,
-    salt: int = 0,
     outlier_bytes: int | None = 1 << 20,
-    repartition: str = "none",
     render_kwargs: dict | None = None,
 ) -> DataFrame:
     """Render a pages DataFrame (url, html, ...) to (url, text, error, sizes).
 
     Only url+html are read — column pruning keeps the scan narrow.
 
-    repartition="none" (default) keeps the scan-aligned file splits — the
-    input never moves through a shuffle before the kernel (measured ~14%
-    faster at local scale, r07; at 100 TB it is the difference between
-    shuffling the corpus once and not).  Correct whenever the input's file
-    layout is not pathologically cost-correlated: a sink-written crawl
-    table is already distributed by an upstream shuffle, and the outlier
-    lane bounds the one real per-row cost hazard (giant documents)
-    regardless of layout.  repartition="salted" shuffles on
-    xxhash64(url, salt) first — the defensive choice for raw input whose
-    file layout concentrates expensive pages (e.g. per-host dump files),
-    at the cost of moving every html byte through one exchange.
+    The kernel runs on the scan-aligned file splits — the input never
+    moves through a shuffle before the kernel (measured ~14% faster at
+    local scale than a url-hash shuffle, r07; at 100 TB it is the
+    difference between shuffling the corpus once and not).  Correct
+    whenever the input's file layout is not pathologically
+    cost-correlated: a sink-written crawl table is already distributed by
+    an upstream shuffle, and the outlier lane bounds the one real per-row
+    cost hazard (giant documents) regardless of layout.  Raw input whose
+    file layout concentrates expensive pages (e.g. per-host dump files)
+    is the caller's to spread first with
+    `df.repartition(n, F.xxhash64("url"))`, at the cost of moving every
+    html byte through one exchange.
 
     Outlier-lane scan cost, explicitly: the length predicate cannot push
     to parquet, so the two filtered branches each read url+html — a
@@ -151,9 +148,6 @@ def render_pages(
         render_setup(width, config_kwargs or {}, **(render_kwargs or {})),
         RENDER_SCHEMA,
         outlier_bytes=outlier_bytes,
-        num_partitions=num_partitions,
-        salt=salt,
-        repartition=repartition,
     )
 
 
@@ -161,8 +155,6 @@ def render_pages_deduped(
     df: DataFrame,
     width: int = 80,
     config_kwargs: dict | None = None,
-    num_partitions: int | None = None,
-    salt: int = 0,
     dedup_ratio_threshold: float | None = 1.5,
 ) -> DataFrame:
     """Dedup-aware rendering: render each *distinct* document once, then
@@ -219,10 +211,6 @@ def render_pages_deduped(
             return map_kernel(
                 hashed, setup, schema, passthrough=("content_hash",)
             )
-    if num_partitions:
-        # same key as the groupBy below, so the aggregation reuses this
-        # exchange instead of adding a second one
-        hashed = hashed.repartition(num_partitions, "content_hash")
     grouped = hashed.groupBy("content_hash").agg(
         F.collect_list("url").alias("urls"),
         # all group members are byte-identical (md5 key): any member's

@@ -120,7 +120,6 @@ def extract_stream(
     width: int = 80,
     config_kwargs: dict | None = None,
     charset_sniff: bool = False,
-    charset_fallback: str = "utf-8",
 ) -> DataFrame:
     """Streaming main-content extraction: the batch extract_pages
     operator, single-lane (semantics cannot drift), including the opt-in
@@ -133,15 +132,14 @@ def extract_stream(
         config_kwargs,
         outlier_bytes=None,
         charset_sniff=charset_sniff,
-        charset_fallback=charset_fallback,
     )
 
 
-def pdf_extract_stream(pages: DataFrame, page_sep: str = "\f") -> DataFrame:
+def pdf_extract_stream(pages: DataFrame) -> DataFrame:
     """Streaming PDF extraction over a (url, pdf) stream."""
     from rust_html2text_spark.operators.pdf import extract_pdf_pages
 
-    return extract_pdf_pages(pages, page_sep, outlier_bytes=None)
+    return extract_pdf_pages(pages, outlier_bytes=None)
 
 
 def start_extraction_stream(
@@ -199,27 +197,20 @@ def curate_stream(
     from pyspark.sql import functions as F
 
     from rust_html2text_spark.functions.textstats import (
-        EN_STOPWORDS,
-        _stopword_hits,
+        normalized_text_col,
         pred_lang_col,
+        quality_col,
         tokens_col,
     )
 
     rendered = render_stream(pages, width).filter(F.col("error").isNull())
-    toks = tokens_col("text")
-    n_tokens = F.size(toks)
-    quality = (
-        F.length(F.regexp_replace("text", r"[^A-Za-z]", "")) / F.length("text")
-    ) * 0.5 + (_stopword_hits(EN_STOPWORDS) / n_tokens) * 0.5
     scored = rendered.select(
         "url",
         "text",
-        n_tokens.alias("n_tokens"),
-        F.round(quality, 6).alias("quality"),
-        pred_lang_col("text").alias("pred_lang"),
-        F.md5(
-            F.lower(F.regexp_replace(F.trim(F.col("text")), r"\s+", " "))
-        ).alias("fingerprint"),
+        F.size(tokens_col()).alias("n_tokens"),
+        F.round(quality_col(), 6).alias("quality"),
+        pred_lang_col().alias("pred_lang"),
+        F.md5(normalized_text_col()).alias("fingerprint"),
     ).filter(F.col("quality") >= min_quality)
     if langs is not None:
         scored = scored.filter(F.col("pred_lang").isin(list(langs)))

@@ -13,7 +13,7 @@ Usage:
       [--decorator plain|trivial|rich] [-L] [--colour] [--css]
       [--ignore-css-colour] [--only-css] [--agent-css CSS_OR_FILE]
       [--syntax] [--link-footnotes | --no-link-footnotes]
-      [--buckets 16] [--salt 0] [--explain] [--show-text URL]
+      [--buckets 16] [--explain] [--show-text URL]
       [--show-render URL] [--show-dom URL] [--show-css URL]
 """
 
@@ -116,7 +116,6 @@ def build_parser() -> argparse.ArgumentParser:
     ap.add_argument("--no-borders", action="store_true")
     ap.add_argument("--raw", action="store_true")
     ap.add_argument("--buckets", type=int, default=16)
-    ap.add_argument("--salt", type=int, default=0)
     ap.add_argument(
         "--charset-sniff",
         action="store_true",
@@ -405,7 +404,6 @@ def main() -> None:
                 part,
                 width=args.width,
                 config_kwargs=config_kwargs,
-                salt=args.salt,
                 charset_sniff=args.charset_sniff,
                 charset_col=(
                     "http_charset"
@@ -420,7 +418,7 @@ def main() -> None:
         bytes_col = "pdf_bytes"
 
         def operator(part):
-            return extract_pdf_pages(part, salt=args.salt)
+            return extract_pdf_pages(part)
 
     elif args.mode == "mixed":
         from rust_html2text_spark.operators.pdf import extract_mixed_pages
@@ -432,7 +430,6 @@ def main() -> None:
                 part,
                 width=args.width,
                 config_kwargs=config_kwargs,
-                salt=args.salt,
                 charset_sniff=args.charset_sniff,
             )
 
@@ -444,7 +441,6 @@ def main() -> None:
                 pages,
                 width=args.width,
                 config_kwargs=config_kwargs,
-                salt=args.salt,
                 render_kwargs=render_kwargs,
             ).explain("formatted")
         return

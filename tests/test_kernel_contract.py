@@ -1,8 +1,9 @@
 """Contract of the Arrow-batch kernel boundary, pinned through the public
 operators: the error row each operator emits for a NULL payload, a
 too-narrow width and a truncated PDF; the encoding lineage and raw byte
-counts of a charset-sniffed row; and the physical plan shape (MapInPandas,
-Exchange and Union node counts) of every operator."""
+counts of a charset-sniffed row; the physical plan shape (MapInPandas,
+Exchange and Union node counts) of every operator; and the exact keyword
+surface of the operator layer."""
 
 from __future__ import annotations
 
@@ -159,7 +160,7 @@ def test_truncated_pdf_rows(spark, pdf_bytes):
     assert ok["error"] is None and ok["pdf_bytes"] == len(pdf_bytes)
     assert ok["text_bytes"] == len(ok["text"].encode("utf-8")) > 0
 
-    mixed = _by_url(extract_mixed_pages(df, payload_col="pdf"))
+    mixed = _by_url(extract_mixed_pages(df.withColumnRenamed("pdf", "html")))
     mbad = mixed["https://h.example/bad.pdf"]
     assert mbad["kind"] == "pdf" and mbad["error"] == bad["error"]
     assert mbad["input_bytes"] == len(TRUNCATED_PDF) and mbad["text"] is None
@@ -260,28 +261,73 @@ def test_plan_shape(spark, name):
         assert _plan_nodes(build(df, outlier_bytes=None)) == single_scan
 
 
-def test_salted_repartition_adds_one_hash_exchange(spark):
-    """repartition="salted" is the escape hatch for cost-correlated input
-    layouts: the same rows as "none", plus one url-hash exchange in front
-    of the kernel."""
-    from rust_html2text_spark.operators.render import render_pages
+def test_render_metrics_sums_to_render_totals(spark):
+    """render_metrics' per-partition rows, errors and byte counts add up
+    to the totals of the render_pages output it summarizes."""
+    from rust_html2text_spark.operators.render import render_metrics, render_pages
 
     df = spark.createDataFrame(
-        [(f"https://h.example/{i}", PAGE + str(i).encode()) for i in range(8)]
+        [(f"https://h.example/{i}", PAGE + b"x" * i) for i in range(6)]
         + [("https://h.example/null", None)],
         "url string, html binary",
     )
-    none = render_pages(df)
-    salted = render_pages(df, repartition="salted", salt=7)
+    # two rows take the oversized lane, so the output spans both lanes'
+    # partitions
+    rendered = render_pages(df, outlier_bytes=len(PAGE) + 3)
+    rows = rendered.collect()
+    metrics = render_metrics(rendered).collect()
+    assert len(metrics) > 1
+    assert sum(m["rows"] for m in metrics) == len(rows) == 7
+    assert sum(m["errors"] for m in metrics) == 1
+    assert [r["error"] for r in rows if r["error"]] == ["NullInput"]
+    for col in ("html_bytes", "text_bytes"):
+        assert sum(m[col] for m in metrics) == sum(r[col] for r in rows) > 0
 
-    def hash_exchanges(d):
-        plan = d._jdf.queryExecution().executedPlan().toString()
-        return len(re.findall(r"Exchange hashpartitioning\(xxhash64\(url", plan))
 
-    # read the plans before running them: an executed adaptive plan prints
-    # its initial plan too, which doubles every count
-    assert hash_exchanges(salted) == hash_exchanges(none) + 1
-    assert _plan_nodes(salted) == _plan_nodes(none) + _shape(0, 1, 0)
-    assert sorted(salted.collect()) == sorted(none.collect())
-    with pytest.raises(ValueError, match="repartition"):
-        render_pages(df, repartition="range")
+# -- keyword surface -------------------------------------------------------
+
+# Every keyword a caller can set on the operator layer.  Partitioning is
+# the caller's (df.repartition before the call), so none appears here; a
+# new option needs an edit to this table in the same change.
+PARAMETERS = {
+    "operators.render.render_pages": (
+        "df", "width", "config_kwargs", "outlier_bytes", "render_kwargs"
+    ),
+    "operators.render.render_pages_deduped": (
+        "df", "width", "config_kwargs", "dedup_ratio_threshold"
+    ),
+    "operators.extract.extract_pages": (
+        "df", "width", "config_kwargs", "outlier_bytes", "charset_sniff",
+        "charset_col",
+    ),
+    "operators.extract.extract_links": (
+        "df", "config_kwargs", "charset_sniff", "outlier_bytes"
+    ),
+    "operators.extract.page_metadata_pages": ("df", "charset_sniff", "outlier_bytes"),
+    "operators.extract.extract_pages_full": (
+        "df", "width", "config_kwargs", "charset_sniff", "outlier_bytes"
+    ),
+    "operators.pdf.extract_pdf_pages": ("df", "outlier_bytes"),
+    "operators.pdf.extract_pdf_links": ("df",),
+    "operators.pdf.extract_mixed_pages": (
+        "df", "width", "config_kwargs", "charset_sniff"
+    ),
+    "streaming.pipeline.extract_stream": (
+        "pages", "width", "config_kwargs", "charset_sniff"
+    ),
+    "streaming.pipeline.pdf_extract_stream": ("pages",),
+    "operators.kernel.map_kernel": (
+        "pages", "setup", "schema", "payload", "outlier_bytes", "passthrough",
+        "defaults",
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(PARAMETERS))
+def test_operator_parameters(name):
+    import importlib
+    import inspect
+
+    module, func = name.rsplit(".", 1)
+    fn = getattr(importlib.import_module(f"rust_html2text_spark.{module}"), func)
+    assert tuple(inspect.signature(fn).parameters) == PARAMETERS[name]

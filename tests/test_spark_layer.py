@@ -694,12 +694,21 @@ def test_render_deduped_adaptive_paths_identical(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from rust_html2text_spark.operators.render import render_pages_deduped
-    from rust_html2text_spark.sources.corpus import load_pages
 
-    # materialize to parquet so the operator's own plan is measured (a
-    # bare .limit() would plan its own GlobalLimit exchange)
+    # 40 payloads distinct by construction, materialized to parquet so
+    # the operator's own plan is measured from a plain scan
     p = str(tmp_path / "pages")
-    load_pages(spark, SF_DIR).limit(40).write.parquet(p)
+    spark.createDataFrame(
+        [
+            (
+                f"https://h.example/{i}",
+                f"<html><body><h1>Page {i}</h1><p>{'word ' * (i + 1)}</p>"
+                f"<ul><li>item {i}</li></ul></body></html>".encode(),
+            )
+            for i in range(40)
+        ],
+        "url string, html binary",
+    ).write.parquet(p)
     pages = spark.read.parquet(p)
     dup = pages.unionByName(pages).unionByName(pages)  # every payload x3
 
