@@ -56,9 +56,7 @@ def minhash_signatures(
     Shingles are built with posexplode + window `lead` (fully whole-stage
     codegen; Spark higher-order-function lambdas are interpreted and ~2-3x
     slower).  Costs one shuffle of the token stream; map-side partial min
-    keeps the aggregation shuffle at one row per doc.  Where an extra
-    full-input shuffle is unacceptable, `minhash_signatures_hof` computes
-    the same signatures shuffle-free at higher CPU cost.
+    keeps the aggregation shuffle at one row per doc.
     """
     from pyspark.sql.window import Window
 
@@ -88,21 +86,6 @@ def minhash_signatures(
     # posexplode drops NULL-text docs; preserve them with NULL signatures
     # (matches a SQL oracle, which keeps the row with NULL columns)
     return docs.select("doc_id").join(sigs, "doc_id", "left")
-
-
-def minhash_signatures_hof(
-    docs: DataFrame, num_hashes: int = 8, shingle_size: int = 3
-) -> DataFrame:
-    """Shuffle-free MinHash variant (higher-order functions, interpreted):
-    same signatures as `minhash_signatures`."""
-    sh = docs.select(
-        "doc_id", F.explode(word_shingles(shingle_size)).alias("sh")
-    )
-    aggs = [
-        F.min(F.md5(F.concat(F.col("sh"), F.lit(f"#{i}")))).alias(f"mh{i}")
-        for i in range(num_hashes)
-    ]
-    return sh.groupBy("doc_id").agg(*aggs)
 
 
 def lsh_candidate_pairs(
@@ -290,7 +273,6 @@ def simhash_near_dups(
     docs: DataFrame,
     max_hamming: int = 8,
     max_bucket: int | None = None,
-    persist_signatures: bool = False,
 ) -> DataFrame:
     """Near-duplicate pairs by SimHash hamming distance, with *guaranteed*
     recall: the 64 bits split into max_hamming + 1 bands, so every pair
@@ -307,15 +289,6 @@ def simhash_near_dups(
     (the capped buckets are dominated by templated near-identical content
     that exact dedup should have removed first).
 
-    The self-join evaluates the simhash UDF once per side (2× total);
-    `persist_signatures=True` caches the signature frame so it runs once,
-    at the cost of writing/reading the cache.  Measured at 125k short
-    docs the two break even (the banded join dominates); the flag pays
-    off when documents are long enough that hashing outweighs the join.
-    With the flag set the result is eagerly materialized (localCheckpoint)
-    so the signature cache can be released before returning — no cache
-    entry leaks to the caller.
-
     Scale guard: when the banding yields bands narrower than 16 bits
     (max_hamming > 3 ⇒ < 65k buckets per band) and no `max_bucket` cap is
     set, a RuntimeWarning fires — at crawl scale such buckets hold ~n/2^w
@@ -330,8 +303,6 @@ def simhash_near_dups(
         "doc_id",
         F.coalesce(simhash_udf(F.col("text")), F.lit(0)).alias("simhash"),
     )
-    if persist_signatures:
-        s = s.persist()
     widths = simhash_band_widths(max_hamming)
     if min(widths) < 16 and max_bucket is None:
         warnings.warn(
@@ -389,13 +360,7 @@ def simhash_near_dups(
         )
         .distinct()
     )
-    result = cand.filter(F.col("hamming") <= max_hamming)
-    if persist_signatures:
-        # eager materialization lets us release the signature cache here
-        # instead of leaking the entry for the caller to hunt down
-        result = result.localCheckpoint()
-        s.unpersist()
-    return result
+    return cand.filter(F.col("hamming") <= max_hamming)
 
 
 # -- incremental cross-snapshot dedup (Bloom pre-filter + exact confirm) ------
@@ -561,33 +526,20 @@ def dup_components(
     remaining distance to the component minimum, so convergence is
     O(log diameter) rounds (the same doubling idea as the published
     large-star/small-star method).  From round 3 on the jump is applied
-    TWICE per round (r07): shallow graphs (the common near-dup case —
+    TWICE per round: shallow graphs (the common near-dup case —
     star-shaped clusters, diameter ≤ 4) converge inside two single-jump
     rounds and never pay the extra join, while deep graphs trade one
     extra small-table join per round for half the number of rounds —
     and round count (fixed job latency) is what dominates the wall
     clock of the loop on a deep graph.  Lineage is cut per round with
-    localCheckpoint so the plan does not grow with iterations.  The previous label rides along as a `_moved` flag, so
-    the per-round convergence check is a narrow filter-count over the
-    just-checkpointed partitions — no join, no shuffle (r07; it used to
-    re-join each round's labels against the previous round's).  The
-    driver holds only the convergence counter, never the labels.
+    localCheckpoint so the plan does not grow with iterations.  The
+    previous label rides along as an `_old` column, so the per-round
+    convergence check is a narrow filter-count over the
+    just-checkpointed partitions — no join, no shuffle.  The driver
+    holds only the convergence counter, never the labels.
 
     Pass a dict as `stats` to receive {"rounds": n, "converged": bool}
-    (the O(log diameter) convergence evidence).
-
-    Small-graph codegen bypass (r07 continuation): a driver thread dump
-    of the loop showed the busy executor thread inside Janino
-    whole-stage-codegen COMPILATION, not data work — every round plans
-    fresh generated classes, so on a small graph the loop is
-    compile-bound (guide §7.3 "driver/executor doing something
-    single-threaded").  When the edge table is small (< ~5M rows, where
-    interpreted execution costs less than one compile per round) the
-    loop runs with `spark.sql.codegen.wholeStage=false` and restores
-    the caller's setting after; large graphs keep codegen, where it
-    pays.  Measured paired: 4096-chain 5.3-6.6 s → 5.0-5.4 s, shallow
-    e2e graph 3.7-4.1 s → 3.1-3.7 s."""
-    spark = pairs.sparkSession
+    (the O(log diameter) convergence evidence)."""
     edges = (
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .unionByName(
@@ -609,55 +561,42 @@ def dup_components(
     )
     changed = 0
     rounds = 0
-    # small-graph codegen bypass: one compile per round costs more than
-    # interpreting a small graph's rows (see docstring).  The count is a
-    # cheap job over the just-checkpointed edge partitions.
-    n_edges = edges.count()
-    cg_bypass = n_edges < 5_000_000
-    cg_prev = spark.conf.get("spark.sql.codegen.wholeStage", "true")
-    if cg_bypass:
-        spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    try:
-        for _round in range(max_iterations):
-            rounds += 1
-            neighbor_min = (
-                edges.join(labels, edges.dst == labels.doc_id)
-                .groupBy("src")
-                .agg(F.min("label").alias("nlabel"))
+    for _round in range(max_iterations):
+        rounds += 1
+        neighbor_min = (
+            edges.join(labels, edges.dst == labels.doc_id)
+            .groupBy("src")
+            .agg(F.min("label").alias("nlabel"))
+        )
+        cur = labels.join(
+            neighbor_min, labels.doc_id == neighbor_min.src, "left"
+        ).select(
+            "doc_id",
+            F.col("label").alias("_old"),
+            F.least(
+                F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))
+            ).alias("label"),
+        )
+        for _jump in range(1 if rounds <= 2 else 2):
+            # pointer jumping: label := label's label (distance-halving)
+            parent = cur.select(
+                F.col("doc_id").alias("p_id"), F.col("label").alias("p_label")
             )
-            cur = labels.join(
-                neighbor_min, labels.doc_id == neighbor_min.src, "left"
-            ).select(
+            cur = cur.join(parent, cur.label == parent.p_id, "left").select(
                 "doc_id",
-                F.col("label").alias("_old"),
+                "_old",
                 F.least(
-                    F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))
+                    F.col("label"), F.coalesce(F.col("p_label"), F.col("label"))
                 ).alias("label"),
             )
-            for _jump in range(1 if rounds <= 2 else 2):
-                # pointer jumping: label := label's label (distance-halving)
-                parent = cur.select(
-                    F.col("doc_id").alias("p_id"), F.col("label").alias("p_label")
-                )
-                cur = cur.join(parent, cur.label == parent.p_id, "left").select(
-                    "doc_id",
-                    "_old",
-                    F.least(
-                        F.col("label"), F.coalesce(F.col("p_label"), F.col("label"))
-                    ).alias("label"),
-                )
-            # LAZY checkpoint (r07 second pass): the convergence count below
-            # is the materializing action, so checkpoint + count run as ONE
-            # job per round instead of two (measured −0.4s on the 4096-chain,
-            # paired; a 3-round shallow graph saves ~3 job round-trips too)
-            new_labels = cur.localCheckpoint(eager=False)
-            changed = new_labels.filter(F.col("label") != F.col("_old")).count()
-            labels = new_labels.select("doc_id", "label")
-            if changed == 0:
-                break
-    finally:
-        if cg_bypass:
-            spark.conf.set("spark.sql.codegen.wholeStage", cg_prev)
+        # LAZY checkpoint: the convergence count below is the
+        # materializing action, so checkpoint + count run as ONE job per
+        # round instead of two
+        new_labels = cur.localCheckpoint(eager=False)
+        changed = new_labels.filter(F.col("label") != F.col("_old")).count()
+        labels = new_labels.select("doc_id", "label")
+        if changed == 0:
+            break
     if changed > 0:
         warnings.warn(
             f"dup_components: label propagation still changing after "

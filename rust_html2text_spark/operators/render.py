@@ -155,7 +155,6 @@ def render_pages_deduped(
     df: DataFrame,
     width: int = 80,
     config_kwargs: dict | None = None,
-    dedup_ratio_threshold: float | None = 1.5,
 ) -> DataFrame:
     """Dedup-aware rendering: render each *distinct* document once, then
     join results back to every url.
@@ -176,22 +175,26 @@ def render_pages_deduped(
     page mirrored 10^6×) materializes its url list in one row; at that
     scale split the class with a secondary group key upstream.
 
-    Adaptive plan choice (r07 continuation, guide §8 — decide with
-    SMALL rows): the render kernel is deterministic per payload, so a
-    near-distinct corpus gets an IDENTICAL result from rendering every
-    row directly — without shuffling a single payload byte.  A cheap
-    decision pass (md5 + count/approx_count_distinct: only 16-byte
-    hashes move, partial aggregation map-side) measures the duplication
-    ratio; below `dedup_ratio_threshold` the payload exchange +
-    aggregation + explode cannot pay for the kernel work it saves and
-    the direct plan runs instead (the content hash rides through the
-    kernel as a passthrough column).  Threshold rationale: locally the
-    exchange+agg of N rows costs about as much kernel time as rendering
-    0.35·N extra docs; on a network-shuffle cluster the exchange is
-    relatively dearer, so 1.5 is conservative in the direction that
-    matters.  The decision pass costs one extra payload read (no
-    shuffle); `dedup_ratio_threshold=None` disables it and always
-    groups (the pre-continuation behaviour).
+    Adaptive plan choice (decide with SMALL rows): the render kernel is
+    deterministic per payload, so a near-distinct corpus gets an
+    IDENTICAL result from rendering every row directly — without
+    shuffling a single payload byte.  A decision pass (md5 +
+    count/approx_count_distinct: only 16-byte hashes move, partial
+    aggregation map-side) measures the duplication ratio; below 1.5 the
+    payload exchange + aggregation + explode cannot pay for the kernel
+    work it saves and the direct plan runs instead (the content hash
+    rides through the kernel as a passthrough column).  Threshold
+    rationale: locally the exchange+agg of N rows costs about as much
+    kernel time as rendering 0.35·N extra docs; on a network-shuffle
+    cluster the exchange is relatively dearer, so 1.5 is conservative in
+    the direction that matters.
+
+    Building the returned DataFrame runs the decision pass as Spark
+    jobs — two with adaptive execution on (the aggregation's map stage,
+    then the result) — before any action is called.  The pass reads the
+    payload column once more without a shuffle; for an input that is
+    not a plain scan it recomputes the input's whole lineage, so cache
+    or checkpoint such an input first if that lineage is expensive.
     """
     from pyspark.sql.types import ArrayType
 
@@ -199,18 +202,15 @@ def render_pages_deduped(
     hashed = df.select(
         "url", F.md5(F.col("html")).alias("content_hash"), "html"
     )
-    if dedup_ratio_threshold is not None:
-        stats = hashed.agg(
-            F.count("*").alias("n"),
-            F.approx_count_distinct("content_hash").alias("d"),
-        ).collect()[0]
-        if stats["n"] < dedup_ratio_threshold * max(stats["d"], 1):
-            schema = StructType(
-                RENDER_SCHEMA.fields + [StructField("content_hash", StringType())]
-            )
-            return map_kernel(
-                hashed, setup, schema, passthrough=("content_hash",)
-            )
+    stats = hashed.agg(
+        F.count("*").alias("n"),
+        F.approx_count_distinct("content_hash").alias("d"),
+    ).collect()[0]
+    if stats["n"] < 1.5 * max(stats["d"], 1):
+        schema = StructType(
+            RENDER_SCHEMA.fields + [StructField("content_hash", StringType())]
+        )
+        return map_kernel(hashed, setup, schema, passthrough=("content_hash",))
     grouped = hashed.groupBy("content_hash").agg(
         F.collect_list("url").alias("urls"),
         # all group members are byte-identical (md5 key): any member's

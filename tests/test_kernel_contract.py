@@ -81,11 +81,23 @@ def test_null_payload_rows(spark, pages):
     u = "https://h.example/null"
     r = _by_url(render_pages(pages))[u]
     assert r == dict(url=u, text=None, error="NullInput", html_bytes=0, text_bytes=0)
-    for threshold in (1.5, None):  # direct route, then the grouped route
-        d = render_pages_deduped(pages, dedup_ratio_threshold=threshold).collect()
-        (null_row,) = [x for x in d if x["content_hash"] is None]
-        assert null_row["error"] == "NullInput" and null_row["text"] is None
-        assert null_row["html_bytes"] == 0 and null_row["text_bytes"] == 0
+    distinct = pages.unionByName(
+        spark.createDataFrame(
+            [(f"https://h.example/{i}", PAGE + b"<p>%d</p>" % i) for i in range(3)],
+            "url string, html binary",
+        )
+    )
+    # direct route (4 rows, 3 distinct payloads), then the grouped route
+    # (every row twice)
+    for src, grouped in ((distinct, False), (pages.unionByName(pages), True)):
+        d = render_pages_deduped(src)
+        plan = d._jdf.queryExecution().executedPlan().toString()
+        assert ("Exchange" in plan) == grouped, plan
+        null_rows = [x for x in d.collect() if x["content_hash"] is None]
+        assert [x["url"] for x in null_rows] == [u] * (1 + grouped)
+        for null_row in null_rows:
+            assert null_row["error"] == "NullInput" and null_row["text"] is None
+            assert null_row["html_bytes"] == 0 and null_row["text_bytes"] == 0
 
     base = dict(url=u, text=None, error="NullInput", html_bytes=0, text_bytes=0,
                 winner_tag=None, score=None, n_candidates=0)
@@ -293,9 +305,7 @@ PARAMETERS = {
     "operators.render.render_pages": (
         "df", "width", "config_kwargs", "outlier_bytes", "render_kwargs"
     ),
-    "operators.render.render_pages_deduped": (
-        "df", "width", "config_kwargs", "dedup_ratio_threshold"
-    ),
+    "operators.render.render_pages_deduped": ("df", "width", "config_kwargs"),
     "operators.extract.extract_pages": (
         "df", "width", "config_kwargs", "outlier_bytes", "charset_sniff",
         "charset_col",

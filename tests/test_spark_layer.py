@@ -649,21 +649,51 @@ def test_pack_sequences_budget_property(spark):
         assert seqs == list(range(len(seqs)))
 
 
+# clique {1,2,3}, chain 10-11-12-13-14, pair {20,21}, plus a 30-node chain
+# to force several propagation rounds
+KNOWN_PAIRS = [(1, 2), (2, 3), (1, 3), (10, 11), (11, 12), (12, 13), (13, 14), (20, 21)]
+KNOWN_PAIRS += [(100 + i, 101 + i) for i in range(30)]
+
+
 def test_dup_components_known_graph(spark):
     """Chain, clique and isolated pair must resolve to min-id components;
-    a long chain exercises multi-round convergence."""
+    a long chain exercises multi-round convergence.  The round count pins
+    the jump schedule (one pointer jump in rounds 1-2, two after)."""
     from rust_html2text_spark.functions.dedup import dup_components
 
-    # clique {1,2,3}, chain 10-11-12-13-14, pair {20,21}
-    pairs = [(1, 2), (2, 3), (1, 3), (10, 11), (11, 12), (12, 13), (13, 14), (20, 21)]
-    # plus a 30-node chain to force several propagation rounds
-    pairs += [(100 + i, 101 + i) for i in range(30)]
-    df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
-    got = {r.doc_id: r.component_id for r in dup_components(df).collect()}
+    df = spark.createDataFrame(KNOWN_PAIRS, "doc_a long, doc_b long")
+    stats = {}
+    got = {r.doc_id: r.component_id for r in dup_components(df, stats=stats).collect()}
     assert {got[i] for i in (1, 2, 3)} == {1}
     assert {got[i] for i in (10, 11, 12, 13, 14)} == {10}
     assert {got[i] for i in (20, 21)} == {20}
     assert {got[100 + i] for i in range(31)} == {100}
+    assert stats == {"rounds": 5, "converged": True}
+
+
+def test_dup_components_writes_no_session_conf(spark, monkeypatch):
+    """dup_components leaves the session conf alone: no RuntimeConfig
+    set/unset call, and whole-stage codegen reads the same before and
+    after (a session-global flip leaks into concurrent queries)."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from rust_html2text_spark.functions.dedup import dup_components
+
+    calls = []
+    for name in ("set", "unset"):
+        orig = getattr(RuntimeConfig, name)
+
+        def record(self, *args, _name=name, _orig=orig):
+            calls.append((_name, args))
+            return _orig(self, *args)
+
+        monkeypatch.setattr(RuntimeConfig, name, record)
+    key = "spark.sql.codegen.wholeStage"
+    before = spark.conf.get(key)
+    df = spark.createDataFrame(KNOWN_PAIRS, "doc_a long, doc_b long")
+    assert dup_components(df).count() == 41
+    assert calls == []
+    assert spark.conf.get(key) == before
 
 
 def test_render_scan_pruned_to_url_html(spark, tmp_path):
@@ -687,13 +717,17 @@ def test_render_scan_pruned_to_url_html(spark, tmp_path):
 
 
 def test_render_deduped_adaptive_paths_identical(spark, tmp_path):
-    """r07: render_pages_deduped routes a near-distinct corpus to the
-    direct (no payload exchange) plan and a duplicated corpus to the
-    grouped plan; both must produce identical rows, and the direct plan
-    must really drop the exchange."""
-    from pyspark.sql import functions as F
+    """render_pages_deduped routes a near-distinct corpus to the direct
+    (no payload exchange) plan and a duplicated corpus to the grouped
+    plan; each route's rows must equal render_pages on the same input
+    plus md5(html) as content_hash."""
+    import hashlib
+    from collections import Counter
 
-    from rust_html2text_spark.operators.render import render_pages_deduped
+    from rust_html2text_spark.operators.render import (
+        render_pages,
+        render_pages_deduped,
+    )
 
     # 40 payloads distinct by construction, materialized to parquet so
     # the operator's own plan is measured from a plain scan
@@ -711,30 +745,23 @@ def test_render_deduped_adaptive_paths_identical(spark, tmp_path):
     ).write.parquet(p)
     pages = spark.read.parquet(p)
     dup = pages.unionByName(pages).unionByName(pages)  # every payload x3
+    md5 = {r.url: hashlib.md5(r.html).hexdigest() for r in pages.collect()}
 
-    for src in (pages, dup):
-        grouped = {
-            tuple(r)
-            for r in render_pages_deduped(
-                src, dedup_ratio_threshold=None
-            ).collect()
-        }
-        adaptive = {
-            tuple(r)
-            for r in render_pages_deduped(
-                src, dedup_ratio_threshold=1.5
-            ).collect()
-        }
-        assert adaptive == grouped and adaptive
+    def rows(dicts):
+        return Counter(tuple(sorted(d.items())) for d in dicts)
 
-    # distinct corpus: the adaptive choice takes the exchange-free plan
-    direct = render_pages_deduped(pages, dedup_ratio_threshold=1.5)
-    plan = direct._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, plan
-    # duplicated corpus: the grouped (single-exchange) plan is kept
-    kept = render_pages_deduped(dup, dedup_ratio_threshold=1.5)
-    plan = kept._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" in plan
+    # distinct corpus: exchange-free direct plan; duplicated corpus: the
+    # grouped (single-exchange) plan
+    for src, grouped in ((pages, False), (dup, True)):
+        deduped = render_pages_deduped(src)
+        plan = deduped._jdf.queryExecution().executedPlan().toString()
+        assert ("Exchange" in plan) == grouped, plan
+        expected = rows(
+            dict(r.asDict(), content_hash=md5[r.url])
+            for r in render_pages(src).collect()
+        )
+        assert rows(r.asDict() for r in deduped.collect()) == expected
+        assert sum(expected.values()) == src.count()
 
 
 def test_chunk_documents_reconstruction(spark):
@@ -967,37 +994,6 @@ def test_dup_components_warns_on_non_convergence(spark):
     assert {(r.doc_id, r.component_id) for r in full} == {
         (i, 0) for i in range(20)
     }
-
-
-def test_simhash_persist_releases_cache(spark):
-    """ADVICE(low): persist_signatures=True must not leak a cache entry the
-    caller cannot unpersist."""
-    from pyspark.sql import functions as F
-
-    from rust_html2text_spark.functions.dedup import simhash_near_dups
-
-    docs = (
-        spark.read.parquet(f"{SF_DIR}/documents.parquet")
-        .select("doc_id", "text")
-        .limit(80)
-    )
-    before = spark.sparkContext._jsc.getPersistentRDDs().size()
-    plain = {
-        (r.doc_a, r.doc_b)
-        for r in simhash_near_dups(docs, max_hamming=3).collect()
-    }
-    cached = {
-        (r.doc_a, r.doc_b)
-        for r in simhash_near_dups(
-            docs, max_hamming=3, persist_signatures=True
-        ).collect()
-    }
-    assert cached == plain
-    after = spark.sparkContext._jsc.getPersistentRDDs().size()
-    # the one allowed survivor is the localCheckpoint of the RESULT (it
-    # lives exactly as long as the returned frame and is cleaned with it);
-    # the signature persist() itself must be gone
-    assert after <= before + 1, "persist_signatures leaked a cache entry"
 
 
 def test_simhash_scale_default_guard(spark):
