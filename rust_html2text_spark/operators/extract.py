@@ -1,7 +1,7 @@
 """The main-content extraction operator, Spark-first.
 
-Same plan shape as operators/render.py (scan → mapInPandas, with the
-oversized-outlier lane, all built by operators/kernel.map_kernel), same
+Same plan shape as operators/render.py (scan → mapInPandas, built by
+operators/kernel.map_kernel, the oversized-outlier lane opt-in), same
 robustness contract (a hostile page becomes an error row, never a task
 failure) — the kernel is engine/extract.extract_main_ex
 (boilerplate strip + DOM-heuristic candidate scoring) instead of the
@@ -78,14 +78,15 @@ def extract_links(
     df: DataFrame,
     config_kwargs: dict | None = None,
     charset_sniff: bool = False,
-    outlier_bytes: int | None = 1 << 20,
+    outlier_bytes: int | None = None,
 ) -> DataFrame:
     """Crawl-graph edges of the MAIN content: (url, ordinal, href, anchor)
     — chrome/nav/footer links are dropped by the same strip+score pass as
     extract_pages, so the edge list is content-to-content (what a link-
     graph quality signal like a PageRank-ish prior wants; boilerplate
-    edges are exactly the noise).  Variable rows per input page; the
-    oversized-outlier lane matches the rest of the tier."""
+    edges are exactly the noise).  Variable rows per input page;
+    `outlier_bytes` opts in to the oversized-outlier lane, as on the rest
+    of the tier (off by default; see render_pages)."""
 
     def setup():
         from rust_html2text_spark.engine.api import Config, plain_config
@@ -118,12 +119,14 @@ def extract_links(
 def page_metadata_pages(
     df: DataFrame,
     charset_sniff: bool = False,
-    outlier_bytes: int | None = 1 << 20,
+    outlier_bytes: int | None = None,
 ) -> DataFrame:
     """Head-metadata extraction: (url, title, description, lang_attr,
     canonical, og_title, error).  The canonical url is the dedup key a
     crawl pipeline trusts over the fetched url; lang_attr is the page's
-    language *claim* to audit lang_id's measurement against."""
+    language *claim* to audit lang_id's measurement against.
+    `outlier_bytes` opts in to the oversized-outlier lane (off by
+    default; see render_pages)."""
 
     def setup():
         from rust_html2text_spark.engine.charset import decode_html
@@ -179,15 +182,16 @@ def extract_pages_full(
     width: int = 80,
     config_kwargs: dict | None = None,
     charset_sniff: bool = False,
-    outlier_bytes: int | None = 1 << 20,
+    outlier_bytes: int | None = None,
 ) -> DataFrame:
     """One-parse fusion of extract_pages + extract_links + page_metadata:
     (url, text, error, sizes, scoring lineage, links_json, head
     metadata).  A curation pipeline that consumes all three must not
     parse every page three times — at crawl scale the parse is ~25% of
     the kernel, so the fusion saves ~½ of a full extra pass.  Plan shape
-    matches the tier: pruned scan → one mapInPandas with the
-    oversized-outlier lane.  charset_sniff=True adds the WHATWG
+    matches the tier: pruned scan → one mapInPandas, with the
+    oversized-outlier lane only when `outlier_bytes` is set.
+    charset_sniff=True adds the WHATWG
     sniff + (encoding, encoding_source) lineage, same contract as
     extract_pages."""
 
@@ -250,16 +254,17 @@ def extract_pages(
     df: DataFrame,
     width: int = 80,
     config_kwargs: dict | None = None,
-    outlier_bytes: int | None = 1 << 20,
+    outlier_bytes: int | None = None,
     charset_sniff: bool = False,
     charset_col: str | None = None,
 ) -> DataFrame:
     """Extract main content from a pages DataFrame (url, html, ...) →
     (url, text, error, sizes, winner_tag, score, n_candidates).  Same
     partitioning contract as operators/render.render_pages: no pre-kernel
-    shuffle, and an oversized-outlier lane so one giant page never stalls
-    a task's worth of siblings (the lane's second-scan cost and when to
-    disable it are quantified in render_pages' docstring).
+    shuffle and one payload scan.  `outlier_bytes` opts in to the
+    oversized-outlier lane; its measured cost, and the caller-side
+    repartition that spreads giant pages instead, are in render_pages'
+    docstring.
 
     charset_sniff=True runs the WHATWG encoding sniff (BOM → transport
     label → meta prescan → utf-8) in front of the parse and

@@ -4,8 +4,9 @@ Every Python extraction operator is `map_kernel` around a `setup()`
 closure.  The adapter owns what each operator used to repeat by hand:
 the worker bootstrap, payload coercion, the NULL-payload row, the
 exception → error-string map, column assembly, passthrough columns, and
-the plan tail (the optional oversized-outlier lane).  Partitioning is the
-caller's: the kernel runs on the input's own partitions.
+the plan tail.  That tail is scan → mapInPandas unless a caller opts in to
+the oversized-outlier lane.  Partitioning is the caller's: the kernel runs
+on the input's own partitions.
 
 The operator supplies only `setup()`.  It runs on the worker after the
 bootstrap, imports its engine entry point there, and returns
@@ -50,9 +51,16 @@ def map_kernel(
     `*_bytes` column other than `text_bytes` gets the raw payload size;
     `text_bytes` is the UTF-8 size of `text`.
 
-    With `outlier_bytes` set, payloads longer than that are routed to a
-    second lane that shuffles them apart on xxhash64(url) so each lands in
-    its own task, and the two lanes are unioned."""
+    With `outlier_bytes` set (opt-in; every operator defaults to None),
+    payloads longer than that are routed to a second lane that shuffles
+    them apart on xxhash64(url), and the two lanes are unioned.  The
+    length predicate cannot push to parquet, so the lane reads the
+    payload column twice, recomputes a non-scan input's lineage in both
+    branches, and runs an extra shuffle stage whose
+    spark.sql.shuffle.partitions tasks start even when no row is that
+    long.  A caller whose file layout concentrates expensive rows gets
+    the same spread from `df.repartition(n, F.xxhash64("url"))` before
+    the call (operators/render.render_pages has the measurements)."""
     template = {
         f.name: 0 if isinstance(f.dataType, LongType) else None
         for f in schema.fields

@@ -40,9 +40,9 @@ def stream_pages(
 
 
 def render_stream(pages: DataFrame, width: int = 80, config_kwargs: dict | None = None) -> DataFrame:
-    """Streaming render: the batch operator's kernel stage, single-lane
-    (outlier_bytes=None)."""
-    return render_pages(pages, width, config_kwargs, outlier_bytes=None)
+    """Streaming render: the batch render_pages operator at its defaults
+    (scan-aligned, single scan)."""
+    return render_pages(pages, width, config_kwargs)
 
 
 def crawl_rate_metrics(
@@ -122,24 +122,18 @@ def extract_stream(
     charset_sniff: bool = False,
 ) -> DataFrame:
     """Streaming main-content extraction: the batch extract_pages
-    operator, single-lane (semantics cannot drift), including the opt-in
+    operator at its defaults (semantics cannot drift), including the opt-in
     WHATWG charset sniff + encoding lineage."""
     from rust_html2text_spark.operators.extract import extract_pages
 
-    return extract_pages(
-        pages,
-        width,
-        config_kwargs,
-        outlier_bytes=None,
-        charset_sniff=charset_sniff,
-    )
+    return extract_pages(pages, width, config_kwargs, charset_sniff=charset_sniff)
 
 
 def pdf_extract_stream(pages: DataFrame) -> DataFrame:
     """Streaming PDF extraction over a (url, pdf) stream."""
     from rust_html2text_spark.operators.pdf import extract_pdf_pages
 
-    return extract_pdf_pages(pages, outlier_bytes=None)
+    return extract_pdf_pages(pages)
 
 
 def start_extraction_stream(

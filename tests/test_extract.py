@@ -231,6 +231,7 @@ def test_extract_scan_pruned_to_url_html(spark, tmp_path):
     ).write.parquet(p)
     df = extract_pages(spark.read.parquet(p), width=80)
     plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Scan parquet") == 1, plan  # one payload scan
     scans = [l for l in plan.splitlines() if "ReadSchema" in l]
     assert scans, "no parquet scan in plan"
     for line in scans:

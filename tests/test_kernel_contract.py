@@ -229,17 +229,18 @@ def _operators(spark):
     )
     pdfs = html.withColumnRenamed("html", "pdf")
     return {
-        # name: (build, input, shape at defaults, shape at outlier_bytes=None)
-        "render_pages": (render.render_pages, html, _shape(2, 1, 1), _shape(1, 0, 0)),
-        "extract_pages": (extract.extract_pages, html, _shape(2, 1, 1), _shape(1, 0, 0)),
-        "extract_links": (extract.extract_links, html, _shape(2, 1, 1), _shape(1, 0, 0)),
+        # name: (build, input, shape at defaults, shape with the lane on,
+        # i.e. outlier_bytes=len(PAGE) so every row takes the lane)
+        "render_pages": (render.render_pages, html, _shape(1, 0, 0), _shape(2, 1, 1)),
+        "extract_pages": (extract.extract_pages, html, _shape(1, 0, 0), _shape(2, 1, 1)),
+        "extract_links": (extract.extract_links, html, _shape(1, 0, 0), _shape(2, 1, 1)),
         "page_metadata_pages": (
-            extract.page_metadata_pages, html, _shape(2, 1, 1), _shape(1, 0, 0)
+            extract.page_metadata_pages, html, _shape(1, 0, 0), _shape(2, 1, 1)
         ),
         "extract_pages_full": (
-            extract.extract_pages_full, html, _shape(2, 1, 1), _shape(1, 0, 0)
+            extract.extract_pages_full, html, _shape(1, 0, 0), _shape(2, 1, 1)
         ),
-        "extract_pdf_pages": (pdf.extract_pdf_pages, pdfs, _shape(2, 1, 1), _shape(1, 0, 0)),
+        "extract_pdf_pages": (pdf.extract_pdf_pages, pdfs, _shape(1, 0, 0), _shape(2, 1, 1)),
         "extract_pdf_links": (pdf.extract_pdf_links, pdfs, _shape(1, 0, 0), None),
         "extract_mixed_pages": (pdf.extract_mixed_pages, html, _shape(1, 0, 0), None),
         "render_pages_deduped/direct": (
@@ -267,10 +268,10 @@ def _operators(spark):
     ],
 )
 def test_plan_shape(spark, name):
-    build, df, default, single_scan = _operators(spark)[name]
+    build, df, default, laned = _operators(spark)[name]
     assert _plan_nodes(build(df)) == default
-    if single_scan is not None:
-        assert _plan_nodes(build(df, outlier_bytes=None)) == single_scan
+    if laned is not None:
+        assert _plan_nodes(build(df, outlier_bytes=len(PAGE))) == laned
 
 
 def test_render_metrics_sums_to_render_totals(spark):

@@ -679,6 +679,7 @@ def test_pdf_scan_pruned_to_url_pdf(spark, tmp_path):
     ).write.parquet(p)
     df = extract_pdf_pages(spark.read.parquet(p))
     plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Scan parquet") == 1, plan  # one payload scan
     scans = [l for l in plan.splitlines() if "ReadSchema" in l]
     assert scans, "no parquet scan in plan"
     for line in scans:

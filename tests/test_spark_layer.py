@@ -64,15 +64,21 @@ def test_corpus_deterministic(spark):
 
 
 def test_outlier_routing_same_results(spark):
+    from pyspark.sql import functions as F
+
     from rust_html2text_spark.operators.render import render_pages
     from rust_html2text_spark.sources.corpus import load_pages
 
     pages = load_pages(spark, SF_DIR, oversize_every=50)
     with_routing = render_pages(pages, width=80, outlier_bytes=10_000)
     without = render_pages(pages, width=80, outlier_bytes=None)
+    # the caller-side recipe that replaces the lane: spread by url hash,
+    # then render at defaults
+    spread = render_pages(pages.repartition(4, F.xxhash64("url")), width=80)
     a = sorted((r.url, r.text) for r in with_routing.collect())
     b = sorted((r.url, r.text) for r in without.collect())
-    assert a == b
+    c = sorted((r.url, r.text) for r in spread.collect())
+    assert a == b == c
 
 
 def test_resumable_sink(spark, tmp_path):
@@ -707,6 +713,7 @@ def test_render_scan_pruned_to_url_html(spark, tmp_path):
     load_pages(spark, SF_DIR).limit(50).write.parquet(p)
     df = render_pages(spark.read.parquet(p), width=80)
     plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Scan parquet") == 1, plan  # one payload scan
     scans = [l for l in plan.splitlines() if "ReadSchema" in l]
     assert scans, "no parquet scan in plan"
     for line in scans:
