@@ -121,7 +121,7 @@ def chunk_documents(
     short) chunk starts at the last stride boundary that still contains
     unseen tokens.
 
-    Two lanes, one result (mirrors render's oversized-outlier routing):
+    Two lanes, one result:
     - docs ≤ `outlier_tokens` tokens: narrow whole-stage-codegen
       expressions (split + sequence explode + slice) — no shuffle, no
       UDF.  The explode duplicates the full token array into every chunk

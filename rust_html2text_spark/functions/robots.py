@@ -508,18 +508,26 @@ def allocate_crawl_budget(
         F.greatest(F.col(quality_col).cast("double"), F.lit(0.0)).alias("_q"),
     ).filter(F.col("_q") > 0)
     tot = q.agg(F.sum("_q").alias("_tq"))
-    share = (
-        q.crossJoin(F.broadcast(tot))
-        .withColumn("_share", F.lit(float(total_budget)) * F.col("_q") / F.col("_tq"))
+    share = q.crossJoin(F.broadcast(tot)).select(
+        "host",
+        (F.lit(float(total_budget)) * F.col("_q") / F.col("_tq")).alias("_share"),
+    )
+    base_sum = share.agg(F.sum(F.floor("_share")).alias("_bs"))
+    # distributed global rank by (_rem desc, host asc): range partition,
+    # rank locally, offset by the cumulative counts of earlier partitions.
+    # Only (host, _share) cross the exchange and every derived column is
+    # computed after it, so the rank and the counts read the same
+    # exchange output: the planner reuses one range partitioning instead
+    # of sampling boundaries twice (two samples can disagree, and then
+    # _lrank + _off is no global rank).
+    ranked_src = (
+        share.repartitionByRange(
+            (F.col("_share") - F.floor("_share")).desc(), F.col("host").asc()
+        )
+        .withColumn("_pid", F.spark_partition_id())
         .withColumn("_base", F.floor("_share"))
         .withColumn("_rem", F.col("_share") - F.col("_base"))
     )
-    base_sum = share.agg(F.sum("_base").alias("_bs"))
-    # distributed global rank by (_rem desc, host asc): range partition,
-    # rank locally, offset by the cumulative counts of earlier partitions
-    ranked_src = share.repartitionByRange(
-        F.col("_rem").desc(), F.col("host").asc()
-    ).withColumn("_pid", F.spark_partition_id())
     w_local = Window.partitionBy("_pid").orderBy(
         F.col("_rem").desc(), F.col("host").asc()
     )

@@ -1,9 +1,9 @@
 """The main-content extraction operator, Spark-first.
 
 Same plan shape as operators/render.py (scan → mapInPandas, built by
-operators/kernel.map_kernel, the oversized-outlier lane opt-in), same
-robustness contract (a hostile page becomes an error row, never a task
-failure) — the kernel is engine/extract.extract_main_ex
+operators/kernel.map_kernel), same robustness contract (a hostile page
+becomes an error row, never a task failure) — the kernel is
+engine/extract.extract_main_ex
 (boilerplate strip + DOM-heuristic candidate scoring) instead of the
 whole-document render.  The winner tag and score ride along as lineage
 for crawl-QA dashboards.
@@ -78,15 +78,23 @@ def extract_links(
     df: DataFrame,
     config_kwargs: dict | None = None,
     charset_sniff: bool = False,
-    outlier_bytes: int | None = None,
+    outlier_bytes: None = None,
 ) -> DataFrame:
     """Crawl-graph edges of the MAIN content: (url, ordinal, href, anchor)
     — chrome/nav/footer links are dropped by the same strip+score pass as
     extract_pages, so the edge list is content-to-content (what a link-
     graph quality signal like a PageRank-ish prior wants; boilerplate
-    edges are exactly the noise).  Variable rows per input page;
-    `outlier_bytes` opts in to the oversized-outlier lane, as on the rest
-    of the tier (off by default; see render_pages)."""
+    edges are exactly the noise).  Variable rows per input page.
+
+    `outlier_bytes` exists only for a fixed caller that passes
+    `outlier_bytes=None`; any other value raises.  A caller whose layout
+    clusters giant pages spreads them with
+    `df.repartition(n, F.xxhash64("url"))` (see render_pages)."""
+    if outlier_bytes is not None:
+        raise ValueError(
+            "extract_links has no outlier lane; spread giant pages with "
+            'df.repartition(n, F.xxhash64("url")) before the call'
+        )
 
     def setup():
         from rust_html2text_spark.engine.api import Config, plain_config
@@ -112,21 +120,17 @@ def extract_links(
         df.select("url", "html"),
         setup,
         LINKS_SCHEMA,
-        outlier_bytes=outlier_bytes,
     )
 
 
 def page_metadata_pages(
     df: DataFrame,
     charset_sniff: bool = False,
-    outlier_bytes: int | None = None,
 ) -> DataFrame:
     """Head-metadata extraction: (url, title, description, lang_attr,
     canonical, og_title, error).  The canonical url is the dedup key a
     crawl pipeline trusts over the fetched url; lang_attr is the page's
-    language *claim* to audit lang_id's measurement against.
-    `outlier_bytes` opts in to the oversized-outlier lane (off by
-    default; see render_pages)."""
+    language *claim* to audit lang_id's measurement against."""
 
     def setup():
         from rust_html2text_spark.engine.charset import decode_html
@@ -144,7 +148,6 @@ def page_metadata_pages(
         df.select("url", "html"),
         setup,
         META_SCHEMA,
-        outlier_bytes=outlier_bytes,
     )
 
 
@@ -182,15 +185,13 @@ def extract_pages_full(
     width: int = 80,
     config_kwargs: dict | None = None,
     charset_sniff: bool = False,
-    outlier_bytes: int | None = None,
 ) -> DataFrame:
     """One-parse fusion of extract_pages + extract_links + page_metadata:
     (url, text, error, sizes, scoring lineage, links_json, head
     metadata).  A curation pipeline that consumes all three must not
     parse every page three times — at crawl scale the parse is ~25% of
     the kernel, so the fusion saves ~½ of a full extra pass.  Plan shape
-    matches the tier: pruned scan → one mapInPandas, with the
-    oversized-outlier lane only when `outlier_bytes` is set.
+    matches the tier: pruned scan → one mapInPandas.
     charset_sniff=True adds the WHATWG
     sniff + (encoding, encoding_source) lineage, same contract as
     extract_pages."""
@@ -246,7 +247,6 @@ def extract_pages_full(
         df.select("url", "html"),
         setup,
         FULL_SNIFF_SCHEMA if charset_sniff else FULL_SCHEMA,
-        outlier_bytes=outlier_bytes,
     )
 
 
@@ -254,16 +254,14 @@ def extract_pages(
     df: DataFrame,
     width: int = 80,
     config_kwargs: dict | None = None,
-    outlier_bytes: int | None = None,
     charset_sniff: bool = False,
     charset_col: str | None = None,
 ) -> DataFrame:
     """Extract main content from a pages DataFrame (url, html, ...) →
     (url, text, error, sizes, winner_tag, score, n_candidates).  Same
     partitioning contract as operators/render.render_pages: no pre-kernel
-    shuffle and one payload scan.  `outlier_bytes` opts in to the
-    oversized-outlier lane; its measured cost, and the caller-side
-    repartition that spreads giant pages instead, are in render_pages'
+    shuffle and one payload scan.  The caller-side repartition that
+    spreads giant pages, and its measured gain, are in render_pages'
     docstring.
 
     charset_sniff=True runs the WHATWG encoding sniff (BOM → transport
@@ -312,5 +310,4 @@ def extract_pages(
         df.select(*cols),
         setup,
         EXTRACT_SNIFF_SCHEMA if charset_sniff else EXTRACT_SCHEMA,
-        outlier_bytes=outlier_bytes,
     )

@@ -4,9 +4,8 @@ Every Python extraction operator is `map_kernel` around a `setup()`
 closure.  The adapter owns what each operator used to repeat by hand:
 the worker bootstrap, payload coercion, the NULL-payload row, the
 exception → error-string map, column assembly, passthrough columns, and
-the plan tail.  That tail is scan → mapInPandas unless a caller opts in to
-the oversized-outlier lane.  Partitioning is the caller's: the kernel runs
-on the input's own partitions.
+the plan tail, which is always scan → mapInPandas.  Partitioning is the
+caller's: the kernel runs on the input's own partitions.
 
 The operator supplies only `setup()`.  It runs on the worker after the
 bootstrap, imports its engine entry point there, and returns
@@ -25,7 +24,7 @@ rust_html2text_spark before the bootstrap has made it importable.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StructType
 
 
@@ -35,7 +34,6 @@ def map_kernel(
     schema: StructType,
     *,
     payload: str = "html",
-    outlier_bytes: int | None = None,
     passthrough: tuple = (),
     defaults: dict | None = None,
 ) -> DataFrame:
@@ -51,16 +49,10 @@ def map_kernel(
     `*_bytes` column other than `text_bytes` gets the raw payload size;
     `text_bytes` is the UTF-8 size of `text`.
 
-    With `outlier_bytes` set (opt-in; every operator defaults to None),
-    payloads longer than that are routed to a second lane that shuffles
-    them apart on xxhash64(url), and the two lanes are unioned.  The
-    length predicate cannot push to parquet, so the lane reads the
-    payload column twice, recomputes a non-scan input's lineage in both
-    branches, and runs an extra shuffle stage whose
-    spark.sql.shuffle.partitions tasks start even when no row is that
-    long.  A caller whose file layout concentrates expensive rows gets
-    the same spread from `df.repartition(n, F.xxhash64("url"))` before
-    the call (operators/render.render_pages has the measurements)."""
+    The kernel runs on `pages`' own partitions.  A caller whose file
+    layout concentrates expensive rows spreads them first with
+    `df.repartition(n, F.xxhash64("url"))` (operators/render.render_pages
+    has the measurements)."""
     template = {
         f.name: 0 if isinstance(f.dataType, LongType) else None
         for f in schema.fields
@@ -136,20 +128,4 @@ def map_kernel(
                 out[c] = batch[c]
             yield pd.DataFrame({c: out[c] for c in fields})
 
-    if outlier_bytes is not None:
-        # coalesce: a NULL payload must land in the normal lane (→ its
-        # NullInput row), not silently vanish from both filter branches
-        pages = pages.withColumn(
-            "_oversized", F.coalesce(F.length(payload) > outlier_bytes, F.lit(False))
-        )
-        normal = pages.filter(~F.col("_oversized")).drop("_oversized")
-        oversized = pages.filter(F.col("_oversized")).drop("_oversized")
-    else:
-        normal, oversized = pages, None
-    out = normal.mapInPandas(kernel_batches, schema)
-    if oversized is not None:
-        # one oversized doc per task: bound worst-case task memory/time
-        n = int(pages.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        oversized = oversized.repartition(n, F.xxhash64("url"))
-        out = out.unionByName(oversized.mapInPandas(kernel_batches, schema))
-    return out
+    return pages.mapInPandas(kernel_batches, schema)

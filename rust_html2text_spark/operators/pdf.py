@@ -2,8 +2,7 @@
 
 Third member of the extraction-tier operator family (render_pages,
 extract_pages): same plan shape — pruned scan → Arrow-batched
-mapInPandas, built by operators/kernel.map_kernel, the oversized-outlier
-lane opt-in — and the same robustness
+mapInPandas, built by operators/kernel.map_kernel — and the same robustness
 contract (a hostile or truncated PDF becomes an error row, never a task
 failure).  The kernel is engine/pdftext.extract_pdf_ex (document
 structure + content-stream interpretation + layout assembly); page count
@@ -135,18 +134,12 @@ def extract_mixed_pages(
     )
 
 
-def extract_pdf_pages(
-    df: DataFrame,
-    outlier_bytes: int | None = None,
-) -> DataFrame:
+def extract_pdf_pages(df: DataFrame) -> DataFrame:
     """Extract text from a PDF pages DataFrame (url, pdf, ...) →
     (url, text, error, pdf_bytes, text_bytes, n_pages, pdf_version).
     Partitioning contract matches render_pages: no pre-kernel shuffle
-    and one payload scan.  `outlier_bytes` opts in to the
-    oversized-outlier lane (off by default; PDFs run larger than HTML, so
-    a caller that opts in sets a higher cut than for HTML, e.g. 8 MiB);
-    the PDF kernel's own decode and interpreter budgets bound a giant
-    document's cost."""
+    and one payload scan.  The PDF kernel's own decode and interpreter
+    budgets bound a giant document's cost."""
 
     def setup():
         from rust_html2text_spark.engine.pdftext import extract_pdf_ex
@@ -169,5 +162,4 @@ def extract_pdf_pages(
         setup,
         PDF_SCHEMA,
         payload="pdf",
-        outlier_bytes=outlier_bytes,
     )

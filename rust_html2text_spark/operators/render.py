@@ -11,22 +11,17 @@ Scale design (10^12 docs / 1000 executors):
   guide §2.4: the corpus' html bytes never cross the network before the
   kernel).  Partitioning is the caller's: an input whose file layout
   concentrates expensive pages is spread with
-  `df.repartition(n, F.xxhash64("url"))` before the call.
-- **Outlier routing** (opt-in): with `outlier_bytes` set, rows with
-  `length(html) > outlier_bytes` are shuffled apart on xxhash64(url) in
-  a lane of their own.  Off by default: the lane reads the payload twice
-  and adds a shuffle stage even when no row is oversized.  A caller
-  whose layout clusters giant pages spreads them with the url-hash
-  repartition above; `render_pages` has the measurements.
+  `df.repartition(n, F.xxhash64("url"))` before the call; `render_pages`
+  has the measurements.
 - **Robustness**: per-row try/except inside the batch — a parse failure or
   TooNarrow becomes an `error` column value, never a task failure
   (reference Error enum, lib.rs:384-400).
 - **Metrics/lineage**: per-partition row/byte counts emitted as a second
   DataFrame for an append-only metrics table.
 
-The lane and the error map live in operators/kernel.map_kernel, shared
-by every extraction operator; this module supplies the render kernel's
-`setup()`.
+The plan tail and the error map live in operators/kernel.map_kernel,
+shared by every extraction operator; this module supplies the render
+kernel's `setup()`.
 """
 
 from __future__ import annotations
@@ -110,7 +105,6 @@ def render_pages(
     df: DataFrame,
     width: int = 80,
     config_kwargs: dict | None = None,
-    outlier_bytes: int | None = None,
     render_kwargs: dict | None = None,
 ) -> DataFrame:
     """Render a pages DataFrame (url, html, ...) to (url, text, error, sizes).
@@ -128,33 +122,24 @@ def render_pages(
     first with `df.repartition(n, F.xxhash64("url"))`, at the cost of
     moving every html byte through one exchange.
 
-    Oversized-outlier lane (`outlier_bytes`, opt-in): rows longer than
-    the cut are shuffled apart on xxhash64(url) into a lane of their own.
-    The length predicate cannot push to parquet, so the two filtered
-    branches each read url+html — a second pass over the payload column,
-    and a recomputed lineage for a non-scan input — and the lane's
-    shuffle stage runs spark.sql.shuffle.partitions tasks even when no
-    row reaches the cut.  On perfbench `render_flat` (5,000 pages, largest
-    51 KB; 4 cores, local[4], 10 alternating pairs) turning the lane off
-    by default raised the median docs_per_s from 2,234 to 2,717 (+22%,
-    higher in 10 of 10 pairs) and cut set-up from 14.4 to 12.5 s.
-    What the lane buys, from scripts/outlier_lane_ab.py: 16 giant pages
-    of 2-3.9 MiB in one parquet file (one row group) among 5,000 normal
-    pages in 8 files, 4 cores, local[4], median of 3 rotated reps, each
-    plan ending in the same one-row checksum:
+    On perfbench `render_flat` (5,000 pages, largest 51 KB; 4 cores,
+    local[4], 10 alternating pairs) this one-scan plan runs at a median
+    2,717 docs/s with 12.5 s of set-up.  On a layout that clusters giant
+    pages, from scripts/giant_layout_ab.py: 16 pages of 2-3.9 MiB in one
+    parquet file (one row group) among 5,000 normal pages in 8 files,
+    4 cores, local[4], median of 3 rotated reps, both plans ending in the
+    same one-row checksum:
 
-    | plan                                        | wall s | stage.task_s_max s | stages |
-    |---------------------------------------------|--------|--------------------|--------|
-    | lane on (`outlier_bytes=1 << 20`)           | 17.1   | 15.9               | 3      |
-    | lane off (default)                          | 30.9   | 30.8               | 2      |
-    | lane off, `repartition(4, xxhash64("url"))` | 16.7   | 16.0               | 3      |
+    | plan                              | wall s | stage.task_s_max s | stages |
+    |-----------------------------------|--------|--------------------|--------|
+    | default                           | 30.9   | 30.8               | 2      |
+    | `repartition(4, xxhash64("url"))` | 16.7   | 16.0               | 3      |
 
-    With the lane off the one split holding every giant renders them
-    serially; the caller-side repartition spreads them as well as the
-    lane does.  It moves every html byte through the exchange, so it
-    pays only on a layout that clusters expensive pages.  None of the
-    three plans bounds a single giant row's own cost; that takes a
-    per-row budget in the kernel.
+    By default the one split holding every giant renders them serially;
+    the caller-side repartition spreads them over the cores.  It moves
+    every html byte through the exchange, so it pays only on a layout
+    that clusters expensive pages.  Neither plan bounds a single giant
+    row's own cost; that takes a per-row budget in the kernel.
     """
     cols = ["url", "html"]
     if "width" in df.columns:
@@ -163,7 +148,6 @@ def render_pages(
         df.select(*cols),
         render_setup(width, config_kwargs or {}, **(render_kwargs or {})),
         RENDER_SCHEMA,
-        outlier_bytes=outlier_bytes,
     )
 
 

@@ -7,7 +7,8 @@ built-in expressions (no Python UDF, no randomness): page archetypes
 (paragraphs / lists / tables / mixed, mirroring the reference benchmark
 shapes at /root/reference/benches/tables.rs:13-25) are selected by
 `doc_id % 4`, and a skew knob concentrates a fraction of rows onto few
-hosts plus oversized-HTML outliers to exercise the salting/outlier path.
+hosts plus oversized pages, the input layouts a caller spreads with a
+url-hash repartition before the kernel.
 """
 
 from __future__ import annotations
@@ -33,7 +34,7 @@ def pages_from_documents(
     """documents(doc_id, text, lang, source, n_chars) → pages table.
 
     skew_fraction: that fraction of rows gets the same host (hot-host skew).
-    oversize_every: every Nth row repeats its body 50x (oversized outliers).
+    oversize_every: every Nth row repeats its body 50x (oversized pages).
     """
     esc = _escaped(F.col("text"))
     words = F.split(esc, " ")

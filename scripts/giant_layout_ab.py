@@ -1,12 +1,12 @@
-"""A/B of render_pages' oversized-outlier lane on a giant-document fixture.
+"""A/B of render_pages on a file layout that clusters giant documents.
 
 The fixture is 5,000 normal pages in 8 parquet files plus 16 giant pages
-(2-4 MiB each) together in a ninth file, one row group: the
-cost-correlated layout the lane exists for.  Three plans render it:
+(2-4 MiB each) together in a ninth file, one row group: a cost-correlated
+layout, where one split holds every expensive page.  Two plans render it:
 
-- lane:   render_pages(df, outlier_bytes=1 << 20)
 - nolane: render_pages(df), the default single-scan plan
-- spread: render_pages(df.repartition(n, F.xxhash64("url"))), n = cores
+- spread: render_pages(df.repartition(n, F.xxhash64("url"))), n = cores,
+  the caller-side recipe for such a layout
 
 Each plan ends in a one-row checksum aggregate (row count, errors, text
 bytes, bit_xor of xxhash64(url, text)), which must agree across plans.
@@ -16,7 +16,7 @@ longest task (`stage.task_s_max`, read from the session's uncompressed
 event log), with the core count.  Everything it writes goes under one
 temporary directory, removed on exit.
 
-Usage: python scripts/outlier_lane_ab.py [--reps 3]
+Usage: python scripts/giant_layout_ab.py [--reps 3]
 """
 
 from __future__ import annotations
@@ -38,7 +38,7 @@ N_NORMAL = 5_000
 N_NORMAL_FILES = 8
 N_GIANT = 16
 MIB = 1 << 20
-PLANS = ("lane", "nolane", "spread")
+PLANS = ("nolane", "spread")
 VOCAB = (
     "the of and to in a is that for it as was with be by on not he this are "
     "or his from at which but have an they you were her she there been one "
@@ -95,13 +95,9 @@ def build(plan: str, pages, cores: int):
 
     from rust_html2text_spark.operators.render import render_pages
 
-    if plan == "lane":
-        out = render_pages(pages, outlier_bytes=1 << 20)
-    elif plan == "nolane":
-        out = render_pages(pages)
-    else:
-        out = render_pages(pages.repartition(cores, F.xxhash64("url")))
-    return out.agg(
+    if plan == "spread":
+        pages = pages.repartition(cores, F.xxhash64("url"))
+    return render_pages(pages).agg(
         F.count("*").alias("rows"),
         F.count("error").alias("errors"),
         F.sum("text_bytes").alias("text_bytes"),
@@ -142,14 +138,14 @@ def main() -> None:
     from rust_html2text_spark.plans.session import get_spark
 
     cores = len(os.sched_getaffinity(0))
-    tmp = tempfile.mkdtemp(prefix="outlier_lane_ab_")
+    tmp = tempfile.mkdtemp(prefix="giant_layout_ab_")
     try:
         data, events = os.path.join(tmp, "pages"), os.path.join(tmp, "events")
         os.makedirs(data)
         os.makedirs(events)
         fixture = write_fixture(data)
         spark = get_spark(
-            app_name="outlier-lane-ab",
+            app_name="giant-layout-ab",
             master=f"local[{cores}]",
             extra_conf={
                 "spark.eventLog.enabled": "true",
@@ -168,7 +164,7 @@ def main() -> None:
         walls: dict[str, list[float]] = {p: [] for p in PLANS}
         checks = {}
         for rep in range(args.reps):
-            order = PLANS[rep % 3 :] + PLANS[: rep % 3]
+            order = PLANS[rep % len(PLANS) :] + PLANS[: rep % len(PLANS)]
             for plan in order:
                 sc.setJobGroup(f"{plan}-{rep}", plan)
                 t0 = time.perf_counter()

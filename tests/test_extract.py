@@ -479,20 +479,6 @@ def test_streaming_extract_matches_batch(spark, tmp_path):
     assert got == want and len(got) == 30
 
 
-def test_render_pages_null_html_with_outlier_routing(spark):
-    """Regression (found via extract_pages): NULL-html rows must produce
-    NullInput error rows, not vanish from both outlier-filter branches."""
-    from rust_html2text_spark.operators.render import render_pages
-
-    df = spark.createDataFrame(
-        [("u1", None), ("u2", b"<p>ok</p>")], "url string, html binary"
-    )
-    for ob in (1 << 20, None):
-        rows = {r["url"]: r for r in render_pages(df, width=80, outlier_bytes=ob).collect()}
-        assert rows["u1"]["error"] == "NullInput", f"outlier_bytes={ob}"
-        assert rows["u2"]["error"] is None
-
-
 # ---------------------------------------------------------------------------
 # Round 5: RFC-3986 link resolution + <base href>
 # ---------------------------------------------------------------------------
@@ -586,41 +572,3 @@ def test_base_href_first_wins_and_relative_base():
     # <base> present but no page URL: absolute base still usable
     links = extract_main_links(page)
     assert links[0][4] == "https://b1.example/x/g"
-
-
-def test_outlier_lane_uniform_across_tier(spark):
-    """links / metadata / fused operators route oversized pages through
-    the outlier lane like extract_pages does: output equals the
-    no-outlier run, NULL html still lands in the normal lane."""
-    from rust_html2text_spark.operators.extract import (
-        extract_links,
-        extract_pages_full,
-        page_metadata_pages,
-    )
-    from rust_html2text_spark.sources.corpus import (
-        chrome_pages_from_documents,
-        load_documents,
-    )
-
-    pages = chrome_pages_from_documents(load_documents(spark, SF_DIR)).limit(30)
-    # threshold below every page size: EVERY row goes through the lane
-    for op, key_cols in (
-        (extract_links, ("url", "ordinal")),
-        (page_metadata_pages, ("url",)),
-        (lambda df, **kw: extract_pages_full(df, width=80, **kw), ("url",)),
-    ):
-        with_lane = {
-            tuple(r[k] for k in key_cols): tuple(r)
-            for r in op(pages, outlier_bytes=64).collect()
-        }
-        without = {
-            tuple(r[k] for k in key_cols): tuple(r)
-            for r in op(pages, outlier_bytes=None).collect()
-        }
-        assert with_lane == without and len(with_lane) > 0
-
-    # NULL html: metadata emits an error row, links contributes nothing
-    nulls = spark.createDataFrame([("u0", None)], "url string, html binary")
-    meta = page_metadata_pages(nulls, outlier_bytes=64).collect()
-    assert len(meta) == 1 and meta[0]["error"] == "NullInput"
-    assert extract_links(nulls, outlier_bytes=64).count() == 0

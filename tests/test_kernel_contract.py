@@ -229,25 +229,20 @@ def _operators(spark):
     )
     pdfs = html.withColumnRenamed("html", "pdf")
     return {
-        # name: (build, input, shape at defaults, shape with the lane on,
-        # i.e. outlier_bytes=len(PAGE) so every row takes the lane)
-        "render_pages": (render.render_pages, html, _shape(1, 0, 0), _shape(2, 1, 1)),
-        "extract_pages": (extract.extract_pages, html, _shape(1, 0, 0), _shape(2, 1, 1)),
-        "extract_links": (extract.extract_links, html, _shape(1, 0, 0), _shape(2, 1, 1)),
-        "page_metadata_pages": (
-            extract.page_metadata_pages, html, _shape(1, 0, 0), _shape(2, 1, 1)
-        ),
-        "extract_pages_full": (
-            extract.extract_pages_full, html, _shape(1, 0, 0), _shape(2, 1, 1)
-        ),
-        "extract_pdf_pages": (pdf.extract_pdf_pages, pdfs, _shape(1, 0, 0), _shape(2, 1, 1)),
-        "extract_pdf_links": (pdf.extract_pdf_links, pdfs, _shape(1, 0, 0), None),
-        "extract_mixed_pages": (pdf.extract_mixed_pages, html, _shape(1, 0, 0), None),
+        # name: (build, input, shape at defaults)
+        "render_pages": (render.render_pages, html, _shape(1, 0, 0)),
+        "extract_pages": (extract.extract_pages, html, _shape(1, 0, 0)),
+        "extract_links": (extract.extract_links, html, _shape(1, 0, 0)),
+        "page_metadata_pages": (extract.page_metadata_pages, html, _shape(1, 0, 0)),
+        "extract_pages_full": (extract.extract_pages_full, html, _shape(1, 0, 0)),
+        "extract_pdf_pages": (pdf.extract_pdf_pages, pdfs, _shape(1, 0, 0)),
+        "extract_pdf_links": (pdf.extract_pdf_links, pdfs, _shape(1, 0, 0)),
+        "extract_mixed_pages": (pdf.extract_mixed_pages, html, _shape(1, 0, 0)),
         "render_pages_deduped/direct": (
-            render.render_pages_deduped, html, _shape(1, 0, 0), None
+            render.render_pages_deduped, html, _shape(1, 0, 0)
         ),
         "render_pages_deduped/grouped": (
-            render.render_pages_deduped, dup, _shape(1, 1, 0), None
+            render.render_pages_deduped, dup, _shape(1, 1, 0)
         ),
     }
 
@@ -268,15 +263,21 @@ def _operators(spark):
     ],
 )
 def test_plan_shape(spark, name):
-    build, df, default, laned = _operators(spark)[name]
+    build, df, default = _operators(spark)[name]
     assert _plan_nodes(build(df)) == default
-    if laned is not None:
-        assert _plan_nodes(build(df, outlier_bytes=len(PAGE))) == laned
+    if name == "extract_links":
+        # the keyword a fixed caller passes as None plans the same tail;
+        # any other value has no lane to select
+        assert _plan_nodes(build(df, outlier_bytes=None)) == default
+        with pytest.raises(ValueError, match="xxhash64"):
+            build(df, outlier_bytes=1)
 
 
 def test_render_metrics_sums_to_render_totals(spark):
     """render_metrics' per-partition rows, errors and byte counts add up
     to the totals of the render_pages output it summarizes."""
+    from pyspark.sql import functions as F
+
     from rust_html2text_spark.operators.render import render_metrics, render_pages
 
     df = spark.createDataFrame(
@@ -284,9 +285,8 @@ def test_render_metrics_sums_to_render_totals(spark):
         + [("https://h.example/null", None)],
         "url string, html binary",
     )
-    # two rows take the oversized lane, so the output spans both lanes'
-    # partitions
-    rendered = render_pages(df, outlier_bytes=len(PAGE) + 3)
+    # spread over two partitions, so there is more than one metrics row
+    rendered = render_pages(df.repartition(2, F.xxhash64("url")))
     rows = rendered.collect()
     metrics = render_metrics(rendered).collect()
     assert len(metrics) > 1
@@ -303,22 +303,19 @@ def test_render_metrics_sums_to_render_totals(spark):
 # the caller's (df.repartition before the call), so none appears here; a
 # new option needs an edit to this table in the same change.
 PARAMETERS = {
-    "operators.render.render_pages": (
-        "df", "width", "config_kwargs", "outlier_bytes", "render_kwargs"
-    ),
+    "operators.render.render_pages": ("df", "width", "config_kwargs", "render_kwargs"),
     "operators.render.render_pages_deduped": ("df", "width", "config_kwargs"),
     "operators.extract.extract_pages": (
-        "df", "width", "config_kwargs", "outlier_bytes", "charset_sniff",
-        "charset_col",
+        "df", "width", "config_kwargs", "charset_sniff", "charset_col",
     ),
     "operators.extract.extract_links": (
         "df", "config_kwargs", "charset_sniff", "outlier_bytes"
     ),
-    "operators.extract.page_metadata_pages": ("df", "charset_sniff", "outlier_bytes"),
+    "operators.extract.page_metadata_pages": ("df", "charset_sniff"),
     "operators.extract.extract_pages_full": (
-        "df", "width", "config_kwargs", "charset_sniff", "outlier_bytes"
+        "df", "width", "config_kwargs", "charset_sniff"
     ),
-    "operators.pdf.extract_pdf_pages": ("df", "outlier_bytes"),
+    "operators.pdf.extract_pdf_pages": ("df",),
     "operators.pdf.extract_pdf_links": ("df",),
     "operators.pdf.extract_mixed_pages": (
         "df", "width", "config_kwargs", "charset_sniff"
@@ -328,8 +325,7 @@ PARAMETERS = {
     ),
     "streaming.pipeline.pdf_extract_stream": ("pages",),
     "operators.kernel.map_kernel": (
-        "pages", "setup", "schema", "payload", "outlier_bytes", "passthrough",
-        "defaults",
+        "pages", "setup", "schema", "payload", "passthrough", "defaults",
     ),
 }
 

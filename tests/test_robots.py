@@ -547,7 +547,18 @@ def test_allocate_crawl_budget_invariants(spark):
         [("h0.example", 3.0), ("h1.example", 1.0), ("h2.example", 0.0)],
         "host string, quality double",
     )
-    out = allocate_crawl_budget(sched, quality, total_budget=10).collect()
+    allocated = allocate_crawl_budget(sched, quality, total_budget=10)
+    out = allocated.collect()
+    # the local rank and the per-partition counts read ONE range
+    # partitioning: a second one would sample its boundaries again, and
+    # two samples can disagree, breaking the global rank
+    plan = allocated._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    range_exchanges = [
+        line for line in final.splitlines()
+        if "Exchange rangepartitioning" in line and "ReusedExchange" not in line
+    ]
+    assert len(range_exchanges) == 1, final
     budgets = {}
     for r in out:
         budgets.setdefault(r["host"], r["host_budget"])
