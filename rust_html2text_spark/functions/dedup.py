@@ -4,8 +4,10 @@ Scale design:
 - exact dedup = hash-groupBy on an md5 fingerprint (one shuffle, map-side
   partial aggregation for the counts).
 - MinHash uses md5 hex-string minima (lexicographic min over shingle
-  hashes), computed entirely with JVM higher-order functions — no UDF, no
-  shuffle until the band-bucket groupBy.
+  hashes), computed with JVM built-ins and no UDF: posexplode + window
+  `lead` builds the shingles (one shuffle of the token stream), a
+  `groupBy(doc_id)` takes the minima (map-side partial min) and a join
+  back onto the docs keeps NULL-text rows.
 - LSH banding turns the O(n^2) pair search into a shuffle on (band, key)
   buckets; candidate pairs come from within-bucket self-joins, which AQE
   skew-handles if a bucket is hot.

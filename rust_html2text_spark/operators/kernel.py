@@ -2,7 +2,9 @@
 
 Every Python extraction operator is `map_kernel` around a `setup()`
 closure.  The adapter owns what each operator used to repeat by hand:
-the worker bootstrap, payload coercion, the NULL-payload row, the
+the worker bootstrap (package import path, GC threshold, and the zip
+importers' directory cache, which PySpark would otherwise re-read before
+every task), payload coercion, the NULL-payload row, the
 exception → error-string map, column assembly, passthrough columns, and
 the plan tail, which is always scan → mapInPandas.  Partitioning is the
 caller's: the kernel runs on the input's own partitions.
@@ -82,6 +84,18 @@ def map_kernel(
         # broken) produces no cyclic garbage; raising the gen-0 threshold
         # buys ~10% throughput in the worker.
         gc.set_threshold(200_000, 50, 50)
+        # PySpark calls importlib.invalidate_caches() before every task,
+        # and on Python < 3.13 each zipimporter on sys.path then re-parses
+        # its archive's central directory in pure Python: ~0.2 s per task
+        # for pyspark.zip, the py4j zip and the spark-core jar.  The
+        # archives never change while a worker is alive (Spark does not
+        # rewrite them in place), and a py-file added later is a new
+        # sys.path entry that gets a new importer, so the re-read finds
+        # nothing new.  CPython 3.13 made this method lazy for the same
+        # reason.  The worker's first task has already paid it once.
+        import zipimport
+
+        zipimport.zipimporter.invalidate_caches = lambda self: None
 
         import pandas as pd
 

@@ -2,8 +2,9 @@
 operators: the error row each operator emits for a NULL payload, a
 too-narrow width and a truncated PDF; the encoding lineage and raw byte
 counts of a charset-sniffed row; the physical plan shape (MapInPandas,
-Exchange and Union node counts) of every operator; and the exact keyword
-surface of the operator layer."""
+Exchange and Union node counts) of every operator; the worker bootstrap
+(no per-task zip directory re-read, py-files added later still import);
+and the exact keyword surface of the operator layer."""
 
 from __future__ import annotations
 
@@ -295,6 +296,101 @@ def test_render_metrics_sums_to_render_totals(spark):
     assert [r["error"] for r in rows if r["error"]] == ["NullInput"]
     for col in ("html_bytes", "text_bytes"):
         assert sum(m[col] for m in metrics) == sum(r[col] for r in rows) > 0
+
+
+# -- worker bootstrap ------------------------------------------------------
+
+
+def test_worker_skips_zip_directory_rereads(spark, pages):
+    """PySpark invalidates the import caches before every task; inside a
+    map_kernel task that call re-reads no zip archive's directory."""
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from rust_html2text_spark.operators.kernel import map_kernel
+
+    def setup():
+        import importlib
+        import sys
+        import zipimport
+
+        def row_fn(data, row):
+            reads = []
+            read_directory = zipimport._read_directory
+
+            def counting(path):
+                reads.append(path)
+                return read_directory(path)
+
+            zipimport._read_directory = counting
+            try:
+                importlib.invalidate_caches()
+            finally:
+                zipimport._read_directory = read_directory
+            row["reads"] = len(reads)
+            row["importers"] = sum(
+                isinstance(f, zipimport.zipimporter)
+                for f in sys.path_importer_cache.values()
+            )
+            yield row
+
+        return row_fn
+
+    schema = StructType(
+        [
+            StructField("url", StringType()),
+            StructField("reads", LongType()),
+            StructField("importers", LongType()),
+            StructField("error", StringType()),
+        ]
+    )
+    (row,) = map_kernel(pages, setup, schema).filter("error is null").collect()
+    assert row["importers"] >= 1
+    assert row["reads"] == 0
+
+
+def test_py_file_added_later_is_importable(spark, pages, tmp_path):
+    """A zip shipped with addPyFile after a worker has run a map_kernel
+    task is still importable from that worker's next task."""
+    import uuid
+    import zipfile
+
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from rust_html2text_spark.operators.kernel import map_kernel
+
+    schema = StructType(
+        [
+            StructField("url", StringType()),
+            StructField("value", StringType()),
+            StructField("error", StringType()),
+        ]
+    )
+    module = f"late_pyfile_{uuid.uuid4().hex}"
+    token = uuid.uuid4().hex
+
+    def setup():
+        def row_fn(data, row):
+            import importlib
+
+            row["value"] = importlib.import_module(module).VALUE
+            yield row
+
+        return row_fn
+
+    def noop_setup():
+        def row_fn(data, row):
+            yield row
+
+        return row_fn
+
+    assert len(map_kernel(pages, noop_setup, schema).collect()) == 2
+    archive = tmp_path / f"{module}.zip"
+    with zipfile.ZipFile(archive, "w") as zf:
+        zf.writestr(f"{module}.py", f"VALUE = {token!r}\n")
+    spark.sparkContext.addPyFile(str(archive))
+    rows = _by_url(map_kernel(pages, setup, schema))
+    assert rows["https://h.example/p"]["error"] is None
+    assert rows["https://h.example/p"]["value"] == token
 
 
 # -- keyword surface -------------------------------------------------------
