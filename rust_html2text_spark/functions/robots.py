@@ -238,19 +238,6 @@ def robots_rules(
     import pandas as pd
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import os
-        import sys
-
-        _repo = os.path.dirname(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        )
-        if _repo not in sys.path:
-            sys.path.insert(0, _repo)
-        from rust_html2text_spark.functions.robots import (
-            _pattern_to_like,
-            parse_robots_rules,
-        )
-
         for batch in batches:
             rows = {"host": [], "pattern": [], "pattern_like": [],
                     "plen": [], "allow": []}
@@ -287,16 +274,6 @@ def robots_host_policy(
     import pandas as pd
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import os
-        import sys
-
-        _repo = os.path.dirname(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        )
-        if _repo not in sys.path:
-            sys.path.insert(0, _repo)
-        from rust_html2text_spark.functions.robots import parse_robots
-
         for batch in batches:
             rows = {"host": [], "crawl_delay": [], "sitemaps": [],
                     "rules_truncated": [], "n_rules": []}

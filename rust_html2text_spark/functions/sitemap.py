@@ -209,16 +209,6 @@ def sitemap_entries(
     import pandas as pd
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import os
-        import sys
-
-        _repo = os.path.dirname(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        )
-        if _repo not in sys.path:
-            sys.path.insert(0, _repo)
-        from rust_html2text_spark.functions.sitemap import parse_sitemap
-
         for batch in batches:
             rows = {k: [] for k in (
                 "host", "sitemap_kind", "ordinal", "loc", "lastmod",

@@ -2,12 +2,12 @@
 
 Every Python extraction operator is `map_kernel` around a `setup()`
 closure.  The adapter owns what each operator used to repeat by hand:
-the worker bootstrap (package import path, GC threshold, and the zip
-importers' directory cache, which PySpark would otherwise re-read before
-every task), payload coercion, the NULL-payload row, the
-exception → error-string map, column assembly, passthrough columns, and
-the plan tail, which is always scan → mapInPandas.  Partitioning is the
-caller's: the kernel runs on the input's own partitions.
+the worker bootstrap (GC threshold, and the zip importers' directory
+cache, which PySpark would otherwise re-read before every task), payload
+coercion, the NULL-payload row, the exception → error-string map, column
+assembly, passthrough columns, and the plan tail, which is always scan →
+mapInPandas.  Partitioning is the caller's: the kernel runs on the
+input's own partitions.
 
 The operator supplies only `setup()`.  It runs on the worker after the
 bootstrap, imports its engine entry point there, and returns
@@ -19,9 +19,9 @@ rows: a 1:1 kernel fills `row` and yields it once; a link kernel yields
 one new row per edge.  A 1:1 kernel that raises still emits `row`, with
 whatever lineage it filled before the failure and `error` set.
 
-`setup` is a nested closure so cloudpickle ships it by value, like the
-adapter's own worker function: nothing on the worker imports
-rust_html2text_spark before the bootstrap has made it importable.
+The package reaches the workers' import path through the session, not
+through this adapter: `plans/session.get_spark` puts its own checkout on
+the workers' PYTHONPATH, and a shipped `--py-files` zip comes ahead of it.
 """
 
 from __future__ import annotations
@@ -72,14 +72,7 @@ def map_kernel(
 
     def kernel_batches(batches):
         import gc
-        import os
-        import sys
 
-        # Python workers inherit PYTHONPATH, not the driver's sys.path —
-        # make the package importable regardless of worker cwd.
-        repo = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-        if repo not in sys.path:
-            sys.path.insert(0, repo)
         # The engine allocates heavily but (with the DOM back-pointers
         # broken) produces no cyclic garbage; raising the gen-0 threshold
         # buys ~10% throughput in the worker.

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
 
@@ -24,19 +25,34 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
+    """Session with the workload's settings.  `master=None` keeps
+    spark-submit's `--master`, else runs `local[SPARK_GRAFT_CPUS]`.
+
+    The one deployment rule: the Python workers import the package from
+    the directory that holds it (`spark.executorEnv.PYTHONPATH`), so a
+    session on any local master works from any cwd.  A shipped
+    `--py-files` zip still wins on every worker: PySpark puts it ahead
+    of PYTHONPATH."""
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
-    if shuffle_partitions is None:
+        if "PYSPARK_GATEWAY_PORT" in os.environ:  # launched by spark-submit
+            SparkContext._ensure_initialized()
+            master = SparkConf().get("spark.master")
+        else:
+            master = f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+    if shuffle_partitions is None and master.startswith("local"):
         # local mode: one shuffle partition per core keeps all cores busy
         # without tiny-task overhead; on a real cluster this is set to
-        # ~2-3x total executor cores by the job submitter.
-        n = master[master.find("[") + 1 : master.find("]")]
+        # ~2-3x total executor cores by the job submitter.  The count is
+        # the first in the brackets: local[4,2] (task retries) → 4.
+        n = master.partition("[")[2].split(",")[0].rstrip("]") or "1"
         shuffle_partitions = 32 if n == "*" else int(n)
+    package_root = os.path.dirname(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    )
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.executorEnv.PYTHONPATH", package_root)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -46,6 +62,10 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
     )
+    if shuffle_partitions is not None:
+        builder = builder.config(
+            "spark.sql.shuffle.partitions", str(shuffle_partitions)
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

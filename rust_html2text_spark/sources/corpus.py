@@ -345,24 +345,12 @@ def charset_pages_from_documents(docs: DataFrame) -> DataFrame:
     )
 
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import os
-        import sys
-
-        _repo = os.path.dirname(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        )
-        if _repo not in sys.path:
-            sys.path.insert(0, _repo)
-        from rust_html2text_spark.sources.corpus import (
-            synthesize_charset_page_py as mk,
-        )
-
         for batch in batches:
             urls, htmls = [], []
             for did, text, source, lang in zip(
                 batch["doc_id"], batch["text"], batch["source"], batch["lang"]
             ):
-                u, h = mk(int(did), text, source, lang)
+                u, h = synthesize_charset_page_py(int(did), text, source, lang)
                 urls.append(u)
                 htmls.append(h)
             yield pd.DataFrame({"url": urls, "html": htmls})
@@ -427,16 +415,6 @@ def robots_for_frontier(edges: DataFrame, target_col: str = "target") -> DataFra
     )
 
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import os
-        import sys
-
-        _repo = os.path.dirname(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        )
-        if _repo not in sys.path:
-            sys.path.insert(0, _repo)
-        from rust_html2text_spark.sources.corpus import robots_txt_for_host
-
         for batch in batches:
             hs = [h for h in batch["host"] if h]
             yield pd.DataFrame(
@@ -500,16 +478,6 @@ def sitemaps_from_documents(docs: DataFrame) -> DataFrame:
     )
 
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import os
-        import sys
-
-        _repo = os.path.dirname(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        )
-        if _repo not in sys.path:
-            sys.path.insert(0, _repo)
-        from rust_html2text_spark.sources.corpus import sitemap_xml_for_host
-
         for batch in batches:
             hosts, xmls = [], []
             for source, ids in zip(batch["source"], batch["ids"]):

@@ -361,17 +361,7 @@ def read_warc_pages(
     with_charset = bool(include_charset_col)
 
     def read_files(batches):
-        import os
-        import sys
-
-        _repo = os.path.dirname(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        )
-        if _repo not in sys.path:
-            sys.path.insert(0, _repo)
         import pandas as pd
-
-        from rust_html2text_spark.sources.warc import iter_warc_file_ex
 
         cols = (
             ["url", "warc_ts", "html", "text", "lang"]
@@ -445,20 +435,8 @@ def read_warc_ranges(
 
     def read_members(batches):
         import io
-        import os as _os
-        import sys
 
-        _repo = _os.path.dirname(
-            _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-        )
-        if _repo not in sys.path:
-            sys.path.insert(0, _repo)
         import pandas as pd
-
-        from rust_html2text_spark.sources.warc import (
-            _fileobj_chunks,
-            _iter_warc_pages_ex,
-        )
 
         cols = (
             ["url", "warc_ts", "html", "text", "lang"]
@@ -473,7 +451,7 @@ def read_warc_ranges(
                     batch["filename"], batch["offset"], batch["length"]
                 ):
                     path = (
-                        _os.path.join(base_dir, fname) if base_dir else fname
+                        os.path.join(base_dir, fname) if base_dir else fname
                     )
                     try:
                         if open_name != path:

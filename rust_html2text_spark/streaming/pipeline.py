@@ -234,14 +234,6 @@ def stream_warc_pages(
     )
 
     def parse(batches):
-        import os
-        import sys
-
-        _repo = os.path.dirname(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        )
-        if _repo not in sys.path:
-            sys.path.insert(0, _repo)
         import pandas as pd
 
         from rust_html2text_spark.sources.warc import iter_warc_bytes

@@ -55,9 +55,9 @@ wstats = render_pages(warc_pages, width=80).agg(
 ).collect()[0]
 assert wstats["n"] == 100 and wstats["err"] == 0, wstats
 
-# the mixed HTML+PDF router through real executors: the kernel adapter's
-# worker bootstrap must load both engines from the shipped zip, and the
-# texts must match the driver-side engine calls
+# the mixed HTML+PDF router through real executors: the kernel adapter
+# must load both engines from the shipped zip (checked at the end), and
+# the texts must match the driver-side engine calls
 from rust_html2text_spark.engine.api import html_to_text
 from rust_html2text_spark.engine.pdftext import extract_pdf_ex
 from rust_html2text_spark.operators.pdf import extract_mixed_pages
@@ -78,7 +78,8 @@ for url, data in payloads:
         assert r["kind"] == "html" and r["text"] == html_to_text(data, 80), r
 
 # the crawl loop through real executors: robots gate (mapInPandas rules
-# parse must import from the shipped zip on the workers) + sitemap parse
+# parse must import from the shipped zip on the workers, checked at the
+# end) + sitemap parse
 from rust_html2text_spark.functions.robots import frontier_allowed, robots_rules
 from rust_html2text_spark.functions.sitemap import sitemap_entries
 from rust_html2text_spark.sources.corpus import (
@@ -100,6 +101,47 @@ sm = sitemap_entries(
     sitemaps_from_documents(load_documents(spark, "/root/testdata/sf0.001"))
 ).count()
 assert sm > 500, sm
+
+# the copy of the package each kind of UDF ran: the zip shipped to the
+# worker's own executor, both in the kernel adapter and in a plain
+# mapInPandas — never the checkout or the driver's copy of the zip
+from pyspark import SparkFiles
+from pyspark.sql.types import StringType, StructField, StructType
+from rust_html2text_spark.operators.kernel import map_kernel
+
+def setup():
+    from pyspark import SparkFiles
+    import rust_html2text_spark.engine.api as api
+
+    def row_fn(data, row):
+        row["path"], row["root"] = api.__file__, SparkFiles.getRootDirectory()
+        yield row
+
+    return row_fn
+
+def robots_file(batches):
+    import pandas as pd
+    from pyspark import SparkFiles
+    import rust_html2text_spark.functions.robots as robots
+    for b in batches:
+        yield pd.DataFrame(
+            {{"path": robots.__file__, "root": SparkFiles.getRootDirectory()}},
+            index=b.index,
+        )
+
+schema = StructType(
+    [StructField(c, StringType()) for c in ("url", "path", "root", "error")]
+)
+paths = {{(r["path"], r["root"]) for r in map_kernel(mixed, setup, schema).collect()}}
+paths |= {{
+    (r["path"], r["root"])
+    for r in edges.repartition(4).mapInPandas(robots_file, "path string, root string").collect()
+}}
+print("WORKER_PATHS", sorted(paths))
+assert len(paths) >= 2, paths
+for p, root in paths:
+    assert p.startswith(os.path.join(root, "rust_html2text_spark.zip") + "/"), (p, root)
+    assert root != SparkFiles.getRootDirectory(), (p, root)
 print("MULTI_EXECUTOR_OK")
 spark.stop()
 """
