@@ -5,9 +5,10 @@ Scale design:
   partial aggregation for the counts).
 - MinHash uses md5 hex-string minima (lexicographic min over shingle
   hashes), computed with JVM built-ins and no UDF: posexplode + window
-  `lead` builds the shingles (one shuffle of the token stream), a
-  `groupBy(doc_id)` takes the minima (map-side partial min) and a join
-  back onto the docs keeps NULL-text rows.
+  `lead` builds the shingles (one shuffle of the token stream) and a
+  `groupBy(doc_id)` takes the minima (map-side partial min).  Only
+  `minhash_signatures` joins back onto the docs, to keep NULL-text rows;
+  LSH banding reads the aggregation.
 - LSH banding turns the O(n^2) pair search into a shuffle on (band, key)
   buckets; candidate pairs come from within-bucket self-joins, which AQE
   skew-handles if a bucket is hot.
@@ -49,20 +50,14 @@ def word_shingles(n: int = 3, text_col: str = "text"):
     )
 
 
-def minhash_signatures(
-    docs: DataFrame, num_hashes: int = 8, shingle_size: int = 3
-) -> DataFrame:
-    """MinHash signature per doc: for seed i, min over shingles of
-    md5(shingle || '#i') (hex strings compare consistently everywhere).
-
-    Shingles are built with posexplode + window `lead` (fully whole-stage
-    codegen; Spark higher-order-function lambdas are interpreted and ~2-3x
-    slower).  Costs one shuffle of the token stream; map-side partial min
-    keeps the aggregation shuffle at one row per doc.
-    """
+def _minhash_min(docs: DataFrame, num_hashes: int, shingle_size: int) -> DataFrame:
+    """MinHash signature per doc, as one `groupBy(doc_id)`.  A NULL-text
+    doc has no row (its signature is undefined, and banding NULLs would
+    fold every such doc into one md5('') bucket)."""
     from pyspark.sql.window import Window
 
     toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    docs = docs.filter(F.col("text").isNotNull())
     tokdf = docs.select("doc_id", F.posexplode(toks).alias("pos", "tok"))
     w = Window.partitionBy("doc_id").orderBy("pos")
     leads = [F.lead("tok", k).over(w).alias(f"l{k}") for k in range(1, shingle_size)]
@@ -84,9 +79,23 @@ def minhash_signatures(
         F.min(F.md5(F.concat(F.col("sh"), F.lit(f"#{i}")))).alias(f"mh{i}")
         for i in range(num_hashes)
     ]
-    sigs = all_sh.groupBy("doc_id").agg(*aggs)
-    # posexplode drops NULL-text docs; preserve them with NULL signatures
-    # (matches a SQL oracle, which keeps the row with NULL columns)
+    return all_sh.groupBy("doc_id").agg(*aggs)
+
+
+def minhash_signatures(
+    docs: DataFrame, num_hashes: int = 8, shingle_size: int = 3
+) -> DataFrame:
+    """MinHash signature per doc: for seed i, min over shingles of
+    md5(shingle || '#i') (hex strings compare consistently everywhere).
+
+    Shingles are built with posexplode + window `lead` (fully whole-stage
+    codegen; Spark higher-order-function lambdas are interpreted and ~2-3x
+    slower).  Costs one shuffle of the token stream; map-side partial min
+    keeps the aggregation shuffle at one row per doc.  NULL-text docs keep
+    their row with NULL signatures (as a SQL oracle keeps the row with
+    NULL columns), which costs a join back onto the docs.
+    """
+    sigs = _minhash_min(docs, num_hashes, shingle_size)
     return docs.select("doc_id").join(sigs, "doc_id", "left")
 
 
@@ -112,7 +121,9 @@ def lsh_candidate_pairs(
             f"num_hashes ({num_hashes}) must be a multiple of band_size "
             f"({band_size}); a partial band would reference missing columns"
         )
-    sigs = minhash_signatures(docs, num_hashes, shingle_size)
+    # banding reads the aggregation itself: minhash_signatures' join back
+    # onto the docs only adds the NULL-text rows that banding would drop
+    sigs = _minhash_min(docs, num_hashes, shingle_size)
     # one pass: explode all bands from a single signature computation (a
     # union of per-band selects would re-run the shingle+md5 work per band)
     band_structs = []
@@ -125,9 +136,7 @@ def lsh_candidate_pairs(
                 F.lit(b // band_size).alias("band"), key.alias("band_key")
             )
         )
-    # NULL-text docs carry NULL signatures — concat_ws would fold them all
-    # into one md5('') bucket, so exclude them from banding entirely
-    all_bands = sigs.filter(F.col("mh0").isNotNull()).select(
+    all_bands = sigs.select(
         "doc_id", F.explode(F.array(*band_structs)).alias("b")
     ).select("doc_id", F.col("b.band").alias("band"), F.col("b.band_key").alias("band_key"))
     if max_bucket is not None:
@@ -207,8 +216,7 @@ def simhash_py(text: str, bits: int = 64) -> int:
     return out - (1 << 64) if out >= (1 << 63) else out
 
 
-@pandas_udf(LongType())
-def simhash_udf(texts: pd.Series) -> pd.Series:
+def _simhash_batch(texts: pd.Series) -> pd.Series:
     """Vectorized SimHash: one hashlib.md5 per *unique* token in the batch,
     then the 64-bit expansion, per-row accumulation and bit packing run as
     numpy matrix ops (same signatures as `simhash_py`, tested against it)."""
@@ -254,6 +262,11 @@ def simhash_udf(texts: pd.Series) -> pd.Series:
     out = pd.Series(packed, dtype="Int64")
     out[null_rows] = None
     return out
+
+
+# a module-level function ships by reference, so the worker imports the
+# package (and its per-task import fix) before the first batch
+simhash_udf = pandas_udf(_simhash_batch, LongType())
 
 
 def simhash(docs: DataFrame) -> DataFrame:
@@ -379,6 +392,22 @@ def _bloom_positions(value: str, num_bits: int, num_hashes: int) -> list[int]:
     ]
 
 
+def _or_bitmaps(batches, nb: int):
+    """OR a partition's `bitmap` rows into one (none for an empty one)."""
+    import numpy as np
+
+    acc = np.zeros(nb // 8, dtype=np.uint8)
+    seen = False
+    for pdf in batches:
+        for b in pdf["bitmap"]:
+            if b is None:
+                continue
+            acc |= np.frombuffer(bytes(b), dtype=np.uint8)
+            seen = True
+    if seen:
+        yield pd.DataFrame({"bitmap": [acc.tobytes()]})
+
+
 def _reduced_bitmap_frame(
     df: DataFrame, key_col: str, nb: int, k: int
 ) -> DataFrame:
@@ -388,21 +417,6 @@ def _reduced_bitmap_frame(
     rows to ⌈√P⌉ and OR within each partition — executors absorb the P-way
     fan-in, the driver sees at most ⌈√P⌉ bitmaps.  At 100k input files and
     a 1 MiB filter that is ~316 MB of driver traffic instead of ~12 GB."""
-
-    def or_partition(batches, column):
-        import numpy as np
-        import pandas as pd
-
-        acc = np.zeros(nb // 8, dtype=np.uint8)
-        seen = False
-        for pdf in batches:
-            for b in pdf[column]:
-                if b is None:
-                    continue
-                acc |= np.frombuffer(bytes(b), dtype=np.uint8)
-                seen = True
-        if seen:
-            yield pd.DataFrame({"bitmap": [acc.tobytes()]})
 
     def build(batches):
         import numpy as np
@@ -423,7 +437,7 @@ def _reduced_bitmap_frame(
     if p > 4:
         fanin = max(1, math.isqrt(p))
         bitmaps = bitmaps.repartition(fanin).mapInPandas(
-            lambda it: or_partition(it, "bitmap"), "bitmap binary"
+            lambda it: _or_bitmaps(it, nb), "bitmap binary"
         )
     return bitmaps
 
@@ -527,76 +541,92 @@ def dup_components(
     the pointer jump label := label's label — each jump halves the
     remaining distance to the component minimum, so convergence is
     O(log diameter) rounds (the same doubling idea as the published
-    large-star/small-star method).  From round 3 on the jump is applied
-    TWICE per round: shallow graphs (the common near-dup case —
+    large-star/small-star method) where ids grow along the paths: a
+    4,096-node chain in id order takes 8 rounds.  Ids shuffled along a
+    path leave many local minima that a jump cannot pass, and the
+    rounds grow about linearly with the diameter (29 rounds for a
+    diameter of 39 in the tests' random graphs).  From round 3 on the
+    jump is applied TWICE per round: shallow graphs (the common near-dup case —
     star-shaped clusters, diameter ≤ 4) converge inside two single-jump
     rounds and never pay the extra join, while deep graphs trade one
     extra small-table join per round for half the number of rounds —
     and round count (fixed job latency) is what dominates the wall
-    clock of the loop on a deep graph.  Lineage is cut per round with
-    localCheckpoint so the plan does not grow with iterations.  The
-    previous label rides along as an `_old` column, so the per-round
-    convergence check is a narrow filter-count over the
-    just-checkpointed partitions — no join, no shuffle.  The driver
-    holds only the convergence counter, never the labels.
+    clock of the loop on a deep graph.
+
+    Jobs, with adaptive execution (one per exchange, one per
+    checkpoint): set-up runs 2, deduplicating the symmetric edge list
+    behind one exchange and checkpointing it.  A round runs 4, or 5 from
+    round 3: a window exchange hands every edge its dst's label (each
+    node's own label rides in the same rows), an aggregation exchange
+    takes the min per node, each pointer jump is one more window
+    exchange, and the checkpoint that cuts the lineage is the last job.
+    A label lookup is a window over the union of the asking and the
+    answering rows, partitioned by the key: one exchange, where a join
+    would shuffle both sides and, on a small table, add a runtime
+    broadcast job.  The key of a large cluster's minimum is hot; its
+    rows meet in one task, which buffers (and spills) them.  The
+    previous label rides along as `_old`, and an observed metric counts
+    the labels that moved while the checkpoint writes them, so the
+    convergence check costs no job.  The driver holds only that
+    counter, never the labels.  On the 41-node KNOWN_PAIRS graph of the
+    tests (5 rounds) that is 25 jobs; a 4,096-node chain takes 8 rounds
+    and 40 jobs.
 
     Pass a dict as `stats` to receive {"rounds": n, "converged": bool}
-    (the O(log diameter) convergence evidence)."""
+    (the convergence evidence)."""
+    from pyspark.sql import Observation
+    from pyspark.sql.window import Window
+
     edges = (
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .unionByName(
             pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
         )
-        .distinct()
-        # hash-partition on dst before the checkpoint: localCheckpoint
-        # preserves outputPartitioning, so the per-round neighbour join
-        # never re-shuffles the edge table — only the (smaller) label
-        # table moves each round
-        .repartition("dst")
+        .dropDuplicates()
         .localCheckpoint()
     )
-    labels = (
-        edges.select(F.col("src").alias("doc_id"))
-        .distinct()
-        .withColumn("label", F.col("doc_id"))
-        .localCheckpoint()
+    # every node is a dst (the edges are symmetric); a node's label
+    # starts as its own id, once per edge end, and a min ignores repeats
+    labels = edges.select(F.col("dst").alias("doc_id"), F.col("dst").alias("label"))
+    asks = edges.select(F.col("dst").alias("_k"), F.col("src").alias("doc_id"))
+    # a label lookup is a window over rows keyed `_k`: every row takes the
+    # min `_p` at its key, where the node with that id put its label
+    by_key = Window.partitionBy("_k")
+    # a pointer jump: a node asks at its label and answers at its own id
+    sides = F.array(
+        F.struct(F.col("label").alias("_k"), F.lit(True).alias("_ask")),
+        F.struct(F.col("doc_id").alias("_k"), F.lit(False).alias("_ask")),
     )
-    changed = 0
-    rounds = 0
-    for _round in range(max_iterations):
-        rounds += 1
-        neighbor_min = (
-            edges.join(labels, edges.dst == labels.doc_id)
-            .groupBy("src")
-            .agg(F.min("label").alias("nlabel"))
-        )
-        cur = labels.join(
-            neighbor_min, labels.doc_id == neighbor_min.src, "left"
-        ).select(
-            "doc_id",
+    rounds = changed = 0
+    for rounds in range(1, max_iterations + 1):
+        # each node answers at its own id (keeping its label as `_old`);
+        # each edge asks at its dst for the src
+        answers = labels.select(
+            F.col("doc_id").alias("_k"), "doc_id", F.col("label").alias("_p"),
             F.col("label").alias("_old"),
-            F.least(
-                F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))
-            ).alias("label"),
+        )
+        cur = (
+            asks.unionByName(answers, allowMissingColumns=True)
+            .select("doc_id", F.min("_p").over(by_key).alias("label"), "_old")
+            .groupBy("doc_id")
+            .agg(F.min("label").alias("label"), F.max("_old").alias("_old"))
         )
         for _jump in range(1 if rounds <= 2 else 2):
-            # pointer jumping: label := label's label (distance-halving)
-            parent = cur.select(
-                F.col("doc_id").alias("p_id"), F.col("label").alias("p_label")
+            # pointer jumping: label := label's label (distance-halving);
+            # labels never exceed ids, so the asker's own label (its `_p`
+            # at its label's key) never wins the min
+            cur = (
+                cur.select(
+                    "doc_id", "_old", F.col("label").alias("_p"), F.inline(sides)
+                )
+                .withColumn("label", F.min("_p").over(by_key))
+                .filter("_ask")
+                .select("doc_id", "_old", "label")
             )
-            cur = cur.join(parent, cur.label == parent.p_id, "left").select(
-                "doc_id",
-                "_old",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("p_label"), F.col("label"))
-                ).alias("label"),
-            )
-        # LAZY checkpoint: the convergence count below is the
-        # materializing action, so checkpoint + count run as ONE job per
-        # round instead of two
-        new_labels = cur.localCheckpoint(eager=False)
-        changed = new_labels.filter(F.col("label") != F.col("_old")).count()
-        labels = new_labels.select("doc_id", "label")
+        moved = Observation()
+        moves = F.count(F.when(F.col("label") != F.col("_old"), 1)).alias("n")
+        labels = cur.observe(moved, moves).localCheckpoint().select("doc_id", "label")
+        changed = moved.get["n"]
         if changed == 0:
             break
     if changed > 0:

@@ -107,6 +107,51 @@ def pack_sequences(
     )
 
 
+def _chunk_batches(batches, key_col: str, text_col: str, ct: int, st: int):
+    """The outlier lane of `chunk_documents`: `ct`-token chunks every
+    `st` tokens, sliced from each doc's token list in place."""
+    import re
+
+    import pandas as pd
+
+    # Java-regex \s ([ \t\n\x0B\f\r]) and Spark trim (space only), so
+    # both lanes tokenize identically down to hostile whitespace
+    split_re = re.compile("[ \t\n\x0b\f\r]+")
+    out_keys, out_ids, out_texts, out_ns = [], [], [], []
+
+    def flush():
+        nonlocal out_keys, out_ids, out_texts, out_ns
+        pdf = pd.DataFrame(
+            {
+                key_col: out_keys,
+                "chunk_id": out_ids,
+                "chunk_text": out_texts,
+                "n_tokens": out_ns,
+            }
+        )
+        out_keys, out_ids, out_texts, out_ns = [], [], [], []
+        return pdf
+
+    for pdf in batches:
+        for key, text in zip(pdf[key_col], pdf[text_col]):
+            tokens = split_re.split(text.strip(" "))
+            nt = len(tokens)
+            if nt <= ct:
+                count = 1
+            else:
+                count = (nt - ct + st - 1) // st + 1
+            for cid in range(count):
+                s = cid * st
+                out_keys.append(key)
+                out_ids.append(cid)
+                out_texts.append(" ".join(tokens[s : s + ct]))
+                out_ns.append(min(ct, nt - s))
+                if len(out_keys) >= 2048:
+                    yield flush()
+    if out_keys:
+        yield flush()
+
+
 def chunk_documents(
     docs: DataFrame,
     chunk_tokens: int = 512,
@@ -180,51 +225,11 @@ def chunk_documents(
     )
     ct, st = int(chunk_tokens), int(stride)
 
-    def chunk_big(batches):
-        import re
-
-        import pandas as pd
-
-        # Java-regex \s ([ \t\n\x0B\f\r]) and Spark trim (space only), so
-        # both lanes tokenize identically down to hostile whitespace
-        split_re = re.compile("[ \t\n\x0b\f\r]+")
-        out_keys, out_ids, out_texts, out_ns = [], [], [], []
-
-        def flush():
-            nonlocal out_keys, out_ids, out_texts, out_ns
-            pdf = pd.DataFrame(
-                {
-                    key_col: out_keys,
-                    "chunk_id": out_ids,
-                    "chunk_text": out_texts,
-                    "n_tokens": out_ns,
-                }
-            )
-            out_keys, out_ids, out_texts, out_ns = [], [], [], []
-            return pdf
-
-        for pdf in batches:
-            for key, text in zip(pdf[key_col], pdf[text_col]):
-                tokens = split_re.split(text.strip(" "))
-                nt = len(tokens)
-                if nt <= ct:
-                    count = 1
-                else:
-                    count = (nt - ct + st - 1) // st + 1
-                for cid in range(count):
-                    s = cid * st
-                    out_keys.append(key)
-                    out_ids.append(cid)
-                    out_texts.append(" ".join(tokens[s : s + ct]))
-                    out_ns.append(min(ct, nt - s))
-                    if len(out_keys) >= 2048:
-                        yield flush()
-        if out_keys:
-            yield flush()
-
     big = (
         nonnull.filter(n > outlier_tokens)
         .select(key_col, text_col)
-        .mapInPandas(chunk_big, out_schema)
+        .mapInPandas(
+            lambda it: _chunk_batches(it, key_col, text_col, ct, st), out_schema
+        )
     )
     return small.unionByName(big)

@@ -2,12 +2,10 @@
 
 Every Python extraction operator is `map_kernel` around a `setup()`
 closure.  The adapter owns what each operator used to repeat by hand:
-the worker bootstrap (GC threshold, and the zip importers' directory
-cache, which PySpark would otherwise re-read before every task), payload
-coercion, the NULL-payload row, the exception → error-string map, column
-assembly, passthrough columns, and the plan tail, which is always scan →
-mapInPandas.  Partitioning is the caller's: the kernel runs on the
-input's own partitions.
+the worker's GC threshold, payload coercion, the NULL-payload row, the
+exception → error-string map, column assembly, passthrough columns, and
+the plan tail, which is always scan → mapInPandas.  Partitioning is
+the caller's: the kernel runs on the input's own partitions.
 
 The operator supplies only `setup()`.  It runs on the worker after the
 bootstrap, imports its engine entry point there, and returns
@@ -22,6 +20,8 @@ whatever lineage it filled before the failure and `error` set.
 The package reaches the workers' import path through the session, not
 through this adapter: `plans/session.get_spark` puts its own checkout on
 the workers' PYTHONPATH, and a shipped `--py-files` zip comes ahead of it.
+Importing the package on a worker also stops the per-task re-read of the
+zip importers' archives (`rust_html2text_spark/__init__.py`).
 """
 
 from __future__ import annotations
@@ -77,19 +77,6 @@ def map_kernel(
         # broken) produces no cyclic garbage; raising the gen-0 threshold
         # buys ~10% throughput in the worker.
         gc.set_threshold(200_000, 50, 50)
-        # PySpark calls importlib.invalidate_caches() before every task,
-        # and on Python < 3.13 each zipimporter on sys.path then re-parses
-        # its archive's central directory in pure Python: ~0.2 s per task
-        # for pyspark.zip, the py4j zip and the spark-core jar.  The
-        # archives never change while a worker is alive (Spark does not
-        # rewrite them in place), and a py-file added later is a new
-        # sys.path entry that gets a new importer, so the re-read finds
-        # nothing new.  CPython 3.13 made this method lazy for the same
-        # reason.  The worker's first task has already paid it once.
-        import zipimport
-
-        zipimport.zipimporter.invalidate_caches = lambda self: None
-
         import pandas as pd
 
         from rust_html2text_spark.engine.errors import RenderError

@@ -175,43 +175,16 @@ def render_pages_deduped(
     page mirrored 10^6×) materializes its url list in one row; at that
     scale split the class with a secondary group key upstream.
 
-    Adaptive plan choice (decide with SMALL rows): the render kernel is
-    deterministic per payload, so a near-distinct corpus gets an
-    IDENTICAL result from rendering every row directly — without
-    shuffling a single payload byte.  A decision pass (md5 +
-    count/approx_count_distinct: only 16-byte hashes move, partial
-    aggregation map-side) measures the duplication ratio; below 1.5 the
-    payload exchange + aggregation + explode cannot pay for the kernel
-    work it saves and the direct plan runs instead (the content hash
-    rides through the kernel as a passthrough column).  Threshold
-    rationale: locally the exchange+agg of N rows costs about as much
-    kernel time as rendering 0.35·N extra docs; on a network-shuffle
-    cluster the exchange is relatively dearer, so 1.5 is conservative in
-    the direction that matters.
-
-    Building the returned DataFrame runs the decision pass as Spark
-    jobs — two with adaptive execution on (the aggregation's map stage,
-    then the result) — before any action is called.  The pass reads the
-    payload column once more without a shuffle; for an input that is
-    not a plain scan it recomputes the input's whole lineage, so cache
-    or checkpoint such an input first if that lineage is expensive.
+    Building the returned DataFrame runs no Spark job: the plan is the
+    same for every input.  A near-distinct corpus still pays the payload
+    exchange; a caller that knows its corpus is near-distinct skips it
+    with `render_pages(df)` plus `F.md5("html")` as content_hash, which
+    gives the same rows (the kernel is deterministic per payload).
     """
     from pyspark.sql.types import ArrayType
 
     setup = render_setup(width, config_kwargs or {})
-    hashed = df.select(
-        "url", F.md5(F.col("html")).alias("content_hash"), "html"
-    )
-    stats = hashed.agg(
-        F.count("*").alias("n"),
-        F.approx_count_distinct("content_hash").alias("d"),
-    ).collect()[0]
-    if stats["n"] < 1.5 * max(stats["d"], 1):
-        schema = StructType(
-            RENDER_SCHEMA.fields + [StructField("content_hash", StringType())]
-        )
-        return map_kernel(hashed, setup, schema, passthrough=("content_hash",))
-    grouped = hashed.groupBy("content_hash").agg(
+    grouped = df.groupBy(F.md5(F.col("html")).alias("content_hash")).agg(
         F.collect_list("url").alias("urls"),
         # all group members are byte-identical (md5 key): any member's
         # html is THE payload, so first() is deterministic in value

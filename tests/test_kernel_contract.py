@@ -88,14 +88,14 @@ def test_null_payload_rows(spark, pages):
             "url string, html binary",
         )
     )
-    # direct route (4 rows, 3 distinct payloads), then the grouped route
-    # (every row twice)
-    for src, grouped in ((distinct, False), (pages.unionByName(pages), True)):
+    # near-distinct (4 rows, 3 distinct payloads) and duplicated (every
+    # row twice): the same grouped plan
+    for src, copies in ((distinct, 1), (pages.unionByName(pages), 2)):
         d = render_pages_deduped(src)
         plan = d._jdf.queryExecution().executedPlan().toString()
-        assert ("Exchange" in plan) == grouped, plan
+        assert "Exchange" in plan, plan
         null_rows = [x for x in d.collect() if x["content_hash"] is None]
-        assert [x["url"] for x in null_rows] == [u] * (1 + grouped)
+        assert [x["url"] for x in null_rows] == [u] * copies
         for null_row in null_rows:
             assert null_row["error"] == "NullInput" and null_row["text"] is None
             assert null_row["html_bytes"] == 0 and null_row["text_bytes"] == 0
@@ -239,8 +239,8 @@ def _operators(spark):
         "extract_pdf_pages": (pdf.extract_pdf_pages, pdfs, _shape(1, 0, 0)),
         "extract_pdf_links": (pdf.extract_pdf_links, pdfs, _shape(1, 0, 0)),
         "extract_mixed_pages": (pdf.extract_mixed_pages, html, _shape(1, 0, 0)),
-        "render_pages_deduped/direct": (
-            render.render_pages_deduped, html, _shape(1, 0, 0)
+        "render_pages_deduped/distinct": (
+            render.render_pages_deduped, html, _shape(1, 1, 0)
         ),
         "render_pages_deduped/grouped": (
             render.render_pages_deduped, dup, _shape(1, 1, 0)
@@ -259,7 +259,7 @@ def _operators(spark):
         "extract_pdf_pages",
         "extract_pdf_links",
         "extract_mixed_pages",
-        "render_pages_deduped/direct",
+        "render_pages_deduped/distinct",
         "render_pages_deduped/grouped",
     ],
 )

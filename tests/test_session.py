@@ -194,3 +194,67 @@ spark.stop()
         timeout=300,
     )
     assert "ANY_CWD_OK" in out.stdout, out.stdout[-2000:] + out.stderr[-3000:]
+
+
+def test_package_udf_stops_zip_rereads(tmp_path):
+    """On a fresh local[2] session, a worker that has run only a plain
+    mapInPandas re-reads its zip archives' directories when PySpark
+    invalidates the import caches; once a package UDF (the robots rule
+    parser, a mapInPandas over functions/robots.py) has run on it, the
+    next task's invalidation re-reads none.  The driver's importers are
+    left alone."""
+    script = f"""
+import sys, zipimport
+sys.path.insert(0, {str(REPO)!r})
+from rust_html2text_spark.plans.session import get_spark
+from rust_html2text_spark.functions.robots import robots_rules
+spark = get_spark(master="local[2]")
+spark.sparkContext.setLogLevel("ERROR")
+
+def probe(batches):
+    import importlib, os, sys, zipimport
+    import pandas as pd
+    reads = []
+    read_directory = zipimport._read_directory
+    def counting(path):
+        reads.append(path)
+        return read_directory(path)
+    zipimport._read_directory = counting
+    try:
+        importlib.invalidate_caches()
+    finally:
+        zipimport._read_directory = read_directory
+    for _ in batches:
+        pass
+    yield pd.DataFrame({{
+        "pid": [os.getpid()],
+        "reads": [len(reads)],
+        "package": ["rust_html2text_spark" in sys.modules],
+    }})
+
+one = spark.range(1).coalesce(1)
+schema = "pid long, reads long, package boolean"
+(before,) = one.mapInPandas(probe, schema).collect()
+robots = spark.createDataFrame(
+    [("h.example", "User-agent: *\\nDisallow: /private")],
+    "host string, robots_txt string",
+).coalesce(1)
+assert [r["pattern"] for r in robots_rules(robots).collect()] == ["/private"]
+(after,) = one.mapInPandas(probe, schema).collect()
+print("PROBES", before, after)
+assert before["pid"] == after["pid"]
+assert not before["package"] and before["reads"] > 0
+assert after["package"] and after["reads"] == 0
+assert "lambda" not in repr(zipimport.zipimporter.invalidate_caches)
+print("ZIP_OK")
+spark.stop()
+"""
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=_driver_env(),
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert "ZIP_OK" in out.stdout, out.stdout[-2000:] + out.stderr[-3000:]

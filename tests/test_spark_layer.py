@@ -700,6 +700,91 @@ def test_dup_components_writes_no_session_conf(spark, monkeypatch):
     assert spark.conf.get(key) == before
 
 
+def _components_by_union_find(pairs):
+    """doc_id → the minimum doc_id of its component, in one process."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in list(parent)}
+
+
+def _random_pair_graph(seed):
+    """Stars, cliques, chains and a random forest on disjoint id ranges,
+    with ids shuffled inside each shape (so a component's minimum sits
+    anywhere in it), some pairs repeated and some in both directions."""
+    import random
+
+    rng = random.Random(seed)
+    pairs, base = [], 0
+
+    def ids(n):
+        nonlocal base
+        out = list(range(base, base + n))
+        rng.shuffle(out)
+        base += n + rng.randint(1, 5)
+        return out
+
+    for _ in range(rng.randint(2, 5)):  # stars
+        hub, *leaves = ids(rng.randint(2, 12))
+        pairs += [(hub, x) if rng.random() < 0.5 else (x, hub) for x in leaves]
+    for _ in range(rng.randint(1, 3)):  # cliques
+        nodes = ids(rng.randint(2, 6))
+        pairs += [(a, b) for i, a in enumerate(nodes) for b in nodes[i + 1 :]]
+    for _ in range(rng.randint(1, 3)):  # chains
+        nodes = ids(rng.randint(2, 40))
+        pairs += list(zip(nodes, nodes[1:]))
+    nodes = ids(rng.randint(10, 60))  # a random forest
+    pairs += [
+        (x, rng.choice(nodes[:i]))
+        for i, x in enumerate(nodes)
+        if i and rng.random() < 0.8
+    ]
+    pairs += [(b, a) for a, b in rng.sample(pairs, len(pairs) // 4)]
+    pairs += rng.sample(pairs, len(pairs) // 8)
+    return pairs
+
+
+@pytest.mark.parametrize("seed", [1, 2, 3, 4])
+def test_dup_components_matches_union_find(spark, seed):
+    """component_id is the minimum doc_id of the node's component, as a
+    union-find over the same pairs computes it.  Shuffled ids along a
+    path slow the label propagation to about one round per 1.3 hops of
+    diameter (29 rounds for seed 1's diameter of 39), hence the cap."""
+    from rust_html2text_spark.functions.dedup import dup_components
+
+    pairs = _random_pair_graph(seed)
+    df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
+    stats = {}
+    labels = dup_components(df, max_iterations=64, stats=stats)
+    got = {r.doc_id: r.component_id for r in labels.collect()}
+    assert stats["converged"]
+    assert got == _components_by_union_find(pairs)
+
+
+def test_dup_components_job_budget(spark):
+    """dup_components runs at most 2 jobs of set-up and 5 per round; the
+    convergence check rides on each round's checkpoint."""
+    from rust_html2text_spark.functions.dedup import dup_components
+
+    df = spark.createDataFrame(KNOWN_PAIRS, "doc_a long, doc_b long")
+    stats = {}
+    labels, jobs = _jobs_started(spark, lambda: dup_components(df, stats=stats))
+    assert stats == {"rounds": 5, "converged": True}
+    assert jobs <= 2 + 5 * stats["rounds"]
+    _, jobs = _jobs_started(spark, labels.collect)
+    assert jobs == 1  # the labels are already computed
+
+
 def test_render_scan_pruned_to_url_html(spark, tmp_path):
     """Column pruning must reach the parquet scan: rendering a wide pages
     table may read ONLY url+html (at 100 TB, reading text/lang/warc_ts too
@@ -721,21 +806,25 @@ def test_render_scan_pruned_to_url_html(spark, tmp_path):
             assert unwanted not in schema, line
 
 
-def test_render_deduped_adaptive_paths_identical(spark, tmp_path):
-    """render_pages_deduped routes a near-distinct corpus to the direct
-    (no payload exchange) plan and a duplicated corpus to the grouped
-    plan; each route's rows must equal render_pages on the same input
-    plus md5(html) as content_hash."""
-    import hashlib
-    from collections import Counter
+def _jobs_started(spark, build):
+    """(build(), the number of Spark jobs build() started), counted by
+    statusTracker job ids under a job group of its own."""
+    import uuid
 
-    from rust_html2text_spark.operators.render import (
-        render_pages,
-        render_pages_deduped,
-    )
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
-    # 40 payloads distinct by construction, materialized to parquet so
-    # the operator's own plan is measured from a plain scan
+
+def _deduped_inputs(spark, tmp_path):
+    """40 payloads distinct by construction, materialized to parquet so
+    the operator's own plan is measured from a plain scan, and the same
+    pages with every payload three times."""
     p = str(tmp_path / "pages")
     spark.createDataFrame(
         [
@@ -749,24 +838,50 @@ def test_render_deduped_adaptive_paths_identical(spark, tmp_path):
         "url string, html binary",
     ).write.parquet(p)
     pages = spark.read.parquet(p)
-    dup = pages.unionByName(pages).unionByName(pages)  # every payload x3
+    return pages, pages.unionByName(pages).unionByName(pages)
+
+
+def test_render_deduped_rows_match_render_pages(spark, tmp_path):
+    """render_pages_deduped plans one payload exchange for a near-distinct
+    and for a duplicated corpus alike; its rows equal render_pages on the
+    same input plus md5(html) as content_hash (the direct route a caller
+    that knows its corpus is near-distinct builds itself)."""
+    import hashlib
+    from collections import Counter
+
+    from rust_html2text_spark.operators.render import (
+        render_pages,
+        render_pages_deduped,
+    )
+
+    pages, dup = _deduped_inputs(spark, tmp_path)
     md5 = {r.url: hashlib.md5(r.html).hexdigest() for r in pages.collect()}
 
     def rows(dicts):
         return Counter(tuple(sorted(d.items())) for d in dicts)
 
-    # distinct corpus: exchange-free direct plan; duplicated corpus: the
-    # grouped (single-exchange) plan
-    for src, grouped in ((pages, False), (dup, True)):
+    for src in (pages, dup):
         deduped = render_pages_deduped(src)
         plan = deduped._jdf.queryExecution().executedPlan().toString()
-        assert ("Exchange" in plan) == grouped, plan
+        assert plan.count("Exchange") == 1, plan
         expected = rows(
             dict(r.asDict(), content_hash=md5[r.url])
             for r in render_pages(src).collect()
         )
         assert rows(r.asDict() for r in deduped.collect()) == expected
         assert sum(expected.values()) == src.count()
+
+
+def test_render_deduped_builder_runs_no_job(spark, tmp_path):
+    """Building render_pages_deduped's DataFrame starts no Spark job, on
+    a duplicated and on a distinct input: a plan builder decides nothing
+    from the data."""
+    from rust_html2text_spark.operators.render import render_pages_deduped
+
+    pages, dup = _deduped_inputs(spark, tmp_path)
+    for src in (dup, pages):
+        _, jobs = _jobs_started(spark, lambda: render_pages_deduped(src))
+        assert jobs == 0
 
 
 def test_chunk_documents_reconstruction(spark):
