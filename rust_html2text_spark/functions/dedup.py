@@ -115,14 +115,22 @@ def lsh_candidate_pairs(
     are dropped from THAT band only — a pair sharing a cooler band is
     still found, and byte-identical groups should be removed by
     exact_dup_groups first anyway.  None (default) disables the cap.
+
+    Jobs, with adaptive execution: 4 when the result is materialized,
+    on a small corpus.  The token stream's window exchange, the
+    signature aggregation's exchange (both join sides read it), the
+    build side of the band self-join (a broadcast while the bands are
+    small, an exchange on (band, band_key) when they are not) and the
+    result.  The bands read the aggregation itself: the join back onto
+    the docs that `minhash_signatures` pays only adds the NULL-text
+    rows that banding drops.  `max_bucket` adds one window exchange on
+    the band key.
     """
     if num_hashes % band_size != 0:
         raise ValueError(
             f"num_hashes ({num_hashes}) must be a multiple of band_size "
             f"({band_size}); a partial band would reference missing columns"
         )
-    # banding reads the aggregation itself: minhash_signatures' join back
-    # onto the docs only adds the NULL-text rows that banding would drop
     sigs = _minhash_min(docs, num_hashes, shingle_size)
     # one pass: explode all bands from a single signature computation (a
     # union of per-band selects would re-run the shingle+md5 work per band)
