@@ -6,6 +6,9 @@
 - `knn_lsh`: random-hyperplane LSH bucketing (deterministic hyperplanes) —
   the scale path: corpus hashed once (narrow projection), candidates only
   within matching buckets.
+- `embedding_cosine_dups`: the same hyperplane hashes as band keys of the
+  banded self-join every near-duplicate finder shares
+  (`dedup._banded_pairs`), then the exact cosine on the candidates only.
 
 Dot products use `F.aggregate`/`F.zip_with` (JVM-side, no Python).
 """
@@ -13,6 +16,9 @@ Dot products use `F.aggregate`/`F.zip_with` (JVM-side, no Python).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.window import Window
+
+from rust_html2text_spark.functions.dedup import _banded_pairs
 
 
 def _cosine(a, b):
@@ -38,8 +44,6 @@ def knn_bruteforce(
     embeddings: DataFrame, k: int = 5, num_queries: int = 10
 ) -> DataFrame:
     """Exact top-k cosine neighbours for the first `num_queries` vectors."""
-    from pyspark.sql.window import Window
-
     queries = embeddings.filter(F.col("vec_id") < num_queries).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
     )
@@ -117,8 +121,6 @@ def knn_lsh(
     dim: int = 64,
 ) -> DataFrame:
     """Approximate top-k: candidates restricted to the query's LSH bucket."""
-    from pyspark.sql.window import Window
-
     hashed = embeddings.withColumn(
         "bucket", hyperplane_sign_bits(F.col("embedding"), num_planes, dim)
     )
@@ -171,8 +173,6 @@ def kmeans_refine(
         ),
     )
     for _ in range(iters):
-        from pyspark.sql.window import Window
-
         sim = _cosine(F.col("embedding"), F.col("centroid"))
         wa = Window.partitionBy("vec_id").orderBy(
             F.col("csim").desc(), F.col("cid").asc()
@@ -229,8 +229,6 @@ def knn_ivf(
     but the query branch's `vec_id < num_queries` filter pushes below its
     window, so the duplicated recompute covers only the query vectors.
     """
-    from pyspark.sql.window import Window
-
     if kmeans_iters > 0:
         cents = kmeans_refine(embeddings, num_centroids, kmeans_iters).select(
             "cid", F.col("centroid").alias("cent_emb")
@@ -299,36 +297,13 @@ def embedding_cosine_dups(
     Per-table bucket population is n/2^b in expectation; AQE skew-join
     splits hot buckets.
     """
-    bands = []
-    for t in range(num_tables):
-        bands.append(
-            F.struct(
-                F.lit(t).alias("tbl"),
-                hyperplane_sign_bits(
-                    F.col("embedding"),
-                    bits_per_table,
-                    dim,
-                    plane_offset=t * bits_per_table,
-                ).alias("bucket"),
-            )
+    keys = [
+        hyperplane_sign_bits(
+            F.col("embedding"), bits_per_table, dim, plane_offset=t * bits_per_table
         )
-    hashed = embeddings.select(
-        "vec_id", F.explode(F.array(*bands)).alias("b")
-    ).select("vec_id", F.col("b.tbl").alias("tbl"), F.col("b.bucket").alias("bucket"))
-    l = hashed.alias("l")
-    r = hashed.alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l.tbl") == F.col("r.tbl"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.vec_id") < F.col("r.vec_id")),
-        )
-        .select(
-            F.col("l.vec_id").alias("vec_a"), F.col("r.vec_id").alias("vec_b")
-        )
-        .distinct()
-    )
+        for t in range(num_tables)
+    ]
+    cand = _banded_pairs(embeddings, keys, None, ids=("vec_id", "vec_a", "vec_b"))
     a = embeddings.select(
         F.col("vec_id").alias("vec_a"), F.col("embedding").alias("emb_a")
     )

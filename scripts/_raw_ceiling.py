@@ -8,8 +8,10 @@ import json
 import multiprocessing as mp
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 def work(args):
     chunk, op = args

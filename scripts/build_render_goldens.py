@@ -14,7 +14,7 @@ entry points the Spark operator calls per row), and record:
   url, text, error, text_bytes          (render_pages expectations)
   n_lines, n_link_spans                 (rich/annotated path expectations)
 
-Output: /root/repo/goldens/render_goldens.parquet (committed).
+Output: goldens/render_goldens.parquet in this checkout (committed).
 
 Usage: python scripts/build_render_goldens.py [sf_dir ...]
 """
@@ -24,15 +24,17 @@ from __future__ import annotations
 import hashlib
 import json
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 DEFAULT_SF_DIRS = [
     "/root/testdata/sf0.001",
     "/root/testdata/sf0.01",
     "/root/testdata/sf0.1",
 ]
-OUT = "/root/repo/goldens/render_goldens.parquet"
+OUT = str(REPO / "goldens" / "render_goldens.parquet")
 WIDTH = 80
 
 

@@ -13,8 +13,10 @@ from __future__ import annotations
 
 import math
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 
 def normalize(rows, colnames):

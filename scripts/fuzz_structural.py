@@ -23,8 +23,10 @@ from __future__ import annotations
 import random
 import sys
 import zlib
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 
 def mutate(rng: random.Random, base: bytes) -> bytes:

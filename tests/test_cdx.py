@@ -4,10 +4,12 @@ parsing, file round trip (plain + gz), and fetch-plan selection."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 
 @pytest.fixture(scope="module")
@@ -274,7 +276,7 @@ def test_cli_cdx_mode_end_to_end(spark, tmp_path, monkeypatch, capsys):
     from pyspark.sql import SparkSession
 
     monkeypatch.setattr(SparkSession, "stop", lambda self: None)
-    sys.path.insert(0, "/root/repo/scripts")
+    sys.path.insert(0, str(REPO / "scripts"))
     import run_job
 
     run_job.main()

@@ -5,10 +5,12 @@ and the opt-in operator path with lineage columns."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 from rust_html2text_spark.engine.charset import (  # noqa: E402
     decode_html,
@@ -447,7 +449,7 @@ def test_cli_stream_export_wet(spark, tmp_path, monkeypatch, capsys):
          "--master", "local[4]"],
     )
     monkeypatch.setattr(SparkSession, "stop", lambda self: None)
-    sys.path.insert(0, "/root/repo/scripts")
+    sys.path.insert(0, str(REPO / "scripts"))
     import run_job
 
     run_job.main()

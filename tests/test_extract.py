@@ -5,10 +5,12 @@ parity with the single-process engine."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 from rust_html2text_spark.engine.extract import (  # noqa: E402
     extract_main,

@@ -17,8 +17,10 @@ as a number, not a vibe.
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 from rust_html2text_spark.engine.extract import extract_main  # noqa: E402
 

@@ -7,10 +7,12 @@ from __future__ import annotations
 import struct
 import sys
 import zlib
+from pathlib import Path
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 from rust_html2text_spark.functions.multimodal import (  # noqa: E402
     _audio_samples,

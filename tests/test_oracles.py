@@ -5,14 +5,17 @@ oracles' goldens parquet is present and well-formed."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 duckdb = pytest.importorskip("duckdb")
 
 SF_DIR = "/root/testdata/sf0.001"
+GOLDENS = REPO / "goldens" / "render_goldens.parquet"
 TABLES = (
     "region nation customer supplier part orders lineitem events "
     "documents embeddings".split()
@@ -61,7 +64,7 @@ def test_render_goldens_parquet_wellformed(con):
     rel = con.sql(
         "SELECT count(*) AS n, count(DISTINCT doc_key) AS k,"
         " sum(CASE WHEN error IS NULL THEN 0 ELSE 1 END) AS errs"
-        " FROM read_parquet('/root/repo/goldens/render_goldens.parquet')"
+        f" FROM read_parquet('{GOLDENS}')"
     ).fetchone()
     n, k, errs = rel
     assert n >= 6000 and k == n
@@ -69,7 +72,7 @@ def test_render_goldens_parquet_wellformed(con):
     # every sf0.001 document is covered by a golden
     (missing,) = con.sql(
         "SELECT count(*) FROM documents d WHERE NOT EXISTS ("
-        "  SELECT 1 FROM read_parquet('/root/repo/goldens/render_goldens.parquet') g"
+        f"  SELECT 1 FROM read_parquet('{GOLDENS}') g"
         "  WHERE g.doc_key = md5(CAST(d.doc_id AS VARCHAR) || '|' || d.source"
         "        || '|' || d.lang || '|' || d.text))"
     ).fetchone()

@@ -9,7 +9,8 @@ import json
 import sys
 from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 from rust_html2text_spark.engine.api import (  # noqa: E402
     Config,

@@ -8,10 +8,12 @@ from __future__ import annotations
 import re
 import sys
 import zlib
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 from rust_html2text_spark.engine.pdfparse import (  # noqa: E402
     Lexer,

@@ -8,10 +8,12 @@ parser."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 from rust_html2text_spark.functions.robots import (  # noqa: E402
     _pattern_to_like,

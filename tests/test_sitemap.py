@@ -5,10 +5,12 @@ entity expansion through the house XML parser, and Spark parity."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 from rust_html2text_spark.functions.sitemap import (  # noqa: E402
     MAX_SITEMAP_URLS,

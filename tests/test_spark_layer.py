@@ -208,6 +208,49 @@ def test_simhash_near_dups_guaranteed_recall(spark):
         assert banded == exact, f"max_hamming={max_h}"
 
 
+def test_simhash_near_dups_max_bucket_matches_python_banding(spark):
+    """With max_bucket, the pairs are exactly those of a pure-Python
+    banding of simhash_py that drops every (band, key) bucket holding
+    more than max_bucket docs, then keeps the pairs within max_hamming."""
+    from collections import Counter, defaultdict
+    from itertools import accumulate
+
+    from rust_html2text_spark.functions.dedup import (
+        simhash_band_widths,
+        simhash_near_dups,
+        simhash_py,
+    )
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    max_h, cap = 8, 20
+    sims = {
+        r.doc_id: simhash_py(r.text) & ((1 << 64) - 1)
+        for r in docs.select("doc_id", "text").collect()
+        if r.text is not None
+    }
+    widths = simhash_band_widths(max_h)
+    buckets = defaultdict(list)
+    for doc_id, h in sims.items():
+        for band, (off, w) in enumerate(zip(accumulate(widths, initial=0), widths)):
+            buckets[band, (h >> off) & ((1 << w) - 1)].append(doc_id)
+    sizes = Counter(len(m) for m in buckets.values())
+    assert any(n > cap for n in sizes) and any(1 < n <= cap for n in sizes)
+    expected = set()
+    for members in buckets.values():
+        if len(members) > cap:
+            continue
+        for a in members:
+            for b in members:
+                d = bin(sims[a] ^ sims[b]).count("1")
+                if a < b and d <= max_h:
+                    expected.add((a, b, d))
+    got = simhash_near_dups(docs, max_hamming=max_h, max_bucket=cap).collect()
+    assert len(got) == len({(r.doc_a, r.doc_b) for r in got})
+    assert {(r.doc_a, r.doc_b, r.hamming) for r in got} == expected
+    uncapped = simhash_near_dups(docs, max_hamming=max_h).collect()
+    assert {(a, b) for a, b, _ in expected} < {(r.doc_a, r.doc_b) for r in uncapped}
+
+
 def test_minhash_preserves_null_text_docs(spark):
     from rust_html2text_spark.functions.dedup import (
         lsh_candidate_pairs,
@@ -754,18 +797,33 @@ def _random_pair_graph(seed):
     return pairs
 
 
-@pytest.mark.parametrize("seed", [1, 2, 3, 4])
-def test_dup_components_matches_union_find(spark, seed):
+def _shuffled_path(n, seed):
+    """One path over n ids in a seeded random order: the component's
+    minimum sits anywhere along it, and so do many local minima."""
+    import random
+
+    ids = list(range(n))
+    random.Random(seed).shuffle(ids)
+    return list(zip(ids, ids[1:]))
+
+
+@pytest.mark.parametrize("graph", [1, 2, 3, 4, "path300"])
+def test_dup_components_matches_union_find(spark, graph):
     """component_id is the minimum doc_id of the node's component, as a
-    union-find over the same pairs computes it.  Shuffled ids along a
-    path slow the label propagation to about one round per 1.3 hops of
-    diameter (29 rounds for seed 1's diameter of 39), hence the cap."""
+    union-find over the same pairs computes it, within the default
+    max_iterations.  Shuffled ids along a path leave local minima that a
+    pointer jump alone cannot pass (29 rounds for seed 1's diameter of
+    39, and the 300-node path does not converge in 25); the hooking step
+    converges both in a handful of rounds."""
     from rust_html2text_spark.functions.dedup import dup_components
 
-    pairs = _random_pair_graph(seed)
+    if graph == "path300":
+        pairs = _shuffled_path(300, seed=300)
+    else:
+        pairs = _random_pair_graph(graph)
     df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
     stats = {}
-    labels = dup_components(df, max_iterations=64, stats=stats)
+    labels = dup_components(df, stats=stats)
     got = {r.doc_id: r.component_id for r in labels.collect()}
     assert stats["converged"]
     assert got == _components_by_union_find(pairs)

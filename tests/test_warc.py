@@ -7,10 +7,12 @@ from __future__ import annotations
 import gzip
 import sys
 from datetime import datetime
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 from rust_html2text_spark.sources.warc import (  # noqa: E402
     iter_warc_file,

@@ -10,8 +10,10 @@ corpus; these cover the recovery/namespace space around it.
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 from rust_html2text_spark.engine.api import html_to_text  # noqa: E402
 
