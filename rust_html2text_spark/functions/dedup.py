@@ -72,13 +72,15 @@ def _shingle_stream(
 
     Built with posexplode + window `lead` (fully whole-stage codegen; Spark
     higher-order-function lambdas are interpreted and ~2-3x slower), so it
-    costs one shuffle of the token stream."""
+    costs one shuffle of the token stream (none at n = 1)."""
+    if n < 1:
+        raise ValueError("shingle size must be >= 1")
     w = Window.partitionBy("doc_id").orderBy("pos")
     leads = [F.lead("tok", k).over(w).alias(f"l{k}") for k in range(1, n)]
     return (
         rows.select("doc_id", *carry, F.posexplode(toks).alias("pos", "tok"))
         .select("doc_id", *carry, "tok", *leads, "pos")
-        .filter(F.col(f"l{n - 1}").isNotNull())
+        .filter(F.col(f"l{n - 1}" if n > 1 else "tok").isNotNull())
         .select(
             "doc_id",
             *carry,

@@ -107,129 +107,49 @@ def pack_sequences(
     )
 
 
-def _chunk_batches(batches, key_col: str, text_col: str, ct: int, st: int):
-    """The outlier lane of `chunk_documents`: `ct`-token chunks every
-    `st` tokens, sliced from each doc's token list in place."""
-    import re
-
-    import pandas as pd
-
-    # Java-regex \s ([ \t\n\x0B\f\r]) and Spark trim (space only), so
-    # both lanes tokenize identically down to hostile whitespace
-    split_re = re.compile("[ \t\n\x0b\f\r]+")
-    out_keys, out_ids, out_texts, out_ns = [], [], [], []
-
-    def flush():
-        nonlocal out_keys, out_ids, out_texts, out_ns
-        pdf = pd.DataFrame(
-            {
-                key_col: out_keys,
-                "chunk_id": out_ids,
-                "chunk_text": out_texts,
-                "n_tokens": out_ns,
-            }
-        )
-        out_keys, out_ids, out_texts, out_ns = [], [], [], []
-        return pdf
-
-    for pdf in batches:
-        for key, text in zip(pdf[key_col], pdf[text_col]):
-            tokens = split_re.split(text.strip(" "))
-            nt = len(tokens)
-            if nt <= ct:
-                count = 1
-            else:
-                count = (nt - ct + st - 1) // st + 1
-            for cid in range(count):
-                s = cid * st
-                out_keys.append(key)
-                out_ids.append(cid)
-                out_texts.append(" ".join(tokens[s : s + ct]))
-                out_ns.append(min(ct, nt - s))
-                if len(out_keys) >= 2048:
-                    yield flush()
-    if out_keys:
-        yield flush()
-
-
 def chunk_documents(
     docs: DataFrame,
     chunk_tokens: int = 512,
     stride: int = 512,
     key_col: str = "doc_id",
     text_col: str = "text",
-    outlier_tokens: int = 8192,
 ) -> DataFrame:
     """Split documents into fixed-token chunks for context-window
     construction; stride < chunk_tokens gives overlapping chunks (the
     standard sliding-window pretraining shape).  The final (possibly
     short) chunk starts at the last stride boundary that still contains
-    unseen tokens.
+    unseen tokens.  Tokens are the text trimmed of spaces and split on
+    Java-regex whitespace runs (`\\s+`); NULL text has no chunk.
 
-    Two lanes, one result:
-    - docs ≤ `outlier_tokens` tokens: narrow whole-stage-codegen
-      expressions (split + sequence explode + slice) — no shuffle, no
-      UDF.  The explode duplicates the full token array into every chunk
-      row before the slice, so per-doc intermediate memory is
-      ~n²/stride tokens; the threshold bounds that to
-      outlier_tokens²/stride (default 8192² / 512 = 128k tokens).
-    - docs above it (the <<1% crawl tail: concatenated logs, book dumps)
-      stream through a mapInPandas chunker that slices the token list
-      in place and emits chunk batches — O(n) per doc, no duplication,
-      so a single 10M-token doc cannot OOM its task.
-    Both lanes implement identical tokenization (Java \\s semantics) and
-    chunk math; the union is the whole corpus.
+    One narrow plan, no shuffle, no Python: the token array is
+    split once per doc, and every chunk is sliced from it inside one
+    `transform` over the chunk ids, then `inline`d into rows.  No chunk
+    row carries the whole token array, so a doc's intermediate size
+    equals its output.  Bound: one document's whole chunk output, about
+    n·chunk_tokens/stride tokens for an n-token doc, is built as one
+    Spark array, so it must fit in one array (and one task's memory).
 
     Returns (key, chunk_id, chunk_text, n_tokens).
     """
     if stride <= 0 or chunk_tokens <= 0:
         raise ValueError("chunk_tokens and stride must be positive")
-    if outlier_tokens < chunk_tokens:
-        raise ValueError("outlier_tokens must be >= chunk_tokens")
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
-    n = F.size(toks)
+    base = docs.filter(F.col(text_col).isNotNull()).select(
+        F.col(key_col), F.split(F.trim(F.col(text_col)), r"\s+").alias("_toks")
+    )
+    n = F.size("_toks")
     n_chunks = F.when(n <= chunk_tokens, F.lit(1)).otherwise(
         F.floor((n - chunk_tokens + stride - 1) / stride) + 1
     )
-    nonnull = docs.filter(F.col(text_col).isNotNull())
 
-    base = nonnull.filter(n <= outlier_tokens).select(
-        F.col(key_col),
-        toks.alias("_toks"),
-        n.alias("_n"),
-        F.explode(F.sequence(F.lit(0).cast("long"), n_chunks - 1)).alias(
-            "chunk_id"
-        ),
-    )
-    start = (F.col("chunk_id") * stride).cast("int")
-    small = base.select(
-        key_col,
-        "chunk_id",
-        F.array_join(F.slice("_toks", start + 1, chunk_tokens), " ").alias(
-            "chunk_text"
-        ),
-        F.least(F.lit(chunk_tokens), F.col("_n") - start)
-        .cast("long")
-        .alias("n_tokens"),
-    )
-
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    out_schema = StructType(
-        [
-            StructField(key_col, docs.schema[key_col].dataType),
-            StructField("chunk_id", LongType()),
-            StructField("chunk_text", StringType()),
-            StructField("n_tokens", LongType()),
-        ]
-    )
-    ct, st = int(chunk_tokens), int(stride)
-
-    big = (
-        nonnull.filter(n > outlier_tokens)
-        .select(key_col, text_col)
-        .mapInPandas(
-            lambda it: _chunk_batches(it, key_col, text_col, ct, st), out_schema
+    def chunk(i):
+        start = (i * stride).cast("int")
+        return F.struct(
+            i.alias("chunk_id"),
+            F.array_join(F.slice("_toks", start + 1, chunk_tokens), " ").alias(
+                "chunk_text"
+            ),
+            F.least(F.lit(chunk_tokens), n - start).cast("long").alias("n_tokens"),
         )
-    )
-    return small.unionByName(big)
+
+    chunks = F.transform(F.sequence(F.lit(0).cast("long"), n_chunks - 1), chunk)
+    return base.select(key_col, F.inline(chunks))

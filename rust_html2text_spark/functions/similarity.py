@@ -6,6 +6,9 @@
 - `knn_lsh`: random-hyperplane LSH bucketing (deterministic hyperplanes) —
   the scale path: corpus hashed once (narrow projection), candidates only
   within matching buckets.
+- `knn_ivf`: inverted-file lists; exact cosine only within probed lists.
+  The three kNN finders differ only in their candidate join and share one
+  top-k tail (`_top_k`).
 - `embedding_cosine_dups`: the same hyperplane hashes as band keys of the
   banded self-join every near-duplicate finder shares
   (`dedup._banded_pairs`), then the exact cosine on the candidates only.
@@ -40,6 +43,29 @@ def _cosine(a, b):
     return dot / (norm_a * norm_b)
 
 
+def _top_k(queries: DataFrame, corpus: DataFrame, k: int, on=None) -> DataFrame:
+    """The tail every kNN finder shares: broadcast the queries (query_id,
+    q_emb) onto the corpus (neighbor_id, c_emb) on the finder's candidate
+    condition `on` (None = every corpus vector), drop self-pairs, score the
+    rounded cosine and keep the top k per query, ties broken by the lower
+    neighbor_id.  Returns (query_id, neighbor_id, rank, cosine)."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        corpus.join(F.broadcast(queries), on)
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.round(_cosine(F.col("q_emb"), F.col("c_emb")), 6).alias("cosine"),
+        )
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", "cosine")
+    )
+
+
 def knn_bruteforce(
     embeddings: DataFrame, k: int = 5, num_queries: int = 10
 ) -> DataFrame:
@@ -50,22 +76,7 @@ def knn_bruteforce(
     corpus = embeddings.select(
         F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_emb")
     )
-    scored = corpus.join(F.broadcast(queries)).filter(
-        F.col("neighbor_id") != F.col("query_id")
-    )
-    scored = scored.select(
-        "query_id",
-        "neighbor_id",
-        F.round(_cosine(F.col("q_emb"), F.col("c_emb")), 6).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _top_k(queries, corpus, k)
 
 
 def hyperplane_signs(num_planes: int, dim: int, plane_offset: int = 0) -> list[list[float]]:
@@ -134,23 +145,7 @@ def knn_lsh(
         F.col("embedding").alias("c_emb"),
         F.col("bucket").alias("c_bucket"),
     )
-    scored = (
-        corpus.join(F.broadcast(queries), F.col("c_bucket") == F.col("q_bucket"))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(_cosine(F.col("q_emb"), F.col("c_emb")), 6).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _top_k(queries, corpus, k, F.col("c_bucket") == F.col("q_bucket"))
 
 
 def kmeans_refine(
@@ -256,23 +251,7 @@ def knn_ivf(
     ).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"), "cid"
     )
-    scored = (
-        corpus.join(F.broadcast(queries), "cid")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(_cosine(F.col("q_emb"), F.col("c_emb")), 6).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _top_k(queries, corpus, k, "cid")
 
 
 def embedding_cosine_dups(

@@ -4,7 +4,8 @@ The reference is a pure batch scalar function (SURVEY.md §2.5 — no
 streaming operators), but a crawl-ingest deployment renders pages as WARC
 batches land.  `readStream` file source → the same Arrow-batched render
 stage → parquet sink with checkpointing gives exactly-once output and
-automatic resume; the render UDF is shared with the batch path so
+automatic resume.  Every stream runs the batch operators themselves
+(render_pages, extract_pages, extract_pdf_pages, extract_mixed_pages), so
 semantics cannot drift.
 """
 
@@ -12,7 +13,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from rust_html2text_spark.operators.extract import extract_pages
 from rust_html2text_spark.operators.kernel import map_kernel
+from rust_html2text_spark.operators.pdf import extract_mixed_pages, extract_pdf_pages
 from rust_html2text_spark.operators.render import (
     RENDER_SCHEMA,
     render_pages,
@@ -37,12 +40,6 @@ def stream_pages(
         static = spark.read.parquet(input_path)
         reader = reader.schema(static.schema)
     return reader.load(input_path)
-
-
-def render_stream(pages: DataFrame, width: int = 80, config_kwargs: dict | None = None) -> DataFrame:
-    """Streaming render: the batch render_pages operator at its defaults
-    (scan-aligned, single scan)."""
-    return render_pages(pages, width, config_kwargs)
 
 
 def crawl_rate_metrics(
@@ -95,47 +92,6 @@ def render_stream_with_ts(pages: DataFrame, width: int = 80) -> DataFrame:
     )
 
 
-def start_render_stream(
-    spark: SparkSession,
-    input_path: str,
-    output_path: str,
-    checkpoint_path: str,
-    width: int = 80,
-    config_kwargs: dict | None = None,
-):
-    """Start the streaming query (exactly-once parquet sink + checkpoint)."""
-    pages = stream_pages(spark, input_path)
-    rendered = render_stream(pages, width=width, config_kwargs=config_kwargs)
-    return (
-        rendered.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .start()
-    )
-
-
-def extract_stream(
-    pages: DataFrame,
-    width: int = 80,
-    config_kwargs: dict | None = None,
-    charset_sniff: bool = False,
-) -> DataFrame:
-    """Streaming main-content extraction: the batch extract_pages
-    operator at its defaults (semantics cannot drift), including the opt-in
-    WHATWG charset sniff + encoding lineage."""
-    from rust_html2text_spark.operators.extract import extract_pages
-
-    return extract_pages(pages, width, config_kwargs, charset_sniff=charset_sniff)
-
-
-def pdf_extract_stream(pages: DataFrame) -> DataFrame:
-    """Streaming PDF extraction over a (url, pdf) stream."""
-    from rust_html2text_spark.operators.pdf import extract_pdf_pages
-
-    return extract_pdf_pages(pages)
-
-
 def start_extraction_stream(
     spark: SparkSession,
     input_path: str,
@@ -146,26 +102,20 @@ def start_extraction_stream(
     config_kwargs: dict | None = None,
     charset_sniff: bool = False,
 ):
-    """start_render_stream generalized over the extraction tier:
-    mode = render | extract | pdf | mixed (CLI --stream --mode ...)."""
+    """Start the streaming query (exactly-once parquet sink + checkpoint)
+    over the batch operator of `mode` = render | extract | pdf | mixed
+    (CLI --stream --mode ...)."""
     pages = stream_pages(spark, input_path)
     if mode == "extract":
-        out = extract_stream(
-            pages,
-            width=width,
-            config_kwargs=config_kwargs,
-            charset_sniff=charset_sniff,
-        )
+        out = extract_pages(pages, width, config_kwargs, charset_sniff=charset_sniff)
     elif mode == "pdf":
-        out = pdf_extract_stream(pages)
+        out = extract_pdf_pages(pages)
     elif mode == "mixed":
-        from rust_html2text_spark.operators.pdf import extract_mixed_pages
-
         out = extract_mixed_pages(
             pages, width, config_kwargs, charset_sniff=charset_sniff
         )
     elif mode == "render":
-        out = render_stream(pages, width=width, config_kwargs=config_kwargs)
+        out = render_pages(pages, width, config_kwargs)
     else:
         raise ValueError(f"unknown mode {mode!r}")
     return (
@@ -197,7 +147,7 @@ def curate_stream(
         tokens_col,
     )
 
-    rendered = render_stream(pages, width).filter(F.col("error").isNull())
+    rendered = render_pages(pages, width).filter(F.col("error").isNull())
     scored = rendered.select(
         "url",
         "text",
@@ -263,8 +213,8 @@ def start_warc_render_stream(
 ):
     """WARC archives → rendered text, streaming end to end: exactly-once
     parquet output with checkpointed resume, same render stage as batch."""
-    rendered = render_stream(
-        stream_warc_pages(spark, input_path), width=width, config_kwargs=config_kwargs
+    rendered = render_pages(
+        stream_warc_pages(spark, input_path), width, config_kwargs
     )
     return (
         rendered.writeStream.format("parquet")

@@ -395,9 +395,10 @@ def test_py_file_added_later_is_importable(spark, pages, tmp_path):
 
 # -- keyword surface -------------------------------------------------------
 
-# Every keyword a caller can set on the operator layer.  Partitioning is
-# the caller's (df.repartition before the call), so none appears here; a
-# new option needs an edit to this table in the same change.
+# Every keyword a caller can set on the operator layer and on
+# functions.pipeline.chunk_documents.  Partitioning is the caller's
+# (df.repartition before the call), so none appears here; a new option
+# needs an edit to this table in the same change.
 PARAMETERS = {
     "operators.render.render_pages": ("df", "width", "config_kwargs", "render_kwargs"),
     "operators.render.render_pages_deduped": ("df", "width", "config_kwargs"),
@@ -416,10 +417,9 @@ PARAMETERS = {
     "operators.pdf.extract_mixed_pages": (
         "df", "width", "config_kwargs", "charset_sniff"
     ),
-    "streaming.pipeline.extract_stream": (
-        "pages", "width", "config_kwargs", "charset_sniff"
+    "functions.pipeline.chunk_documents": (
+        "docs", "chunk_tokens", "stride", "key_col", "text_col"
     ),
-    "streaming.pipeline.pdf_extract_stream": ("pages",),
     "operators.kernel.map_kernel": (
         "pages", "setup", "schema", "payload", "passthrough", "defaults",
     ),

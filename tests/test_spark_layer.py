@@ -116,13 +116,13 @@ def test_resumable_sink(spark, tmp_path):
 def test_streaming_matches_batch(spark, tmp_path):
     from rust_html2text_spark.operators.render import render_pages
     from rust_html2text_spark.sources.corpus import load_pages
-    from rust_html2text_spark.streaming.pipeline import start_render_stream
+    from rust_html2text_spark.streaming.pipeline import start_extraction_stream
 
     pages = load_pages(spark, SF_DIR).limit(50)
     inp = str(tmp_path / "in")
     pages.write.parquet(inp)
 
-    q = start_render_stream(
+    q = start_extraction_stream(
         spark,
         inp,
         str(tmp_path / "outp"),
@@ -1199,46 +1199,145 @@ def test_simhash_scale_default_guard(spark):
             ), kwargs
 
 
-def test_chunk_documents_outlier_lane_parity(spark):
-    """VERDICT r3 #3: docs above outlier_tokens route through a mapInPandas
-    chunker (O(n) per doc, no token-array duplication in an explode); the
-    two lanes must produce identical chunks on a corpus spiked with a
-    100k-token document — including hostile whitespace tokenization."""
+def _java_ws_tokens(text):
+    """Spark's split(trim(text), '\\s+'): trim strips spaces only, and
+    Java-regex \\s is [ \\t\\n\\x0B\\f\\r] (no Unicode spaces)."""
+    import re
+
+    return re.split("[ \t\n\x0b\f\r]+", text.strip(" "))
+
+
+def test_chunk_documents_matches_python_rule(spark):
+    """chunk_documents is one narrow plan (no Python chunker, no second
+    lane), and every row equals the chunking rule written in Python, on a
+    corpus spiked with a 100k-token document, hostile whitespace, empty
+    and blank texts, a NULL and a U+3000 space."""
+    import re
+
     from pyspark.sql import functions as F
 
     from rust_html2text_spark.functions.pipeline import chunk_documents
 
     big_text = " ".join(f"tok{i}" for i in range(100_000))
-    hostile = "\t lead nbsp\ttab\nnl\x0bvt\x0cff\rcr  multi   space "
+    hostile = "\t lead nbsp\ttab\nnl\x0bvt\x0cff\rcr  multi   space "
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
         "doc_id", "text"
-    ).limit(50)
-    spiked = docs.unionByName(
+    )
+    spiked = docs.limit(50).unionByName(
         spark.createDataFrame(
-            [(100001, big_text), (100002, hostile)], "doc_id long, text string"
+            [
+                (100001, big_text),
+                (100002, hostile),
+                (100003, ""),
+                (100004, "   "),
+                (100005, None),
+                (100006, "wide\u3000space  here"),
+            ],
+            "doc_id long, text string",
         )
     )
 
-    def key(rows):
-        return sorted((r.doc_id, r.chunk_id, r.chunk_text, r.n_tokens) for r in rows)
+    def py_chunks(doc_id, text, ct, st):
+        toks = _java_ws_tokens(text)
+        n = len(toks)
+        count = 1 if n <= ct else (n - ct + st - 1) // st + 1
+        return [
+            (doc_id, i, " ".join(toks[i * st : i * st + ct]), min(ct, n - i * st))
+            for i in range(count)
+        ]
 
-    routed = chunk_documents(spiked, chunk_tokens=64, stride=48, outlier_tokens=512)
-    codegen_only = chunk_documents(
-        spiked, chunk_tokens=64, stride=48, outlier_tokens=1 << 30
-    )
-    assert key(routed.collect()) == key(codegen_only.collect())
-    # the outlier lane is actually in the plan (a MapInPandas node)
-    plan = routed._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan
-    # reconstruction property holds across the lane boundary
+    src = [(r.doc_id, r.text) for r in spiked.collect() if r.text is not None]
+    for ct, st in ((64, 48), (3, 2)):
+        got = chunk_documents(spiked, chunk_tokens=ct, stride=st)
+        expected = sorted(c for d, t in src for c in py_chunks(d, t, ct, st))
+        assert sorted(tuple(r) for r in got.collect()) == expected, (ct, st)
+    # chunk 0 of the giant doc rebuilds its first chunk_tokens tokens
     got = {
         r.doc_id: r.chunk_text
-        for r in routed.filter(F.col("chunk_id") == 0).collect()
+        for r in chunk_documents(spiked, chunk_tokens=64, stride=48)
+        .filter(F.col("chunk_id") == 0)
+        .collect()
     }
     assert got[100001].split(" ") == big_text.split(" ")[:64]
 
-    with __import__("pytest").raises(ValueError):
-        chunk_documents(spiked, chunk_tokens=64, outlier_tokens=32)
+    plan = (
+        chunk_documents(docs, chunk_tokens=64, stride=48)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert plan.count("FileScan parquet") == 1, plan
+    assert len(re.findall(r"\bGenerate\b", plan)) == 1, plan
+    for node in ("MapInPandas", "Union", "Exchange"):
+        assert node not in plan, plan
+
+    with pytest.raises(ValueError):
+        chunk_documents(spiked, chunk_tokens=64, stride=0)
+
+
+def test_shingle_size_one_matches_python(spark):
+    """Unigram shingles: MinHash signatures, LSH pairs and duplicated-span
+    coverage at shingle size 1 equal the same rules written in Python over
+    the same lower-cased tokens; a size below 1 is refused."""
+    import hashlib
+    from collections import Counter
+    from itertools import combinations
+
+    from rust_html2text_spark.functions.dedup import (
+        duplicated_span_fraction,
+        lsh_candidate_pairs,
+        minhash_signatures,
+    )
+
+    rows = [
+        (1, "A b a c"),
+        (2, "b  B\tb"),
+        (3, None),
+        (4, "z"),
+        (5, "c a B"),
+        (6, " q r s t "),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    toks = {d: _java_ws_tokens(t.lower()) for d, t in rows if t is not None}
+
+    def py_sig(ts):
+        return tuple(
+            min(hashlib.md5(f"{t}#{i}".encode()).hexdigest() for t in ts)
+            for i in range(4)
+        )
+
+    sigs = {
+        r.doc_id: (r.mh0, r.mh1, r.mh2, r.mh3)
+        for r in minhash_signatures(docs, num_hashes=4, shingle_size=1).collect()
+    }
+    assert sigs == {
+        d: (py_sig(toks[d]) if d in toks else (None,) * 4) for d, _ in rows
+    }
+
+    py_pairs = {
+        (a, b)
+        for a, b in combinations(sorted(toks), 2)
+        if any(py_sig(toks[a])[i : i + 2] == py_sig(toks[b])[i : i + 2] for i in (0, 2))
+    }
+    got_pairs = lsh_candidate_pairs(docs, num_hashes=4, band_size=2, shingle_size=1)
+    assert {(r.doc_a, r.doc_b) for r in got_pairs.collect()} == py_pairs
+    assert (1, 5) in py_pairs  # same unigram set {a, b, c}
+
+    counts = Counter(t for ts in toks.values() for t in ts)
+    spans = {
+        r.doc_id: (r.n_tokens, r.dup_tokens)
+        for r in duplicated_span_fraction(docs, k=1).collect()
+    }
+    assert spans == {
+        d: (len(ts), sum(counts[t] > 1 for t in ts)) for d, ts in toks.items()
+    }
+
+    for call in (
+        lambda: minhash_signatures(docs, shingle_size=0),
+        lambda: duplicated_span_fraction(docs, k=0),
+    ):
+        with pytest.raises(ValueError):
+            call()
 
 
 def test_lang_id_ten_languages(spark):
