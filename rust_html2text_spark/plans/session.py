@@ -30,9 +30,10 @@ def get_spark(
 
     The one deployment rule: the Python workers import the package from
     the directory that holds it (`spark.executorEnv.PYTHONPATH`), so a
-    session on any local master works from any cwd.  A shipped
-    `--py-files` zip still wins on every worker: PySpark puts it ahead
-    of PYTHONPATH."""
+    session on any local master works from any cwd, and never from the
+    cwd (`PYTHONSAFEPATH`), even when the cwd holds another copy of the
+    package.  A shipped `--py-files` zip still wins on every worker:
+    PySpark puts it ahead of PYTHONPATH."""
     if master is None:
         if "PYSPARK_GATEWAY_PORT" in os.environ:  # launched by spark-submit
             SparkContext._ensure_initialized()
@@ -53,6 +54,9 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.executorEnv.PYTHONPATH", package_root)
+        # `python -m pyspark.daemon` would put the worker's cwd ahead of
+        # PYTHONPATH: a cwd holding another package tree must not win
+        .config("spark.executorEnv.PYTHONSAFEPATH", "1")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

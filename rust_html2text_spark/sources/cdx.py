@@ -36,6 +36,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from rust_html2text_spark.functions.robots import HOST_RE, PATH_RE
+
 __all__ = [
     "surt_key_col",
     "parse_cdx_lines",
@@ -51,9 +53,6 @@ CDX_JSON_SCHEMA = (
     "languages string, charset string"
 )
 
-_HOST_RE = r"^[a-zA-Z][a-zA-Z0-9+.\-]*://([^/?#]+)"
-_PATHQ_RE = r"^[a-zA-Z][a-zA-Z0-9+.\-]*://[^/?#]+([^#]*)"
-
 
 def surt_key_col(url_col):
     """SURT urlkey for a URL column, whole-stage codegen:
@@ -61,10 +60,10 @@ def surt_key_col(url_col):
     Port and userinfo are kept as part of the last host label if
     present (rare in crawl data; the key stays deterministic)."""
     url = F.col(url_col) if isinstance(url_col, str) else url_col
-    host = F.lower(F.regexp_extract(url, _HOST_RE, 1))
+    host = F.lower(F.regexp_extract(url, HOST_RE, 1))
     host = F.regexp_replace(host, r"^www\.", "")
     rev = F.array_join(F.reverse(F.split(host, r"\.")), ",")
-    pathq = F.lower(F.regexp_extract(url, _PATHQ_RE, 1))
+    pathq = F.lower(F.regexp_extract(url, PATH_RE, 1))
     pathq = F.when(pathq == "", F.lit("/")).otherwise(pathq)
     return F.concat(rev, F.lit(")"), pathq)
 

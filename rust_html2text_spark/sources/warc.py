@@ -9,15 +9,21 @@ with pure-stdlib parsing.
 
 Scale design (100 TB = ~100k WARC files / 1000 executors):
 - **Parallelism by file**: one task per WARC file (a DataFrame of paths,
-  round-robin repartitioned).  gzip is not block-splittable, but at ~1 GB
+  one slice per path).  gzip is not block-splittable, but at ~1 GB
   a file IS the right task granularity; 100k tasks schedule fine.
 - **Bounded memory**: records are streamed — chunked reads through a
   zlib decompressor into an incremental record parser, batches flushed to
-  Arrow every `records_per_batch` records or `batch_bytes` of html.  Peak
-  memory is one batch + one record, never the decompressed file.
+  Arrow every 256 records or 32 MiB of html.  Peak memory is one batch +
+  one record, never the decompressed file.
+- **One ingest path**: the file reader (read_warc_pages), the CDX range
+  reader (read_warc_ranges) and the streaming archive reader
+  (streaming/pipeline.stream_warc_pages) hand their decompressed streams
+  to one record batcher, so they share the batch bounds, the columns
+  and the error containment.
 - **Robustness**: non-response records (warcinfo/request/metadata) are
-  skipped; a malformed record aborts only the rest of its file (crawl
-  archives do truncate), never the task.
+  skipped; a malformed record or a gzip fault aborts only the rest of
+  its file, member or archive (crawl archives do truncate), never the
+  task.
 
 The writer emits the same record-per-gzip-member layout (deterministic:
 fixed mtime, md5-derived record ids) and exists so tests and local runs
@@ -269,50 +275,24 @@ def _file_chunks(path: str) -> Iterator[bytes]:
         yield from _fileobj_chunks(fh)
 
 
-def _iter_warc_pages_ex(chunks, include_types):
-    """(url, warc_ts, payload, http_charset, ingest_error) per matching
-    record — ingest_error is non-None when the HTTP body claimed an
-    encoding that could not be decoded (payload then degrades to the
-    framed body); http_charset is the Content-Type charset= label."""
+def _iter_pages(chunks) -> Iterator[tuple]:
+    """(url, warc_ts, payload, http_charset, ingest_error) per response
+    record of a decompressed WARC stream.  ingest_error is non-None when
+    the HTTP body claimed an encoding that could not be decoded (payload
+    then degrades to the framed body); http_charset is the Content-Type
+    charset= label."""
     for headers, block in iter_warc_records(chunks):
-        if headers.get("warc-type") not in include_types:
-            continue
         url = headers.get("warc-target-uri")
-        if url is None:
+        if headers.get("warc-type") != "response" or url is None:
             continue
         ts = _parse_warc_date(headers.get("warc-date", ""))
-        payload, charset, err = _decode_http_payload(block)
-        yield url, ts, payload, charset, err
+        yield (url, ts) + _decode_http_payload(block)
 
 
-def _iter_warc_pages(chunks, include_types):
-    for url, ts, payload, _cs, _err in _iter_warc_pages_ex(chunks, include_types):
-        yield url, ts, payload
-
-
-def iter_warc_file(
-    path: str, include_types: tuple[str, ...] = ("response",)
-) -> Iterator[tuple[str, datetime | None, bytes]]:
-    """Yield (url, warc_ts, html_bytes) for each matching record."""
-    yield from _iter_warc_pages(_file_chunks(path), include_types)
-
-
-def iter_warc_file_ex(
-    path: str, include_types: tuple[str, ...] = ("response",)
-) -> Iterator[tuple[str, datetime | None, bytes, str | None, str | None]]:
-    """iter_warc_file plus the per-record Content-Type charset label and
-    the ingest-error marker."""
-    yield from _iter_warc_pages_ex(_file_chunks(path), include_types)
-
-
-def iter_warc_bytes(
-    data: bytes, include_types: tuple[str, ...] = ("response",)
-) -> Iterator[tuple[str, datetime | None, bytes]]:
-    """In-memory variant of iter_warc_file (e.g. a binaryFile-source
-    `content` column in Structured Streaming)."""
-    import io
-
-    yield from _iter_warc_pages(_fileobj_chunks(io.BytesIO(data)), include_types)
+def iter_warc_file(path: str) -> Iterator[tuple[str, datetime | None, bytes]]:
+    """Yield (url, warc_ts, html_bytes) for each response record."""
+    for url, ts, html, _cs, _err in _iter_pages(_file_chunks(path)):
+        yield url, ts, html
 
 
 # -- the Spark source --------------------------------------------------------
@@ -320,31 +300,71 @@ def iter_warc_bytes(
 PAGES_SCHEMA = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
 )
+_BATCH_RECORDS = 256
+_BATCH_BYTES = 32 << 20
+# what one unreadable stream may raise: I/O and gzip faults, and the
+# int()/path errors of a NULL or garbage range-plan field
+_STREAM_ERRORS = (OSError, EOFError, zlib.error, TypeError, ValueError)
+
+
+def _pages_schema(with_charset: bool, with_err: bool) -> str:
+    return (
+        PAGES_SCHEMA
+        + (", http_charset string" if with_charset else "")
+        + (", ingest_error string" if with_err else "")
+    )
+
+
+def _page_batches(streams, with_charset: bool = False, with_err: bool = False):
+    """The one record batcher of the WARC readers: pages frames from an
+    iterator of decompressed-chunk streams (one per file, member or
+    archive), flushed every _BATCH_RECORDS records or _BATCH_BYTES of
+    html.  A stream that fails keeps the records parsed before the
+    fault and loses only its rest (crawl archives do truncate), never
+    the task."""
+    import pandas as pd
+
+    cols = [c.split()[0] for c in _pages_schema(with_charset, with_err).split(", ")]
+    rows: list[tuple] = []
+    size = 0
+    for chunks in streams:
+        try:
+            for url, ts, html, cs, err in _iter_pages(chunks):
+                rows.append(
+                    (url, ts, html, None, None)
+                    + ((cs,) if with_charset else ())
+                    + ((err,) if with_err else ())
+                )
+                size += len(html)
+                if len(rows) >= _BATCH_RECORDS or size >= _BATCH_BYTES:
+                    yield pd.DataFrame(rows, columns=cols)
+                    rows, size = [], 0
+        except _STREAM_ERRORS:
+            pass
+    if rows:
+        yield pd.DataFrame(rows, columns=cols)
 
 
 def read_warc_pages(
     spark,
     paths,
-    include_types: tuple[str, ...] = ("response",),
-    records_per_batch: int = 256,
-    batch_bytes: int = 32 << 20,
-    include_error_col: bool = False,
     include_charset_col: bool = False,
+    include_error_col: bool = False,
 ):
     """WARC file(s) → pages DataFrame (north-rule schema; text/lang NULL —
     they are downstream products).  `paths` is a glob string or a list of
     file paths; one streaming task per file.
 
-    `include_error_col=True` appends an `ingest_error` string column:
-    non-NULL where the record's HTTP body claimed a Transfer-/Content-
-    Encoding that could not be decoded (the html column then carries the
-    framed body as-is) — the lineage signal for crawl-QA dashboards.
-
     `include_charset_col=True` appends `http_charset`: the Content-Type
     charset= label from the record's HTTP headers (transport-layer
     encoding declaration) — feed it to the extraction operators'
     `charset_col` so the WHATWG sniff consults it between the BOM and
-    the meta prescan, exactly as a browser would."""
+    the meta prescan, exactly as a browser would.
+
+    `include_error_col=True` appends an `ingest_error` string column:
+    non-NULL where the record's HTTP body claimed a Transfer-/Content-
+    Encoding that could not be decoded (the html column then carries the
+    framed body as-is) — the lineage signal for crawl-QA dashboards."""
     if isinstance(paths, str):
         import glob as globmod
 
@@ -352,60 +372,19 @@ def read_warc_pages(
     paths = [str(p) for p in paths]
     if not paths:
         raise ValueError("read_warc_pages: no input files")
-
-    n = len(paths)
-    include = tuple(include_types)
-    rpb = int(records_per_batch)
-    bb = int(batch_bytes)
-    with_err = bool(include_error_col)
-    with_charset = bool(include_charset_col)
+    flags = (bool(include_charset_col), bool(include_error_col))
 
     def read_files(batches):
-        import pandas as pd
+        files = (path for pdf in batches for path in pdf["path"])
+        return _page_batches(map(_file_chunks, files), *flags)
 
-        cols = (
-            ["url", "warc_ts", "html", "text", "lang"]
-            + (["http_charset"] if with_charset else [])
-            + (["ingest_error"] if with_err else [])
-        )
-
-        def flush(rows):
-            return pd.DataFrame(rows, columns=cols)
-
-        for pdf in batches:
-            for path in pdf["path"]:
-                rows: list[tuple] = []
-                size = 0
-                try:
-                    for url, ts, html, cs, err in iter_warc_file_ex(
-                        path, include
-                    ):
-                        row = (url, ts, html, None, None)
-                        if with_charset:
-                            row = row + (cs,)
-                        if with_err:
-                            row = row + (err,)
-                        rows.append(row)
-                        size += len(html)
-                        if len(rows) >= rpb or size >= bb:
-                            yield flush(rows)
-                            rows, size = [], 0
-                except (OSError, zlib.error):
-                    # corrupt/truncated archive: keep the records parsed so
-                    # far, lose only the rest of this file — never the task
-                    pass
-                if rows:
-                    yield flush(rows)
-
-    schema = (
-        PAGES_SCHEMA
-        + (", http_charset string" if with_charset else "")
-        + (", ingest_error string" if with_err else "")
+    # exactly one file per task (gzip is unsplittable; the file is the
+    # unit of parallelism, as in any 100k-file crawl read): one slice per
+    # path, where a round-robin repartition can put two files in a task
+    files = spark.sparkContext.parallelize([(p,) for p in paths], len(paths))
+    return spark.createDataFrame(files, "path string").mapInPandas(
+        read_files, _pages_schema(*flags)
     )
-    files = spark.createDataFrame([(p,) for p in paths], "path string")
-    # round-robin: exactly one file per task (gzip is unsplittable; the
-    # file is the unit of parallelism, as in any 100k-file crawl read)
-    return files.repartition(n).mapInPandas(read_files, schema)
 
 
 def read_warc_ranges(
@@ -430,67 +409,38 @@ def read_warc_ranges(
     Unreadable members (missing file, bad offset, corrupt gzip) are
     skipped, never task failures.  Output schema matches
     read_warc_pages (+ the same optional lineage columns)."""
-    with_charset = bool(include_charset_col)
-    with_err = bool(include_error_col)
+    flags = (bool(include_charset_col), bool(include_error_col))
 
     def read_members(batches):
         import io
 
-        import pandas as pd
+        held = [None, None]  # (path, handle) of the one open archive
 
-        cols = (
-            ["url", "warc_ts", "html", "text", "lang"]
-            + (["http_charset"] if with_charset else [])
-            + (["ingest_error"] if with_err else [])
+        def member(fname, offset, length):
+            path = os.path.join(base_dir, fname) if base_dir else fname
+            if held[0] != path:
+                if held[1] is not None:
+                    held[1].close()
+                held[:] = [None, None]  # a failed open leaves none held
+                held[:] = [path, open(path, "rb")]
+            held[1].seek(int(offset))
+            yield from _fileobj_chunks(io.BytesIO(held[1].read(int(length))))
+
+        members = (
+            member(*m)
+            for pdf in batches
+            for m in zip(pdf["filename"], pdf["offset"], pdf["length"])
         )
-        open_name, fh = None, None
         try:
-            for batch in batches:
-                rows = []
-                for fname, offset, length in zip(
-                    batch["filename"], batch["offset"], batch["length"]
-                ):
-                    path = (
-                        os.path.join(base_dir, fname) if base_dir else fname
-                    )
-                    try:
-                        if open_name != path:
-                            if fh is not None:
-                                fh.close()
-                            fh = open(path, "rb")
-                            open_name = path
-                        fh.seek(int(offset))
-                        member = fh.read(int(length))
-                        for url, ts, payload, cs, err in _iter_warc_pages_ex(
-                            _fileobj_chunks(io.BytesIO(member)),
-                            ("response",),
-                        ):
-                            row = (url, ts, payload, None, None)
-                            if with_charset:
-                                row = row + (cs,)
-                            if with_err:
-                                row = row + (err,)
-                            rows.append(row)
-                    except (OSError, zlib.error, EOFError,
-                            TypeError, ValueError):
-                        # missing file, bad offset, corrupt gzip, or a
-                        # NULL/garbage plan field: skip the member,
-                        # keep the task
-                        continue
-                yield pd.DataFrame(rows, columns=cols)
+            yield from _page_batches(members, *flags)
         finally:
-            if fh is not None:
-                fh.close()
+            if held[1] is not None:
+                held[1].close()
 
-    schema = (
-        PAGES_SCHEMA
-        + (", http_charset string" if with_charset else "")
-        + (", ingest_error string" if with_err else "")
-    )
     ordered = plan.select("filename", "offset", "length").repartition(
         "filename"
     ).sortWithinPartitions("filename", "offset")
-    return ordered.mapInPandas(read_members, schema)
+    return ordered.mapInPandas(read_members, _pages_schema(*flags))
 
 
 # -- the writer (tests / local round-trips) ----------------------------------
@@ -639,11 +589,7 @@ def robots_from_warc(pages, url_col: str = "url", body_col: str = "html"):
 # ---------------------------------------------------------------------------
 
 
-def write_wet_file(
-    path: str,
-    records: Iterable[tuple],
-    gzip_members: bool = True,
-) -> int:
+def write_wet_file(path: str, records: Iterable[tuple]) -> int:
     """Write (url, warc_ts, extracted_text[, source_charset]) as a WET
     file — WARC-Type: conversion records with text/plain payloads, one
     gzip member per record (the format Common Crawl publishes ITS
@@ -678,7 +624,7 @@ def write_wet_file(
                 f"Content-Length: {len(body)}\r\n\r\n"
             ).encode("utf-8")
             raw = header + body + b"\r\n\r\n"
-            fh.write(gzipmod.compress(raw, mtime=0) if gzip_members else raw)
+            fh.write(gzipmod.compress(raw, mtime=0))
             n += 1
     return n
 
@@ -696,61 +642,30 @@ def iter_wet_file(path: str) -> Iterator[tuple[str, datetime | None, str]]:
         yield url, ts, block.decode("utf-8", "replace")
 
 
-EXPORT_WET_MAX_ROWS = 100_000
-EXPORT_WET_MAX_BYTES = 256 << 20
-
-
-def export_wet(
-    rendered,
-    path: str,
-    gzip_members: bool = True,
-    max_rows: int = EXPORT_WET_MAX_ROWS,
-    max_bytes: int = EXPORT_WET_MAX_BYTES,
-) -> int:
+def export_wet(rendered, path: str) -> int:
     """Export an extraction result DataFrame (url, text, ...) as ONE WET
-    file — the driver-side collector, TEST-SCOPED ONLY (collects every
-    text row to the driver).  Production exports go through
-    export_wet_partitioned, which never materializes rows on the
-    driver.
+    file; returns the record count.  The partitioned export writes its
+    shards into `<path>.parts`, the shards are appended to `path` in
+    partition order and the directory is removed: WET records are
+    independent gzip members, so the concatenation is itself a valid
+    WET file, and no text row crosses to the driver."""
+    import shutil
 
-    Guarded (r07): the CLI routes any `.wet`/`.gz` output path here, so
-    an operator pointing a real run at `out.wet.gz` would otherwise
-    collect the whole corpus onto the driver.  The result size is
-    counted first (a cheap distributed agg) and anything over
-    `max_rows`/`max_bytes` raises with a pointer at the partitioned
-    directory form instead of OOMing the driver."""
-    from pyspark.sql import functions as F
-
-    has_enc = "encoding" in rendered.columns
-    cols = ["url", "text"] + (["encoding"] if has_enc else [])
-    sel = rendered.select(*cols).filter("text is not null")
-    stats = sel.agg(
-        F.count("*").alias("n"), F.sum(F.length("text")).alias("b")
-    ).collect()[0]
-    if stats["n"] > max_rows or (stats["b"] or 0) > max_bytes:
-        raise ValueError(
-            f"export_wet collects every row to the driver and this result "
-            f"({stats['n']} rows, {stats['b'] or 0} text chars) exceeds the "
-            f"single-file cap ({max_rows} rows / {max_bytes} bytes); "
-            f"export to a DIRECTORY path instead (partitioned WET shards, "
-            f"no driver collect)"
-        )
-    rows = sel.collect()
-    return write_wet_file(
-        path,
-        [
-            (r["url"], None, r["text"], r["encoding"] if has_enc else None)
-            for r in rows
-        ],
-        gzip_members,
-    )
+    parts = path + ".parts"
+    manifest = export_wet_partitioned(rendered, parts)
+    tmp = os.path.join(parts, "._whole.tmp")
+    with open(tmp, "wb") as out:
+        for shard in manifest["shards"]:
+            with open(os.path.join(parts, shard["shard"]), "rb") as fh:
+                shutil.copyfileobj(fh, out)
+    os.replace(tmp, path)
+    shutil.rmtree(parts)
+    return manifest["records"]
 
 
-def export_wet_partitioned(
-    rendered, out_dir: str, gzip_members: bool = True
-) -> dict:
+def export_wet_partitioned(rendered, out_dir: str) -> dict:
     """Crawl-scale WET export: every partition writes its own WET shard
-    (`part-<pid>.warc.wet[.gz]`, via a temp-file + atomic rename), and
+    (`part-<pid>.warc.wet.gz`, via a temp-file + atomic rename), and
     the driver sees ONE tiny (shard, rows, bytes) row per partition from
     which it writes `_wet_manifest.json` — text never crosses to the
     driver.  WET records are independent, so the file shards freely;
@@ -759,7 +674,6 @@ def export_wet_partitioned(
     the executors share a filesystem with the consumer (same contract
     as the parquet sink)."""
     import json as _json
-    import os
 
     from pyspark.sql.types import (
         LongType,
@@ -783,7 +697,6 @@ def export_wet_partitioned(
             StructField("bytes", LongType()),
         ]
     )
-    suffix = ".warc.wet.gz" if gzip_members else ".warc.wet"
 
     def write_shards(batches):
         import pandas as pd
@@ -791,7 +704,7 @@ def export_wet_partitioned(
 
         ctx = TaskContext.get()
         pid = ctx.partitionId()
-        name = f"part-{pid:05d}{suffix}"
+        name = f"part-{pid:05d}.warc.wet.gz"
         final = os.path.join(out_dir, name)
         # attempt id in the temp name: a speculative/retried attempt must
         # not interleave writes with the first; the rename decides
@@ -814,7 +727,7 @@ def export_wet_partitioned(
                         enc = None
                     yield url, ts, text, enc
 
-        n = write_wet_file(tmp, records(), gzip_members)
+        n = write_wet_file(tmp, records())
         if n == 0:
             os.remove(tmp)  # empty partition: no shard
             return
@@ -833,7 +746,6 @@ def export_wet_partitioned(
         ],
         "records": sum(r for _, r, _ in shards),
         "bytes": sum(b for _, _, b in shards),
-        "gzip_members": gzip_members,
     }
     tmp = os.path.join(out_dir, "._wet_manifest.json.tmp")
     with open(tmp, "w") as fh:

@@ -11,6 +11,8 @@ semantics cannot drift.
 
 from __future__ import annotations
 
+import io
+
 from pyspark.sql import DataFrame, SparkSession
 
 from rust_html2text_spark.operators.extract import extract_pages
@@ -20,6 +22,11 @@ from rust_html2text_spark.operators.render import (
     RENDER_SCHEMA,
     render_pages,
     render_setup,
+)
+from rust_html2text_spark.sources.warc import (
+    PAGES_SCHEMA,
+    _fileobj_chunks,
+    _page_batches,
 )
 
 
@@ -93,8 +100,7 @@ def render_stream_with_ts(pages: DataFrame, width: int = 80) -> DataFrame:
 
 
 def start_extraction_stream(
-    spark: SparkSession,
-    input_path: str,
+    pages: DataFrame,
     output_path: str,
     checkpoint_path: str,
     mode: str = "render",
@@ -104,8 +110,8 @@ def start_extraction_stream(
 ):
     """Start the streaming query (exactly-once parquet sink + checkpoint)
     over the batch operator of `mode` = render | extract | pdf | mixed
-    (CLI --stream --mode ...)."""
-    pages = stream_pages(spark, input_path)
+    (CLI --stream --mode ...).  `pages` is a streaming pages frame:
+    stream_pages (parquet) or stream_warc_pages (WARC archives)."""
     if mode == "extract":
         out = extract_pages(pages, width, config_kwargs, charset_sniff=charset_sniff)
     elif mode == "pdf":
@@ -161,6 +167,13 @@ def curate_stream(
     return scored.drop("pred_lang")
 
 
+def _archive_pages(batches):
+    """binaryFile rows → pages frames: every archive's bytes go through
+    the WARC readers' one record batcher (sources/warc._page_batches)."""
+    archives = (content for pdf in batches for content in pdf["content"])
+    return _page_batches(_fileobj_chunks(io.BytesIO(a)) for a in archives)
+
+
 def stream_warc_pages(
     spark: SparkSession,
     input_path: str,
@@ -170,8 +183,9 @@ def stream_warc_pages(
     """Streaming WARC ingest: crawl archives dropped into `input_path`
     become pages rows as they land.  binaryFile file-source (whole-archive
     rows, so size maxFilesPerTrigger × archive size to executor memory) →
-    the same stdlib record parser as the batch WARC source
-    (sources/warc.iter_warc_bytes)."""
+    the batch WARC source's record batcher: the same parser, the same
+    256-record / 32 MiB frames, and a corrupt archive loses only the
+    records after its fault."""
     raw = (
         spark.readStream.format("binaryFile")
         # binaryFile's schema is fixed; streaming sources require it stated
@@ -182,44 +196,4 @@ def stream_warc_pages(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .load(input_path)
     )
-
-    def parse(batches):
-        import pandas as pd
-
-        from rust_html2text_spark.sources.warc import iter_warc_bytes
-
-        for pdf in batches:
-            for content in pdf["content"]:
-                rows = [
-                    (url, ts, html, None, None)
-                    for url, ts, html in iter_warc_bytes(bytes(content))
-                ]
-                yield pd.DataFrame(
-                    rows, columns=["url", "warc_ts", "html", "text", "lang"]
-                )
-
-    from rust_html2text_spark.sources.warc import PAGES_SCHEMA
-
-    return raw.select("content").mapInPandas(parse, PAGES_SCHEMA)
-
-
-def start_warc_render_stream(
-    spark: SparkSession,
-    input_path: str,
-    output_path: str,
-    checkpoint_path: str,
-    width: int = 80,
-    config_kwargs: dict | None = None,
-):
-    """WARC archives → rendered text, streaming end to end: exactly-once
-    parquet output with checkpointed resume, same render stage as batch."""
-    rendered = render_pages(
-        stream_warc_pages(spark, input_path), width, config_kwargs
-    )
-    return (
-        rendered.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return raw.select("content").mapInPandas(_archive_pages, PAGES_SCHEMA)

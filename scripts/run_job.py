@@ -127,9 +127,10 @@ def build_parser() -> argparse.ArgumentParser:
     ap.add_argument(
         "--stream",
         action="store_true",
-        help="run as a Structured Streaming job (availableNow trigger): "
-        "renders files as they land in --input, exactly-once parquet "
-        "output, resumable via --checkpoint",
+        help="run as a Structured Streaming job over the files present "
+        "in --input (parquet pages, or WARC archives with --input-format "
+        "warc) through the --mode operator: exactly-once parquet output, "
+        "resumable via --checkpoint; not with --colour, --syntax or cdx",
     )
     ap.add_argument(
         "--checkpoint",
@@ -139,12 +140,12 @@ def build_parser() -> argparse.ArgumentParser:
     ap.add_argument(
         "--export-wet",
         metavar="PATH",
-        help="after the batch run, also export the extracted text as WET "
+        help="after the run, also export the extracted text as WET "
         "(WARC conversion records — Common Crawl's extracted-text "
         "publication format). A directory path gets one shard per "
-        "partition plus _wet_manifest.json (scale-safe, nothing is "
-        "collected to the driver); a path ending in .wet/.gz writes one "
-        "driver-collected file (small exports only)",
+        "partition plus _wet_manifest.json; a path ending in .wet/.gz "
+        "gets one file, the same shards appended in partition order. "
+        "No text is collected to the driver either way",
     )
     ap.add_argument("--master", default=None)
     ap.add_argument("--explain", action="store_true", help="print the physical plan")
@@ -217,9 +218,39 @@ def config_from_args(args) -> tuple[dict, dict]:
     return config_kwargs, render_kwargs
 
 
+def show_ir(html: bytes, args, config_kwargs: dict, render_kwargs: dict) -> None:
+    """Print one document's IR dump: --show-dom, --show-render or
+    --show-css (the reference CLI's debug flags)."""
+    from rust_html2text_spark.engine.api import Config
+    from rust_html2text_spark.engine.debug import (
+        dump_dom,
+        dump_parsed_style,
+        show_render_tree,
+    )
+    from rust_html2text_spark.engine.htmlparse import parse_html
+
+    config = Config(**config_kwargs)
+    if render_kwargs.get("syntax_highlight"):
+        from rust_html2text_spark.engine.highlight import DEFAULT_HIGHLIGHTERS
+
+        config.syntax_highlighters = dict(DEFAULT_HIGHLIGHTERS)
+    if args.show_dom:
+        print(dump_dom(parse_html(html, xml_mode=config.xml)))
+    elif args.show_render:
+        print(show_render_tree(html, config))
+    else:
+        # mirrors html2text-cli/src/main.rs:195-201 / dom_to_parsed_style
+        print(dump_parsed_style(html, config))
+
+
 def main() -> None:
     args = build_parser().parse_args()
 
+    from rust_html2text_spark.operators.extract import extract_pages
+    from rust_html2text_spark.operators.pdf import (
+        extract_mixed_pages,
+        extract_pdf_pages,
+    )
     from rust_html2text_spark.operators.render import render_pages
     from rust_html2text_spark.plans.session import get_spark
     from rust_html2text_spark.sources.sink import run_with_resume
@@ -236,234 +267,146 @@ def main() -> None:
             fmt = "warc"
         else:
             fmt = "parquet"
-    if fmt == "warc":
-        from rust_html2text_spark.sources.warc import read_warc_pages
-
-        # with the sniff on, carry the HTTP Content-Type charset label so
-        # the extraction operators consult it between BOM and meta
-        pages = read_warc_pages(
-            spark, args.input, include_charset_col=args.charset_sniff
-        )
-    elif fmt == "cdx":
-        # index-first ingestion: select captures from the CDXJ index,
-        # then seek straight to the chosen members — a 1% selection
-        # reads ~1% of the archive bytes
-        from rust_html2text_spark.sources.cdx import read_cdx, select_fetches
-        from rust_html2text_spark.sources.warc import read_warc_ranges
-
-        plan = select_fetches(read_cdx(spark, args.input))
-        pages = read_warc_ranges(
-            spark,
-            plan,
-            base_dir=args.warc_dir or os.path.dirname(args.input) or ".",
-            include_charset_col=args.charset_sniff,
-        )
-    else:
-        pages = spark.read.parquet(args.input)
-
     debug_url = args.show_text or args.show_render or args.show_dom or args.show_css
-    if debug_url:
-        row = pages.filter(pages.url == debug_url).limit(1).collect()
-        if not row:
-            print("url not found", file=sys.stderr)
-            sys.exit(1)
-        if args.mode == "pdf":
-            from rust_html2text_spark.engine.pdftext import extract_pdf_text
-
-            print(extract_pdf_text(bytes(row[0]["pdf"])))
-            return
-        html = bytes(row[0]["html"])
-        if args.mode == "mixed" and args.show_text:
-            if b"%PDF-" in html[:1024]:
-                from rust_html2text_spark.engine.pdftext import extract_pdf_text
-
-                print(extract_pdf_text(html))
-            else:
-                from rust_html2text_spark.engine.api import (
-                    Config as _C,
-                    html_to_text as _h2t,
-                )
-
-                print(_h2t(html, args.width, _C(**config_kwargs)))
-            return
-        if args.mode == "extract" and args.show_text:
-            from rust_html2text_spark.engine.api import Config
-            from rust_html2text_spark.engine.extract import extract_main
-
-            print(extract_main(html, args.width, Config(**config_kwargs)))
-            return
-        from rust_html2text_spark.engine.api import (
-            Config,
-            html_to_coloured,
-            html_to_text,
-        )
-
-        config = Config(**config_kwargs)
-        if render_kwargs.get("syntax_highlight"):
-            from rust_html2text_spark.engine.highlight import DEFAULT_HIGHLIGHTERS
-
-            config.syntax_highlighters = dict(DEFAULT_HIGHLIGHTERS)
-        if args.show_dom:
-            from rust_html2text_spark.engine.debug import dump_dom
-            from rust_html2text_spark.engine.htmlparse import parse_html
-
-            print(dump_dom(parse_html(html, xml_mode=config.xml)))
-        elif args.show_render:
-            from rust_html2text_spark.engine.debug import show_render_tree
-
-            print(show_render_tree(html, config))
-        elif args.show_css:
-            # mirrors html2text-cli/src/main.rs:195-201 / dom_to_parsed_style
-            from rust_html2text_spark.engine.debug import dump_parsed_style
-
-            print(dump_parsed_style(html, config))
-        elif render_kwargs.get("coloured"):
-            from functools import partial
-
-            from rust_html2text_spark.engine.colourmap import default_colour_map
-
-            cmap = partial(
-                default_colour_map,
-                use_css_colours=render_kwargs["use_css_colours"],
-                no_default_colours=render_kwargs["no_default_colours"],
-            )
-            print(html_to_coloured(html, args.width, cmap, config))
-        else:
-            print(html_to_text(html, args.width, config))
-        return
 
     if args.stream:
-        if fmt == "cdx":
-            # the index is a batch artifact (one file per published
-            # segment); streaming ingestion watches the WARC/parquet
-            # side, not the index
-            print(
-                "--stream is not supported with --input-format cdx; "
-                "run the index selection as a batch job",
-                file=sys.stderr,
-            )
-            sys.exit(2)
+        # the index is a batch artifact (one file per published segment):
+        # streaming ingestion watches the WARC/parquet side, not the
+        # index; the stream runs the operators without render_kwargs;
+        # the debug dumps read one row of a batch input
+        for flag, on in (
+            ("--input-format cdx", fmt == "cdx"),
+            ("--colour", args.colour),
+            ("--syntax", args.syntax),
+            ("--explain or --show-*", args.explain or debug_url),
+        ):
+            if on:
+                print(
+                    f"--stream is not supported with {flag}; "
+                    "run it as a batch job",
+                    file=sys.stderr,
+                )
+                sys.exit(2)
+        from rust_html2text_spark.streaming.pipeline import (
+            start_extraction_stream,
+            stream_pages,
+            stream_warc_pages,
+        )
+
         ckpt = args.checkpoint or os.path.join(args.output, "_checkpoint")
-        if fmt == "warc":
-            from rust_html2text_spark.streaming.pipeline import (
-                start_warc_render_stream,
-            )
-
-            q = start_warc_render_stream(
-                spark, args.input, args.output, ckpt,
-                width=args.width, config_kwargs=config_kwargs,
-            )
-        else:
-            from rust_html2text_spark.streaming.pipeline import (
-                start_extraction_stream,
-            )
-
-            q = start_extraction_stream(
-                spark, args.input, args.output, ckpt, mode=args.mode,
-                width=args.width, config_kwargs=config_kwargs,
-                charset_sniff=args.charset_sniff,
-            )
+        source = stream_warc_pages if fmt == "warc" else stream_pages
+        q = start_extraction_stream(
+            source(spark, args.input), args.output, ckpt, mode=args.mode,
+            width=args.width, config_kwargs=config_kwargs,
+            charset_sniff=args.charset_sniff,
+        )
         q.processAllAvailable()
         q.stop()
         try:
-            n = spark.read.parquet(args.output).count()
-        except Exception:  # no files yet: empty input stream
-            n = 0
-        summary = {"streamed_rows_total": n, "checkpoint": ckpt}
-        if args.export_wet and n == 0:
-            summary["wet_records"] = 0
-            summary["wet_path"] = args.export_wet
-        elif args.export_wet:
-            # the streamed output IS a parquet table; export it the same
-            # way the batch path does rather than silently ignoring the
-            # flag
-            from rust_html2text_spark.sources.warc import (
-                export_wet,
-                export_wet_partitioned,
-            )
-
             out_df = spark.read.parquet(args.output)
-            if args.export_wet.endswith((".wet", ".gz")):
-                summary["wet_records"] = export_wet(out_df, args.export_wet)
-            else:
-                man = export_wet_partitioned(out_df, args.export_wet)
-                summary["wet_records"] = man["records"]
-                summary["wet_shards"] = len(man["shards"])
-            summary["wet_path"] = args.export_wet
-        print(summary)
-        spark.stop()
-        return
+            n = out_df.count()
+        except Exception:  # no files yet: empty input stream
+            out_df, n = None, 0
+        summary = {"streamed_rows_total": n, "checkpoint": ckpt}
+    else:
+        if fmt == "warc":
+            from rust_html2text_spark.sources.warc import read_warc_pages
 
-    operator = None
-    bytes_col = "html_bytes"
-    if args.mode == "extract":
-        from rust_html2text_spark.operators.extract import extract_pages
-
-        def operator(part):
-            return extract_pages(
-                part,
-                width=args.width,
-                config_kwargs=config_kwargs,
-                charset_sniff=args.charset_sniff,
-                charset_col=(
-                    "http_charset"
-                    if args.charset_sniff and "http_charset" in part.columns
-                    else None
-                ),
+            # with the sniff on, carry the HTTP Content-Type charset label
+            # so the extraction operators consult it between BOM and meta
+            pages = read_warc_pages(
+                spark, args.input, include_charset_col=args.charset_sniff
             )
-
-    elif args.mode == "pdf":
-        from rust_html2text_spark.operators.pdf import extract_pdf_pages
-
-        bytes_col = "pdf_bytes"
-
-        def operator(part):
-            return extract_pdf_pages(part)
-
-    elif args.mode == "mixed":
-        from rust_html2text_spark.operators.pdf import extract_mixed_pages
-
-        bytes_col = "input_bytes"
-
-        def operator(part):
-            return extract_mixed_pages(
-                part,
-                width=args.width,
-                config_kwargs=config_kwargs,
-                charset_sniff=args.charset_sniff,
+        elif fmt == "cdx":
+            # index-first ingestion: select captures from the CDXJ index,
+            # then seek straight to the chosen members — a 1% selection
+            # reads ~1% of the archive bytes
+            from rust_html2text_spark.sources.cdx import (
+                read_cdx,
+                select_fetches,
             )
+            from rust_html2text_spark.sources.warc import read_warc_ranges
 
-    if args.explain:
-        if operator is not None:
-            operator(pages).explain("formatted")
+            pages = read_warc_ranges(
+                spark,
+                select_fetches(read_cdx(spark, args.input)),
+                base_dir=args.warc_dir or os.path.dirname(args.input) or ".",
+                include_charset_col=args.charset_sniff,
+            )
         else:
-            render_pages(
-                pages,
+            pages = spark.read.parquet(args.input)
+
+        # the one mode dispatch: the batch job, --explain and --show-text
+        # all run this operator
+        def operator(part):
+            if args.mode == "extract":
+                return extract_pages(
+                    part,
+                    width=args.width,
+                    config_kwargs=config_kwargs,
+                    charset_sniff=args.charset_sniff,
+                    charset_col=(
+                        "http_charset"
+                        if args.charset_sniff and "http_charset" in part.columns
+                        else None
+                    ),
+                )
+            if args.mode == "pdf":
+                return extract_pdf_pages(part)
+            if args.mode == "mixed":
+                return extract_mixed_pages(
+                    part,
+                    width=args.width,
+                    config_kwargs=config_kwargs,
+                    charset_sniff=args.charset_sniff,
+                )
+            return render_pages(
+                part,
                 width=args.width,
                 config_kwargs=config_kwargs,
                 render_kwargs=render_kwargs,
-            ).explain("formatted")
-        return
+            )
 
-    summary = run_with_resume(
-        pages,
-        args.output,
-        width=args.width,
-        num_buckets=args.buckets,
-        config_kwargs=config_kwargs,
-        render_kwargs=render_kwargs,
-        operator=operator,
-        bytes_col=bytes_col,
-    )
+        if debug_url:
+            # the IR dumps read HTML; a pdf row can only show its text
+            ir = not args.show_text and args.mode != "pdf"
+            picked = pages.filter(pages.url == debug_url).limit(1)
+            row = (picked if ir else operator(picked)).collect()
+            if not row:
+                print("url not found", file=sys.stderr)
+                sys.exit(1)
+            if ir:
+                show_ir(bytes(row[0]["html"]), args, config_kwargs, render_kwargs)
+            else:
+                print(row[0]["text"])
+            return
+        if args.explain:
+            operator(pages).explain("formatted")
+            return
+        summary = run_with_resume(
+            pages,
+            args.output,
+            width=args.width,
+            num_buckets=args.buckets,
+            operator=operator,
+            bytes_col={"pdf": "pdf_bytes", "mixed": "input_bytes"}.get(
+                args.mode, "html_bytes"
+            ),
+        )
+        out_df = (
+            spark.read.parquet(os.path.join(args.output, "bucket=*"))
+            if args.export_wet
+            else None
+        )
     if args.export_wet:
         from rust_html2text_spark.sources.warc import (
             export_wet,
             export_wet_partitioned,
         )
 
-        out_df = spark.read.parquet(os.path.join(args.output, "bucket=*"))
-        if args.export_wet.endswith((".wet", ".gz")):
-            # single collected file: small exports / tests only
+        if out_df is None:
+            summary["wet_records"] = 0
+        elif args.export_wet.endswith((".wet", ".gz")):
             summary["wet_records"] = export_wet(out_df, args.export_wet)
         else:
             man = export_wet_partitioned(out_df, args.export_wet)

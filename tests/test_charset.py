@@ -204,7 +204,10 @@ def test_streaming_charset_extract_matches_batch(spark, tmp_path):
         charset_pages_from_documents,
         load_documents,
     )
-    from rust_html2text_spark.streaming.pipeline import start_extraction_stream
+    from rust_html2text_spark.streaming.pipeline import (
+        start_extraction_stream,
+        stream_pages,
+    )
 
     pages = charset_pages_from_documents(load_documents(spark, SF_DIR)).limit(20)
     # the stream source reads (url, warc_ts, html): add the ts column
@@ -214,8 +217,7 @@ def test_streaming_charset_extract_matches_batch(spark, tmp_path):
     inp = str(tmp_path / "in")
     pages.write.parquet(inp)
     q = start_extraction_stream(
-        spark,
-        inp,
+        stream_pages(spark, inp),
         str(tmp_path / "out"),
         str(tmp_path / "ckpt"),
         mode="extract",

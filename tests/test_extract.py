@@ -460,13 +460,19 @@ def test_streaming_extract_matches_batch(spark, tmp_path):
         chrome_pages_from_documents,
         load_documents,
     )
-    from rust_html2text_spark.streaming.pipeline import start_extraction_stream
+    from rust_html2text_spark.streaming.pipeline import (
+        start_extraction_stream,
+        stream_pages,
+    )
 
     pages = chrome_pages_from_documents(load_documents(spark, SF_DIR)).limit(30)
     inp = str(tmp_path / "in")
     pages.write.parquet(inp)
     q = start_extraction_stream(
-        spark, inp, str(tmp_path / "out"), str(tmp_path / "ckpt"), mode="extract"
+        stream_pages(spark, inp),
+        str(tmp_path / "out"),
+        str(tmp_path / "ckpt"),
+        mode="extract",
     )
     q.processAllAvailable()
     q.stop()

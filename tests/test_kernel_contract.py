@@ -395,8 +395,9 @@ def test_py_file_added_later_is_importable(spark, pages, tmp_path):
 
 # -- keyword surface -------------------------------------------------------
 
-# Every keyword a caller can set on the operator layer and on
-# functions.pipeline.chunk_documents.  Partitioning is the caller's
+# Every keyword a caller can set on the operator layer, on
+# functions.pipeline.chunk_documents and on the WARC/WET and streaming
+# entry points.  Partitioning is the caller's
 # (df.repartition before the call), so none appears here; a new option
 # needs an edit to this table in the same change.
 PARAMETERS = {
@@ -422,6 +423,19 @@ PARAMETERS = {
     ),
     "operators.kernel.map_kernel": (
         "pages", "setup", "schema", "payload", "passthrough", "defaults",
+    ),
+    "sources.warc.read_warc_pages": (
+        "spark", "paths", "include_charset_col", "include_error_col",
+    ),
+    "sources.warc.read_warc_ranges": (
+        "spark", "plan", "base_dir", "include_charset_col", "include_error_col",
+    ),
+    "sources.warc.iter_warc_file": ("path",),
+    "sources.warc.export_wet": ("rendered", "path"),
+    "sources.warc.export_wet_partitioned": ("rendered", "out_dir"),
+    "streaming.pipeline.start_extraction_stream": (
+        "pages", "output_path", "checkpoint_path", "mode", "width",
+        "config_kwargs", "charset_sniff",
     ),
 }
 

@@ -783,13 +783,19 @@ def test_streaming_pdf_matches_batch(spark, tmp_path):
     from rust_html2text_spark.operators.pdf import extract_pdf_pages
     from rust_html2text_spark.sources.corpus import load_documents
     from rust_html2text_spark.sources.pdfcorpus import pdf_pages_from_documents
-    from rust_html2text_spark.streaming.pipeline import start_extraction_stream
+    from rust_html2text_spark.streaming.pipeline import (
+        start_extraction_stream,
+        stream_pages,
+    )
 
     pages = pdf_pages_from_documents(load_documents(spark, SF_DIR)).limit(30)
     inp = str(tmp_path / "in")
     pages.write.parquet(inp)
     q = start_extraction_stream(
-        spark, inp, str(tmp_path / "out"), str(tmp_path / "ckpt"), mode="pdf"
+        stream_pages(spark, inp),
+        str(tmp_path / "out"),
+        str(tmp_path / "ckpt"),
+        mode="pdf",
     )
     q.processAllAvailable()
     q.stop()

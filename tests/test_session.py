@@ -196,6 +196,44 @@ spark.stop()
     assert "ANY_CWD_OK" in out.stdout, out.stdout[-2000:] + out.stderr[-3000:]
 
 
+def test_workers_ignore_a_decoy_package_in_cwd(tmp_path):
+    """A driver whose cwd holds another `rust_html2text_spark/` still
+    runs the checkout's code on the workers: `python -m pyspark.daemon`
+    would put that cwd first on the workers' sys.path, and get_spark's
+    PYTHONSAFEPATH keeps it off."""
+    decoy = tmp_path / "rust_html2text_spark"
+    decoy.mkdir()
+    (decoy / "__init__.py").write_text("DECOY = True\n")
+    script = f"""
+import sys
+sys.path.insert(0, {str(REPO)!r})
+from rust_html2text_spark.plans.session import get_spark
+spark = get_spark(master="local[1]")
+spark.sparkContext.setLogLevel("ERROR")
+
+def where(batches):
+    import pandas as pd
+    import rust_html2text_spark
+    for b in batches:
+        yield pd.DataFrame({{"path": [rust_html2text_spark.__file__] * len(b)}})
+
+paths = {{r["path"] for r in spark.range(2).mapInPandas(where, "path string").collect()}}
+print("WORKER_PATHS", sorted(paths))
+assert paths == {{{str(REPO / "rust_html2text_spark" / "__init__.py")!r}}}, paths
+print("DECOY_IGNORED")
+spark.stop()
+"""
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=_driver_env(),
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert "DECOY_IGNORED" in out.stdout, out.stdout[-2000:] + out.stderr[-3000:]
+
+
 def test_package_udf_stops_zip_rereads(tmp_path):
     """On a fresh local[2] session, a worker that has run only a plain
     mapInPandas re-reads its zip archives' directories when PySpark

@@ -116,15 +116,17 @@ def test_resumable_sink(spark, tmp_path):
 def test_streaming_matches_batch(spark, tmp_path):
     from rust_html2text_spark.operators.render import render_pages
     from rust_html2text_spark.sources.corpus import load_pages
-    from rust_html2text_spark.streaming.pipeline import start_extraction_stream
+    from rust_html2text_spark.streaming.pipeline import (
+        start_extraction_stream,
+        stream_pages,
+    )
 
     pages = load_pages(spark, SF_DIR).limit(50)
     inp = str(tmp_path / "in")
     pages.write.parquet(inp)
 
     q = start_extraction_stream(
-        spark,
-        inp,
+        stream_pages(spark, inp),
         str(tmp_path / "outp"),
         str(tmp_path / "ckpt"),
         width=80,

@@ -162,12 +162,44 @@ def test_spark_read_warc_pages_matches_parquet_pages(spark, tmp_path):
     assert len(warc_text) == 60
 
 
+def _stream_warc(spark, inp, tmp_path, mode="render"):
+    """Every archive in `inp` through stream_warc_pages and the `mode`
+    operator; the streamed output frame."""
+    from rust_html2text_spark.streaming.pipeline import (
+        start_extraction_stream,
+        stream_warc_pages,
+    )
+
+    q = start_extraction_stream(
+        stream_warc_pages(spark, str(inp)),
+        str(tmp_path / "out"),
+        str(tmp_path / "ckpt"),
+        mode=mode,
+    )
+    q.processAllAvailable()
+    q.stop()
+    return spark.read.parquet(str(tmp_path / "out"))
+
+
+def test_read_warc_pages_one_file_per_task(spark, tmp_path):
+    """gzip archives are unsplittable, so the file is the task: four
+    archives read as four partitions of one archive each (a round-robin
+    repartition of four paths can leave one task two archives)."""
+    from pyspark.sql import functions as F
+
+    recs = _sample_records(8)
+    for k in range(4):
+        write_warc_file(str(tmp_path / f"f{k}.warc.gz"), recs[2 * k : 2 * k + 2])
+    df = read_warc_pages(spark, str(tmp_path / "*.warc.gz"))
+    per_task = df.groupBy(F.spark_partition_id().alias("p")).count().collect()
+    assert sorted(r["count"] for r in per_task) == [2, 2, 2, 2]
+
+
 def test_streaming_warc_ingest_matches_batch(spark, tmp_path):
     """WARC archives streamed via binaryFile → render must equal the batch
     WARC source → render, with checkpointed exactly-once output."""
     from rust_html2text_spark.operators.render import render_pages
     from rust_html2text_spark.sources.corpus import load_pages
-    from rust_html2text_spark.streaming.pipeline import start_warc_render_stream
 
     rows = load_pages(spark, SF_DIR).limit(30).collect()
     inp = tmp_path / "in"
@@ -180,13 +212,8 @@ def test_streaming_warc_ingest_matches_batch(spark, tmp_path):
                 for r in rows[part * 15 : (part + 1) * 15]
             ],
         )
-    q = start_warc_render_stream(
-        spark, str(inp), str(tmp_path / "out"), str(tmp_path / "ckpt")
-    )
-    q.awaitTermination(120)
     streamed = sorted(
-        (r.url, r.text)
-        for r in spark.read.parquet(str(tmp_path / "out")).collect()
+        (r.url, r.text) for r in _stream_warc(spark, inp, tmp_path).collect()
     )
     batch_pages = read_warc_pages(spark, str(inp / "*.warc.gz"))
     batch = sorted(
@@ -194,6 +221,65 @@ def test_streaming_warc_ingest_matches_batch(spark, tmp_path):
     )
     assert streamed == batch
     assert len(streamed) == 30
+
+
+def test_streaming_corrupt_archive_matches_batch(spark, tmp_path):
+    """A corrupt archive costs the stream only the records after its
+    fault, exactly as in the batch reader: one good archive (3 records)
+    and one whose middle gzip member fails its CRC check (the record
+    before the fault survives) stream to the same 4 rows read_warc_pages
+    gives, instead of failing the query."""
+    from rust_html2text_spark.operators.render import render_pages
+
+    inp = tmp_path / "in"
+    inp.mkdir()
+    write_warc_file(str(inp / "good.warc.gz"), _sample_records(3))
+    idx = []
+    bad = str(inp / "bad.warc.gz")
+    write_warc_file(bad, _sample_records(6)[3:], index_out=idx)
+    raw = bytearray(Path(bad).read_bytes())
+    crc_at = idx[1]["offset"] + idx[1]["length"] - 8  # gzip trailer CRC32
+    raw[crc_at : crc_at + 4] = bytes(b ^ 0xFF for b in raw[crc_at : crc_at + 4])
+    Path(bad).write_bytes(bytes(raw))
+
+    streamed = sorted(
+        (r.url, r.text) for r in _stream_warc(spark, inp, tmp_path).collect()
+    )
+    batch_pages = read_warc_pages(spark, str(inp / "*.warc.gz"))
+    batch = sorted(
+        (r.url, r.text) for r in render_pages(batch_pages, width=80).collect()
+    )
+    assert streamed == batch
+    assert [u for u, _ in streamed] == [
+        f"https://www.example.com/doc/{i}" for i in range(4)
+    ]
+
+
+def test_cli_stream_warc_runs_the_mode_operator(spark, tmp_path, monkeypatch):
+    """--stream --input-format warc --mode extract runs the extract
+    operator over the archives (its winner_tag column is in the output),
+    and --stream with --colour exits 2 instead of dropping the flag."""
+    from pyspark.sql import SparkSession
+
+    inp = tmp_path / "in"
+    inp.mkdir()
+    write_warc_file(str(inp / "a.warc.gz"), _sample_records(4))
+    out = str(tmp_path / "out")
+    argv = ["run_job.py", "--stream", "--input-format", "warc", "--input",
+            str(inp), "--output", out, "--master", "local[4]"]
+    monkeypatch.setattr(SparkSession, "stop", lambda self: None)
+    sys.path.insert(0, str(REPO / "scripts"))
+    import run_job
+
+    monkeypatch.setattr(sys, "argv", argv + ["--mode", "extract"])
+    run_job.main()
+    got = spark.read.parquet(out)
+    assert "winner_tag" in got.columns and got.count() == 4
+
+    monkeypatch.setattr(sys, "argv", argv + ["--colour"])
+    with pytest.raises(SystemExit) as exc:
+        run_job.main()
+    assert exc.value.code == 2
 
 
 def test_payload_containing_warc_markers(tmp_path):
@@ -236,10 +322,10 @@ def test_fuzz_roundtrip_random_payloads(tmp_path):
         for i in range(0, len(raw), size):
             yield raw[i : i + size]
 
-    from rust_html2text_spark.sources.warc import _iter_warc_pages
+    from rust_html2text_spark.sources.warc import _iter_pages
 
     for size in (1, 7, 4096, len(raw)):
-        got = list(_iter_warc_pages(chunks(size), ("response",)))
+        got = [rec[:3] for rec in _iter_pages(chunks(size))]
         assert got == recs, f"chunk size {size}"
 
 
@@ -501,8 +587,8 @@ def test_wet_partitioned_export_shards_round_trip(spark, tmp_path):
     """Scale-safe WET export: one shard per non-empty partition written
     executor-side (atomic rename), a manifest whose counts match, every
     shard standalone-readable, and the union of shards equal to the
-    driver-collected export.  The driver only ever sees (shard, rows,
-    bytes) tuples."""
+    rendered rows.  The driver only ever sees (shard, rows, bytes)
+    tuples."""
     import json
     import os
 
@@ -569,21 +655,36 @@ def test_wet_partitioned_export_without_ts_and_empty_partitions(spark, tmp_path)
     assert [(u, t) for u, _ts, t in recs] == [("https://e.x/a", "alpha")]
 
 
-def test_export_wet_single_file_guard(spark, tmp_path):
-    """r07: the single-file WET exporter must refuse (cleanly, with a
-    pointer at the partitioned form) rather than collect an over-cap
-    result onto the driver."""
-    import pytest
+def test_export_wet_is_the_shards_concatenated(spark, tmp_path):
+    """The single-file WET export is the partitioned export's shards
+    appended in partition order (each record is its own gzip member, so
+    the result is one valid WET file); its `.parts` directory is gone
+    afterwards and nothing was collected to the driver but the
+    manifest."""
+    import os
 
-    from rust_html2text_spark.sources.warc import export_wet
-
-    df = spark.range(10).selectExpr(
-        "concat('https://h/', id) AS url", "repeat('x', 100) AS text"
+    from rust_html2text_spark.operators.render import render_pages
+    from rust_html2text_spark.sources.corpus import load_pages
+    from rust_html2text_spark.sources.warc import (
+        export_wet,
+        export_wet_partitioned,
+        iter_wet_file,
     )
-    with pytest.raises(ValueError, match="DIRECTORY"):
-        export_wet(df, str(tmp_path / "big.wet.gz"), max_rows=5)
-    with pytest.raises(ValueError, match="DIRECTORY"):
-        export_wet(df, str(tmp_path / "big2.wet.gz"), max_bytes=500)
-    # under the caps it still writes the file
-    n = export_wet(df, str(tmp_path / "ok.wet.gz"), max_rows=100)
-    assert n == 10
+
+    rendered = render_pages(
+        load_pages(spark, SF_DIR).limit(40), width=80
+    ).repartition(4)
+    rendered.cache()
+    shards = str(tmp_path / "shards")
+    man = export_wet_partitioned(rendered, shards)
+    assert len(man["shards"]) > 1
+    want = b"".join(
+        open(os.path.join(shards, s["shard"]), "rb").read()
+        for s in man["shards"]
+    )
+    path = str(tmp_path / "all.wet.gz")
+    assert export_wet(rendered, path) == man["records"]
+    assert open(path, "rb").read() == want
+    assert len(list(iter_wet_file(path))) == man["records"]
+    assert sorted(os.listdir(tmp_path)) == ["all.wet.gz", "shards"]
+    rendered.unpersist()
