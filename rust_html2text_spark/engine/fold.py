@@ -10,7 +10,10 @@ NOTHING = 2
 
 
 class Pending:
-    __slots__ = ("children", "cons", "prefn", "postfn")
+    """A node whose children are still to be processed; the fold keeps it
+    as the node's frame (its results so far and the children left)."""
+
+    __slots__ = ("children", "cons", "prefn", "postfn", "results", "to_process")
 
     def __init__(self, children, cons, prefn=None, postfn=None):
         self.children = children
@@ -29,17 +32,6 @@ class Finished:
 NOTHING_SENTINEL = object()
 
 
-class _Frame:
-    __slots__ = ("construct", "prefn", "postfn", "children", "to_process")
-
-    def __init__(self, construct, prefn, postfn, to_process):
-        self.construct = construct
-        self.prefn = prefn
-        self.postfn = postfn
-        self.children = []
-        self.to_process = to_process
-
-
 def tree_map_reduce(context, top, process_node):
     """process_node(context, node) -> Finished | Pending | None (= Nothing).
 
@@ -48,13 +40,15 @@ def tree_map_reduce(context, top, process_node):
     real result appended to the parent (the Rust `Ok(Some(r))`, where `r`
     itself may be an Option).
     """
-    last = _Frame(lambda ctx, cs: cs.pop() if cs else NOTHING_SENTINEL, None, None, iter([top]))
+    last = Pending([top], lambda ctx, cs: cs.pop() if cs else NOTHING_SENTINEL)
+    last.results = []
+    last.to_process = iter(last.children)
     pending_stack = []
     finished_cls = Finished  # local binds: this loop runs per DOM/render node
     while True:
         prefn = last.prefn
         postfn = last.postfn
-        children = last.children
+        results = last.results
         for h in last.to_process:
             if prefn is not None:
                 prefn(context, h)
@@ -65,20 +59,22 @@ def tree_map_reduce(context, top, process_node):
                 r = res.result
                 if postfn is not None:
                     postfn(context, r)
-                children.append(r)
+                results.append(r)
             else:
                 pending_stack.append(last)
-                last = _Frame(res.cons, res.prefn, res.postfn, iter(res.children))
+                res.results = []
+                res.to_process = iter(res.children)
+                last = res
                 break
         else:
             if pending_stack:
                 parent = pending_stack.pop()
-                node = last.construct(context, children)
+                node = last.cons(context, results)
                 if node is not NOTHING_SENTINEL:
                     if parent.postfn is not None:
                         parent.postfn(context, node)
-                    parent.children.append(node)
+                    parent.results.append(node)
                 last = parent
                 continue
-            result = last.construct(context, children)
+            result = last.cons(context, results)
             return None if result is NOTHING_SENTINEL else result

@@ -1,7 +1,7 @@
 """Render-tree node model and size estimation.
 
 Re-derives `RenderNodeInfo` (/root/reference/src/lib.rs:730-785),
-`SizeEstimate` combinators (lib.rs:421-460), table normalization
+`SizeEstimate` (lib.rs:421-460), table normalization
 (lib.rs:576-725: colspan remap, rowspan overhang dummies) and per-node size
 estimation (lib.rs:820-940, calc_ol_prefix_size lib.rs:3455-3465).
 """
@@ -15,7 +15,7 @@ from .textutil import always_takes_space, char_width, str_width, trim_collapsibl
 
 # printable ASCII + the ASCII whitespace subset of Unicode White_Space
 _SAFE_ASCII = _re.compile(r"[ -~\t\n\r\x0b\x0c]*")
-_ASCII_WS = _re.compile(r"[ \t\n\r\x0b\x0c]+")
+_ASCII_WS_CHARS = " \t\n\r\x0b\x0c"
 
 # node kinds
 TEXT = "Text"
@@ -58,21 +58,6 @@ class SizeEstimate:
         self.min_width = min_width
         self.prefix_size = prefix_size
 
-    def add(self, other: "SizeEstimate") -> "SizeEstimate":
-        return SizeEstimate(
-            self.size + other.size, max(self.min_width, other.min_width), 0
-        )
-
-    def add_hor(self, other: "SizeEstimate") -> "SizeEstimate":
-        return SizeEstimate(
-            self.size + other.size, self.min_width + other.min_width, 0
-        )
-
-    def max_(self, other: "SizeEstimate") -> "SizeEstimate":
-        return SizeEstimate(
-            max(self.size, other.size), max(self.min_width, other.min_width), 0
-        )
-
     def __repr__(self):
         return f"SizeEstimate({self.size},{self.min_width},{self.prefix_size})"
 
@@ -89,9 +74,6 @@ class RenderNode:
         self.style = style if style is not None else DEFAULT_STYLE
         self.size_estimate: SizeEstimate | None = None
 
-    def get_size_estimate(self) -> SizeEstimate:
-        return self.size_estimate
-
     def is_shallow_empty(self) -> bool:
         """lib.rs:1024-1066."""
         k = self.kind
@@ -105,22 +87,22 @@ class RenderNode:
         return len(self.children) == 0
 
     def calc_size_estimate(self, context, decorator) -> SizeEstimate:
-        """lib.rs:820-940 (assumes children already estimated)."""
-        if self.size_estimate is not None:
-            return self.size_estimate
+        """lib.rs:820-940.  The children must already be estimated
+        (render.estimate_sizes visits them first)."""
         k = self.kind
         if k in (TEXT, IMG, SVG):
             t = self.text if k == TEXT else (self.extra or "")
-            trimmed = trim_collapsible_ws(t)
-            if _SAFE_ASCII.fullmatch(trimmed):
+            if t.isascii() and _SAFE_ASCII.fullmatch(t):
                 # ASCII fast path: every non-ws char is width 1 and every
                 # internal whitespace run collapses to 1 cell.
-                parts = _ASCII_WS.split(trimmed)
-                length = sum(map(len, parts)) + max(len(parts) - 1, 0)
+                words = t.split()
+                length = len(" ".join(words))
+                if length and t[0] in _ASCII_WS_CHARS:
+                    length += 1
             else:
                 length = 0
                 in_whitespace = False
-                for c in trimmed:
+                for c in trim_collapsible_ws(t):
                     is_collapsible_ws = not always_takes_space(c)
                     if not is_collapsible_ws:
                         w = char_width(c)
@@ -129,55 +111,46 @@ class RenderNode:
                         if in_whitespace:
                             length += 1
                     in_whitespace = is_collapsible_ws
-            if t and not always_takes_space(t[0]) and length > 0:
-                length += 1
+                if t and not always_takes_space(t[0]) and length > 0:
+                    length += 1
             if k == IMG:
                 length += 2
             est = SizeEstimate(length, min(length, context.min_wrap_width), 0)
-        elif k in _CONTAINERISH:
-            est = SizeEstimate()
-            for child in self.children:
-                est = est.add(child.calc_size_estimate(context, decorator))
-        elif k == LINK:
-            est = SizeEstimate()
-            for child in self.children:
-                est = est.add(child.calc_size_estimate(context, decorator))
-            est = est.add(SizeEstimate(5, 5, 0))
-        elif k in (DD, BLOCKQUOTE, UL):
-            if k == DD:
-                prefix = "  "
-            elif k == BLOCKQUOTE:
-                prefix = decorator.quote_prefix()
-            else:
-                prefix = decorator.unordered_item_prefix()
-            prefix_width = str_width(prefix)
-            est = SizeEstimate()
-            for child in self.children:
-                est = est.add(child.calc_size_estimate(context, decorator))
-            est = est.add_hor(SizeEstimate(prefix_width, prefix_width, 0))
-            est.prefix_size = prefix_width
-        elif k == OL:
-            prefix_size = calc_ol_prefix_size(self.value, len(self.children), decorator)
-            est = SizeEstimate()
-            for child in self.children:
-                est = est.add(child.calc_size_estimate(context, decorator))
-            est = est.add_hor(SizeEstimate(prefix_size, prefix_size, 0))
-            est.prefix_size = prefix_size
-        elif k == HEADER:
-            prefix_size = len(decorator.header_prefix(self.value).encode("utf-8"))
-            est = SizeEstimate()
-            for child in self.children:
-                est = est.add(child.calc_size_estimate(context, decorator))
-            est = est.add_hor(SizeEstimate(prefix_size, prefix_size, 0))
-            est.prefix_size = prefix_size
-        elif k == BREAK:
-            est = SizeEstimate(1, 1, 0)
         elif k == TABLE:
             est = self.extra.calc_size_estimate(context)
+        elif k == BREAK:
+            est = SizeEstimate(1, 1, 0)
         elif k == FRAG_START:
             est = SizeEstimate()
         else:
-            raise AssertionError(f"calc_size_estimate on {k}")
+            # children stack vertically: sizes add, min widths take the max
+            size = 0
+            min_width = 0
+            for child in self.children:
+                e = child.size_estimate
+                size += e.size
+                if e.min_width > min_width:
+                    min_width = e.min_width
+            if k in _CONTAINERISH:
+                prefix = 0
+            elif k == LINK:
+                size += 5
+                min_width = max(min_width, 5)
+                prefix = 0
+            elif k == DD:
+                prefix = 2
+            elif k == BLOCKQUOTE:
+                prefix = str_width(decorator.quote_prefix())
+            elif k == UL:
+                prefix = str_width(decorator.unordered_item_prefix())
+            elif k == OL:
+                prefix = calc_ol_prefix_size(self.value, len(self.children), decorator)
+            elif k == HEADER:
+                prefix = len(decorator.header_prefix(self.value).encode("utf-8"))
+            else:
+                raise AssertionError(f"calc_size_estimate on {k}")
+            # a prefix sits beside the content: it adds to both
+            est = SizeEstimate(size + prefix, min_width + prefix, prefix)
         self.size_estimate = est
         return est
 
@@ -224,10 +197,11 @@ class RenderTableCell:
 
     def get_size_estimate(self) -> SizeEstimate:
         if self.size_estimate is None:
-            est = SizeEstimate()
-            for node in self.content:
-                est = est.add(node.get_size_estimate())
-            self.size_estimate = est
+            self.size_estimate = SizeEstimate(
+                sum(node.size_estimate.size for node in self.content),
+                max((node.size_estimate.min_width for node in self.content), default=0),
+                0,
+            )
         return self.size_estimate
 
 

@@ -11,7 +11,7 @@ from __future__ import annotations
 from itertools import chain, repeat
 
 from . import nodes as N
-from .fold import Finished, NOTHING_SENTINEL, Pending, tree_map_reduce
+from .fold import Finished, Pending, tree_map_reduce
 from .nodes import RenderNode
 from .subrender import SubRenderer, TextRenderer
 from .wrapped import WS_PRE, WS_PRE_WRAP
@@ -50,6 +50,10 @@ def _cons_end_block(r, _):
 def _cons_end_link(r, _):
     r.end_link()
     return None
+
+
+def _cons_cell(r, _):
+    return r.pop()
 
 
 class PushedStyleInfo:
@@ -98,31 +102,30 @@ _NO_STYLE = PushedStyleInfo()
 _FINISHED_NONE = Finished(None)
 
 
-def precalc_size_estimate(node: RenderNode, context, decorator):
-    """lib.rs:1130-1190."""
-    if node.size_estimate is not None:
-        return None
-    k = node.kind
-    if k in (N.TEXT, N.IMG, N.SVG, N.BREAK, N.FRAG_START):
+_LEAF_KINDS = frozenset({N.TEXT, N.IMG, N.SVG, N.BREAK, N.FRAG_START})
+
+
+def estimate_sizes(tree: RenderNode, context, decorator) -> None:
+    """Bottom-up size estimates for `tree` (lib.rs:1130-1190).  A table's
+    children are its cells' contents; a node already estimated is not
+    entered.  Reversed pre-order puts every node after its descendants,
+    so each `calc_size_estimate` finds its children's values cached."""
+    order = []
+    stack = [tree]
+    while stack:
+        node = stack.pop()
+        if node.size_estimate is not None:
+            continue
+        order.append(node)
+        k = node.kind
+        if k == N.TABLE:
+            for row in node.extra.rows:
+                for cell in row.cells:
+                    stack.extend(cell.content)
+        elif k not in _LEAF_KINDS:
+            stack.extend(node.children)
+    for node in reversed(order):
         node.calc_size_estimate(context, decorator)
-        return None
-    if k == N.TABLE:
-        children = []
-        for row in node.extra.rows:
-            for cell in row.cells:
-                children.extend(cell.content)
-
-        def cons_t(ctx, _cs):
-            node.calc_size_estimate(ctx, decorator)
-            return NOTHING_SENTINEL
-
-        return Pending(children, cons_t)
-
-    def cons(ctx, _cs):
-        node.calc_size_estimate(ctx, decorator)
-        return NOTHING_SENTINEL
-
-    return Pending(list(node.children), cons)
 
 
 def do_render_node(renderer: TextRenderer, tree: RenderNode):
@@ -134,14 +137,11 @@ def do_render_node(renderer: TextRenderer, tree: RenderNode):
     bottom-up estimation pass, and only over their own subtree — a
     document (or subtree) of plain paragraphs never pays the second
     walk the eager whole-tree pre-pass cost.  Same values by
-    construction: the estimation fold is the identical bottom-up
-    `precalc_size_estimate` fold, just rooted at the consuming node."""
+    construction: `estimate_sizes` is the same bottom-up pass, just rooted
+    at the consuming node."""
     k = tree.kind
     if tree.size_estimate is None and k in _NEEDS_ESTIMATE:
-        ctx, dec = renderer.estimate_ctx
-        tree_map_reduce(
-            ctx, tree, lambda c, n: precalc_size_estimate(n, c, dec)
-        )
+        estimate_sizes(tree, *renderer.estimate_ctx)
     size_estimate = tree.size_estimate
     style = tree.style
     if style is N.DEFAULT_STYLE:
@@ -344,14 +344,14 @@ def do_render_node(renderer: TextRenderer, tree: RenderNode):
             return render_table_row_vert(renderer, row, pushed_style)
         return render_table_row(renderer, row, pushed_style)
     if k == N.TABLE_CELL:
-        cell = tree.extra
+        if pushed_style is _NO_STYLE:
+            return Pending(tree.extra.content, _cons_cell)
 
         def cons(r, _):
             pushed_style.unwind(r)
-            sub = r.pop()
-            return sub
+            return r.pop()
 
-        return Pending(cell.content, cons)
+        return Pending(tree.extra.content, cons)
     if k == N.FRAG_START:
         renderer.record_frag_start(tree.text)
         pushed_style.unwind(renderer)
@@ -387,36 +387,35 @@ def _sup_digits(children) -> str | None:
 def render_table_tree(renderer: TextRenderer, table):
     """Column width negotiation (lib.rs:2676-2792)."""
     num_columns = table.num_columns
-    col_sizes = [N.SizeEstimate() for _ in range(num_columns)]
+    # per column: the widest cell's size and min width
+    sizes = [0] * num_columns
+    mins = [0] * num_columns
     for row in table.rows:
         colno = 0
         for cell in row.cells:
             estimate = cell.get_size_estimate()
-            est = N.SizeEstimate(
-                estimate.size // cell.colspan,
-                estimate.min_width // cell.colspan,
-                0,
-            )
-            for i in range(cell.colspan):
-                col_sizes[colno + i] = col_sizes[colno + i].max_(est)
-            colno += cell.colspan
-    tot_size = sum(est.size for est in col_sizes)
-    min_size = sum(est.min_width for est in col_sizes) + max(len(col_sizes) - 1, 0)
+            span = cell.colspan
+            size = estimate.size // span
+            min_width = estimate.min_width // span
+            for i in range(colno, colno + span):
+                if size > sizes[i]:
+                    sizes[i] = size
+                if min_width > mins[i]:
+                    mins[i] = min_width
+            colno += span
+    tot_size = sum(sizes)
+    min_size = sum(mins) + max(num_columns - 1, 0)
     width = renderer.width
 
     vert_row = renderer.top.options.raw or min_size > width or width == 0
 
     if not vert_row:
-        col_widths = []
-        for sz in col_sizes:
-            if sz.size == 0:
-                col_widths.append(0)
-            else:
-                col_widths.append(
-                    min(sz.size, max(sz.size * width // tot_size, sz.min_width))
-                )
+        col_widths = [
+            min(size, max(size * width // tot_size, min_width)) if size else 0
+            for size, min_width in zip(sizes, mins)
+        ]
     else:
-        col_widths = [width for _ in col_sizes]
+        col_widths = [width] * num_columns
 
     if not vert_row:
         num_cols = len(col_widths)
@@ -430,7 +429,7 @@ def render_table_tree(renderer: TextRenderer, table):
                 best_key = None
                 for colno, w in enumerate(col_widths):
                     key = (
-                        max(w - col_sizes[colno].min_width, 0),
+                        max(w - mins[colno], 0),
                         w,
                         -colno,
                     )
@@ -475,15 +474,7 @@ def render_table_row(renderer: TextRenderer, row, pushed_style):
         pushed_style.unwind(r)
         return None
 
-    def prefn(r, node):
-        cell = node.extra
-        sub_builder = r.new_sub_renderer(cell.col_width)
-        r.push(sub_builder)
-
-    def postfn(r, _result):
-        pass
-
-    return Pending(row.into_cells(False), cons, prefn, postfn)
+    return Pending(row.into_cells(False), cons, _push_cell_renderer)
 
 
 def render_table_row_vert(renderer: TextRenderer, row, pushed_style):
@@ -494,15 +485,11 @@ def render_table_row_vert(renderer: TextRenderer, row, pushed_style):
         pushed_style.unwind(r)
         return None
 
-    def prefn(r, node):
-        cell = node.extra
-        sub_builder = r.new_sub_renderer(cell.col_width)
-        r.push(sub_builder)
+    return Pending(row.into_cells(True), cons, _push_cell_renderer)
 
-    def postfn(r, _result):
-        pass
 
-    return Pending(row.into_cells(True), cons, prefn, postfn)
+def _push_cell_renderer(r, node):
+    r.push(r.new_sub_renderer(node.extra.col_width))
 
 
 def render_tree_to_string(context, renderer: SubRenderer, decorator, tree: RenderNode) -> SubRenderer:

@@ -15,8 +15,8 @@ from collections import deque
 from .errors import Fail, TooNarrow
 from .taggedline import (
     BorderHoriz,
+    FragmentStart,
     HORIZ_VERT,
-    RenderLine,
     TaggedLine,
     TaggedString,
 )
@@ -121,7 +121,7 @@ class SubRenderer:
     def __init__(self, width: int, options: RenderOptions, decorator):
         self.width = width
         self.options = options
-        self.lines: deque[RenderLine] = deque()
+        self.lines: deque = deque()  # TaggedLine | BorderHoriz
         self.pending_frags: list = []
         self.at_block_end = False
         self.wrapping: WrappedBlock | None = None
@@ -149,21 +149,19 @@ class SubRenderer:
         self.ann_stack.pop()
         self._tag_cache = None
 
-    def add_line(self, line: RenderLine) -> None:
+    def add_line(self, line) -> None:
+        """Append a TaggedLine or a BorderHoriz."""
         if self.pending_frags:
-            if line.kind == RenderLine.TEXT:
+            if type(line) is TaggedLine:
                 tl = TaggedLine()
                 for frag in self.pending_frags:
                     tl.push(frag)
                 self.pending_frags = []
-                for part in line.line.v:
+                for part in line.v:
                     tl.push(part)
-                tl.len = tl.width()
-                if self.options.pad_block_width:
-                    tl.pad_to(self.width, self._tag())
-                line = RenderLine.text(tl)
-        if self.options.pad_block_width and line.kind == RenderLine.TEXT:
-            line.line.pad_to(self.width, self._tag())
+                line = tl
+        if self.options.pad_block_width and type(line) is TaggedLine:
+            line.pad_to(self.width, self._tag())
         self.lines.append(line)
 
     def extend_lines(self, lines) -> None:
@@ -175,7 +173,7 @@ class SubRenderer:
             w = self.wrapping
             self.wrapping = None
             frags = w.take_trailing_fragments()
-            self.extend_lines(RenderLine.text(tl) for tl in w.into_lines())
+            self.extend_lines(w.into_lines())
             self.pending_frags.extend(frags)
 
     def flush_all(self) -> None:
@@ -210,7 +208,7 @@ class SubRenderer:
                                     TaggedString("".join(buf), tag)
                                 )
                                 buf = []
-                            self.add_line(RenderLine.text(wrapped_line))
+                            self.add_line(wrapped_line)
                             wrapped_line = TaggedLine()
                             pos = 0
                         pos += c_width
@@ -219,7 +217,7 @@ class SubRenderer:
                 else:
                     wrapped_line.push_str(TaggedString(s, tag))
                     pos += width
-            self.add_line(RenderLine.text(wrapped_line))
+            self.add_line(wrapped_line)
 
     def into_lines(self) -> deque:
         self.flush_wrapping()
@@ -227,7 +225,7 @@ class SubRenderer:
 
     def add_horizontal_line(self, line: BorderHoriz) -> None:
         self.flush_wrapping()
-        self.add_line(RenderLine.border(line))
+        self.add_line(line)
 
     def width_minus(self, prefix_len: int, min_width: int) -> int:
         new_width = max(self.width - prefix_len, 0)
@@ -247,7 +245,7 @@ class SubRenderer:
 
     def add_empty_line(self) -> None:
         self.flush_all()
-        self.add_line(RenderLine.text(TaggedLine()))
+        self.add_line(TaggedLine())
         self.at_block_end = False
 
     def new_sub_renderer(self, width: int) -> "SubRenderer":
@@ -280,11 +278,11 @@ class SubRenderer:
 
     def add_horizontal_border(self) -> None:
         self.flush_wrapping()
-        self.add_line(RenderLine.border(BorderHoriz(self.width, self._tag())))
+        self.add_line(BorderHoriz(self.width, self._tag()))
 
     def add_horizontal_border_width(self, width: int) -> None:
         self.flush_wrapping()
-        self.add_line(RenderLine.border(BorderHoriz(width, self._tag())))
+        self.add_line(BorderHoriz(width, self._tag()))
 
     def push_ws(self, ws: int) -> None:
         self.ws_stack.append(ws)
@@ -347,35 +345,34 @@ class SubRenderer:
         tag = self._tag()
         for line in other.into_lines():
             prefix = next(prefixes)
-            if line.kind == RenderLine.TEXT:
-                tline = line.line
+            if type(line) is TaggedLine:
                 if prefix:
-                    tline.insert_front(TaggedString(prefix, tag))
-                self.add_line(RenderLine.text(tline))
+                    line.insert_front(TaggedString(prefix, tag))
+                self.add_line(line)
             else:
                 tline = TaggedLine()
                 tline.push_str(TaggedString(prefix, tag))
-                tline.push_str(TaggedString(line.line.to_string(), tag))
-                self.add_line(RenderLine.text(tline))
+                tline.push_str(TaggedString(line.to_string(), tag))
+                self.add_line(tline)
 
     def append_columns_with_borders(self, cols, collapse: bool) -> None:
         """text_renderer.rs:1868-2100."""
         self.flush_wrapping()
+        tag = self._tag()
 
         tot_width = 0
         line_sets: list[LineSet] = []
         for sub_r, rowspan in cols:
             width = sub_r.width
-            pos = tot_width
-            tot_width += width + 1
-            lines = deque()
-            for line in sub_r.into_lines():
-                if line.kind == RenderLine.TEXT:
-                    line.line.pad_to(width, self._tag())
+            # the sub-renderer is spent: its line deque becomes the cell's
+            lines = sub_r.into_lines()
+            for line in lines:
+                if type(line) is TaggedLine:
+                    line.pad_to(width, tag)
                 else:
-                    line.line.stretch_to(width)
-                lines.append(line)
-            line_sets.append(LineSet(pos, width, rowspan, lines))
+                    line.stretch_to(width)
+            line_sets.append(LineSet(tot_width, width, rowspan, lines))
+            tot_width += width + 1
 
         # merge in overhang cells from previous rows
         overhangs = self.overhang_cells
@@ -400,10 +397,12 @@ class SubRenderer:
 
         tot_width = max(tot_width - 1, 0)
 
-        next_border = BorderHoriz(tot_width, self._tag())
+        next_border = BorderHoriz(tot_width, tag)
+        prev_border = self.lines[-1] if self.lines else None
+        if type(prev_border) is not BorderHoriz:
+            prev_border = None
 
-        if self.lines and self.lines[-1].kind == RenderLine.LINE:
-            prev_border = self.lines[-1].line
+        if prev_border is not None:
             pos = 0
             for ls in line_sets[: max(len(line_sets) - 1, 0)]:
                 w = ls.width
@@ -418,60 +417,52 @@ class SubRenderer:
         if collapse:
             pos = 0
             for ls in line_sets:
-                w = ls.width
                 sublines = ls.lines
-                if sublines and sublines[0].kind == RenderLine.LINE:
-                    if not (self.lines and self.lines[-1].kind == RenderLine.LINE):
+                if sublines and type(sublines[0]) is BorderHoriz:
+                    if prev_border is None:
                         raise Fail("No previous border line")
-                    prev_border = self.lines[-1].line
-                    line = sublines.popleft().line
-                    prev_border.merge_from_below(line, pos)
-                pos += w + 1
+                    prev_border.merge_from_below(sublines.popleft(), pos)
+                pos += ls.width + 1
 
             pos = 0
             for col_no, ls in enumerate(line_sets):
-                w = ls.width
                 sublines = ls.lines
-                if sublines and sublines[-1].kind == RenderLine.LINE:
-                    line = sublines[-1].line
+                if sublines and type(sublines[-1]) is BorderHoriz:
+                    line = sublines.pop()
                     next_border.merge_from_above(line, pos)
                     column_padding[col_no] = line.to_vertical_lines_above()
-                    sublines.pop()
-                pos += w + 1
+                pos += ls.width + 1
 
         cell_height = max((ls.cell_height() for ls in line_sets), default=0)
+        sep = "│" if self.options.draw_borders else " "
         spaces = " " * tot_width
-        last_cellno = max(len(line_sets) - 1, 0)
+        last_cellno = len(line_sets) - 1
         for i in range(cell_height):
             line = TaggedLine()
             for cellno, ls in enumerate(line_sets):
                 sub = ls.lines[i] if i < len(ls.lines) else None
                 if sub is None:
                     pad = column_padding[cellno]
-                    line.push_str(
-                        TaggedString(
-                            pad if pad is not None else spaces[: ls.width],
-                            self._tag(),
-                        )
-                    )
-                elif sub.kind == RenderLine.TEXT:
-                    line.consume(sub.line)
+                    if pad is None:
+                        pad = spaces[: ls.width]
+                        line.push_known(pad, tag, len(pad))
+                    else:
+                        line.push_str(TaggedString(pad, tag))
+                elif type(sub) is TaggedLine:
+                    line.consume(sub)
                 else:
-                    line.push_str(TaggedString(sub.line.to_string(), self._tag()))
+                    line.push_str(TaggedString(sub.to_string(), tag))
                 if cellno != last_cellno:
-                    line.push_char(
-                        "│" if self.options.draw_borders else " ", self._tag()
-                    )
-            self.add_line(RenderLine.text(line))
+                    line.push_known(sep, tag, 1)
+            self.add_line(line)
 
         # Handle overhanging cells (rowspan > 1)
         pos = 0
         for ls in line_sets:
             if ls.rowspan > 1:
                 if cell_height < len(ls.lines):
-                    l = ls.lines[cell_height]
                     tmppos = pos
-                    for e in l.into_tagged_line().v:
+                    for e in ls.lines[cell_height].into_tagged_line().v:
                         w = e.width() if isinstance(e, TaggedString) else 0
                         next_border.add_text_span(tmppos, e)
                         tmppos += w
@@ -487,7 +478,7 @@ class SubRenderer:
                 )
             pos += ls.width + 1
         if self.options.draw_borders:
-            self.add_line(RenderLine.border(next_border))
+            self.add_line(next_border)
 
     def append_vert_row(self, cols) -> None:
         """text_renderer.rs:2102-2129."""
@@ -595,8 +586,6 @@ class SubRenderer:
         return self.decorator.ordered_item_prefix(i)
 
     def record_frag_start(self, fragname: str) -> None:
-        from .taggedline import FragmentStart
-
         self._get_wrapping().add_element(FragmentStart(fragname))
 
     def push_colour(self, colour) -> None:

@@ -4,8 +4,10 @@ Re-derives the output-line model of the reference renderer
 (/root/reference/src/render/text_renderer.rs:101-1290): a line is a list of
 (string, tag) spans plus zero-width fragment markers; a border line is a list
 of box-drawing segments with joins and "holes" (rowspan text punching
-through).  Tags are plain Python tuples so equality/coalescing matches the
-Rust `Vec<Annotation>` semantics.
+through).  A renderer's output is a sequence of both kinds (the reference's
+`RenderLine`, text_renderer.rs:1292-1340), told apart by type.  Tags are
+plain Python tuples so equality/coalescing matches the Rust
+`Vec<Annotation>` semantics.
 """
 
 from __future__ import annotations
@@ -124,6 +126,7 @@ class TaggedLine:
         for e in other.v:
             self.push(e)
         other.v = []
+        other.len = 0
 
     def map_tag(self, f) -> "TaggedLine":
         out = TaggedLine()
@@ -148,9 +151,14 @@ class TaggedLine:
         return sum(ts.width() for ts in self.tagged_strings())
 
     def pad_to(self, width: int, tag) -> None:
-        w = self.width()
-        if width > w:
-            self.push_ws(width - w, tag)
+        if width > self.len:
+            self.push_known(" " * (width - self.len), tag, width - self.len)
+
+    def into_tagged_line(self) -> "TaggedLine":
+        return self
+
+    def has_content(self) -> bool:
+        return not self.is_empty()
 
     def remove_leading_whitespace(self) -> None:
         """text_renderer.rs:415-447 (PreWrap wrap-point trimming)."""
@@ -212,6 +220,7 @@ CORNER_BL = 10
 CORNER_BR = 11
 
 _SEG_CHAR = "─┴┬┼│/┤├┌┐└┘"
+_seg_chars = _SEG_CHAR.__getitem__
 
 _CHOP_LEFT = {
     JOIN_BELOW: CORNER_TL,
@@ -321,18 +330,23 @@ class BorderHoriz:
         out = []
         pos = 0
         for holepos, hole in self.holes:
-            out.append("".join(_SEG_CHAR[s] for s in self.segments[pos:holepos]))
+            out.append("".join(map(_seg_chars, self.segments[pos:holepos])))
             pos = holepos
             if isinstance(hole, TaggedString):
                 out.append(hole.s)
                 pos += hole.width()
         if pos < len(self.segments):
-            out.append("".join(_SEG_CHAR[s] for s in self.segments[pos:]))
+            out.append("".join(map(_seg_chars, self.segments[pos:])))
         return "".join(out)
 
     def extend_to(self, length: int) -> None:
         while len(self.segments) < length:
             self.segments.append(HORIZ)
+
+    def has_content(self) -> bool:
+        # NB: reference quirk — a border *without* holes counts as content
+        # (text_renderer.rs:1330-1339).
+        return not self.holes
 
     def into_tagged_line(self) -> TaggedLine:
         result = TaggedLine()
@@ -340,49 +354,13 @@ class BorderHoriz:
         tag = self.tag
         for holepos, hole in self.holes:
             if holepos > pos:
-                s = "".join(_SEG_CHAR[seg] for seg in self.segments[pos:holepos])
+                s = "".join(map(_seg_chars, self.segments[pos:holepos]))
                 result.push_str(TaggedString(s, tag))
                 pos = holepos
             if isinstance(hole, TaggedString):
                 pos += hole.width()
             result.push(hole)
         if pos < len(self.segments):
-            s = "".join(_SEG_CHAR[seg] for seg in self.segments[pos:])
+            s = "".join(map(_seg_chars, self.segments[pos:]))
             result.push_str(TaggedString(s, tag))
         return result
-
-
-class RenderLine:
-    """Either a text line or a border line (text_renderer.rs:1292-1340)."""
-
-    __slots__ = ("kind", "line")
-
-    TEXT = 0
-    LINE = 1
-
-    def __init__(self, kind: int, line):
-        self.kind = kind
-        self.line = line
-
-    @classmethod
-    def text(cls, tl: TaggedLine) -> "RenderLine":
-        return cls(cls.TEXT, tl)
-
-    @classmethod
-    def border(cls, b: BorderHoriz) -> "RenderLine":
-        return cls(cls.LINE, b)
-
-    def to_string(self) -> str:
-        return self.line.to_string()
-
-    def into_tagged_line(self) -> TaggedLine:
-        if self.kind == self.TEXT:
-            return self.line
-        return self.line.into_tagged_line()
-
-    def has_content(self) -> bool:
-        # NB: reference quirk — a border *without* holes counts as content
-        # (text_renderer.rs:1330-1339).
-        if self.kind == self.TEXT:
-            return not self.line.is_empty()
-        return len(self.line.holes) == 0

@@ -133,25 +133,32 @@ class WrappedBlock:
             if isinstance(element, TaggedString):
                 piece_s = element.s
                 piece_tag = element.tag
-                w = element.width()
+                # every char of a printable-ASCII piece is one cell wide,
+                # so a cut that leaves room on the line falls at lineleft
+                one_cell = piece_s.isascii() and piece_s.isprintable()
+                w = len(piece_s) if one_cell else element.width()
                 wpos = 0
                 bpos = 0  # char index of already-copied pieces
                 while w - wpos > lineleft:
                     split_idx = 0
-                    for idx, c in enumerate(piece_s[bpos:]):
-                        c_w = char_width(c)
-                        if c_w <= lineleft:
-                            lineleft -= c_w
-                            wpos += c_w
-                        else:
-                            if idx == 0 and self.line.width() == 0:
-                                if self.allow_overflow:
-                                    split_idx = 1
-                                    wpos += c_w
-                                    break
-                                raise TooNarrow()
-                            split_idx = idx
-                            break
+                    if one_cell and lineleft > 0:
+                        split_idx = lineleft
+                        wpos += lineleft
+                    else:
+                        for idx, c in enumerate(piece_s[bpos:]):
+                            c_w = char_width(c)
+                            if c_w <= lineleft:
+                                lineleft -= c_w
+                                wpos += c_w
+                            else:
+                                if idx == 0 and self.line.width() == 0:
+                                    if self.allow_overflow:
+                                        split_idx = 1
+                                        wpos += c_w
+                                        break
+                                    raise TooNarrow()
+                                split_idx = idx
+                                break
                     self.line.push(
                         TaggedString(piece_s[bpos : bpos + split_idx], piece_tag)
                     )
@@ -421,38 +428,41 @@ class WrappedBlock:
             pend = self.wslen  # 0 or 1, tag == wtag by precondition
             self.wslen = 0
             self.spacetag = None
-            chunk: list[str] = []
-            chunklen = 0
-            for g in complete:
-                wl = len(g)
-                sep = 1 if (chunk or pend) else 0
-                if line.len + chunklen + sep + wl <= width:
-                    chunk.append(g)
-                    chunklen += sep + wl
+            # the words joined by single spaces: the space before word j+1
+            # sits at the joined width of words 0..j, so the greedy line is
+            # cut at the last space within the room left
+            s = " ".join(complete)
+            pos = 0
+            end = len(s)
+            while pos < end:
+                room = width - line.len - pend
+                if end - pos <= room:
+                    cut = end
+                else:
+                    cut = s.rfind(" ", pos, pos + room + 1)
+                if cut > pos:
+                    line.push_known(" " + s[pos:cut] if pend else s[pos:cut],
+                                    wtag, pend + cut - pos)
+                    pend = 0
+                    pos = cut + 1
+                    if pos < end:
+                        self.flush_line()
+                        line = self.line
                     continue
-                if chunk:
-                    s = " ".join(chunk)
-                    if pend:
-                        s = " " + s
-                    line.push_known(s, wtag, chunklen)
-                    chunk = []
-                    chunklen = 0
+                # the next word does not fit: drop the pending space and
+                # start a new line; a word wider than the line hard-wraps
                 pend = 0
                 self.flush_line()
                 line = self.line
-                if wl <= width:
-                    chunk = [g]
-                    chunklen = wl
-                else:
-                    self.word.push_str(TaggedString(g, wtag))
+                cut = s.find(" ", pos)
+                if cut < 0:
+                    cut = end
+                if cut - pos > width:
+                    self.word.push_str(TaggedString(s[pos:cut], wtag))
                     self.flush_word_hard_wrap()
                     line = self.line
                     pend = 1 if line.len > 0 else 0
-            if chunk:
-                s = " ".join(chunk)
-                if pend:
-                    s = " " + s
-                line.push_known(s, wtag, chunklen)
+                    pos = cut + 1
             self.pre_wrapped = False
             if line.len > 0:
                 self.spacetag = wtag
@@ -463,11 +473,17 @@ class WrappedBlock:
             self.word.push_str(TaggedString(g, wtag))
 
     def _add_text_pre_sametag(self, text: str, tag) -> None:
-        """Bulk variant of the WhiteSpace::Pre loop for main_tag == wrap_tag:
-        printable-ASCII runs and space runs append whole; \\n, \\t and
-        non-ASCII fall back to the exact per-char logic."""
+        """Bulk variant of the WhiteSpace::Pre loop for main_tag == wrap_tag.
+        Printable-ASCII lines go one step per line (_add_pre_lines); other
+        text appends printable-ASCII runs and space runs whole, and \\n,
+        \\t and non-ASCII take the exact per-char logic."""
         wtag = (tag, WS_PRE)
         width = self.width
+        if text.isascii():
+            segments = text.split("\n")
+            if all(seg.isprintable() for seg in segments):
+                self._add_pre_lines(segments, wtag)
+                return
         for m in _PRE_RUNS.finditer(text):
             g, g_sp, c = m.groups()
             if g is not None:  # printable ASCII run (no whitespace)
@@ -531,6 +547,38 @@ class WrappedBlock:
                     if self.line.len + self.wslen + self.wordlen > width:
                         self.pre_wrapped = True
                     self.word.push_char(c, wtag)
+
+    def _add_pre_lines(self, segments: list[str], wtag) -> None:
+        """The Pre loop above for `\\n`-separated printable-ASCII segments,
+        one step per segment: its leading spaces join the pending
+        whitespace while the word is empty, the rest is one push.  Within
+        a segment the word only grows, so the width check the per-char
+        loop makes at every non-space char is true at some char iff it is
+        true at the last one."""
+        last = len(segments) - 1
+        for i, seg in enumerate(segments):
+            if seg:
+                if self.word.is_empty():
+                    body = seg.lstrip(" ")
+                    if len(body) < len(seg):
+                        self.wslen += len(seg) - len(body)
+                        self.spacetag = wtag
+                    seg = body
+                if seg:
+                    nonspace = len(seg.rstrip(" "))
+                    if nonspace and (
+                        self.line.len + self.wslen + self.wordlen + nonspace
+                        > self.width
+                    ):
+                        self.pre_wrapped = True
+                    self.wordlen += len(seg)
+                    self.word.push_known(seg, wtag, len(seg))
+            if i < last:
+                self.flush_word()
+                self.force_flush_line()
+                self.wslen = 0
+                self.spacetag = None
+                self.pre_wrapped = False
 
     def add_element(self, elt: FragmentStart) -> None:
         self.word.push(elt)

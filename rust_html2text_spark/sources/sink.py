@@ -7,10 +7,12 @@ same property with bucket-grained idempotent writes:
   (`pmod(xxhash64(url), num_buckets)`);
 - each bucket is rendered and written to `out/bucket=<i>/` followed by an
   atomic manifest append (`_manifest/<i>.json`) recording lineage
-  (row/byte/error counts, input path, config);
+  (row/byte/error counts) and the run's layout (`num_buckets`, `mode`,
+  `width`);
 - `run_with_resume` skips buckets already in the manifest, so a re-run
   after a crash reprocesses only missing buckets and never duplicates
-  output;
+  output; a re-run with another layout raises instead, since its bucket
+  `i` is not the committed bucket `i`;
 - when every bucket is committed, a table-level snapshot
   (`_manifest/_snapshot-<id>.json`, chained via `parent_id`, with a
   `_current` pointer swapped by atomic rename) records the aggregate
@@ -88,6 +90,20 @@ def _commit_snapshot(out_path: str, num_buckets: int, width: int) -> dict:
     return snap
 
 
+def _check_layout(out_path: str, done: set[int], layout: dict) -> None:
+    """Raise if a committed bucket was written under another layout."""
+    for b in sorted(done):
+        with open(os.path.join(_manifest_dir(out_path), f"{b}.json")) as fh:
+            committed = json.load(fh)
+        for key, want in layout.items():
+            if key in committed and committed[key] != want:
+                raise ValueError(
+                    f"{out_path}: bucket {b} was committed with {key}="
+                    f"{committed[key]!r}, this run has {key}={want!r}; resume "
+                    "with the same settings or write to a new output path"
+                )
+
+
 def run_with_resume(
     pages: DataFrame,
     out_path: str,
@@ -97,13 +113,16 @@ def run_with_resume(
     render_kwargs: dict | None = None,
     operator=None,
     bytes_col: str = "html_bytes",
+    mode: str = "render",
 ) -> dict:
     """Run all pending buckets through `operator` (default: the full
     render); returns summary lineage.  `operator` is any DataFrame →
     DataFrame extraction whose output has url/error/text_bytes plus an
     input-size column named `bytes_col` (render/extract: html_bytes,
     pdf: pdf_bytes) — the whole idempotent-resume + lineage-metrics
-    machinery is shared across the extraction tier."""
+    machinery is shared across the extraction tier.  `mode` names the
+    operator in the manifests; a resume whose `num_buckets`, `mode` or
+    `width` differs from a committed bucket's raises ValueError."""
     from rust_html2text_spark.operators.render import render_pages
 
     if operator is None:
@@ -117,6 +136,8 @@ def run_with_resume(
 
     os.makedirs(_manifest_dir(out_path), exist_ok=True)
     done = completed_buckets(out_path)
+    layout = {"num_buckets": num_buckets, "mode": mode, "width": width}
+    _check_layout(out_path, done, layout)
     summary = {"buckets_total": num_buckets, "buckets_skipped": len(done), "rows": 0}
 
     bucketed = pages.withColumn(
@@ -163,7 +184,7 @@ def run_with_resume(
             "html_bytes": stats["html_bytes"],
             "text_bytes": stats["text_bytes"],
             "n_files": len(file_rows),
-            "width": width,
+            **layout,
             "committed_at": time.time(),
         }
         if "encoding_source" in out_df.columns:

@@ -34,6 +34,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import re
 import zlib
 from datetime import datetime
 from typing import Iterable, Iterator
@@ -663,6 +664,10 @@ def export_wet(rendered, path: str) -> int:
     return manifest["records"]
 
 
+# a shard, or an attempt's temp file for one
+_WET_SHARD_FILE = re.compile(r"part-\d+\.warc\.wet\.gz|\.part-\d+\.warc\.wet\.gz\.\d+\.tmp")
+
+
 def export_wet_partitioned(rendered, out_dir: str) -> dict:
     """Crawl-scale WET export: every partition writes its own WET shard
     (`part-<pid>.warc.wet.gz`, via a temp-file + atomic rename), and
@@ -672,7 +677,9 @@ def export_wet_partitioned(rendered, out_dir: str) -> dict:
     any WET consumer (and iter_wet_file) reads each shard standalone.
     Uses `warc_ts` for WARC-Date when the column is present.  Assumes
     the executors share a filesystem with the consumer (same contract
-    as the parquet sink)."""
+    as the parquet sink).  The export owns `out_dir`: a manifest and
+    shards left by an earlier export are removed first, so the
+    directory never lists a shard its manifest does not."""
     import json as _json
 
     from pyspark.sql.types import (
@@ -683,6 +690,13 @@ def export_wet_partitioned(rendered, out_dir: str) -> dict:
     )
 
     os.makedirs(out_dir, exist_ok=True)
+    # the old manifest goes first: a crash mid-clear leaves no listing
+    manifest_path = os.path.join(out_dir, "_wet_manifest.json")
+    if os.path.exists(manifest_path):
+        os.remove(manifest_path)
+    for name in os.listdir(out_dir):
+        if _WET_SHARD_FILE.fullmatch(name):
+            os.remove(os.path.join(out_dir, name))
     has_ts = "warc_ts" in rendered.columns
     has_enc = "encoding" in rendered.columns
     cols = ["url"] + (["warc_ts"] if has_ts else []) + ["text"]
@@ -750,5 +764,5 @@ def export_wet_partitioned(rendered, out_dir: str) -> dict:
     tmp = os.path.join(out_dir, "._wet_manifest.json.tmp")
     with open(tmp, "w") as fh:
         _json.dump(manifest, fh, indent=1)
-    os.rename(tmp, os.path.join(out_dir, "_wet_manifest.json"))
+    os.rename(tmp, manifest_path)
     return manifest

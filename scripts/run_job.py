@@ -253,7 +253,7 @@ def main() -> None:
     )
     from rust_html2text_spark.operators.render import render_pages
     from rust_html2text_spark.plans.session import get_spark
-    from rust_html2text_spark.sources.sink import run_with_resume
+    from rust_html2text_spark.sources.sink import completed_buckets, run_with_resume
 
     config_kwargs, render_kwargs = config_from_args(args)
 
@@ -392,9 +392,18 @@ def main() -> None:
             bytes_col={"pdf": "pdf_bytes", "mixed": "input_bytes"}.get(
                 args.mode, "html_bytes"
             ),
+            mode=args.mode,
         )
+        # the committed bucket directories, in the order a `bucket=*` glob
+        # lists them (a glob path makes Spark log a FileNotFoundException
+        # while it probes for a streaming-sink log)
         out_df = (
-            spark.read.parquet(os.path.join(args.output, "bucket=*"))
+            spark.read.parquet(
+                *sorted(
+                    os.path.join(args.output, f"bucket={b}")
+                    for b in completed_buckets(args.output)
+                )
+            )
             if args.export_wet
             else None
         )

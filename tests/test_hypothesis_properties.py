@@ -46,6 +46,82 @@ def test_wrap_fast_path_equivalence(pieces, width):
     assert fast == slow
 
 
+# cell/paragraph text: controls, zero-width, combining, wide and NBSP chars
+_layout_text = st.text(
+    alphabet=st.sampled_from(
+        list("ab xy-") + ["\xa0", "\u200b", "\u0301", "\u0336", "\xad", "好", "💡",
+                          "\u3000", "\x01", "\x7f", "\x85", "\t", "\n", "\r"]
+    ),
+    max_size=14,
+).map(lambda t: t.replace("&", "").replace("<", ""))
+
+
+@st.composite
+def _layout_doc(draw):
+    """Blocks that exercise every TaggedLine path: wrapped paragraphs,
+    <pre>, prefixed sub-renderers and tables with spans and nesting."""
+    parts = []
+    for _ in range(draw(st.integers(min_value=1, max_value=4))):
+        kind = draw(st.sampled_from(["p", "pre", "h1", "ul", "blockquote", "table"]))
+        text = draw(_layout_text)
+        if kind == "ul":
+            link = draw(_layout_text)
+            parts.append(f"<ul><li>{text}</li><li><a href='x'>{link}</a></li></ul>")
+        elif kind == "table":
+            rows = []
+            for _ in range(draw(st.integers(min_value=1, max_value=3))):
+                cells = []
+                for _ in range(draw(st.integers(min_value=1, max_value=3))):
+                    span = draw(st.sampled_from(["", " rowspan=2", " colspan=2"]))
+                    inner = draw(_layout_text)
+                    if draw(st.booleans()):
+                        nested = draw(_layout_text)
+                        inner = f"<table><tr><td>{inner}</td><td>{nested}</td></tr></table>"
+                    cells.append(f"<td{span}>{inner}</td>")
+                rows.append("<tr>" + "".join(cells) + "</tr>")
+            parts.append("<table>" + "".join(rows) + "</table>")
+        else:
+            parts.append(f"<{kind}>{text}</{kind}>")
+    return "<html><body>" + "".join(parts) + "</body></html>"
+
+
+@settings(max_examples=300, deadline=None)
+@given(_layout_doc(), st.integers(min_value=1, max_value=40),
+       st.sampled_from(["plain", "rich"]), st.booleans())
+def test_tagged_line_len_is_its_width(doc, width, config_name, pad):
+    """pad_to trusts a line's tracked `len`: it must equal the width of
+    the line's strings there, at every consume (both lines) and on every
+    emitted line."""
+    import dataclasses
+
+    from rust_html2text_spark.engine.api import html_to_lines, plain_config, rich_config
+    from rust_html2text_spark.engine.taggedline import TaggedLine
+
+    config = plain_config() if config_name == "plain" else rich_config()
+    config = dataclasses.replace(config, pad_block_width=pad)
+    pad_to, consume = TaggedLine.pad_to, TaggedLine.consume
+    checked = []
+
+    def checked_pad_to(self, w, tag):
+        checked.append((self.len, self.width()))
+        pad_to(self, w, tag)
+
+    def checked_consume(self, other):
+        checked.append((self.len, self.width()))
+        checked.append((other.len, other.width()))
+        consume(self, other)
+
+    TaggedLine.pad_to, TaggedLine.consume = checked_pad_to, checked_consume
+    try:
+        lines = html_to_lines(doc.encode("utf-8"), width, config)
+    except RenderError:
+        return
+    finally:
+        TaggedLine.pad_to, TaggedLine.consume = pad_to, consume
+    checked.extend((line.len, line.width()) for line in lines)
+    assert all(tracked == actual for tracked, actual in checked), doc
+
+
 _soup = st.lists(
     st.sampled_from(
         list("<>/=\"' abcdefp!&;#-[]?") + ["table", "tr", "td", "li", "ul", "pre",

@@ -1420,3 +1420,32 @@ def test_rolling_hash_extend_consistency(spark):
     got = {r.doc_id: r.he for r in ext.collect()}
     want = {r.doc_id: r.rolling_hash for r in direct.collect()}
     assert got == want
+
+
+def test_resume_with_another_layout_raises(spark, tmp_path):
+    """A crash after buckets 0-1 of a 4-bucket run, then a resume with 2
+    buckets: the committed buckets 0-1 hold other urls than the new
+    buckets 0-1, so the resume must refuse instead of committing a
+    snapshot that misses rows.  A changed width or mode is refused too;
+    the same layout still resumes."""
+    from rust_html2text_spark.sources.corpus import load_pages
+    from rust_html2text_spark.sources.sink import completed_buckets, run_with_resume
+
+    pages = load_pages(spark, SF_DIR).limit(60).cache()
+    out = str(tmp_path / "out")
+    run_with_resume(pages, out, num_buckets=4)
+    for b in (2, 3):  # the crash: buckets 2-3 never committed
+        (tmp_path / f"out/_manifest/{b}.json").unlink()
+    assert completed_buckets(out) == {0, 1}
+
+    with pytest.raises(ValueError, match="num_buckets"):
+        run_with_resume(pages, out, num_buckets=2)
+    with pytest.raises(ValueError, match="width"):
+        run_with_resume(pages, out, num_buckets=4, width=60)
+    with pytest.raises(ValueError, match="mode"):
+        run_with_resume(pages, out, num_buckets=4, mode="extract")
+    assert completed_buckets(out) == {0, 1}
+
+    s = run_with_resume(pages, out, num_buckets=4)
+    assert s["buckets_skipped"] == 2
+    assert spark.read.parquet(f"{out}/bucket=*").count() == 60

@@ -688,3 +688,32 @@ def test_export_wet_is_the_shards_concatenated(spark, tmp_path):
     assert len(list(iter_wet_file(path))) == man["records"]
     assert sorted(os.listdir(tmp_path)) == ["all.wet.gz", "shards"]
     rendered.unpersist()
+
+
+def test_wet_partitioned_export_into_a_used_directory(spark, tmp_path):
+    """A second export into the same directory (7 partitions, then 3)
+    leaves exactly the shards its manifest lists: none of the first
+    export's shards survive to be read by a consumer that lists the
+    directory."""
+    import json
+    import os
+
+    from rust_html2text_spark.sources.warc import (
+        export_wet_partitioned,
+        iter_wet_file,
+    )
+
+    rows = [(f"https://e.x/{i}", f"text {i}") for i in range(40)]
+    df = spark.createDataFrame(rows, "url string, text string")
+    out = str(tmp_path / "wet_reused")
+    first = export_wet_partitioned(df.repartition(7), out)
+    assert len(first["shards"]) == 7
+    second = export_wet_partitioned(df.limit(12).repartition(3), out)
+    assert 0 < len(second["shards"]) <= 3
+
+    on_disk = sorted(f for f in os.listdir(out) if f.endswith(".warc.wet.gz"))
+    assert on_disk == [s["shard"] for s in second["shards"]]
+    with open(os.path.join(out, "_wet_manifest.json")) as fh:
+        assert json.load(fh) == second
+    got = [r for name in on_disk for r in iter_wet_file(os.path.join(out, name))]
+    assert len(got) == second["records"] == 12

@@ -177,3 +177,149 @@ def test_differential_pre_sametag():
         fast = outcome(lambda b, t, tg: b.add_text(t, WS_PRE, tg, tg))
         slow = outcome(reference_add_text_pre)
         assert fast == slow, (width, pieces)
+
+
+def _outcome(fn, pieces, width):
+    from rust_html2text_spark.engine.errors import TooNarrow
+
+    try:
+        return ("ok", render_with(fn, pieces, width))
+    except TooNarrow:
+        return ("too_narrow",)
+
+
+def test_differential_pre_ascii_lines(monkeypatch):
+    """Printable-ASCII <pre> text takes the one-step-per-line path: lines
+    longer than the width, leading/trailing spaces and blank lines, at
+    every width 1-80."""
+    calls = []
+    line_step = WrappedBlock._add_pre_lines
+
+    def counting(self, segments, wtag):
+        calls.append(len(segments))
+        line_step(self, segments, wtag)
+
+    monkeypatch.setattr(WrappedBlock, "_add_pre_lines", counting)
+
+    def then_probe(add):
+        # a char added with distinct main/wrap tags shows pre_wrapped
+        def add_and_probe(b, t, tg):
+            add(b, t, tg)
+            b.add_text(" q", WS_PRE, ("main",), ("wrap",))
+
+        return add_and_probe
+
+    rng = random.Random(23)
+    chunks = ["a", "word", "x" * 9, "y" * 37, "z" * 90, " ", "   ", "\n", "\n\n", "-.;"]
+    for width in range(1, 81):
+        for _ in range(6):
+            pieces = [
+                ("".join(rng.choice(chunks) for _ in range(rng.randint(1, 10))), rng.choice("tu"))
+                for _ in range(rng.randint(1, 3))
+            ]
+            calls.clear()
+            fast = _outcome(
+                then_probe(lambda b, t, tg: b.add_text(t, WS_PRE, tg, tg)), pieces, width
+            )
+            assert len(calls) == len(pieces)
+            slow = _outcome(then_probe(reference_add_text_pre), pieces, width)
+            assert fast == slow, (width, pieces)
+
+
+def test_differential_normal_ascii_all_widths():
+    """Printable-ASCII Normal text (the line-at-a-time greedy cut), with
+    words longer than the line, at every width 1-80."""
+    rng = random.Random(29)
+    words = ["a", "ab", "word", "x" * 7, "y" * 23, "z" * 85, "q,", "(p)"]
+    seps = [" ", "  ", "\n", " \t ", ""]
+    for width in range(1, 81):
+        for _ in range(5):
+            pieces = [
+                ("".join(rng.choice(words) + rng.choice(seps) for _ in range(rng.randint(1, 12))),
+                 rng.choice("tu"))
+                for _ in range(rng.randint(1, 3))
+            ]
+            fast = _outcome(lambda b, t, tg: b.add_text(t, WS_NORMAL, tg, tg), pieces, width)
+            slow = _outcome(reference_add_text_normal, pieces, width)
+            assert fast == slow, (width, pieces)
+
+
+def reference_flush_word_hard_wrap(block: WrappedBlock) -> None:
+    """The per-char hard wrap (text_renderer.rs:589-644), kept verbatim as
+    the differential oracle for the printable-ASCII cut."""
+    from rust_html2text_spark.engine.errors import TooNarrow
+
+    lineleft = block.width - block.line.len
+    for element in block.word.remove_items():
+        if isinstance(element, TaggedString):
+            piece_s = element.s
+            piece_tag = element.tag
+            w = element.width()
+            wpos = 0
+            bpos = 0
+            while w - wpos > lineleft:
+                split_idx = 0
+                for idx, c in enumerate(piece_s[bpos:]):
+                    c_w = char_width(c)
+                    if c_w <= lineleft:
+                        lineleft -= c_w
+                        wpos += c_w
+                    else:
+                        if idx == 0 and block.line.width() == 0:
+                            if block.allow_overflow:
+                                split_idx = 1
+                                wpos += c_w
+                                break
+                            raise TooNarrow()
+                        split_idx = idx
+                        break
+                block.line.push(TaggedString(piece_s[bpos : bpos + split_idx], piece_tag))
+                bpos += split_idx
+                block.force_flush_line()
+                lineleft = block.width
+            if bpos == 0:
+                block.line.push(element)
+                lineleft -= w
+            elif bpos < len(piece_s):
+                block.line.push(TaggedString(piece_s[bpos:], piece_tag))
+                lineleft -= max(w - wpos, 0)
+
+
+def test_differential_hard_wrap_ascii_cut():
+    """flush_word_hard_wrap cuts a printable-ASCII piece at the room left;
+    the per-char split must agree, with and without allow_overflow, with
+    non-ASCII and fragment pieces between, and on TooNarrow (width 0, or
+    a wide char at width 1)."""
+    from rust_html2text_spark.engine.errors import TooNarrow
+    from rust_html2text_spark.engine.taggedline import FragmentStart
+
+    rng = random.Random(31)
+    pieces = ["abc", "x" * 13, "y" * 41, "a b", "-", "日本", "é̶", "\xa0", "好" * 5]
+    for trial in range(3000):
+        width = rng.choice([0, 1, 1, 2, 3, 5, 8, 13, 40, 80])
+        allow_overflow = rng.random() < 0.5
+        prefill = "p" * rng.randint(0, width + 2)
+        word = []
+        for _ in range(rng.randint(1, 4)):
+            if rng.random() < 0.15:
+                word.append(FragmentStart("f"))
+            else:
+                word.append(TaggedString(rng.choice(pieces), (rng.choice("tu"), WS_PRE)))
+
+        def run(hard_wrap):
+            block = WrappedBlock(width, False, allow_overflow, ("t",))
+            if prefill:
+                block.line.push_str(TaggedString(prefill, (("t",), WS_PRE)))
+            for e in word:
+                block.word.push(TaggedString(e.s, e.tag) if isinstance(e, TaggedString) else e)
+            try:
+                hard_wrap(block)
+            except TooNarrow:
+                return ("too_narrow",)
+            lines = block.text + [block.line]
+            return ("ok", [[(e.s, e.tag) if isinstance(e, TaggedString) else e.name
+                             for e in line.v] for line in lines])
+
+        fast = run(WrappedBlock.flush_word_hard_wrap)
+        slow = run(reference_flush_word_hard_wrap)
+        assert fast == slow, (width, allow_overflow, prefill, word)
