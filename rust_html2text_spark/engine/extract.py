@@ -80,53 +80,62 @@ def _id_class(node: DomNode) -> str:
 def strip_boilerplate(node: DomNode) -> None:
     """Pass 1: remove chrome elements in place (tag list + id/class
     vocabulary).  Mutates the DOM."""
-    kept = []
-    for child in node.children:
-        if child.kind == "element":
-            name = (child.name or "").lower()
-            if name in STRIP_TAGS:
-                continue
-            if name not in _STRUCTURAL:
-                idc = _id_class(child)
-                if (
-                    idc.strip()
-                    and _NEGATIVE_RE.search(idc)
-                    and not _POSITIVE_RE.search(idc)
-                ):
+    stack = [node]
+    while stack:
+        node = stack.pop()
+        kept = []
+        for child in node.children:
+            if child.kind == "element":
+                name = (child.name or "").lower()
+                if name in STRIP_TAGS:
                     continue
-        strip_boilerplate(child)
-        kept.append(child)
-    node.children[:] = kept
+                if name not in _STRUCTURAL:
+                    idc = _id_class(child)
+                    if (
+                        idc.strip()
+                        and _NEGATIVE_RE.search(idc)
+                        and not _POSITIVE_RE.search(idc)
+                    ):
+                        continue
+            kept.append(child)
+        node.children[:] = kept
+        stack.extend(kept)
 
 
 def _subtree_stats(root: DomNode, memo: dict) -> tuple[int, int, int]:
     """(non-ws chars, link chars, commas) for the subtree — post-order,
-    memoized by node identity so candidate scoring is O(n) overall."""
-    key = id(root)
-    got = memo.get(key)
-    if got is not None:
-        return got
-    if root.kind == "text":
-        t = root.text or ""
-        # non-ws chars == sum(len(w) for w in t.split()); the join form
-        # stays in C instead of a per-word Python generator (hot path)
-        chars = len("".join(t.split()))
-        # comma signal covers the CJK clause separators too (U+FF0C
-        # full-width comma, U+3001 ideographic comma) — ASCII-only
-        # counting starves CJK prose of its strongest prose signal
-        out = (chars, 0, t.count(",") + t.count("，") + t.count("、"))
-    else:
-        chars = links = commas = 0
-        for child in root.children:
-            c, l, m = _subtree_stats(child, memo)
-            chars += c
-            links += l
-            commas += m
-        if root.kind == "element" and (root.name or "").lower() == "a":
-            links = chars
-        out = (chars, links, commas)
-    memo[key] = out
-    return out
+    memoized by node identity so candidate scoring is O(n) overall.
+    Explicit stack: a node is entered, then revisited (`done`) once its
+    children's entries are in the memo."""
+    stack = [(root, False)]
+    while stack:
+        node, done = stack.pop()
+        key = id(node)
+        if not done and key in memo:
+            continue
+        if node.kind == "text":
+            t = node.text or ""
+            # non-ws chars == sum(len(w) for w in t.split()); the join form
+            # stays in C instead of a per-word Python generator (hot path)
+            chars = len("".join(t.split()))
+            # comma signal covers the CJK clause separators too (U+FF0C
+            # full-width comma, U+3001 ideographic comma) — ASCII-only
+            # counting starves CJK prose of its strongest prose signal
+            memo[key] = (chars, 0, t.count(",") + t.count("，") + t.count("、"))
+        elif not done:
+            stack.append((node, True))
+            stack.extend((child, False) for child in node.children)
+        else:
+            chars = links = commas = 0
+            for child in node.children:
+                c, l, m = memo[id(child)]
+                chars += c
+                links += l
+                commas += m
+            if node.kind == "element" and (node.name or "").lower() == "a":
+                links = chars
+            memo[key] = (chars, links, commas)
+    return memo[id(root)]
 
 
 def _is_text_block(node: DomNode) -> bool:
@@ -158,8 +167,9 @@ def score_candidates(dom: DomNode) -> list[tuple[float, int, DomNode]]:
     order: dict[int, int] = {}
     counter = 0
 
-    def walk(node: DomNode) -> None:
-        nonlocal counter
+    stack = [dom]
+    while stack:
+        node = stack.pop()
         order.setdefault(id(node), counter)
         counter += 1
         if _is_text_block(node):
@@ -182,10 +192,7 @@ def score_candidates(dom: DomNode) -> list[tuple[float, int, DomNode]]:
                     if gp is not None and gp.kind == "element":
                         points[id(gp)] = points.get(id(gp), 0.0) + pts / 2.0
                         nodes[id(gp)] = gp
-        for child in node.children:
-            walk(child)
-
-    walk(dom)
+        stack.extend(reversed(node.children))
 
     scored = []
     for key, pts in points.items():
@@ -371,18 +378,15 @@ def base_href_from_dom(dom: DomNode) -> str | None:
     elements are ignored).  Must be read from the PRE-strip DOM — <base>
     lives in <head>, which the boilerplate strip discards."""
 
-    def walk(n: DomNode) -> str | None:
+    stack = [dom]
+    while stack:
+        n = stack.pop()
         if n.kind == "element" and (n.name or "").lower() == "base":
             href = n.attrs.get("href")
             if href is not None:
                 return href
-        for c in n.children:
-            got = walk(c)
-            if got is not None:
-                return got
-        return None
-
-    return walk(dom)
+        stack.extend(reversed(n.children))
+    return None
 
 
 def effective_base(page_url: str | None, base_href: str | None) -> str | None:
@@ -405,13 +409,21 @@ def links_from_node(node: DomNode) -> list[tuple[int, str, str, int]]:
     out: list[tuple[int, str, str, int]] = []
 
     def anchor_text(n: DomNode) -> str:
-        if n.kind == "text":
-            return n.text or ""
-        if n.kind == "element" and (n.name or "").lower() == "img":
-            return n.attrs.get("alt", "")
-        return "".join(anchor_text(c) for c in n.children)
+        parts = []
+        stack = [n]
+        while stack:
+            n = stack.pop()
+            if n.kind == "text":
+                parts.append(n.text or "")
+            elif n.kind == "element" and (n.name or "").lower() == "img":
+                parts.append(n.attrs.get("alt", ""))
+            else:
+                stack.extend(reversed(n.children))
+        return "".join(parts)
 
-    def walk(n: DomNode) -> None:
+    stack = [node]
+    while stack:
+        n = stack.pop()
         if n.kind == "element" and (n.name or "").lower() == "a":
             href = n.attrs.get("href")
             if href is not None:
@@ -424,11 +436,8 @@ def links_from_node(node: DomNode) -> list[tuple[int, str, str, int]]:
                         1 if "nofollow" in rels else 0,
                     )
                 )
-                return  # links don't nest (the parser un-nests <a>)
-        for c in n.children:
-            walk(c)
-
-    walk(node)
+                continue  # links don't nest (the parser un-nests <a>)
+        stack.extend(reversed(n.children))
     return out
 
 

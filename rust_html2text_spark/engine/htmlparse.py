@@ -106,17 +106,41 @@ _P_SCOPE_BOUNDARY = frozenset(
 )
 
 
-class TreeBuilder(HTMLParser):
-    # WHATWG raw-text + RCDATA elements: contents are text, never markup
-    # (html5ever tokenizer states; RCDATA additionally decodes charrefs,
-    # handled in handle_data below).
-    CDATA_CONTENT_ELEMENTS = (
-        "script", "style", "title", "textarea", "xmp", "iframe",
-        "noembed", "noframes",
-    )
+# Start tags that `TreeBuilder.start_in_body` leaves to the full
+# `start_tag`: html/head/body, <table> and the table-structure tags (but
+# a cell in a row and a row in a table section), the formatting element
+# <a> and <image>, which is renamed.
+_SPECIAL_START = frozenset(
+    ("html", "head", "body", "table", "a", "image")
+) | (_TABLE_STRUCT_TAGS - {"td", "th", "tr"})
+
+# Current nodes under which text takes handle_data's own rules: foster
+# parenting in a table context, charref decoding in RCDATA
+_TEXT_RULES = TABLE_CTX | frozenset(("title", "textarea"))
+
+# the open element a cell or row start tag needs to go in directly
+_ROW_PARENTS = {"td": ("tr",), "th": ("tr",), "tr": TABLE_SECTIONS}
+# li/dd/dt: the open siblings each one closes (`_close_li_like`)
+_SIBLINGS = {"li": ("li",), "dd": ("dd", "dt"), "dt": ("dd", "dt")}
+
+# End tags with a rule other than "pop the matching element"
+_OWN_END_RULE = frozenset(("br", "body", "html")) | VOID_ELEMENTS
+
+
+# WHATWG raw-text + RCDATA elements: contents are text, never markup
+# (html5ever tokenizer states; RCDATA additionally decodes charrefs,
+# handled in TreeBuilder.handle_data).
+CDATA_CONTENT_ELEMENTS = (
+    "script", "style", "title", "textarea", "xmp", "iframe",
+    "noembed", "noframes",
+)
+
+
+class TreeBuilder:
+    """The tree-construction rules, fed tokens by `_fast_feed` or, for
+    differential testing, by html.parser (`_StdlibTokenizer`)."""
 
     def __init__(self, xml_mode: bool = False):
-        super().__init__(convert_charrefs=True)
         self.xml_mode = xml_mode
         self.doc = DomNode("document")
         self.stack: list[DomNode] = [self.doc]
@@ -160,9 +184,6 @@ class TreeBuilder(HTMLParser):
             while len(self.stack) > 1 and self.stack[-1] is not self.html_node:
                 self.stack.pop()
             self.stack.append(self.body_node)
-
-    def _open_names(self) -> list[str]:
-        return [n.name for n in self.stack if n.kind == "element"]
 
     def _pop_through(self, node: DomNode) -> None:
         while self.stack:
@@ -229,7 +250,56 @@ class TreeBuilder(HTMLParser):
         for k, v in attrs:
             if k not in attr_dict:
                 attr_dict[k] = v if v is not None else ""
+        self.start_tag(tag, attr_dict)
 
+    def start_in_body(self, tag: str, attr_dict: dict) -> bool:
+        """`start_tag` in fewer steps for the common case once the body is
+        open: a <td>/<th> in an open <tr>, a <tr> in an open table
+        section, or a tag with no table or formatting rule (not in
+        `_SPECIAL_START`).  The last closes an open <p> if it is a
+        p-closer and an open li/dd/dt sibling if it is one, then goes in
+        at the current node (foster-parented in a table context).
+        Returns False, doing nothing, for any other tag or position."""
+        if not self.body_started or tag in _SPECIAL_START:
+            return False
+        stack = self.stack
+        cur = stack[-1]
+        row_parents = _ROW_PARENTS.get(tag)
+        if row_parents is not None:
+            if cur.name not in row_parents:
+                return False
+        else:
+            if tag in P_CLOSERS:
+                self._close_p_if_open()
+                siblings = _SIBLINGS.get(tag)
+                if siblings is not None:
+                    self._close_li_like(siblings)
+                cur = stack[-1]
+            if cur.name in TABLE_CTX:
+                node = DomNode("element", tag, attr_dict)
+                self._foster_insert(node)
+                if tag not in VOID_ELEMENTS:
+                    stack.append(node)
+                return True
+        node = DomNode("element", tag, attr_dict)
+        node.parent = cur
+        cur.children.append(node)
+        if tag not in VOID_ELEMENTS:
+            stack.append(node)
+        return True
+
+    def end_in_body(self, tag: str) -> bool:
+        """`handle_endtag` when the tag closes the current node: pop it.
+        Returns False, doing nothing, when the current node is another
+        element or the tag has an end rule of its own (</br>, </body>,
+        </html>, void tags)."""
+        stack = self.stack
+        if stack[-1].name != tag or tag in _OWN_END_RULE:
+            return False
+        stack.pop()
+        return True
+
+    def start_tag(self, tag: str, attr_dict: dict) -> None:
         if tag == "html":
             self._ensure_html()
             for k, v in attr_dict.items():
@@ -397,9 +467,10 @@ class TreeBuilder(HTMLParser):
                 self._append_text(cur, data)
                 return
             self._ensure_body()
-        if self._in_foster_context():
+        cur = self.stack[-1]
+        if cur.name in TABLE_CTX:
             if _is_ascii_ws(data):
-                self._append_text(self.current(), data)
+                self._append_text(cur, data)
             else:
                 table = self._nearest_table()
                 text = DomNode("text", text=data)
@@ -412,9 +483,15 @@ class TreeBuilder(HTMLParser):
                     else:
                         parent.insert_before(text, table)
                 else:
-                    self._append_text(self.current(), data)
+                    self._append_text(cur, data)
             return
-        self._append_text(self.current(), data)
+        children = cur.children
+        if children and children[-1].kind == "text":
+            children[-1].text += data
+        else:
+            node = DomNode("text", text=data)
+            node.parent = cur
+            children.append(node)
 
     @staticmethod
     def _append_text(parent: DomNode, data: str) -> None:
@@ -431,14 +508,22 @@ class TreeBuilder(HTMLParser):
         else:
             self.current().append(node)
 
-    def handle_decl(self, decl):
-        pass
 
-    def handle_pi(self, data):
-        pass
+class _StdlibTokenizer(HTMLParser):
+    """html.parser's tokenizer feeding a TreeBuilder: the reference that
+    `_fast_feed` is differential-tested against (parse_html(fast=False)).
+    Declarations and processing instructions are dropped, as by the
+    HTMLParser defaults."""
 
-    def unknown_decl(self, data):
-        pass
+    CDATA_CONTENT_ELEMENTS = CDATA_CONTENT_ELEMENTS
+
+    def __init__(self, builder: TreeBuilder):
+        super().__init__(convert_charrefs=True)
+        self.handle_starttag = builder.handle_starttag
+        self.handle_startendtag = builder.handle_startendtag
+        self.handle_endtag = builder.handle_endtag
+        self.handle_data = builder.handle_data
+        self.handle_comment = builder.handle_comment
 
 
 # --- fast single-pass tokenizer ------------------------------------------
@@ -459,23 +544,43 @@ from html.parser import (
     tagfind_tolerant as _tagfind,
 )
 
-_simple_start = _re.compile(r"([a-zA-Z][a-zA-Z0-9]*)>")
-# `<name attr="value">` with exactly one double-quoted attribute and single
-# spaces — the next most common shape (<a href=..>, <div class=..>)
-_one_attr_start = _re.compile(
-    r'([a-zA-Z][a-zA-Z0-9]*) ([a-zA-Z][a-zA-Z0-9-]*)="([^"<]*)" ?>'
+# One regex step per common token.  Each alternative accepts only a shape
+# on which the tolerant machinery below gives the same tokens, so a match
+# needs no re-check; any other construct (and all input inside a raw-text
+# element) takes the tolerant path one token at a time.
+#   1 text run up to the next '<'
+#   2-4 start tag: name, attributes, '/' of a self-closing tag.  Names
+#     are ASCII alphanumeric; attributes are separated by ASCII
+#     whitespace and are valueless or take a double-quoted, single-quoted
+#     or unquoted value, with one '=' and optional ASCII whitespace
+#     around it.  (Unicode whitespace, '==', an empty unquoted value,
+#     quotes or '<' in an unquoted value, or attributes not separated by
+#     whitespace all fall to the tolerant path.)
+#   5 end tag (endtagfind of html.parser)
+#   6 comment body (`<!--` to the first `--\s*>`, as parse_comment)
+_WS = r"[ \t\n\r\f]"
+_ATTR_NAME = r"[a-zA-Z_:][-a-zA-Z0-9_:.]*"
+_ATTR_VALUES = r""""[^"]*"|'[^']*'|[^\s"'=<>`]+"""
+_TOKEN = _re.compile(
+    r"([^<]+)"
+    rf"|<([a-zA-Z][a-zA-Z0-9]*)"
+    rf"((?:{_WS}+{_ATTR_NAME}(?:{_WS}*={_WS}*(?:{_ATTR_VALUES}))?)*)"
+    rf"{_WS}*(/?)>"
+    r"|</\s*([a-zA-Z][-.a-zA-Z0-9:_]*)\s*>"
+    r"|<!--(.*?)--\s*>",
+    _re.S,
 )
-# two or more double-quoted attributes, single spaces (<meta name=.. content=..>,
-# <a href=.. rel=..>) — everything else falls to the tolerant machinery
-_multi_attr_start = _re.compile(
-    r'([a-zA-Z][a-zA-Z0-9]*)((?: [a-zA-Z][a-zA-Z0-9-]*="[^"<]*"){2,}) ?>'
+# one attribute of a group-3 match: name, then the double-quoted,
+# single-quoted or unquoted value (all None for a valueless attribute)
+_ATTR = _re.compile(
+    rf"{_WS}+({_ATTR_NAME})"
+    rf"""(?:{_WS}*={_WS}*(?:"([^"]*)"|'([^']*)'|([^\s"'=<>`]+)))?"""
 )
-_attr_pair = _re.compile(r' ([a-zA-Z][a-zA-Z0-9-]*)="([^"]*)"')
 _commentclose = _re.compile(r"--\s*>")
 _endtagfind = _re.compile(r"</\s*([a-zA-Z][-.a-zA-Z0-9:_]*)\s*>")
 _markedclose = _re.compile(r"]\s*]\s*>")
 _msmarkedclose = _re.compile(r"]\s*>")
-_CDATA_ELEMS = TreeBuilder.CDATA_CONTENT_ELEMENTS
+_CDATA_ELEMS = frozenset(CDATA_CONTENT_ELEMENTS)
 _cdata_res = {
     elem: _re.compile(r"</\s*%s\s*>" % elem, _re.I) for elem in _CDATA_ELEMS
 }
@@ -488,9 +593,81 @@ def _fast_feed(builder: TreeBuilder, rawdata: str) -> None:
     cdata_re = None
     find = rawdata.find
     startswith = rawdata.startswith
+    attr_iter = _ATTR.finditer
     handle_data = builder.handle_data
+    start_in_body = builder.start_in_body
+    start_tag = builder.start_tag
+    end_in_body = builder.end_in_body
     while i < n:
         if cdata_elem is None:
+            # the builder's open-element stack and body flag, re-read after
+            # every call that may replace the one or set the other
+            stack = builder.stack
+            in_body = builder.body_started
+            m = None
+            for m in iter(_TOKEN.scanner(rawdata, i).match, None):
+                group = m.lastindex
+                if group == 4:
+                    tag, attr_src, slash = m.group(2, 3, 4)
+                    tag = tag.lower()
+                    attrs = {}
+                    if attr_src:
+                        for am in attr_iter(attr_src):
+                            name, dq, sq, bare = am.groups()
+                            name = name.lower()
+                            if name in attrs:
+                                continue
+                            if dq is not None:
+                                value = dq
+                            elif sq is not None:
+                                value = sq
+                            else:  # unquoted, or "" for a valueless one
+                                value = bare or ""
+                            if "&" in value:
+                                value = _unescape(value)
+                            attrs[name] = value
+                    if slash:
+                        builder.handle_startendtag(tag, list(attrs.items()))
+                        stack = builder.stack
+                        in_body = builder.body_started
+                    elif not start_in_body(tag, attrs):
+                        start_tag(tag, attrs)
+                        stack = builder.stack
+                        in_body = builder.body_started
+                    if tag in _CDATA_ELEMS and not slash:
+                        cdata_elem = tag
+                        cdata_re = _cdata_res[tag]
+                        break
+                elif group == 5:
+                    tag = m.group(5).lower()
+                    if not end_in_body(tag):
+                        builder.handle_endtag(tag)
+                        stack = builder.stack
+                        in_body = builder.body_started
+                elif group == 1:
+                    seg = m.group(1)
+                    if "&" in seg:
+                        seg = _unescape(seg)
+                    cur = stack[-1]
+                    if in_body and cur.name not in _TEXT_RULES:
+                        # handle_data's in-body case: extend the current
+                        # node's trailing text node or append a new one
+                        children = cur.children
+                        if children and children[-1].kind == "text":
+                            children[-1].text += seg
+                        else:
+                            node = DomNode("text", None, None, seg)
+                            node.parent = cur
+                            children.append(node)
+                    else:
+                        handle_data(seg)
+                        stack = builder.stack
+                        in_body = builder.body_started
+                else:
+                    builder.handle_comment(m.group(6))
+            if m is not None:
+                i = m.end()
+                continue
             j = find("<", i)
             if j < 0:
                 j = n
@@ -512,52 +689,6 @@ def _fast_feed(builder: TreeBuilder, rawdata: str) -> None:
         c = rawdata[i + 1] if i + 1 < n else ""
         k = -1
         if c.isalpha() and c.isascii():
-            # fast path: `<name>` with no attributes / no self-closing
-            # slash — the overwhelmingly common shape — needs none of the
-            # tolerant start-tag machinery below (same result by
-            # construction: locatestarttagend ends at the name, the attr
-            # loop matches nothing, endmark is ">")
-            sm = _simple_start.match(rawdata, i + 1)
-            if sm:
-                tag = sm.group(1).lower()
-                builder.handle_starttag(tag, [])
-                if tag in _CDATA_ELEMS:
-                    cdata_elem = tag
-                    cdata_re = _cdata_res[tag]
-                i = sm.end()
-                continue
-            sm = _one_attr_start.match(rawdata, i + 1)
-            if sm:
-                # same result as the tolerant machinery: one attr pair,
-                # value unescaped iff it contains a charref
-                tag, aname, aval = sm.groups()
-                tag = tag.lower()
-                if aval and "&" in aval:
-                    aval = _unescape(aval)
-                builder.handle_starttag(tag, [(aname.lower(), aval)])
-                if tag in _CDATA_ELEMS:
-                    cdata_elem = tag
-                    cdata_re = _cdata_res[tag]
-                i = sm.end()
-                continue
-            sm = _multi_attr_start.match(rawdata, i + 1)
-            if sm:
-                # ≥2 clean double-quoted attrs: same result as the
-                # tolerant machinery (attrfind parses each ` name="v"`
-                # pair in turn; _unescape is the identity without '&')
-                tag = sm.group(1).lower()
-                attrs = []
-                for am in _attr_pair.finditer(sm.group(2)):
-                    aname, aval = am.groups()
-                    if aval and "&" in aval:
-                        aval = _unescape(aval)
-                    attrs.append((aname.lower(), aval))
-                builder.handle_starttag(tag, attrs)
-                if tag in _CDATA_ELEMS:
-                    cdata_elem = tag
-                    cdata_re = _cdata_res[tag]
-                i = sm.end()
-                continue
             # start tag (parse_starttag, html/parser.py:300-340)
             m = _locatestarttagend.match(rawdata, i)
             endpos = -1
@@ -782,7 +913,8 @@ def parse_html(data: bytes | str, xml_mode: bool | None = None, fast: bool = Tru
     if fast:
         _fast_feed(builder, data)
     else:
-        builder.feed(data)
-        builder.close()
+        tokenizer = _StdlibTokenizer(builder)
+        tokenizer.feed(data)
+        tokenizer.close()
     builder._ensure_body()
     return builder.doc

@@ -4,6 +4,16 @@ Re-derives `do_render_node` (/root/reference/src/lib.rs:2396-2674), table
 column-width negotiation (`render_table_tree`, lib.rs:2676-2792), row/cell
 rendering (lib.rs:2794-2874), style push/unwind (lib.rs:2344-2394) and the
 two-pass pipeline `render_tree_to_string` (lib.rs:2298-2323).
+
+The reference folds the tree with `tree_map_reduce` (lib.rs:1371-1448):
+a node's handler runs on the way down, its children are rendered, then
+its `cons` callback runs on the way up.  `_walk` keeps that order on one
+explicit stack (no recursion, so a deep tree cannot overflow the Python
+stack).  A stack entry is either a node to open or an `(action, arg)`
+tuple: a node's close action is pushed before its children, so it runs
+after the last of them, where the reference runs `cons`.  The per-child
+hooks of lists and table rows are such tuples too, pushed around each
+child.
 """
 
 from __future__ import annotations
@@ -11,49 +21,18 @@ from __future__ import annotations
 from itertools import chain, repeat
 
 from . import nodes as N
-from .fold import Finished, Pending, tree_map_reduce
 from .nodes import RenderNode
+from .styles import DEFAULT_STYLE
 from .subrender import SubRenderer, TextRenderer
 from .wrapped import WS_PRE, WS_PRE_WRAP
 
 SUPERSCRIPTS = "⁰¹²³⁴⁵⁶⁷⁸⁹"
 
-_INLINE_STYLES = {
-    N.EM: ("start_emphasis", "end_emphasis"),
-    N.STRONG: ("start_strong", "end_strong"),
-    N.STRIKEOUT: ("start_strikeout", "end_strikeout"),
-    N.CODE: ("start_code", "end_code"),
-}
-
 # node kinds whose render branch reads size estimates (directly, or — for
-# TABLE — via the cells' content estimates in render_table_tree)
+# TABLE — via the cells' content estimates in _open_table)
 _NEEDS_ESTIMATE = frozenset(
     {N.HEADER, N.BLOCKQUOTE, N.UL, N.OL, N.DD, N.TABLE}
 )
-
-
-# Fast-path singletons (r07): most nodes carry DEFAULT_STYLE (nothing to
-# push/unwind), and the common container kinds then need no per-node
-# closure either.
-_FINISHED_NONE = None  # assigned after PushedStyleInfo is defined
-
-
-def _cons_plain(r, _):
-    return None
-
-
-def _cons_end_block(r, _):
-    r.end_block()
-    return None
-
-
-def _cons_end_link(r, _):
-    r.end_link()
-    return None
-
-
-def _cons_cell(r, _):
-    return r.pop()
 
 
 class PushedStyleInfo:
@@ -68,7 +47,7 @@ class PushedStyleInfo:
         self.preformat = False
 
     @classmethod
-    def apply(cls, render: TextRenderer, style) -> "PushedStyleInfo":
+    def apply(cls, render: SubRenderer, style) -> "PushedStyleInfo":
         result = cls()
         col = style.colour.val
         if col is not None:
@@ -87,7 +66,7 @@ class PushedStyleInfo:
             result.preformat = True
         return result
 
-    def unwind(self, renderer: TextRenderer) -> None:
+    def unwind(self, renderer: SubRenderer) -> None:
         if self.bgcolour:
             renderer.pop_bgcolour()
         if self.colour:
@@ -96,10 +75,6 @@ class PushedStyleInfo:
             renderer.pop_ws()
         if self.preformat:
             renderer.pop_preformat()
-
-
-_NO_STYLE = PushedStyleInfo()
-_FINISHED_NONE = Finished(None)
 
 
 _LEAF_KINDS = frozenset({N.TEXT, N.IMG, N.SVG, N.BREAK, N.FRAG_START})
@@ -128,249 +103,252 @@ def estimate_sizes(tree: RenderNode, context, decorator) -> None:
         node.calc_size_estimate(context, decorator)
 
 
-def do_render_node(renderer: TextRenderer, tree: RenderNode):
-    """lib.rs:2396-2674.  Result values are Option<SubRenderer> (None or a
-    sub-renderer); `NOTHING_SENTINEL` from a cons means no result.
+# --- close actions: (tr: TextRenderer, arg) -> None ---------------------------
+# `pushed` is the node's PushedStyleInfo, or None when its style is
+# DEFAULT_STYLE (nothing pushed, nothing to unwind).
 
-    Size estimates are computed lazily (r07): only the node kinds that
-    consume them (header/blockquote/lists/dd/table) trigger the
-    bottom-up estimation pass, and only over their own subtree — a
-    document (or subtree) of plain paragraphs never pays the second
-    walk the eager whole-tree pre-pass cost.  Same values by
-    construction: `estimate_sizes` is the same bottom-up pass, just rooted
-    at the consuming node."""
-    k = tree.kind
-    if tree.size_estimate is None and k in _NEEDS_ESTIMATE:
-        estimate_sizes(tree, *renderer.estimate_ctx)
-    size_estimate = tree.size_estimate
-    style = tree.style
-    if style is N.DEFAULT_STYLE:
-        # nothing to push, nothing to unwind
-        pushed_style = _NO_STYLE
-    else:
-        pushed_style = PushedStyleInfo.apply(renderer, style)
 
-    if k == N.TEXT:
-        renderer.add_inline_text(tree.text)
-        if pushed_style is not _NO_STYLE:
-            pushed_style.unwind(renderer)
-        return _FINISHED_NONE
-    if k == N.CONTAINER:
-        if pushed_style is _NO_STYLE:
-            return Pending(tree.children, _cons_plain)
+def _unwind(tr, pushed):
+    pushed.unwind(tr.subrender[-1])
 
-        def cons(r, _):
-            pushed_style.unwind(r)
-            return None
 
-        return Pending(tree.children, cons)
-    if k == N.LINK:
-        renderer.start_link(tree.text)
-        if pushed_style is _NO_STYLE:
-            return Pending(tree.children, _cons_end_link)
+def _end_block(tr, pushed):
+    top = tr.subrender[-1]
+    top.end_block()
+    if pushed is not None:
+        pushed.unwind(top)
 
-        def cons(r, _):
-            r.end_link()
-            pushed_style.unwind(r)
-            return None
 
-        return Pending(tree.children, cons)
-    if k in _INLINE_STYLES:
-        start, end = _INLINE_STYLES[k]
-        getattr(renderer, start)()
+def _end_link(tr, pushed):
+    tr.end_link()
+    if pushed is not None:
+        pushed.unwind(tr.subrender[-1])
 
-        def cons(r, _):
-            getattr(r.top, end)()
-            pushed_style.unwind(r)
-            return None
 
-        return Pending(tree.children, cons)
-    if k == N.IMG:
-        renderer.add_image(tree.text, tree.extra)
-        pushed_style.unwind(renderer)
-        return Finished(None)
-    if k == N.SVG:
-        renderer.add_image("", tree.extra)
-        pushed_style.unwind(renderer)
-        return Finished(None)
-    if k in (N.BLOCK, N.LIST_ITEM):
-        renderer.start_block()
-        if pushed_style is _NO_STYLE:
-            return Pending(tree.children, _cons_end_block)
+def _end_inline(tr, arg):
+    end, pushed = arg
+    top = tr.subrender[-1]
+    end(top)
+    if pushed is not None:
+        pushed.unwind(top)
 
-        def cons(r, _):
-            r.end_block()
-            pushed_style.unwind(r)
-            return None
 
-        return Pending(tree.children, cons)
-    if k == N.HEADER:
-        prefix = renderer.header_prefix(tree.value)
-        prefix_size = size_estimate.prefix_size
-        min_width = size_estimate.min_width
-        inner_width = max(min_width - prefix_size, 0)
-        sub_builder = renderer.new_sub_renderer(
-            renderer.width_minus(prefix_size, inner_width)
-        )
-        renderer.push(sub_builder)
+def _end_div(tr, pushed):
+    top = tr.subrender[-1]
+    top.new_line()
+    if pushed is not None:
+        pushed.unwind(top)
 
-        def cons(r, _):
-            sub = r.pop()
-            r.start_block()
-            r.append_subrender(sub, repeat(prefix))
-            r.end_block()
-            pushed_style.unwind(r)
-            return None
 
-        return Pending(tree.children, cons)
-    if k == N.DIV:
-        renderer.new_line()
+def _end_prefixed_block(tr, arg):
+    """Header and blockquote: the sub-render, every line prefixed."""
+    prefix, pushed = arg
+    subs = tr.subrender
+    sub = subs.pop()
+    top = subs[-1]
+    top.start_block()
+    top.append_subrender(sub, repeat(prefix))
+    top.end_block()
+    if pushed is not None:
+        pushed.unwind(top)
 
-        def cons(r, _):
-            r.new_line()
-            pushed_style.unwind(r)
-            return None
 
-        return Pending(tree.children, cons)
-    if k == N.BLOCKQUOTE:
-        prefix = renderer.quote_prefix()
-        inner_width = size_estimate.min_width - len(prefix)
-        sub_builder = renderer.new_sub_renderer(
-            renderer.width_minus(len(prefix), inner_width)
-        )
-        renderer.push(sub_builder)
+def _end_dd(tr, pushed):
+    subs = tr.subrender
+    sub = subs.pop()
+    top = subs[-1]
+    top.append_subrender(sub, repeat("  "))
+    if pushed is not None:
+        pushed.unwind(top)
 
-        def cons(r, _):
-            sub = r.pop()
-            r.start_block()
-            r.append_subrender(sub, repeat(prefix))
-            r.end_block()
-            pushed_style.unwind(r)
-            return None
 
-        return Pending(tree.children, cons)
-    if k == N.UL:
-        prefix = renderer.unordered_item_prefix()
-        prefix_len = len(prefix)
+def _push_sub(tr, width):
+    subs = tr.subrender
+    subs.append(subs[-1].new_sub_renderer(width))
 
-        def cons(r, _):
-            pushed_style.unwind(r)
-            return None
 
-        def prefn(r, _node):
-            inner_width = size_estimate.min_width - prefix_len
-            sub_builder = r.new_sub_renderer(
-                r.width_minus(prefix_len, inner_width)
-            )
-            r.push(sub_builder)
+def _end_list_item(tr, prefixes):
+    """After one ul/ol child: its sub-render, the first line prefixed
+    with the item prefix and the rest indented."""
+    first, rest = prefixes
+    subs = tr.subrender
+    sub = subs.pop()
+    subs[-1].append_subrender(sub, chain((first,), repeat(rest)))
 
-        indent = " " * prefix_len
 
-        def postfn(r, _result):
-            sub = r.pop()
-            r.append_subrender(sub, chain((prefix,), repeat(indent)))
+def _collect_sub(tr, collected):
+    collected.append(tr.subrender.pop())
 
-        return Pending(tree.children, cons, prefn, postfn)
-    if k == N.OL:
-        start = tree.value
-        num_items = len(tree.children)
-        min_number = start
-        max_number = start + num_items - 1
-        prefix_width = max(
-            len(renderer.ordered_item_prefix(min_number)),
-            len(renderer.ordered_item_prefix(max_number)),
-        )
-        prefixn = " " * prefix_width
-        counter = [start]
 
-        def cons(r, _):
-            pushed_style.unwind(r)
-            return None
+def _end_table(tr, _):
+    top = tr.subrender[-1]
+    if top.options.fence_tables and tr.table_depth == 1:
+        top.add_inline_text("```")
+    tr.table_depth -= 1
 
-        def prefn(r, _node):
-            inner_min = size_estimate.min_width - size_estimate.prefix_size
-            sub_builder = r.new_sub_renderer(
-                r.width_minus(prefix_width, inner_min)
-            )
-            r.push(sub_builder)
 
-        def postfn(r, _result):
-            sub = r.pop()
-            prefix1 = r.ordered_item_prefix(counter[0])
-            prefix1 = prefix1.ljust(prefix_width)
-            r.append_subrender(sub, chain((prefix1,), repeat(prefixn)))
-            counter[0] += 1
+def _end_row(tr, arg):
+    """lib.rs:2794-2838."""
+    cells, rowspans, have_overhang, pushed = arg
+    top = tr.subrender[-1]
+    if have_overhang or any(not c.empty() for c in cells):
+        top.append_columns_with_borders(zip(cells, rowspans), True)
+    if pushed is not None:
+        pushed.unwind(top)
 
-        return Pending(tree.children, cons, prefn, postfn)
-    if k == N.DL:
-        renderer.start_block()
 
-        def cons(r, _):
-            pushed_style.unwind(r)
-            return None
+def _end_vert_row(tr, arg):
+    """lib.rs:2840-2867."""
+    cells, pushed = arg
+    top = tr.subrender[-1]
+    top.append_vert_row(cells)
+    if pushed is not None:
+        pushed.unwind(top)
 
-        return Pending(tree.children, cons)
-    if k == N.DT:
-        renderer.new_line()
-        renderer.start_emphasis()
 
-        def cons(r, _):
-            r.top.end_emphasis()
-            pushed_style.unwind(r)
-            return None
+# --- open handlers: (tr, node, pushed, push) -> children to walk | None -------
+# `push` appends to the walk's stack; a handler pushes its close action
+# (if any) and returns the children, which the walk pushes above it.
 
-        return Pending(tree.children, cons)
-    if k == N.DD:
-        inner_min = size_estimate.min_width - 2
-        sub_builder = renderer.new_sub_renderer(renderer.width_minus(2, inner_min))
-        renderer.push(sub_builder)
+_INLINE_STYLES = {
+    N.EM: (SubRenderer.start_emphasis, SubRenderer.end_emphasis),
+    N.STRONG: (SubRenderer.start_strong, SubRenderer.end_strong),
+    N.STRIKEOUT: (SubRenderer.start_strikeout, SubRenderer.end_strikeout),
+    N.CODE: (SubRenderer.start_code, SubRenderer.end_code),
+}
 
-        def cons(r, _):
-            sub = r.pop()
-            r.append_subrender(sub, repeat("  "))
-            pushed_style.unwind(r)
-            return None
 
-        return Pending(tree.children, cons)
+def _open_inline(tr, node, pushed, push):
+    start, end = _INLINE_STYLES[node.kind]
+    start(tr.subrender[-1])
+    push((_end_inline, (end, pushed)))
+    return node.children
+
+
+def _open_leaf(tr, node, pushed, push):
+    top = tr.subrender[-1]
+    k = node.kind
     if k == N.BREAK:
-        renderer.new_line_hard()
-        pushed_style.unwind(renderer)
-        return Finished(None)
-    if k == N.TABLE:
-        return render_table_tree(renderer, tree.extra)
-    if k == N.TABLE_ROW:
-        row, vert = tree.extra
-        if vert:
-            return render_table_row_vert(renderer, row, pushed_style)
-        return render_table_row(renderer, row, pushed_style)
-    if k == N.TABLE_CELL:
-        if pushed_style is _NO_STYLE:
-            return Pending(tree.extra.content, _cons_cell)
+        top.new_line_hard()
+    elif k == N.IMG:
+        top.add_image(node.text, node.extra)
+    elif k == N.SVG:
+        top.add_image("", node.extra)
+    else:  # FRAG_START
+        top.record_frag_start(node.text)
+    if pushed is not None:
+        pushed.unwind(top)
+    return None
 
-        def cons(r, _):
-            pushed_style.unwind(r)
-            return r.pop()
 
-        return Pending(tree.extra.content, cons)
-    if k == N.FRAG_START:
-        renderer.record_frag_start(tree.text)
-        pushed_style.unwind(renderer)
-        return Finished(None)
-    if k == N.SUP:
-        digits = _sup_digits(tree.children)
-        if digits is not None:
-            renderer.add_inline_text(digits)
-            pushed_style.unwind(renderer)
-            return Finished(None)
-        renderer.start_superscript()
+def _open_header(tr, node, pushed, push):
+    subs = tr.subrender
+    top = subs[-1]
+    prefix = top.header_prefix(node.value)
+    est = node.size_estimate
+    inner_width = max(est.min_width - est.prefix_size, 0)
+    subs.append(top.new_sub_renderer(top.width_minus(est.prefix_size, inner_width)))
+    push((_end_prefixed_block, (prefix, pushed)))
+    return node.children
 
-        def cons(r, _):
-            r.top.end_superscript()
-            pushed_style.unwind(r)
-            return None
 
-        return Pending(tree.children, cons)
-    raise AssertionError(f"Unexpected node in render: {k}")
+def _open_blockquote(tr, node, pushed, push):
+    subs = tr.subrender
+    top = subs[-1]
+    prefix = top.quote_prefix()
+    inner_width = node.size_estimate.min_width - len(prefix)
+    subs.append(top.new_sub_renderer(top.width_minus(len(prefix), inner_width)))
+    push((_end_prefixed_block, (prefix, pushed)))
+    return node.children
+
+
+def _open_div(tr, node, pushed, push):
+    tr.subrender[-1].new_line()
+    push((_end_div, pushed))
+    return node.children
+
+
+def _push_list_items(push, children, width, prefixes):
+    """Around each list item: push its sub-renderer before it, append the
+    prefixed sub-render after it (the reference's prefn/postfn pair)."""
+    pre = (_push_sub, width)
+    for child, pair in zip(reversed(children), reversed(prefixes)):
+        push((_end_list_item, pair))
+        push(child)
+        push(pre)
+
+
+def _open_ul(tr, node, pushed, push):
+    top = tr.subrender[-1]
+    prefix = top.unordered_item_prefix()
+    if pushed is not None:
+        push((_unwind, pushed))
+    children = node.children
+    if children:
+        prefix_len = len(prefix)
+        width = top.width_minus(prefix_len, node.size_estimate.min_width - prefix_len)
+        pair = (prefix, " " * prefix_len)
+        _push_list_items(push, children, width, [pair] * len(children))
+    return None
+
+
+def _open_ol(tr, node, pushed, push):
+    top = tr.subrender[-1]
+    start = node.value
+    children = node.children
+    prefix_width = max(
+        len(top.ordered_item_prefix(start)),
+        len(top.ordered_item_prefix(start + len(children) - 1)),
+    )
+    if pushed is not None:
+        push((_unwind, pushed))
+    if children:
+        est = node.size_estimate
+        width = top.width_minus(prefix_width, est.min_width - est.prefix_size)
+        prefixn = " " * prefix_width
+        pairs = [
+            (top.ordered_item_prefix(start + i).ljust(prefix_width), prefixn)
+            for i in range(len(children))
+        ]
+        _push_list_items(push, children, width, pairs)
+    return None
+
+
+def _open_dl(tr, node, pushed, push):
+    tr.subrender[-1].start_block()
+    if pushed is not None:
+        push((_unwind, pushed))
+    return node.children
+
+
+def _open_dt(tr, node, pushed, push):
+    top = tr.subrender[-1]
+    top.new_line()
+    top.start_emphasis()
+    push((_end_inline, (SubRenderer.end_emphasis, pushed)))
+    return node.children
+
+
+def _open_dd(tr, node, pushed, push):
+    subs = tr.subrender
+    top = subs[-1]
+    inner_min = node.size_estimate.min_width - 2
+    subs.append(top.new_sub_renderer(top.width_minus(2, inner_min)))
+    push((_end_dd, pushed))
+    return node.children
+
+
+def _open_sup(tr, node, pushed, push):
+    top = tr.subrender[-1]
+    digits = _sup_digits(node.children)
+    if digits is not None:
+        top.add_inline_text(digits)
+        if pushed is not None:
+            pushed.unwind(top)
+        return None
+    top.start_superscript()
+    push((_end_inline, (SubRenderer.end_superscript, pushed)))
+    return node.children
 
 
 def _sup_digits(children) -> str | None:
@@ -384,8 +362,10 @@ def _sup_digits(children) -> str | None:
     return None
 
 
-def render_table_tree(renderer: TextRenderer, table):
-    """Column width negotiation (lib.rs:2676-2792)."""
+def _open_table(tr, node, pushed, push):
+    """Column width negotiation (lib.rs:2676-2792).  Like the reference,
+    the table's own style is pushed and never unwound."""
+    table = node.extra
     num_columns = table.num_columns
     # per column: the widest cell's size and min width
     sizes = [0] * num_columns
@@ -405,9 +385,10 @@ def render_table_tree(renderer: TextRenderer, table):
             colno += span
     tot_size = sum(sizes)
     min_size = sum(mins) + max(num_columns - 1, 0)
-    width = renderer.width
+    top = tr.subrender[-1]
+    width = top.width
 
-    vert_row = renderer.top.options.raw or min_size > width or width == 0
+    vert_row = top.options.raw or min_size > width or width == 0
 
     if not vert_row:
         col_widths = [
@@ -445,60 +426,141 @@ def render_table_tree(renderer: TextRenderer, table):
             sum(1 for w in col_widths if w > 0) - 1, 0
         )
 
-    renderer.start_table()
-    renderer.table_depth += 1
+    top.start_table()
+    tr.table_depth += 1
 
-    if renderer.top.options.fence_tables and renderer.table_depth == 1:
-        renderer.add_inline_text("```")
+    if top.options.fence_tables and tr.table_depth == 1:
+        top.add_inline_text("```")
 
-    if table_width != 0 and renderer.top.options.draw_borders:
-        renderer.add_horizontal_border_width(table_width)
+    if table_width != 0 and top.options.draw_borders:
+        top.add_horizontal_border_width(table_width)
 
-    def cons(r, _):
-        if r.top.options.fence_tables and r.table_depth == 1:
-            r.add_inline_text("```")
-        r.table_depth -= 1
-        return None
-
-    return Pending(table.into_rows(col_widths, vert_row), cons)
+    push((_end_table, None))
+    return table.into_rows(col_widths, vert_row)
 
 
-def render_table_row(renderer: TextRenderer, row, pushed_style):
-    """lib.rs:2794-2838."""
-    rowspans = [cell.rowspan for cell in row.cells]
-    have_overhang = any(cell.is_dummy for cell in row.cells)
-
-    def cons(r, children):
-        if have_overhang or any(not c.empty() for c in children):
-            r.append_columns_with_borders(zip(children, rowspans), True)
-        pushed_style.unwind(r)
-        return None
-
-    return Pending(row.into_cells(False), cons, _push_cell_renderer)
-
-
-def render_table_row_vert(renderer: TextRenderer, row, pushed_style):
-    """lib.rs:2840-2867."""
-
-    def cons(r, children):
-        r.append_vert_row(children)
-        pushed_style.unwind(r)
-        return None
-
-    return Pending(row.into_cells(True), cons, _push_cell_renderer)
+def _open_row(tr, node, pushed, push):
+    """A row's cells each render into their own sub-renderer, pushed
+    before the cell and collected after it for the row's close action."""
+    row, vert = node.extra
+    cells = []
+    if vert:
+        cell_nodes = row.into_cells(True)
+        push((_end_vert_row, (cells, pushed)))
+    else:
+        rowspans = [cell.rowspan for cell in row.cells]
+        have_overhang = any(cell.is_dummy for cell in row.cells)
+        cell_nodes = row.into_cells(False)
+        push((_end_row, (cells, rowspans, have_overhang, pushed)))
+    collect = (_collect_sub, cells)
+    for cell_node in reversed(cell_nodes):
+        push(collect)
+        push(cell_node)
+        push((_push_sub, cell_node.extra.col_width))
+    return None
 
 
-def _push_cell_renderer(r, node):
-    r.push(r.new_sub_renderer(node.extra.col_width))
+def _open_cell(tr, node, pushed, push):
+    if pushed is not None:
+        push((_unwind, pushed))
+    return node.extra.content
+
+
+_OPEN = {
+    N.EM: _open_inline,
+    N.STRONG: _open_inline,
+    N.STRIKEOUT: _open_inline,
+    N.CODE: _open_inline,
+    N.IMG: _open_leaf,
+    N.SVG: _open_leaf,
+    N.BREAK: _open_leaf,
+    N.FRAG_START: _open_leaf,
+    N.HEADER: _open_header,
+    N.DIV: _open_div,
+    N.BLOCKQUOTE: _open_blockquote,
+    N.UL: _open_ul,
+    N.OL: _open_ol,
+    N.DL: _open_dl,
+    N.DT: _open_dt,
+    N.DD: _open_dd,
+    N.TABLE: _open_table,
+    N.TABLE_ROW: _open_row,
+    N.TABLE_CELL: _open_cell,
+    N.SUP: _open_sup,
+}
+
+
+def _walk(tr: TextRenderer, tree: RenderNode) -> None:
+    """do_render_node over the whole tree (lib.rs:2396-2674).  Text,
+    containers, blocks and links, the bulk of every page, are handled in
+    the loop; the other kinds go through `_OPEN`.
+
+    Size estimates are computed lazily: only the node kinds that consume
+    them (header/blockquote/lists/dd/table) trigger the bottom-up
+    estimation pass, and only over their own subtree, so a document of
+    plain paragraphs never pays for a second walk."""
+    subs = tr.subrender
+    stack = [tree]
+    pop = stack.pop
+    push = stack.append
+    extend = stack.extend
+    apply_style = PushedStyleInfo.apply
+    default_style = DEFAULT_STYLE
+    needs_estimate = _NEEDS_ESTIMATE
+    TEXT, CONTAINER, BLOCK, LIST_ITEM, LINK = (
+        N.TEXT, N.CONTAINER, N.BLOCK, N.LIST_ITEM, N.LINK
+    )
+    while stack:
+        node = pop()
+        if node.__class__ is tuple:
+            node[0](tr, node[1])
+            continue
+        k = node.kind
+        style = node.style
+        if k == TEXT:
+            top = subs[-1]
+            if style is default_style:
+                top.add_inline_text(node.text)
+            else:
+                pushed = apply_style(top, style)
+                top.add_inline_text(node.text)
+                pushed.unwind(top)
+            continue
+        if node.size_estimate is None and k in needs_estimate:
+            estimate_sizes(node, *tr.estimate_ctx)
+        if style is default_style:
+            pushed = None
+        else:
+            pushed = apply_style(subs[-1], style)
+        if k == CONTAINER:
+            if pushed is not None:
+                push((_unwind, pushed))
+            children = node.children
+        elif k == BLOCK or k == LIST_ITEM:
+            subs[-1].start_block()
+            push((_end_block, pushed))
+            children = node.children
+        elif k == LINK:
+            tr.start_link(node.text)
+            push((_end_link, pushed))
+            children = node.children
+        else:
+            handler = _OPEN.get(k)
+            if handler is None:
+                raise AssertionError(f"Unexpected node in render: {k}")
+            children = handler(tr, node, pushed, push)
+            if not children:
+                continue
+        extend(reversed(children))
 
 
 def render_tree_to_string(context, renderer: SubRenderer, decorator, tree: RenderNode) -> SubRenderer:
     """Two-pass layout (lib.rs:2298-2323); the size-estimation pass runs
-    lazily per consuming subtree (see do_render_node), carried through
-    the render fold via `estimate_ctx`."""
+    lazily per consuming subtree (see `_walk`), carried through the walk
+    via `estimate_ctx`."""
     text_renderer = TextRenderer(renderer)
     text_renderer.estimate_ctx = (context, decorator)
-    tree_map_reduce(text_renderer, tree, do_render_node)
+    _walk(text_renderer, tree)
     renderer, links = text_renderer.into_inner()
     lines = renderer.finalise(links)
     if lines:

@@ -283,6 +283,7 @@ class StyleData:
         self.user_rules: list[Ruleset] = []
         self.author_rules: list[Ruleset] = []
         self._index = None
+        self._tags = None
 
     def clone(self) -> "StyleData":
         out = StyleData()
@@ -296,6 +297,7 @@ class StyleData:
         self.user_rules.extend(other.user_rules)
         self.author_rules.extend(other.author_rules)
         self._index = None
+        self._tags = None
 
     def _index_for(self, origin: int, rules: list[Ruleset]):
         """Pre-filter index: rules keyed by rightmost Element name (falling
@@ -323,6 +325,21 @@ class StyleData:
             ]
             self._index = idx
         return idx
+
+    def cascade_tags(self):
+        """The element names that some rule's rightmost component names,
+        or None when a rule without one (`.c`, `*`, `#id`) may match any
+        element.  Without document CSS, an element whose name is not in
+        the set matches no rule, so its computed style is its parent's."""
+        if getattr(self, "_tags", None) is None:
+            tags = set()
+            for by_element, generic in self._get_index():
+                if generic:
+                    self._tags = (None,)
+                    return None
+                tags.update(by_element)
+            self._tags = (frozenset(tags),)
+        return self._tags[0]
 
     def computed_style(self, parent_style: ComputedStyle, node, use_doc_css: bool) -> ComputedStyle:
         """css.rs:539-620."""

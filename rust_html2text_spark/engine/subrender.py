@@ -636,7 +636,11 @@ def _repeat(value):
 
 
 class TextRenderer:
-    """Stack of SubRenderers + global link collection (text_renderer.rs:26-99)."""
+    """Stack of SubRenderers + global link collection (text_renderer.rs:26-99).
+
+    The reference reaches the top sub-renderer through Deref; here the
+    render walk calls `subrender[-1]` itself, and only the calls that
+    touch the link list go through this class."""
 
     __slots__ = ("subrender", "links", "table_depth", "estimate_ctx")
 
@@ -647,49 +651,15 @@ class TextRenderer:
         # (context, decorator) for the lazy size-estimation fold
         self.estimate_ctx = None
 
-    @property
-    def top(self) -> SubRenderer:
-        return self.subrender[-1]
-
-    def __getattr__(self, name):
-        # Deref/DerefMut: delegate to the top sub-renderer
-        return getattr(self.subrender[-1], name)
-
-    # direct delegators for the hottest Deref calls (skip the
-    # __getattr__ + getattr dispatch pair; behaviour identical)
-    def add_inline_text(self, text: str) -> None:
-        self.subrender[-1].add_inline_text(text)
-
-    def start_block(self) -> None:
-        self.subrender[-1].start_block()
-
-    def end_block(self) -> None:
-        self.subrender[-1].end_block()
-
-    def new_sub_renderer(self, width: int) -> SubRenderer:
-        return self.subrender[-1].new_sub_renderer(width)
-
-    def width_minus(self, prefix_len: int, min_width: int) -> int:
-        return self.subrender[-1].width_minus(prefix_len, min_width)
-
-    def append_subrender(self, other: SubRenderer, prefixes) -> None:
-        self.subrender[-1].append_subrender(other, prefixes)
-
     def start_link(self, target: str) -> None:
         self.links.append(target)
         self.subrender[-1].start_link(target)
 
     def end_link(self) -> None:
-        self.subrender[-1].end_link()
-        if self.subrender[-1].options.include_link_footnotes:
-            footnote_num = len(self.links)
-            self.subrender[-1].add_inline_text(f"[{footnote_num}]")
-
-    def push(self, builder: SubRenderer) -> None:
-        self.subrender.append(builder)
-
-    def pop(self) -> SubRenderer:
-        return self.subrender.pop()
+        top = self.subrender[-1]
+        top.end_link()
+        if top.options.include_link_footnotes:
+            top.add_inline_text(f"[{len(self.links)}]")
 
     def into_inner(self):
         assert len(self.subrender) == 1

@@ -123,10 +123,11 @@ def render_pages(
     moving every html byte through one exchange.
 
     On perfbench `render_flat` (5,000 pages, largest 51 KB; 4 cores,
-    local[4], `--seconds 12`, 10 alternating pairs on seeds 1621-1630)
-    this one-scan plan runs at a median 9,691 docs/s with 5.4 s of
-    set-up; the engine before its line-at-a-time layout ran 8,088 docs/s
-    in the same pairs.  On a layout that clusters giant pages, from
+    local[4], `--seconds 12`, 10 alternating pairs on seeds 1821-1830,
+    in a window where the host ran about 2× slower than usual) this
+    one-scan plan runs at a median 4,740 docs/s with 12.7 s of set-up;
+    the engine before its one-step-per-node HTML phases ran 3,887 docs/s
+    in the same pairs (parent IQR 3,829-4,255).  On a layout that clusters giant pages, from
     scripts/giant_layout_ab.py: 16 pages of 2-3.9 MiB in one parquet file
     (one row group) among 5,000 normal pages in 8 files, 4 cores,
     local[4], median of 3 rotated reps, both plans ending in the same

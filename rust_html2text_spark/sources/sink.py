@@ -104,6 +104,18 @@ def _check_layout(out_path: str, done: set[int], layout: dict) -> None:
                 )
 
 
+def _as_manifest_value(kwargs: dict | None):
+    """`kwargs` as a manifest stores it (a JSON round trip, so a resume
+    compares like with like); a value JSON cannot hold is named by its
+    qualified name, which stays the same from one process to the next."""
+
+    def name(obj):
+        kind = obj if hasattr(obj, "__qualname__") else type(obj)
+        return f"{kind.__module__}.{kind.__qualname__}"
+
+    return json.loads(json.dumps(kwargs or {}, sort_keys=True, default=name))
+
+
 def run_with_resume(
     pages: DataFrame,
     out_path: str,
@@ -121,8 +133,11 @@ def run_with_resume(
     input-size column named `bytes_col` (render/extract: html_bytes,
     pdf: pdf_bytes) — the whole idempotent-resume + lineage-metrics
     machinery is shared across the extraction tier.  `mode` names the
-    operator in the manifests; a resume whose `num_buckets`, `mode` or
-    `width` differs from a committed bucket's raises ValueError."""
+    operator in the manifests; a resume whose `num_buckets`, `mode`,
+    `width`, `config_kwargs` or `render_kwargs` differs from a committed
+    bucket's raises ValueError.  A caller that passes its own `operator`
+    passes the kwargs it built the operator with, so they are checked
+    too."""
     from rust_html2text_spark.operators.render import render_pages
 
     if operator is None:
@@ -136,7 +151,13 @@ def run_with_resume(
 
     os.makedirs(_manifest_dir(out_path), exist_ok=True)
     done = completed_buckets(out_path)
-    layout = {"num_buckets": num_buckets, "mode": mode, "width": width}
+    layout = {
+        "num_buckets": num_buckets,
+        "mode": mode,
+        "width": width,
+        "config_kwargs": _as_manifest_value(config_kwargs),
+        "render_kwargs": _as_manifest_value(render_kwargs),
+    }
     _check_layout(out_path, done, layout)
     summary = {"buckets_total": num_buckets, "buckets_skipped": len(done), "rows": 0}
 

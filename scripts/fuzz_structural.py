@@ -1,4 +1,5 @@
-"""Structural mutation fuzz for the binary-format readers (PDF + WARC).
+"""Structural mutation fuzz for the binary-format readers (PDF + WARC)
+and the HTML engine.
 
 Deterministic (seeded) byte-level mutations — flips, deletions,
 insertions — over every writer flavour, asserting the robustness
@@ -11,6 +12,9 @@ contract each reader documents:
   EOFError / zlib.error — inside what the readers' record batcher
   contains per stream), is deterministic, and never explodes into
   unbounded duplicate rows (the negative-Content-Length livelock class).
+- HTML: html_to_text and extract_main, over mutated golden pages, raise
+  ONLY RenderError subclasses (TooNarrow / Fail / CssParseError), and
+  are deterministic (same bytes → same text).
 
 This is the harness that found the round-4 _as_int escapes (corrupt
 /ObjStm N, scalar /Kids).  Run standalone; the committed pytest suites
@@ -119,16 +123,53 @@ def fuzz_warc(trials: int, seed: int) -> int:
     return crashes
 
 
+def fuzz_html(trials: int, seed: int) -> int:
+    import json
+
+    from rust_html2text_spark.engine.api import html_to_text
+    from rust_html2text_spark.engine.errors import RenderError
+    from rust_html2text_spark.engine.extract import extract_main
+
+    fixtures = json.loads(
+        (REPO / "tests/fixtures/goldens.json").read_text()
+    )["fixtures"]
+    bases = [(f["html"].encode("utf-8"), f["width"]) for f in fixtures]
+
+    def render(data: bytes, width: int) -> tuple:
+        out = []
+        for fn in (html_to_text, extract_main):
+            try:
+                out.append(fn(data, width))
+            except RenderError as e:
+                out.append(type(e).__name__)
+        return tuple(out)
+
+    rng = random.Random(seed)
+    crashes = 0
+    for trial in range(trials):
+        base, width = rng.choice(bases)
+        data = mutate(rng, base)
+        try:
+            a = render(data, width)
+            b = render(data, width)
+            assert a == b, f"html nondeterminism at trial {trial}"
+        except Exception as e:
+            crashes += 1
+            print(f"HTML CRASH trial {trial}: {type(e).__name__}: {e}")
+    return crashes
+
+
 def main() -> None:
     trials = int(sys.argv[1]) if len(sys.argv) > 1 else 12000
     seed = int(sys.argv[2]) if len(sys.argv) > 2 else 42
     pdf_crashes = fuzz_pdf(trials, seed)
     warc_crashes = fuzz_warc(trials, seed)
+    html_crashes = fuzz_html(trials, seed)
     print(
         f"{trials} trials per target: pdf_crashes={pdf_crashes} "
-        f"warc_crashes={warc_crashes}"
+        f"warc_crashes={warc_crashes} html_crashes={html_crashes}"
     )
-    sys.exit(1 if pdf_crashes or warc_crashes else 0)
+    sys.exit(1 if pdf_crashes or warc_crashes or html_crashes else 0)
 
 
 if __name__ == "__main__":

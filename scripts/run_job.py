@@ -388,6 +388,8 @@ def main() -> None:
             args.output,
             width=args.width,
             num_buckets=args.buckets,
+            config_kwargs=config_kwargs,
+            render_kwargs=render_kwargs,
             operator=operator,
             bytes_col={"pdf": "pdf_bytes", "mixed": "input_bytes"}.get(
                 args.mode, "html_bytes"

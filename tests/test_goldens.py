@@ -120,3 +120,45 @@ def test_deeply_nested_table():
         + "──────────\n" * (rpt - 3)
     )
     assert html_to_text(html.encode(), 10) == expected
+
+
+DEEP = 5000
+# 5,000-deep chains of the elements each phase treats specially: a block
+# (div), a list item under a sub-renderer per level (ul/li), a prefixed
+# block (blockquote), a link (the parser un-nests <a>, so the chain comes
+# out flat) and an inline style.  Digests of the html_to_text output at
+# 95e1296 (a chain of prefixed levels runs out of width: TooNarrow).
+# extract_main raised RecursionError there on every chain but <a>; it
+# now renders the same text as html_to_text.
+DEEP_CHAINS = {
+    "div": ("<div>x" * DEEP + "</div>" * DEEP, "3438e635c8a2ecd3e9a2ac4e4d8e4db6"),
+    "ul_li": ("<ul><li>x" * DEEP + "</li></ul>" * DEEP, TooNarrow),
+    "blockquote": ("<blockquote>x" * DEEP + "</blockquote>" * DEEP, TooNarrow),
+    "a_href": ('<a href="#l">x' * DEEP + "</a>" * DEEP, "f84e4b40646d5cf60914154bf52dff82"),
+    "em": ("<em>x" * DEEP + "</em>" * DEEP, "7a5782019106b551fc5ccf1e25626a03"),
+}
+
+
+@pytest.mark.parametrize("shape", sorted(DEEP_CHAINS))
+def test_deep_chain_at_default_recursion_limit(shape):
+    """Every phase walks on an explicit stack: a 5,000-deep chain renders
+    (or fails with a RenderError) under the default recursion limit, in
+    html_to_text and in extract_main."""
+    import hashlib
+    import sys
+
+    from rust_html2text_spark.engine.extract import extract_main
+
+    html, expected = DEEP_CHAINS[shape]
+    limit = sys.getrecursionlimit()
+    sys.setrecursionlimit(1000)  # CPython's default; the full suite runs at 3,000
+    try:
+        for render in (html_to_text, extract_main):
+            if expected is TooNarrow:
+                with pytest.raises(TooNarrow):
+                    render(html.encode(), 80)
+            else:
+                text = render(html.encode(), 80)
+                assert hashlib.md5(text.encode()).hexdigest() == expected, render
+    finally:
+        sys.setrecursionlimit(limit)

@@ -1449,3 +1449,41 @@ def test_resume_with_another_layout_raises(spark, tmp_path):
     s = run_with_resume(pages, out, num_buckets=4)
     assert s["buckets_skipped"] == 2
     assert spark.read.parquet(f"{out}/bucket=*").count() == 60
+
+
+def test_resume_with_another_config_raises(spark, tmp_path):
+    """A crash after bucket 0 of a 2-bucket run, then a resume with other
+    config_kwargs or render_kwargs: the committed bucket holds text of
+    another config, so the resume must refuse instead of mixing two
+    configs in one snapshot.  The same kwargs, in another key order,
+    still resume."""
+    from rust_html2text_spark.sources.corpus import load_pages
+    from rust_html2text_spark.sources.sink import completed_buckets, run_with_resume
+
+    pages = load_pages(spark, SF_DIR).limit(40).cache()
+    out = str(tmp_path / "out")
+    config = {"decorator": "plain", "link_footnotes": True}
+    run_with_resume(pages, out, num_buckets=2, config_kwargs=config)
+    (tmp_path / "out/_manifest/1.json").unlink()  # the crash
+    assert completed_buckets(out) == {0}
+
+    with pytest.raises(ValueError, match="config_kwargs"):
+        run_with_resume(pages, out, num_buckets=2)
+    with pytest.raises(ValueError, match="config_kwargs"):
+        run_with_resume(
+            pages, out, num_buckets=2,
+            config_kwargs={"decorator": "rich", "link_footnotes": True},
+        )
+    with pytest.raises(ValueError, match="render_kwargs"):
+        run_with_resume(
+            pages, out, num_buckets=2, config_kwargs=config,
+            render_kwargs={"coloured": True},
+        )
+    assert completed_buckets(out) == {0}
+
+    s = run_with_resume(
+        pages, out, num_buckets=2,
+        config_kwargs={"link_footnotes": True, "decorator": "plain"},
+    )
+    assert s["buckets_skipped"] == 1
+    assert spark.read.parquet(f"{out}/bucket=*").count() == 40
